@@ -23,7 +23,7 @@ Violation rows mirror the reference's anomalies upsert contract
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,7 +46,7 @@ from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
 from pyanomalydetector2_spark.operators.stats import column_profile
 from pyanomalydetector2_spark.operators.uniqueness import duplicate_rows
 from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
-from pyanomalydetector2_spark.functions import local_rows_df
+from pyanomalydetector2_spark.functions import empty_frame, local_rows_df
 
 VIOLATION_SCHEMA = T.StructType(
     [
@@ -88,6 +88,8 @@ class SuiteResult:
     # result is materialized, or executor storage memory accrues one
     # cached frame per run
     cached: tuple = ()
+    # rows validated per processed bucket (the ledger's per-bucket lineage)
+    bucket_rows: dict = field(default_factory=dict)
 
     def passed(self) -> bool:
         return self.verdicts.filter(~F.col("passed")).isEmpty()
@@ -545,6 +547,13 @@ def run_suite(
     ).collect()
     buckets = [r[bucket_col] for r in brows]
     row_count = sum(r["_n"] for r in brows)
+    if not buckets:  # everything committed already — idempotent no-op
+        return SuiteResult(
+            run_id,
+            empty_frame(spark, VERDICT_SCHEMA),
+            empty_frame(spark, VIOLATION_SCHEMA),
+            [], skipped, 0, 0.0,
+        )
     # Σ per-bucket distinct is exact ONLY for the bucket key itself
     # (bucket = hash(key_col) co-locates each key in one bucket); any other
     # column appears in every bucket and the sum would overcount by up to
@@ -573,10 +582,6 @@ def run_suite(
         for i, c in enumerate(suite.unique_checks)
     ]
     _tick(f"materialize base ({row_count} rows)")
-    if not buckets:  # everything committed already — idempotent no-op
-        empty_ver = spark.createDataFrame([], VERDICT_SCHEMA)
-        empty_vio = spark.createDataFrame([], VIOLATION_SCHEMA)
-        return SuiteResult(run_id, empty_ver, empty_vio, [], skipped, 0, 0.0)
 
     violation_frames: list[DataFrame] = []
     # Verdicts are assembled as a UNION of per-family aggregate DataFrames
@@ -700,7 +705,7 @@ def run_suite(
         for vf in violation_frames[1:]:
             violations = violations.unionByName(vf)
     else:
-        violations = spark.createDataFrame([], VIOLATION_SCHEMA)
+        violations = empty_frame(spark, VIOLATION_SCHEMA)
     violations = violations.cache()
     # Force the cache NOW (the pre-r04 counts collect did this implicitly):
     # without it the violations scan becomes one more concurrent leg of the
@@ -965,30 +970,7 @@ def run_suite(
         # legs still reference the persisted profile — keep the cache
         stat_prof.unpersist()
 
-    if checkpoint is not None and commit:
-        # per-bucket fail counts via ONE aggregation over the verdicts
-        # frame — the driver holds O(buckets) ledger marks (the ledger is
-        # per-bucket by design), never buckets × constraints
-        per_bucket_fail = dict.fromkeys((int(b) for b in buckets), 0)
-        for r in (
-            verdicts.filter(~F.col("passed"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        ):
-            if int(r["bucket"]) in per_bucket_fail:
-                per_bucket_fail[int(r["bucket"])] = int(r["cnt"])
-        for b in buckets:
-            checkpoint.mark_committed(
-                run_id,
-                int(b),
-                metrics={
-                    "rows": row_count,
-                    "failed_constraints": per_bucket_fail[int(b)],
-                },
-            )
-
-    return SuiteResult(
+    result = SuiteResult(
         run_id,
         verdicts,
         violations,
@@ -1001,13 +983,29 @@ def run_suite(
             if stat_prof is None or eager_verdicts
             else (verdicts, stat_prof)
         ),
+        bucket_rows={int(r[bucket_col]): int(r["_n"]) for r in brows},
     )
+    if checkpoint is not None and commit:
+        commit_checkpoint(result, checkpoint)
+    return result
 
 
-def commit_checkpoint(res: SuiteResult, checkpoint: CheckpointLedger) -> None:
+def commit_checkpoint(
+    res: SuiteResult,
+    checkpoint: CheckpointLedger,
+    snapshot_id: int | None = None,
+    verdicts_snapshot_id: int | None = None,
+) -> None:
     """Mark the result's processed buckets committed in the ledger — call
     this AFTER the verdicts/violations have been durably persisted (the
-    write-ahead ordering --resume correctness depends on)."""
+    write-ahead ordering --resume correctness depends on). Each bucket's
+    record carries its own row count, its failed-constraint count, and the
+    ids of the results (``snapshot_id``) and verdicts snapshots it was
+    persisted in. A result with no processed bucket commits nothing."""
+    if not res.processed_buckets:
+        return
+    # per-bucket fail counts via ONE aggregation over the verdicts frame —
+    # O(buckets) ledger marks are collected, never buckets × constraints
     fails = dict.fromkeys(res.processed_buckets, 0)
     for r in (
         res.verdicts.filter(~F.col("passed")).groupBy("bucket").count().collect()
@@ -1018,5 +1016,10 @@ def commit_checkpoint(res: SuiteResult, checkpoint: CheckpointLedger) -> None:
         checkpoint.mark_committed(
             res.run_id,
             int(b),
-            metrics={"rows": res.row_count, "failed_constraints": fails[b]},
+            snapshot_id=snapshot_id,
+            metrics={
+                "rows": res.bucket_rows.get(b),
+                "failed_constraints": fails[b],
+                "verdicts_snapshot_id": verdicts_snapshot_id,
+            },
         )

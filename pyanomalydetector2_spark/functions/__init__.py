@@ -88,6 +88,14 @@ def local_rows_df(spark, rows, schema):
         return spark.createDataFrame(rows, st)
 
 
+def empty_frame(spark, schema):
+    """Empty typed DataFrame that Spark plans as an empty ``LocalRelation``:
+    ``isEmpty()`` and a ``distinct`` collect over it finish without a
+    Spark job. ``createDataFrame([], schema)`` is a pickled
+    RDD instead, and every action on it starts a Python worker."""
+    return local_rows_df(spark, [], schema).limit(0)
+
+
 def safe_div(num: Column, den: Column, default: float = 0.0) -> Column:
     """num/den with 0-denominator → default (reference guards std>0,
     detector.py:202,306 — here the guard is an expression, not a filter)."""

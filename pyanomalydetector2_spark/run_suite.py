@@ -235,15 +235,19 @@ def main(argv: list[str] | None = None) -> dict:
     # persist results (FIXTURES.md §B3/§B4 output contract)
     results_t = open_table(spark, os.path.join(args.warehouse, "results"))
     verdicts_t = open_table(spark, os.path.join(args.warehouse, "verdicts"))
-    results_t.merge_upsert(
+    results_sid = results_t.merge_upsert(
         res.violations, ["run_id", "bucket", "clip_id", "constraint_id"],
         partition_by=["bucket"],
     )
-    verdicts_t.merge_upsert(res.verdicts, ["run_id", "bucket", "constraint_id", "metric"])
+    verdicts_sid = verdicts_t.merge_upsert(
+        res.verdicts, ["run_id", "bucket", "constraint_id", "metric"]
+    )
     if ledger is not None:
         from pyanomalydetector2_spark.constraints.suite import commit_checkpoint
 
-        commit_checkpoint(res, ledger)
+        commit_checkpoint(
+            res, ledger, snapshot_id=results_sid, verdicts_snapshot_id=verdicts_sid
+        )
     n_metric_anomalies = None
     if args.metrics_history:
         from pyanomalydetector2_spark.operators.reconcile import (
@@ -281,6 +285,8 @@ def main(argv: list[str] | None = None) -> dict:
         "skipped_buckets": len(res.skipped_buckets),
         "cpus": args.cpus,
         "catalog_backend": results_t.backend,
+        "results_snapshot_id": results_sid,
+        "verdicts_snapshot_id": verdicts_sid,
     }
     if n_metric_anomalies is not None:
         summary["metric_anomalies"] = n_metric_anomalies

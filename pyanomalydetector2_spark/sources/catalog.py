@@ -15,18 +15,45 @@
   - partition-directory layout (``bucket=<k>``) so bucket-filtered reads
     prune at the file level exactly like Iceberg partition pruning.
 
+Snapshots are manifests. Each snapshot's entry in ``_meta.json`` lists the
+data directories it is made of: its own ``snap=N/<partition>`` dirs plus
+directories it inherits from older snapshots. A partition-scoped
+``merge_upsert`` rewrites only the partitions its source touches into
+``snap=N/`` and references the parent's directories for the rest, so a
+merge costs O(change), not O(table). ``expire_snapshots`` deletes only the
+directories no kept snapshot references.
+
+An empty merge source touches nothing: ``merge_upsert`` commits no
+snapshot and returns the current id. Callers that hand in empty frames
+planned as an empty ``LocalRelation`` (``functions.empty_frame``) pay no
+Spark job for that check.
+
+Commits are optimistic. A writer stages its files under ``_staging/``,
+then claims the next sequence number by creating ``_claims/<seq>`` with
+O_CREAT|O_EXCL; the claim holder is the only writer that can publish
+``_meta.json`` next. A writer that loses the claim re-reads the meta, and
+one whose rows were computed from a snapshot that is no longer current
+rebuilds them, so concurrent merges lose no snapshot and no update.
+
+``IcebergTable`` is unchanged by all of this: Iceberg's ``MERGE INTO``
+already rewrites only the affected data files and commits through its own
+optimistic metadata swap.
+
 Every caller goes through this seam; ``table.backend`` reports which
 implementation a run actually used.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
+import operator
 import os
 import re
 import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -190,6 +217,29 @@ class IcebergTable:
         return drop
 
 
+_ANY_PARENT = object()  # commit does not depend on the snapshot it replaces
+_CLAIM_STALE_S = 30.0  # an unpublished claim this old belongs to a dead writer
+
+
+def _partition_filter(parts: list[str], touched: list[tuple]):
+    """Predicate selecting exactly the ``touched`` partition values; on
+    partition columns it prunes the file listing, not rows."""
+    if len(parts) == 1:
+        col = F.col(parts[0])
+        vals = [t[0] for t in touched]
+        cond = col.isin([v for v in vals if v is not None])
+        return cond | col.isNull() if None in vals else cond
+    return functools.reduce(
+        operator.or_,
+        (
+            functools.reduce(
+                operator.and_, (F.col(p).eqNullSafe(v) for p, v in zip(parts, t))
+            )
+            for t in touched
+        ),
+    )
+
+
 class SnapshotTable:
     backend = "parquet"
 
@@ -204,15 +254,20 @@ class SnapshotTable:
 
     def _meta(self) -> dict:
         if not os.path.exists(self._meta_path):
-            return {"current": None, "snapshots": []}
+            return {"current": None, "seq": 0, "snapshots": []}
         with open(self._meta_path) as f:
-            return json.load(f)
+            meta = json.load(f)
+        # tables written before the claim protocol carry no sequence
+        meta.setdefault(
+            "seq", max([s["id"] for s in meta["snapshots"]] + [meta["current"] or 0])
+        )
+        return meta
 
     def _write_meta(self, meta: dict) -> None:
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(meta, f)
-        os.replace(tmp, self._meta_path)  # atomic commit, Iceberg-style
+        os.replace(tmp, self._meta_path)
 
     def snapshots(self) -> list[int]:
         return [s["id"] for s in self._meta()["snapshots"]]
@@ -223,80 +278,235 @@ class SnapshotTable:
     def _snap_dir(self, sid: int) -> str:
         return os.path.join(self.path, f"snap={sid}")
 
-    # -- write paths ---------------------------------------------------------
-    def write_snapshot(
-        self, df: DataFrame, partition_by: list[str] | None = None
-    ) -> int:
-        meta = self._meta()
-        sid = (meta["current"] or 0) + 1
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._snap_dir(sid))
+    @staticmethod
+    def _entry(meta: dict, sid: int | None) -> dict | None:
+        return next((s for s in meta["snapshots"] if s["id"] == sid), None)
+
+    # -- commit protocol -----------------------------------------------------
+    def _claim(self, sid: int) -> bool:
+        """Create ``sid``'s claim marker (O_CREAT|O_EXCL): True when this
+        writer now owns the next commit. Whoever owns seq+1 is the only
+        writer that can publish meta until it does, so the meta it read
+        stays the latest one."""
+        marker = os.path.join(self.path, "_claims", str(sid))
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        try:
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            return True
+        except FileExistsError:
+            pass
+        # a claim left unpublished past the timeout belongs to a writer that
+        # died between claim and publish; the one waiter that creates the
+        # ``.broken`` marker clears it, so two waiters cannot both take over
+        try:
+            if time.time() - os.path.getmtime(marker) > _CLAIM_STALE_S:
+                os.close(
+                    os.open(marker + ".broken", os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                )
+                if self._meta()["seq"] < sid:
+                    os.remove(marker)
+        except (FileExistsError, FileNotFoundError):
+            pass
+        time.sleep(0.01)
+        return False
+
+    def _stage(
+        self, df: DataFrame, partition_by: list[str] | None
+    ) -> tuple[str, list[str]]:
+        """Write ``df`` into a private staging dir. Returns the dir and its
+        data directories relative to it ("" = the dir itself)."""
+        stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
+        parts = list(partition_by or [])
+        # hash distribution (Iceberg's write.distribution-mode=hash): each
+        # partition's rows reach one task, so one data file per partition
+        w = (df.repartition(*parts) if parts else df).write.mode("overwrite")
+        if parts:
+            w = w.partitionBy(*parts)
+        w.parquet(stage)
         # An all-empty frame (e.g. a clean run's violations) can plan to ZERO
         # output partitions under AQE — the dir then holds only _SUCCESS and
         # the NEXT read fails UNABLE_TO_INFER_SCHEMA. Re-write one empty,
         # schema-carrying part file so every committed snapshot is readable.
-        if not any(
-            f.startswith("part-")
-            for _, _, files in os.walk(self._snap_dir(sid))
-            for f in files
-        ):
-            df.limit(0).repartition(1).write.mode("overwrite").parquet(
-                self._snap_dir(sid)
-            )
-        meta["snapshots"].append(
-            {"id": sid, "ts": time.time(), "partition_by": partition_by or []}
+        dirs = sorted(
+            os.path.relpath(d, stage).replace(os.sep, "/").removeprefix(".")
+            for d, _, files in os.walk(stage)
+            if any(f.startswith("part-") for f in files)
         )
-        meta["current"] = sid
+        if not dirs:
+            df.limit(0).repartition(1).write.mode("overwrite").parquet(stage)
+            dirs = [""]
+        return stage, dirs
+
+    def _publish(
+        self,
+        stage: str,
+        own: list[str],
+        partition_by: list[str] | None,
+        parent=_ANY_PARENT,
+        inherit: bool = False,
+    ) -> int | None:
+        """Commit a staged write as the next snapshot. ``parent`` is the
+        snapshot the staged rows were computed from: if another writer has
+        committed since, the stage is discarded and None tells the caller to
+        rebuild. ``inherit`` references the parent's directories for every
+        partition the stage did not rewrite."""
+        while True:
+            meta = self._meta()
+            if parent is not _ANY_PARENT and meta["current"] != parent:
+                shutil.rmtree(stage, ignore_errors=True)
+                return None
+            sid = meta["seq"] + 1
+            if self._claim(sid):
+                break
+        snap = self._snap_dir(sid)
+        shutil.rmtree(snap, ignore_errors=True)  # debris of a dead writer
+        os.rename(stage, snap)
+        dirs = [f"snap={sid}" + (f"/{d}" if d else "") for d in own]
+        if inherit:
+            written = set(own)
+            dirs += [
+                d
+                for d in self._entry(meta, parent)["dirs"]
+                if d.split("/", 1)[1] not in written
+            ]
+        meta["snapshots"].append(
+            {
+                "id": sid,
+                "ts": time.time(),
+                "partition_by": list(partition_by or []),
+                "dirs": sorted(dirs),
+            }
+        )
+        meta["current"] = meta["seq"] = sid
         self._write_meta(meta)
         return sid
 
+    def _rewrite(self, build, partition_by: list[str] | None) -> int:
+        """Commit ``build(parent entry)`` → (frame, inherit) on top of the
+        current snapshot, rebuilding when a concurrent commit lands first."""
+        while True:
+            meta = self._meta()
+            frame, inherit = build(self._entry(meta, meta["current"]))
+            stage, own = self._stage(frame, partition_by)
+            sid = self._publish(
+                stage, own, partition_by, parent=meta["current"], inherit=inherit
+            )
+            if sid is not None:
+                return sid
+
+    # -- write paths ---------------------------------------------------------
+    def write_snapshot(
+        self, df: DataFrame, partition_by: list[str] | None = None
+    ) -> int:
+        return self._publish(*self._stage(df, partition_by), partition_by)
+
     def append(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
         """New snapshot = previous rows ∪ new rows."""
-        cur = self.current_snapshot()
-        if cur is None:
-            return self.write_snapshot(df, partition_by)
-        old = self.read(df.sparkSession)
-        return self.write_snapshot(old.unionByName(df), partition_by)
+
+        def build(parent):
+            if parent is None:
+                return df, False
+            return self._read_entry(df.sparkSession, parent).unionByName(df), False
+
+        return self._rewrite(build, partition_by)
 
     def merge_upsert(
         self, df: DataFrame, keys: list[str], partition_by: list[str] | None = None
     ) -> int:
         """MERGE INTO … WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT: keep old
-        rows whose key is absent from the new frame, take all new rows.
+        rows whose key is absent from the new frame, take all new rows
         (reference: per-row ON CONFLICT loops, models/stats.py:21-32 — here
-        one anti-join + union, a single distributed pass)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            return self.write_snapshot(df, partition_by)
-        spark = df.sparkSession
-        old = self.read(spark)
-        kept = old.join(df.select(*keys).distinct(), keys, "left_anti")
-        return self.write_snapshot(kept.unionByName(df.select(old.columns)), partition_by)
+        one anti-join + union).
+
+        The write is proportional to the change. An empty source commits
+        nothing and returns the current snapshot id. When ``partition_by``
+        columns are among ``keys`` (a key never moves between partitions),
+        only the partitions the source touches are read, anti-joined and
+        rewritten; the new snapshot references the parent's directories for
+        every other partition. Otherwise the whole snapshot is rewritten."""
+        parts = list(partition_by or [])
+        scoped = bool(parts) and set(parts) <= set(keys)
+        touched = None  # partition values the source holds, when scoped
+        if self.current_snapshot() is not None:
+            if scoped:
+                touched = [tuple(r) for r in df.select(*parts).distinct().collect()]
+                empty = not touched
+            else:
+                empty = df.isEmpty()
+            if empty:
+                return self.current_snapshot()
+
+        def build(parent):
+            if parent is None:
+                return df, False
+            old = self._read_entry(df.sparkSession, parent)
+            inherit = (
+                touched is not None
+                and parent.get("partition_by") == parts
+                and all(d.count("/") == len(parts) for d in parent.get("dirs", [""]))
+            )
+            if inherit:
+                old = old.filter(_partition_filter(parts, touched))
+            kept = old.join(df.select(*keys).distinct(), keys, "left_anti")
+            return kept.unionByName(df.select(old.columns)), inherit
+
+        return self._rewrite(build, partition_by)
 
     def delete_where(self, condition: str) -> int:
         """Row-level delete (reference S18 retention deletes)."""
         spark = SparkSession.getActiveSession()
-        remaining = self.read(spark).filter(~F.expr(condition))
-        return self.write_snapshot(remaining)
+
+        def build(parent):
+            if parent is None:
+                raise FileNotFoundError(f"no snapshots in {self.path}")
+            return self._read_entry(spark, parent).filter(~F.expr(condition)), False
+
+        return self._rewrite(build, None)
 
     # -- read paths ----------------------------------------------------------
+    def _read_entry(self, spark: SparkSession, entry: dict) -> DataFrame:
+        dirs = entry.get("dirs", [])
+        if all(d.split("/", 1)[0] == f"snap={entry['id']}" for d in dirs):
+            return spark.read.parquet(self._snap_dir(entry["id"]))
+        # inherited partitions live under older snap=K/ dirs: read the
+        # listed dirs from the table root so partition columns are still
+        # inferred from the path, then drop the inferred ``snap`` level
+        paths = [os.path.join(self.path, d) for d in dirs]
+        return spark.read.option("basePath", self.path).parquet(*paths).drop("snap")
+
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        sid = snapshot_id if snapshot_id is not None else self.current_snapshot()
+        meta = self._meta()
+        sid = snapshot_id if snapshot_id is not None else meta["current"]
         if sid is None:
             raise FileNotFoundError(f"no snapshots in {self.path}")
-        return spark.read.parquet(self._snap_dir(sid))
+        entry = self._entry(meta, sid)
+        if entry is None:  # expired or unknown: fails like a missing path
+            return spark.read.parquet(self._snap_dir(sid))
+        return self._read_entry(spark, entry)
 
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
-        """Iceberg expire_snapshots analog: drop all but the newest N."""
-        meta = self._meta()
-        drop = meta["snapshots"][:-keep_last] if keep_last else meta["snapshots"]
-        kept = meta["snapshots"][-keep_last:] if keep_last else []
-        for s in drop:
-            shutil.rmtree(self._snap_dir(s["id"]), ignore_errors=True)
+        """Iceberg expire_snapshots analog: drop all but the newest N, and
+        delete every directory no kept snapshot references."""
+        while True:
+            meta = self._meta()
+            drop = meta["snapshots"][:-keep_last] if keep_last else meta["snapshots"]
+            if not drop:
+                return []
+            sid = meta["seq"] + 1
+            if self._claim(sid):
+                break
+        kept = meta["snapshots"][len(drop):]
         meta["snapshots"] = kept
+        meta["seq"] = sid
         if not kept:  # everything expired → table is empty, not bricked
             meta["current"] = None
         self._write_meta(meta)
+        live = {d for s in kept for d in s.get("dirs", [f"snap={s['id']}"])}
+        dead = {d for s in drop for d in s.get("dirs", [f"snap={s['id']}"])} - live
+        for d in dead:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        # a snap=K dir none of whose data dirs survive goes as a whole
+        for top in {d.split("/", 1)[0] for d in dead}:
+            if not any(d.split("/", 1)[0] == top for d in live):
+                shutil.rmtree(os.path.join(self.path, top), ignore_errors=True)
         return [s["id"] for s in drop]

@@ -116,7 +116,7 @@ from pyanomalydetector2_spark.operators.stats import (
     finalize_profile_partial,
     merge_profile_partials,
 )
-from pyanomalydetector2_spark.functions import local_rows_df
+from pyanomalydetector2_spark.functions import empty_frame, local_rows_df
 from pyanomalydetector2_spark.streaming.state import batch_dirs, latest_gen
 
 _MERGEABLE_STATS = {
@@ -392,7 +392,7 @@ def _read_component(
     _, paths, _ = _component_state(state_dir, comp, set(_committed(state_dir)))
     if paths:
         return spark.read.schema(schema).parquet(*paths)
-    return spark.createDataFrame([], schema)
+    return empty_frame(spark, schema)
 
 
 def _uniform_specs(suite: Suite) -> list[HistSpec]:
@@ -843,11 +843,12 @@ def streaming_suite_result(
     brows = bcounts.groupBy("bucket").agg(F.sum("n").alias("n")).collect()
     buckets = [int(r["bucket"]) for r in brows]
     row_count = int(sum(r["n"] for r in brows))
+    bucket_rows = {int(r["bucket"]): int(r["n"]) for r in brows}
     if not buckets:
         return SuiteResult(
             run_id,
-            spark.createDataFrame([], VERDICT_SCHEMA),
-            spark.createDataFrame([], VIOLATION_SCHEMA),
+            empty_frame(spark, VERDICT_SCHEMA),
+            empty_frame(spark, VIOLATION_SCHEMA),
             [], [], 0, 0.0,
         )
     bucket_df = local_rows_df(spark, [(b,) for b in buckets], "bucket int")
@@ -1030,12 +1031,13 @@ def streaming_suite_result(
             merged_ids.unpersist()
         return SuiteResult(
             run_id,
-            spark.createDataFrame([], VERDICT_SCHEMA),
+            empty_frame(spark, VERDICT_SCHEMA),
             violations,
             sorted(buckets),
             [],
             row_count,
             time.time() - t0,
+            bucket_rows=bucket_rows,
         )
 
     verdict_frames: list[DataFrame] = list(hll_frames)
@@ -1241,6 +1243,7 @@ def streaming_suite_result(
         [],
         row_count,
         time.time() - t0,
+        bucket_rows=bucket_rows,
     )
 
 

@@ -3,6 +3,8 @@ violations, pandas-oracle recomputation, checkpoint/resume)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -540,3 +542,98 @@ def test_speaking_rate_null_duration_is_missing_evidence(spark):
         "outlier": False,   # 500 tokens/s: genuine violation
         "sane": True,
     }
+
+
+def test_ledger_records_each_buckets_own_rows(spark, clips, tmp_path):
+    """Each bucket's ledger record carries that bucket's own row count —
+    the same for run_suite(commit=True) and for the deferred
+    commit_checkpoint — plus the ids of the snapshots it was persisted in."""
+    from pyanomalydetector2_spark.constraints.dsl import Suite, UniqueCheck
+    from pyanomalydetector2_spark.constraints.suite import commit_checkpoint
+
+    cur, base, dims = clips
+    part = cur.filter(
+        "bucket = 0 OR (bucket = 1 AND dur_ms % 3 = 0) "
+        "OR (bucket = 2 AND dur_ms % 7 = 0)"
+    )
+    want = {r["bucket"]: r["count"] for r in part.groupBy("bucket").count().collect()}
+    assert sorted(want) == [0, 1, 2] and len(set(want.values())) == 3
+    suite = Suite(unique_checks=(UniqueCheck("uniq_clip", "clip_id"),))
+
+    def ledger_rows(ledger):
+        return {b: ledger.metrics("run_rows", b)["metrics"]["rows"] for b in want}
+
+    inline = CheckpointLedger(str(tmp_path / "inline"))
+    res = run_suite(part, base, dims, suite, "run_rows", checkpoint=inline)
+    assert ledger_rows(inline) == want
+    assert sum(want.values()) == res.row_count
+    assert res.bucket_rows == want
+
+    deferred = CheckpointLedger(str(tmp_path / "deferred"))
+    res2 = run_suite(part, base, dims, suite, "run_rows", checkpoint=deferred, commit=False)
+    assert deferred.committed_buckets("run_rows") == []
+    commit_checkpoint(res2, deferred, snapshot_id=7, verdicts_snapshot_id=9)
+    assert ledger_rows(deferred) == want
+    rec = deferred.metrics("run_rows", 1)
+    assert rec["snapshot_id"] == 7 and rec["metrics"]["verdicts_snapshot_id"] == 9
+
+
+def test_noop_resume_runs_one_job_and_writes_nothing(spark, clips, tmp_path):
+    """A resume whose buckets are all committed (run_suite → both merges →
+    commit_checkpoint) launches no Spark job beyond the bucket count and
+    writes no file: no snapshot, no ledger record."""
+    from pyspark.sql import functions as F
+
+    from pyanomalydetector2_spark.constraints.suite import commit_checkpoint
+    from pyanomalydetector2_spark.sources.catalog import SnapshotTable
+
+    cur, base, dims = clips
+    suite = default_clips_suite()
+    ledger = CheckpointLedger(str(tmp_path / "ledger"))
+    results = SnapshotTable(str(tmp_path / "results"))
+    verdicts = SnapshotTable(str(tmp_path / "verdicts"))
+
+    def resume():
+        res = run_suite(cur, base, dims, suite, "run_noop", checkpoint=ledger, commit=False)
+        sids = (
+            results.merge_upsert(
+                res.violations, ["run_id", "bucket", "clip_id", "constraint_id"],
+                partition_by=["bucket"],
+            ),
+            verdicts.merge_upsert(
+                res.verdicts, ["run_id", "bucket", "constraint_id", "metric"]
+            ),
+        )
+        commit_checkpoint(res, ledger, *sids)
+        return res, sids
+
+    first, first_sids = resume()
+    assert first.processed_buckets == list(range(BUCKETS))
+    before = {
+        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+        for d, _, files in os.walk(tmp_path)
+        for f in files
+    }
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("bucket-count", "the resume's bucket-count job alone")
+        cur.filter(~F.col("bucket").isin(list(range(BUCKETS)))).groupBy(
+            "bucket"
+        ).count().collect()
+        sc.setJobGroup("noop-resume", "a resume with every bucket committed")
+        again, sids = resume()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("noop-resume")) == len(
+        tracker.getJobIdsForGroup("bucket-count")
+    )
+    assert again.processed_buckets == [] and again.row_count == 0
+    assert sids == first_sids
+    after = {
+        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+        for d, _, files in os.walk(tmp_path)
+        for f in files
+    }
+    assert after == before
