@@ -90,9 +90,10 @@ def local_rows_df(spark, rows, schema):
 
 def empty_frame(spark, schema):
     """Empty typed DataFrame that Spark plans as an empty ``LocalRelation``:
-    ``isEmpty()`` and a ``distinct`` collect over it finish without a
-    Spark job. ``createDataFrame([], schema)`` is a pickled
-    RDD instead, and every action on it starts a Python worker."""
+    ``isEmpty()`` over it finishes without a Spark job, and
+    ``SnapshotTable.merge_upsert`` sees from the plan alone that it has
+    nothing to commit. ``createDataFrame([], schema)`` is a pickled RDD
+    instead, and every action on it starts a Python worker."""
     return local_rows_df(spark, [], schema).limit(0)
 
 

@@ -15,18 +15,13 @@
   - partition-directory layout (``bucket=<k>``) so bucket-filtered reads
     prune at the file level exactly like Iceberg partition pruning.
 
-Snapshots are manifests. Each snapshot's entry in ``_meta.json`` lists the
-data directories it is made of: its own ``snap=N/<partition>`` dirs plus
-directories it inherits from older snapshots. A partition-scoped
-``merge_upsert`` rewrites only the partitions its source touches into
-``snap=N/`` and references the parent's directories for the rest, so a
-merge costs O(change), not O(table). ``expire_snapshots`` deletes only the
-directories no kept snapshot references.
-
-An empty merge source touches nothing: ``merge_upsert`` commits no
-snapshot and returns the current id. Callers that hand in empty frames
-planned as an empty ``LocalRelation`` (``functions.empty_frame``) pay no
-Spark job for that check.
+A ``SnapshotTable`` merge rewrites the whole current snapshot into
+``snap=N/``. A merge source whose optimized plan is an empty
+``LocalRelation`` (``functions.empty_frame``, which the suite returns for
+a resume with nothing left to validate) commits no snapshot and returns
+the current id. That check reads the plan only: a source whose emptiness
+would take a Spark job to learn is merged as usual, so its upstream
+stages never run twice.
 
 Commits are optimistic. A writer stages its files under ``_staging/``,
 then claims the next sequence number by creating ``_claims/<seq>`` with
@@ -37,7 +32,9 @@ rebuilds them, so concurrent merges lose no snapshot and no update.
 
 ``IcebergTable`` is unchanged by all of this: Iceberg's ``MERGE INTO``
 already rewrites only the affected data files and commits through its own
-optimistic metadata swap.
+optimistic metadata swap. ``SnapshotTable``'s partitioned writes follow
+Iceberg's default ``write.distribution-mode=hash``: one data file per
+partition.
 
 Every caller goes through this seam; ``table.backend`` reports which
 implementation a run actually used.
@@ -45,10 +42,8 @@ implementation a run actually used.
 
 from __future__ import annotations
 
-import functools
 import itertools
 import json
-import operator
 import os
 import re
 import shutil
@@ -221,23 +216,17 @@ _ANY_PARENT = object()  # commit does not depend on the snapshot it replaces
 _CLAIM_STALE_S = 30.0  # an unpublished claim this old belongs to a dead writer
 
 
-def _partition_filter(parts: list[str], touched: list[tuple]):
-    """Predicate selecting exactly the ``touched`` partition values; on
-    partition columns it prunes the file listing, not rows."""
-    if len(parts) == 1:
-        col = F.col(parts[0])
-        vals = [t[0] for t in touched]
-        cond = col.isin([v for v in vals if v is not None])
-        return cond | col.isNull() if None in vals else cond
-    return functools.reduce(
-        operator.or_,
-        (
-            functools.reduce(
-                operator.and_, (F.col(p).eqNullSafe(v) for p, v in zip(parts, t))
-            )
-            for t in touched
-        ),
-    )
+def _known_empty(df: DataFrame) -> bool:
+    """True when the optimized plan alone proves ``df`` empty (an empty
+    ``LocalRelation``, e.g. ``functions.empty_frame``). No Spark job runs:
+    a frame only a job could tell empty reports False, since running its
+    upstream stages once to decide and again to write would double the
+    cost of every merge that does have rows."""
+    try:
+        rows = df._jdf.queryExecution().optimizedPlan().maxRows()
+    except AttributeError:  # no JVM plan to inspect (a Spark Connect frame)
+        return False
+    return bool(rows.isDefined()) and rows.get() == 0
 
 
 class SnapshotTable:
@@ -278,10 +267,6 @@ class SnapshotTable:
     def _snap_dir(self, sid: int) -> str:
         return os.path.join(self.path, f"snap={sid}")
 
-    @staticmethod
-    def _entry(meta: dict, sid: int | None) -> dict | None:
-        return next((s for s in meta["snapshots"] if s["id"] == sid), None)
-
     # -- commit protocol -----------------------------------------------------
     def _claim(self, sid: int) -> bool:
         """Create ``sid``'s claim marker (O_CREAT|O_EXCL): True when this
@@ -295,14 +280,16 @@ class SnapshotTable:
             return True
         except FileExistsError:
             pass
-        # a claim left unpublished past the timeout belongs to a writer that
-        # died between claim and publish; the one waiter that creates the
-        # ``.broken`` marker clears it, so two waiters cannot both take over
+        # A claim left unpublished past the timeout belongs to a writer that
+        # died between claim and publish. The break token is named after
+        # this marker file (inode + mtime): only the one waiter that creates
+        # it removes the marker, and a later dead claim on the same id gets
+        # a token of its own.
         try:
-            if time.time() - os.path.getmtime(marker) > _CLAIM_STALE_S:
-                os.close(
-                    os.open(marker + ".broken", os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                )
+            st = os.stat(marker)
+            if time.time() - st.st_mtime > _CLAIM_STALE_S:
+                token = f"{marker}.broken-{st.st_ino}-{st.st_mtime_ns}"
+                os.close(os.open(token, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
                 if self._meta()["seq"] < sid:
                     os.remove(marker)
         except (FileExistsError, FileNotFoundError):
@@ -310,11 +297,8 @@ class SnapshotTable:
         time.sleep(0.01)
         return False
 
-    def _stage(
-        self, df: DataFrame, partition_by: list[str] | None
-    ) -> tuple[str, list[str]]:
-        """Write ``df`` into a private staging dir. Returns the dir and its
-        data directories relative to it ("" = the dir itself)."""
+    def _stage(self, df: DataFrame, partition_by: list[str] | None) -> str:
+        """Write ``df`` into a private staging dir and return the dir."""
         stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
         parts = list(partition_by or [])
         # hash distribution (Iceberg's write.distribution-mode=hash): each
@@ -327,29 +311,19 @@ class SnapshotTable:
         # output partitions under AQE — the dir then holds only _SUCCESS and
         # the NEXT read fails UNABLE_TO_INFER_SCHEMA. Re-write one empty,
         # schema-carrying part file so every committed snapshot is readable.
-        dirs = sorted(
-            os.path.relpath(d, stage).replace(os.sep, "/").removeprefix(".")
-            for d, _, files in os.walk(stage)
-            if any(f.startswith("part-") for f in files)
-        )
-        if not dirs:
+        if not any(
+            f.startswith("part-") for _, _, files in os.walk(stage) for f in files
+        ):
             df.limit(0).repartition(1).write.mode("overwrite").parquet(stage)
-            dirs = [""]
-        return stage, dirs
+        return stage
 
     def _publish(
-        self,
-        stage: str,
-        own: list[str],
-        partition_by: list[str] | None,
-        parent=_ANY_PARENT,
-        inherit: bool = False,
+        self, stage: str, partition_by: list[str] | None, parent=_ANY_PARENT
     ) -> int | None:
         """Commit a staged write as the next snapshot. ``parent`` is the
         snapshot the staged rows were computed from: if another writer has
         committed since, the stage is discarded and None tells the caller to
-        rebuild. ``inherit`` references the parent's directories for every
-        partition the stage did not rewrite."""
+        rebuild."""
         while True:
             meta = self._meta()
             if parent is not _ANY_PARENT and meta["current"] != parent:
@@ -361,36 +335,20 @@ class SnapshotTable:
         snap = self._snap_dir(sid)
         shutil.rmtree(snap, ignore_errors=True)  # debris of a dead writer
         os.rename(stage, snap)
-        dirs = [f"snap={sid}" + (f"/{d}" if d else "") for d in own]
-        if inherit:
-            written = set(own)
-            dirs += [
-                d
-                for d in self._entry(meta, parent)["dirs"]
-                if d.split("/", 1)[1] not in written
-            ]
         meta["snapshots"].append(
-            {
-                "id": sid,
-                "ts": time.time(),
-                "partition_by": list(partition_by or []),
-                "dirs": sorted(dirs),
-            }
+            {"id": sid, "ts": time.time(), "partition_by": list(partition_by or [])}
         )
         meta["current"] = meta["seq"] = sid
-        self._write_meta(meta)
+        self._write_meta(meta)  # atomic commit, Iceberg-style
         return sid
 
     def _rewrite(self, build, partition_by: list[str] | None) -> int:
-        """Commit ``build(parent entry)`` → (frame, inherit) on top of the
-        current snapshot, rebuilding when a concurrent commit lands first."""
+        """Commit ``build(parent snapshot id)`` on top of the current
+        snapshot, rebuilding when a concurrent commit lands first."""
         while True:
-            meta = self._meta()
-            frame, inherit = build(self._entry(meta, meta["current"]))
-            stage, own = self._stage(frame, partition_by)
-            sid = self._publish(
-                stage, own, partition_by, parent=meta["current"], inherit=inherit
-            )
+            parent = self.current_snapshot()
+            stage = self._stage(build(parent), partition_by)
+            sid = self._publish(stage, partition_by, parent=parent)
             if sid is not None:
                 return sid
 
@@ -398,15 +356,15 @@ class SnapshotTable:
     def write_snapshot(
         self, df: DataFrame, partition_by: list[str] | None = None
     ) -> int:
-        return self._publish(*self._stage(df, partition_by), partition_by)
+        return self._publish(self._stage(df, partition_by), partition_by)
 
     def append(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
         """New snapshot = previous rows ∪ new rows."""
 
         def build(parent):
             if parent is None:
-                return df, False
-            return self._read_entry(df.sparkSession, parent).unionByName(df), False
+                return df
+            return self.read(df.sparkSession, parent).unionByName(df)
 
         return self._rewrite(build, partition_by)
 
@@ -414,41 +372,20 @@ class SnapshotTable:
         self, df: DataFrame, keys: list[str], partition_by: list[str] | None = None
     ) -> int:
         """MERGE INTO … WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT: keep old
-        rows whose key is absent from the new frame, take all new rows
+        rows whose key is absent from the new frame, take all new rows.
         (reference: per-row ON CONFLICT loops, models/stats.py:21-32 — here
-        one anti-join + union).
-
-        The write is proportional to the change. An empty source commits
-        nothing and returns the current snapshot id. When ``partition_by``
-        columns are among ``keys`` (a key never moves between partitions),
-        only the partitions the source touches are read, anti-joined and
-        rewritten; the new snapshot references the parent's directories for
-        every other partition. Otherwise the whole snapshot is rewritten."""
-        parts = list(partition_by or [])
-        scoped = bool(parts) and set(parts) <= set(keys)
-        touched = None  # partition values the source holds, when scoped
-        if self.current_snapshot() is not None:
-            if scoped:
-                touched = [tuple(r) for r in df.select(*parts).distinct().collect()]
-                empty = not touched
-            else:
-                empty = df.isEmpty()
-            if empty:
-                return self.current_snapshot()
+        one anti-join + union, a single distributed pass). A source whose
+        plan is provably empty commits nothing and returns the current id."""
+        cur = self.current_snapshot()
+        if cur is not None and _known_empty(df):
+            return cur
 
         def build(parent):
             if parent is None:
-                return df, False
-            old = self._read_entry(df.sparkSession, parent)
-            inherit = (
-                touched is not None
-                and parent.get("partition_by") == parts
-                and all(d.count("/") == len(parts) for d in parent.get("dirs", [""]))
-            )
-            if inherit:
-                old = old.filter(_partition_filter(parts, touched))
+                return df
+            old = self.read(df.sparkSession, parent)
             kept = old.join(df.select(*keys).distinct(), keys, "left_anti")
-            return kept.unionByName(df.select(old.columns)), inherit
+            return kept.unionByName(df.select(old.columns))
 
         return self._rewrite(build, partition_by)
 
@@ -459,34 +396,24 @@ class SnapshotTable:
         def build(parent):
             if parent is None:
                 raise FileNotFoundError(f"no snapshots in {self.path}")
-            return self._read_entry(spark, parent).filter(~F.expr(condition)), False
+            return self.read(spark, parent).filter(~F.expr(condition))
 
         return self._rewrite(build, None)
 
     # -- read paths ----------------------------------------------------------
-    def _read_entry(self, spark: SparkSession, entry: dict) -> DataFrame:
-        dirs = entry.get("dirs", [])
-        if all(d.split("/", 1)[0] == f"snap={entry['id']}" for d in dirs):
-            return spark.read.parquet(self._snap_dir(entry["id"]))
-        # inherited partitions live under older snap=K/ dirs: read the
-        # listed dirs from the table root so partition columns are still
-        # inferred from the path, then drop the inferred ``snap`` level
-        paths = [os.path.join(self.path, d) for d in dirs]
-        return spark.read.option("basePath", self.path).parquet(*paths).drop("snap")
-
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         meta = self._meta()
         sid = snapshot_id if snapshot_id is not None else meta["current"]
         if sid is None:
             raise FileNotFoundError(f"no snapshots in {self.path}")
-        entry = self._entry(meta, sid)
-        if entry is None:  # expired or unknown: fails like a missing path
-            return spark.read.parquet(self._snap_dir(sid))
-        return self._read_entry(spark, entry)
+        if all(s["id"] != sid for s in meta["snapshots"]):
+            raise FileNotFoundError(f"snapshot {sid} of {self.path} is expired or unknown")
+        return spark.read.parquet(self._snap_dir(sid))
 
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
-        """Iceberg expire_snapshots analog: drop all but the newest N, and
-        delete every directory no kept snapshot references."""
+        """Iceberg expire_snapshots analog: drop all but the newest N. The
+        meta rewrite claims a sequence number like a commit does, so snapshot
+        ids may skip one after an expire."""
         while True:
             meta = self._meta()
             drop = meta["snapshots"][:-keep_last] if keep_last else meta["snapshots"]
@@ -495,18 +422,11 @@ class SnapshotTable:
             sid = meta["seq"] + 1
             if self._claim(sid):
                 break
-        kept = meta["snapshots"][len(drop):]
-        meta["snapshots"] = kept
+        meta["snapshots"] = meta["snapshots"][len(drop):]
         meta["seq"] = sid
-        if not kept:  # everything expired → table is empty, not bricked
+        if not meta["snapshots"]:  # everything expired → table is empty, not bricked
             meta["current"] = None
         self._write_meta(meta)
-        live = {d for s in kept for d in s.get("dirs", [f"snap={s['id']}"])}
-        dead = {d for s in drop for d in s.get("dirs", [f"snap={s['id']}"])} - live
-        for d in dead:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        # a snap=K dir none of whose data dirs survive goes as a whole
-        for top in {d.split("/", 1)[0] for d in dead}:
-            if not any(d.split("/", 1)[0] == top for d in live):
-                shutil.rmtree(os.path.join(self.path, top), ignore_errors=True)
+        for s in drop:
+            shutil.rmtree(self._snap_dir(s["id"]), ignore_errors=True)
         return [s["id"] for s in drop]

@@ -1,6 +1,6 @@
-"""SnapshotTable writes proportional to the change: partition-scoped
-merge_upsert over manifest snapshots, empty sources that commit nothing,
-and snapshot-id claims that keep concurrent commits from losing work."""
+"""SnapshotTable commits: empty sources that commit nothing, snapshot-id
+claims that keep concurrent commits from losing work, and the write
+layout of partitioned snapshots."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 
 from pyanomalydetector2_spark.functions import empty_frame
-from pyanomalydetector2_spark.sources.catalog import SnapshotTable
+from pyanomalydetector2_spark.sources.catalog import SnapshotTable, _known_empty
 
 KEYS = ["bucket", "id"]
 
@@ -33,92 +33,11 @@ def rows(df) -> dict[tuple, str]:
     return {(r["bucket"], r["id"]): r["v"] for r in df.collect()}
 
 
-def upsert_oracle(old: dict, src: dict) -> dict:
-    """Full anti-join oracle: old rows whose key the source lacks, plus the
-    source rows."""
-    return {**{k: v for k, v in old.items() if k not in src}, **src}
-
-
 def frame(spark, data: dict):
     return spark.createDataFrame(
         [(b, i, v) for (b, i), v in sorted(data.items())],
         "bucket int, id long, v string",
     )
-
-
-def entry_dirs(t: SnapshotTable, sid: int) -> list[str]:
-    with open(os.path.join(t.path, "_meta.json")) as f:
-        meta = json.load(f)
-    return next(s["dirs"] for s in meta["snapshots"] if s["id"] == sid)
-
-
-def test_scoped_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "t"))
-    base = {(i % 4, i): f"v{i}" for i in range(40)}
-    s1 = t.write_snapshot(frame(spark, base), partition_by=["bucket"])
-    s1_files = listing(t._snap_dir(s1))
-
-    # touch bucket 2 only: two updates and one insert
-    src = {(2, 2): "new2", (2, 6): "new6", (2, 1002): "ins"}
-    s2 = t.merge_upsert(frame(spark, src), KEYS, partition_by=["bucket"])
-    assert t.snapshots() == [s1, s2]
-    assert next(os.walk(t._snap_dir(s2)))[1] == ["bucket=2"]
-    assert entry_dirs(t, s2) == sorted(
-        [f"snap={s2}/bucket=2"] + [f"snap={s1}/bucket={b}" for b in (0, 1, 3)]
-    )
-    want2 = upsert_oracle(base, src)
-    assert rows(t.read(spark)) == want2
-    # same columns in the same order as a snapshot that owns all its dirs
-    assert t.read(spark).columns == t.read(spark, s1).columns
-    # bucket-filtered reads of a mixed snapshot still prune
-    assert rows(t.read(spark).filter("bucket = 2")) == {
-        k: v for k, v in want2.items() if k[0] == 2
-    }
-
-    # time travel to the parent is unchanged, and its files untouched
-    assert rows(t.read(spark, s1)) == base
-    assert listing(t._snap_dir(s1)) == s1_files
-
-    # a second scoped merge inherits across two generations
-    src3 = {(0, 0): "z0", (0, 2000): "z1"}
-    s3 = t.merge_upsert(frame(spark, src3), KEYS, partition_by=["bucket"])
-    assert entry_dirs(t, s3) == sorted(
-        [f"snap={s3}/bucket=0", f"snap={s2}/bucket=2"]
-        + [f"snap={s1}/bucket={b}" for b in (1, 3)]
-    )
-    want3 = upsert_oracle(want2, src3)
-    assert rows(t.read(spark)) == want3
-
-    # expiring the parents keeps every inherited dir the survivor needs
-    assert t.expire_snapshots(keep_last=1) == [s1, s2]
-    assert t.snapshots() == [s3]
-    assert rows(t.read(spark)) == want3
-    assert not os.path.exists(os.path.join(t.path, f"snap={s1}", "bucket=0"))
-    assert not os.path.exists(os.path.join(t.path, f"snap={s1}", "bucket=2"))
-    assert os.path.isdir(os.path.join(t.path, f"snap={s1}", "bucket=1"))
-
-    # expiring the survivor's sources too leaves no data dir behind
-    s4 = t.write_snapshot(frame(spark, want3), partition_by=["bucket"])
-    t.expire_snapshots(keep_last=1)
-    assert sorted(d for d in os.listdir(t.path) if d.startswith("snap=")) == [
-        f"snap={s4}"
-    ]
-    assert rows(t.read(spark)) == want3
-
-
-def test_merge_without_partition_keys_rewrites_everything(spark, tmp_path):
-    """Partition columns outside the keys could move a key between
-    partitions, so the merge falls back to the full rewrite."""
-    t = SnapshotTable(str(tmp_path / "t"))
-    base = {(i % 4, i): f"v{i}" for i in range(12)}
-    t.write_snapshot(frame(spark, base), partition_by=["bucket"])
-    # id 5 moves from bucket 1 to bucket 2
-    src = {(2, 5): "moved"}
-    s2 = t.merge_upsert(frame(spark, src), ["id"], partition_by=["bucket"])
-    assert all(d.startswith(f"snap={s2}/") for d in entry_dirs(t, s2))
-    want = {k: v for k, v in base.items() if k[1] != 5}
-    want[(2, 5)] = "moved"
-    assert rows(t.read(spark)) == want
 
 
 @pytest.mark.parametrize("partition_by", [["bucket"], None])
@@ -132,6 +51,41 @@ def test_empty_merge_commits_nothing(spark, tmp_path, partition_by):
     assert t.merge_upsert(empty, KEYS, partition_by=partition_by) == sid
     assert t.snapshots() == [sid]
     assert listing(t.path) == before
+
+
+def test_emptiness_is_read_from_the_plan_without_a_job(spark, tmp_path):
+    """Only a source the optimizer proves empty skips the merge. Deciding
+    runs no Spark job, and a source that is empty only at run time is
+    merged as usual (its upstream stages run once, in the write)."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    sid = t.write_snapshot(frame(spark, {(0, 1): "a", (1, 2): "b"}))
+    # built outside the job group: the parquet read infers its schema
+    every_row = t.read(spark)
+    runtime_empty = every_row.filter("v = 'none'")
+    empty = empty_frame(spark, "bucket int, id long, v string")
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("emptiness", "plan-only emptiness checks")
+        assert _known_empty(empty)
+        assert not _known_empty(runtime_empty)
+        assert not _known_empty(every_row)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("emptiness") == []
+    assert t.merge_upsert(runtime_empty, KEYS) == sid + 1
+    assert rows(t.read(spark)) == {(0, 1): "a", (1, 2): "b"}
+
+
+def test_expired_snapshot_read_raises(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"))
+    s1 = t.write_snapshot(frame(spark, {(0, 1): "a"}), partition_by=["bucket"])
+    t.merge_upsert(frame(spark, {(1, 2): "b"}), KEYS, partition_by=["bucket"])
+    s3 = t.merge_upsert(frame(spark, {(0, 1): "A"}), KEYS, partition_by=["bucket"])
+    assert t.expire_snapshots(keep_last=1) == [s1, s1 + 1]
+    for sid in (s1, s1 + 1, s3 + 7):
+        with pytest.raises(FileNotFoundError):
+            t.read(spark, sid)
+    assert rows(t.read(spark, s3)) == {(0, 1): "A", (1, 2): "b"}
 
 
 def test_concurrent_merges_lose_no_snapshot_or_update(spark, tmp_path, monkeypatch):
@@ -222,7 +176,7 @@ def test_commit_protocol_stress_loses_no_update(tmp_path):
         while True:
             parent = t.current_snapshot()
             stage = stage_tokens(t, read_tokens(t, parent) + [k])
-            if t._publish(stage, [""], None, parent=parent) is not None:
+            if t._publish(stage, None, parent=parent) is not None:
                 return
 
     old = sys.getswitchinterval()
@@ -243,10 +197,38 @@ def test_stale_claim_of_dead_writer_is_broken(tmp_path):
     claim marker behind; once it is older than the timeout the next writer
     takes the id over instead of waiting forever."""
     t = SnapshotTable(str(tmp_path / "t"))
-    t._publish(stage_tokens(t, [0]), [""], None)
+    t._publish(stage_tokens(t, [0]), None)
     marker = os.path.join(t.path, "_claims", "2")
     open(marker, "w").close()
     old = time.time() - 3600
     os.utime(marker, (old, old))
-    assert t._publish(stage_tokens(t, [1]), [""], None) == 2
+    assert t._publish(stage_tokens(t, [1]), None) == 2
+    assert read_tokens(t, 2) == [1]
+
+
+def test_stale_claims_of_two_dead_writers_in_a_row_are_broken(tmp_path):
+    """The writer that takes over a stale claim can die before publishing
+    too; its claim goes stale in turn and the next writer breaks it."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t._publish(stage_tokens(t, [0]), None)
+    marker = os.path.join(t.path, "_claims", "2")
+    old = time.time() - 3600
+
+    open(marker, "w").close()  # first writer claims id 2 and dies
+    os.utime(marker, (old, old))
+    for _ in range(100):  # second writer takes the claim over ...
+        if t._claim(2):
+            break
+    else:
+        pytest.fail("the first stale claim was never broken")
+    os.utime(marker, (old - 1, old - 1))  # ... and dies before publishing
+
+    published: list[int | None] = []
+    third = threading.Thread(
+        target=lambda: published.append(t._publish(stage_tokens(t, [1]), None)),
+        daemon=True,  # a writer stuck on the claim must not hang the suite
+    )
+    third.start()
+    third.join(timeout=60)
+    assert published == [2]
     assert read_tokens(t, 2) == [1]
