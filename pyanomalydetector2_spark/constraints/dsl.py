@@ -212,14 +212,14 @@ def drop_checks(suite: Suite, drop: set[str]) -> Suite:
 
 # transcript token count as a pure SQL expression (whitespace-delimited
 # runs; trim + empty-filter so ''/NULL count 0 — the SAME tokenizer as
-# text.ws_tokens and the crossmodal operator/oracles, down to tab/newline
+# text.ws_tokens, down to tab/newline
 # separators ('\\s+' in the SQL literal parses to the \s+ regex). The
 # suite runner materializes this ONCE as the ``transcript_tokens`` column
 # on the audio-invariant projection and the cross-modal predicates
 # reference the column by name — a single definition for the DSL and the
 # YAML mirror (the YAML references the column, never this string).
 # Perf-neutral by measurement: codegen subexpression elimination already
-# evaluated the previously-inlined duplicates once per row (BENCH §13).
+# evaluated the previously-inlined duplicates once per row (BASELINE.md §13).
 TOKEN_COUNT_SQL = (
     r"size(filter(split(lower(trim(coalesce(transcript, ''))), '\\s+'), "
     r"x -> x != ''))"

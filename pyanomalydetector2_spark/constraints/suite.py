@@ -82,9 +82,8 @@ class SuiteResult:
     skipped_buckets: list[int]
     row_count: int
     wall_sec: float
-    # frames persisted on behalf of this result's lazy legs (the verdicts
-    # cache; under eager_verdicts=False also the stat profile) — a long-
-    # lived session running many suites should release them once the
+    # frames persisted on behalf of this result (the verdicts cache) — a
+    # long-lived session running many suites should release them once the
     # result is materialized, or executor storage memory accrues one
     # cached frame per run
     cached: tuple = ()
@@ -171,7 +170,7 @@ def row_check_base(current: DataFrame, suite: Suite) -> DataFrame:
         # transcript_tokens computed ONCE as a column the cross-modal
         # predicates reference by name — single definition shared by the
         # DSL and the YAML mirror; perf-neutral vs inlining (codegen
-        # subexpression elimination, A/B in BENCH/BASELINE.md §13)
+        # subexpression elimination, A/B in BASELINE.md §13)
         audio_base = with_audio_invariants(audio_base).withColumn(
             "transcript_tokens", F.expr(TOKEN_COUNT_SQL)
         )
@@ -256,7 +255,7 @@ def percentile_sketches(
 ) -> DataFrame:
     """Per-(column, bucket) KLL sketch rows for percentile StatChecks — ALL
     columns in ONE column-pruned Arrow pass (the transfer is the build's
-    dominant cost, BENCH §24; every partition reduces to KBs of sketch
+    dominant cost, BASELINE.md §24; every partition reduces to KBs of sketch
     before the single tiny shuffle). The SAME frame shape the streaming
     suite persists per micro-batch ("ksketch" component), so batch and
     stream share one definition of pXX."""
@@ -473,7 +472,6 @@ def run_suite(
     salt_buckets: int | None = None,
     commit: bool = True,
     embeddings: DataFrame | None = None,
-    eager_verdicts: bool = True,
     sketch_store=None,
 ) -> SuiteResult:
     """Run the full suite over ``current`` (minus already-committed buckets
@@ -485,16 +483,6 @@ def run_suite(
     otherwise a crash between validation and persistence marks buckets
     committed whose violations were never written, and --resume silently
     skips them forever.
-
-    ``eager_verdicts`` (VERDICT r04 #3 — a knob, not a hardcode): True
-    materializes each family's verdict frame sequentially
-    (localCheckpoint) so families execute one job at a time — the shape a
-    small-driver host needs (a lazy union runs every family's table scan
-    concurrently and blew an 8g driver at the 8M-row materialize tier).
-    False leaves the union lazy: one job, families' scans overlap — on a
-    real cluster concurrent family scans are an executor-memory question
-    and the lazy union recovers the overlapped wall-clock. Both paths
-    emit bit-identical verdicts (pytest-pinned).
 
     ``sketch_store`` (optional catalog table, SnapshotTable/IcebergTable
     shape): persisted per-column global KLL sketches backing the equi-depth
@@ -803,7 +791,7 @@ def run_suite(
         (``sketch_store``): hit → KBs of sketch state replace the baseline
         percentile_approx rescan; miss → bootstrap so every later run is a
         hit. ALL missing columns bootstrap in ONE kll_build_multi pass —
-        the Arrow transfer dominates a sketch build (BENCH §24), so E
+        the Arrow transfer dominates a sketch build (BASELINE.md §24), so E
         equi-depth columns must not pay E baseline scans. No store → all
         None (inline edge derivation, unchanged)."""
         wanted = [
@@ -954,20 +942,17 @@ def run_suite(
             )
         _tick("ann recall audit")
 
-    # Family verdict frames: eager (default) materializes each frame
-    # sequentially via localCheckpoint — rows stay distributed, driver
-    # memory independent of bucket count, families execute one job at a
-    # time (the small-driver-safe shape). Lazy leaves one union job whose
-    # family scans overlap — the cluster shape. See the docstring knob.
+    # Family verdict frames are materialized sequentially via
+    # localCheckpoint — rows stay distributed, driver memory independent
+    # of bucket count, families execute one job at a time. A lazy union of
+    # all families runs every family's table scan concurrently and blew an
+    # 8g driver at the 8M-row tier.
     verdicts = local_rows_df(spark, verdict_rows, VERDICT_SCHEMA)
     for vf in verdict_frames:
-        verdicts = verdicts.unionByName(
-            vf.localCheckpoint() if eager_verdicts else vf
-        )
+        verdicts = verdicts.unionByName(vf.localCheckpoint())
     verdicts = verdicts.cache()
-    if stat_prof is not None and eager_verdicts:
-        # its verdict legs are materialized above; under lazy verdicts the
-        # legs still reference the persisted profile — keep the cache
+    if stat_prof is not None:
+        # its verdict legs are materialized above
         stat_prof.unpersist()
 
     result = SuiteResult(
@@ -978,11 +963,7 @@ def run_suite(
         skipped,
         row_count,
         time.time() - t0,
-        cached=(
-            (verdicts,)
-            if stat_prof is None or eager_verdicts
-            else (verdicts, stat_prof)
-        ),
+        cached=(verdicts,),
         bucket_rows={int(r[bucket_col]): int(r["_n"]) for r in brows},
     )
     if checkpoint is not None and commit:

@@ -120,10 +120,6 @@ def clip_id_of(ids: np.ndarray) -> np.ndarray:
     return np.char.add("clip-", np.char.zfill(ids.astype("int64").astype(str), 12))
 
 
-def numeric_id(clip_id: str) -> int:
-    return int(clip_id.rsplit("-", 1)[1])
-
-
 _SCRATCH: dict[str, np.ndarray] = {}
 
 

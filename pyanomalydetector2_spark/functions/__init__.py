@@ -110,26 +110,7 @@ def clean_float(c: Column, default: float = 0.0) -> Column:
     return F.when(bad, F.lit(default)).otherwise(c)
 
 
-def epoch_bucket(clock: Column, interval: int) -> Column:
-    """Tumbling time bucket: clock - clock % interval (reference
-    normalizer.py:12-13, logan_getter.py:252)."""
-    return (clock - clock % F.lit(interval)).cast("long")
-
-
-def wildcard_to_like(pattern: str) -> str:
-    """'*'→'%' LIKE rewriting (reference zabbix_getter.py:125-131). '_' is
-    escaped too: '*' is the ONLY wildcard in the source dialect, so a
-    literal underscore (common in host/item names) must not become LIKE's
-    match-any-one-char."""
-    return pattern.replace("%", r"\%").replace("_", r"\_").replace("*", "%")
-
-
 def zscore(value: Column, mean: Column, std: Column) -> Column:
     """(x-mean)/std with zero-variance guard (reference
     classifiers/__init__.py:14-34)."""
     return safe_div(value - mean, std)
-
-
-def z_indicator(value: Column, mean: Column, std: Column, sigma: float) -> Column:
-    """Binary |z| > sigma indicator column (reference W6)."""
-    return (F.abs(zscore(value, mean, std)) > F.lit(sigma)).cast("int")

@@ -154,8 +154,8 @@ def contamination_rate(
 
 def bench_bucket(key: Column, fraction: float, salt: str = "bench") -> Column:
     """Deterministic benchmark-membership predicate (hash bucket < frac) —
-    how the contract queries derive a 'benchmark' subset from the corpus
-    when no external eval set exists. Same h60 contract as sampling."""
+    how to derive a 'benchmark' subset from the corpus when no external
+    eval set exists. Same h60 contract as sampling."""
     return sample_bucket(key, salt) < int(fraction * _DENOM)
 
 

@@ -31,18 +31,6 @@ def norm_tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def exact_dup_groups(df: DataFrame, id_col: str, cols: list[str]) -> DataFrame:
-    """Exact duplicates on the md5 fingerprint of the given columns:
-    (fingerprint, dup_cnt, min_id) for groups with >1 member."""
-    fp = F.md5(F.concat_ws("", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols]))
-    return (
-        df.select(F.col(id_col), fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("dup_cnt"), F.min(id_col).alias("min_id"))
-        .filter(F.col("dup_cnt") > 1)
-    )
-
-
 def shingle_frame(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
@@ -635,10 +623,9 @@ def incremental_pairs_from_banded(
 ) -> DataFrame:
     """Banding-agnostic incremental-probe core: distinct (id_a < id_b)
     pairs touching at least one id from ``banded_new``, given two
-    pre-banded (id, band, key) frames. Shared by the MinHash text path
-    (``incremental_candidate_pairs``) and the audio fingerprint path
-    (``audio_fp.audio_near_dup_incremental``) — both store a banded index
-    across runs and probe each new batch against it, so pair generation is
+    pre-banded (id, band, key) frames, used by the MinHash text path
+    (``incremental_candidate_pairs``): it stores a banded index across
+    runs and probes each new batch against it, so pair generation is
     proportional to the batch, not the corpus.
 
     ``banded_new`` is consumed by two operators (the union and the key
@@ -753,8 +740,7 @@ def near_dup_jaccard_incremental(
         index_sigs = minhash_signatures(old, id_col, text_col, k, n)
     # the jaccard confirm consumes the pair frame three times (two id-set
     # unions + the intersect join); without a checkpoint the whole index
-    # lineage would be inlined into each copy — cut it once, then persist
-    # the candidate-pruned shingle frame for its three consumers
+    # lineage would be inlined into each copy — cut it once
     pairs = incremental_candidate_pairs(
         index_sigs, new_sigs, bands, rows_per_band, max_bucket_size
     ).localCheckpoint()
@@ -770,7 +756,7 @@ def near_dup_jaccard_incremental(
     cand_docs = docs.join(
         ids.withColumnRenamed("id", id_col), id_col, "semi"
     )
-    sh = shingle_frame(cand_docs, id_col, text_col, n).persist()
+    sh = shingle_frame(cand_docs, id_col, text_col, n)
     j = jaccard_from_shingles(sh, pairs, prune=False)  # already candidate-only
     return j.filter(F.col("jaccard") >= threshold)
 
@@ -922,8 +908,8 @@ def edit_near_dup(
     )
     # equality shortcut: near-dup candidates overwhelmingly carry the
     # SAME text (exact duplicates), and levenshtein(x, x) = 0 exactly —
-    # skip the O(max_dist·len) DP for equal strings (same guard as the
-    # crossmodal mismatch kernel); distances are unchanged
+    # skip the O(max_dist·len) DP for equal strings; distances are
+    # unchanged
     dist = F.when(
         F.col("__txt_a") == F.col("__txt_b"), F.lit(0)
     ).otherwise(F.levenshtein("__txt_a", "__txt_b", max_dist))

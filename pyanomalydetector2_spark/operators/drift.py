@@ -39,30 +39,6 @@ class HistSpec:
     nbins: int
 
 
-def binned_counts(
-    df: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    nbins: int,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Histogram counts per (group?, bin) for one column. width_bucket
-    semantics: bin 0 = underflow, nbins+1 = overflow. Nulls excluded
-    (null-rate is a separate stat constraint)."""
-    binc = F.width_bucket(
-        F.col(column).cast("double"), F.lit(lo), F.lit(hi), F.lit(nbins)
-    )
-    keys = ([group_col] if group_col else []) + ["bin"]
-    return (
-        df.filter(F.col(column).isNotNull())
-        .select(*(([group_col] if group_col else []) + [binc.alias("bin")]))
-        .filter(F.col("bin").isNotNull())  # width_bucket(NaN) → NULL bin
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def histogram_counts_df(
     df: DataFrame, specs: list[HistSpec], group_col: str | None = None
 ) -> DataFrame:

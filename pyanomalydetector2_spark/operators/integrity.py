@@ -25,15 +25,6 @@ def referential_violations(
     )
 
 
-def domain_summary(fact: DataFrame, column: str, dim: DataFrame) -> DataFrame:
-    """Per-value violation counts (observed domain − allowed domain)."""
-    return (
-        referential_violations(fact, column, dim)
-        .groupBy(column)
-        .agg(F.count(F.lit(1)).alias("violation_cnt"))
-    )
-
-
 def fd_violations(
     fact: DataFrame,
     determinant: list[str],

@@ -213,12 +213,6 @@ def _error_bound(n: int, k: int) -> float:
 # ---------------------------------------------------------------------------
 
 
-def _sketch_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
-    return StructType(
-        [df.schema[c] for c in group_cols] + _STATE_FIELDS
-    )
-
-
 def _rows_to_sketch(pdf: pd.DataFrame, k: int) -> _Sketch:
     """Merge all serialized sketch rows of one group into one state."""
     acc = _Sketch(k)
@@ -237,7 +231,7 @@ def kll_build_multi(
 ) -> DataFrame:
     """Sketches for MANY columns in ONE Arrow pass — one row per
     (group, column), tagged by a ``column`` field. The Arrow JVM→Python
-    transfer is the dominant cost of a sketch build (BENCH/BASELINE.md §24),
+    transfer is the dominant cost of a sketch build (BASELINE.md §24),
     so multi-column percentile checks must not pay it per column.
     Null/NaN/±inf values are ignored per column (they are screened by the
     null-rate / finiteness checks, not the quantile profile); a

@@ -44,18 +44,6 @@ FRAME_SAMPLE_SCHEMA = "vid_id string, frame_idx int, frame_bytes binary"
 
 
 # --------------------------------------------------------------- kernels --
-def decode_image_kernel(payload: bytes) -> np.ndarray:
-    """REAL decode for BMP/PNG/JPEG containers (image_codec + jpeg_codec,
-    stdlib+numpy, progressive included); other formats (WebP) raise —
-    this remains the seam where PIL plugs in for those."""
-    try:
-        return decode_image(payload)
-    except UnsupportedImageError as e:
-        raise NotImplementedError(
-            f"no decoder for this container in this environment: {e}"
-        ) from e
-
-
 def fake_image_meta(payload: bytes) -> tuple[int, int, int]:
     """Deterministic fake decode: derive (w, h, c) from the payload header —
     stands in for reading the real image header."""

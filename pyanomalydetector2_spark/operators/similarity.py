@@ -124,8 +124,8 @@ def brute_force_topk(
 
 def _sign_matrix(dims: int, planes: int):
     """The deterministic ±1 hyperplane matrix: plane p, dim d has sign +1
-    iff h60('p:d') (first 15 hex chars of md5) is even — the convention the
-    DuckDB oracle replicates literally (__spark_entry__._lsh_signature_sql)."""
+    iff h60('p:d') (first 15 hex chars of md5) is even — a convention any
+    SQL engine with md5 can replicate literally."""
     import hashlib
 
     m = np.empty((planes, dims))
@@ -233,9 +233,8 @@ def ivf_topk(
        rows in probed cells; exact cosine re-rank, top-k.
 
     At 10^12 rows the candidate set shrinks by ~n_cells/nprobe; the
-    centroid matrix is KB-sized and broadcast. Deterministic end-to-end ⇒
-    the DuckDB oracle replicates cell assignment and probing exactly
-    (hash-exact contract check, not recall-pinned).
+    centroid matrix is KB-sized and broadcast. Deterministic end-to-end:
+    cell assignment and probing are SQL-replayable exactly.
     """
     cents_df = ivf_centroids(corpus, n_cells, id_col=id_col, vec_col=vec_col)
     arrays = _ivf_arrays(cents_df.collect())
@@ -811,8 +810,8 @@ def embedding_lsh_bucket_stats(
 # smallest h60(id). Encoding = per-sub-space argmin of ROUNDED (6 dp) L2
 # distance, ties → smallest codeword index. ADC scoring = rounded cosine
 # of the query against the RECONSTRUCTION (concatenated codewords) — the
-# exact algebra DuckDB replays with list slicing + list_cosine_similarity,
-# so the contract check is hash-exact, not recall-pinned.
+# exact algebra SQL replays with list slicing + list_cosine_similarity,
+# so results are reproducible exactly, not only recall-bounded.
 
 
 def pq_codebook(

@@ -1,5 +1,6 @@
 """Text-analysis operators for training-data pipelines: token counting,
-quality scoring, language-ID heuristic, document fingerprinting.
+quality scoring, vocabulary statistics and drift, feature-hash
+embeddings.
 
 Everything is built-in Column expressions (JVM, codegen) — tokenization is
 split/regex, no Python in the data path. All formulas are deliberately
@@ -11,15 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyanomalydetector2_spark.operators.dedup import h60, shingle_frame
-
-# tiny per-language marker sets (stopword-style language ID)
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "a", "of", "and", "to"),
-    "fr": ("le", "la", "de", "et", "un"),
-    "de": ("der", "die", "das", "und", "ein"),
-    "es": ("el", "la", "de", "y", "un"),
-}
+from pyanomalydetector2_spark.operators.dedup import h60
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -28,8 +21,8 @@ def ws_tokens(col: Column) -> Column:
     """Whitespace tokens of a text column as an array, dropping
     empty-string tokens: split('') yields [''] (size 1), which would
     credit empty/whitespace-only docs with a phantom token. The shared
-    tokenization for token_metrics and the cross-modal transcript
-    checks — one definition, one oracle replay
+    tokenization for token_metrics and the suite's transcript token
+    count (``dsl.TOKEN_COUNT_SQL``) — one definition, one oracle replay
     (list_filter(regexp_split_to_array(lower(trim(x)), '\\s+'), …))."""
     return F.filter(F.split(F.lower(F.trim(col)), r"\s+"), lambda x: x != "")
 
@@ -75,56 +68,6 @@ def token_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
             "alpha_ratio": alpha_ratio,
             "quality_score": quality,
         }
-    )
-
-
-def lang_scores(text_col: str = "text") -> list[Column]:
-    """Per-language marker-hit-rate columns (lang_<code>)."""
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda x: x != ""
-    )
-    cols = []
-    for lang, markers in LANG_MARKERS.items():
-        hits = F.size(F.filter(toks, lambda x: x.isin(*markers)))
-        cols.append(F.try_divide(hits, F.size(toks)).alias(f"lang_{lang}"))
-    return cols
-
-
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic language ID: argmax marker hit rate, 'und' when all zero.
-    Deterministic tie-break by language code order."""
-    from pyanomalydetector2_spark.functions import rebalance_for_expansion
-
-    # per-row marker scans over every token × every language: same
-    # single-split parallelism guard as token_metrics
-    df = rebalance_for_expansion(df)
-    scored = df.select("*", *lang_scores(text_col))
-    langs = list(LANG_MARKERS)
-    best = F.greatest(*[F.col(f"lang_{code}") for code in langs])
-    pred = F.when(best <= 0, F.lit("und"))
-    for code in langs:  # first max wins (stable order)
-        pred = pred.when(F.col(f"lang_{code}") == best, F.lit(code))
-    return scored.withColumn("lang_pred", pred)
-
-
-def doc_fingerprint(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, n: int = 3
-) -> DataFrame:
-    """Winnowing-style content fingerprint: the k smallest shingle hashes,
-    concatenated (robust to local edits, oracle-expressible)."""
-    sh = shingle_frame(df, id_col, text_col, n).withColumn(
-        "h", h60(F.col("shingle"))
-    )
-    fps = sh.groupBy("id").agg(
-        F.concat_ws(
-            "_", F.slice(F.array_sort(F.collect_list("h")), 1, k)
-        ).alias("fingerprint")
-    )
-    # docs with < n tokens produce no shingles — give them a stable empty
-    # fingerprint instead of silently vanishing from the output
-    all_ids = df.select(F.col(id_col).alias("id")).distinct()
-    return all_ids.join(fps, "id", "left").withColumn(
-        "fingerprint", F.coalesce("fingerprint", F.lit(""))
     )
 
 

@@ -1,15 +1,15 @@
-"""Uniqueness validation (north_rule): HLL cheap screen → exact confirm.
+"""Uniqueness validation (north_rule): the exact confirm behind the HLL
+screen.
 
 The two-stage shape mirrors the reference's detect1→detect2 funnel
-(detect_anomalies.py:79-96): a cheap whole-table screen short-circuits the
-expensive pass when the data is clean — on a 10^12-row table the screen is
-one shuffle-free-ish aggregate (HLL partials merge on the map side), and the
-exact pass only runs when the screen smells duplicates.
+(detect_anomalies.py:79-96): ``run_suite`` computes a cheap HLL distinct
+estimate per bucket in the one aggregation job that also yields the bucket
+list (HLL partials merge on the map side), and the exact pass here emits
+the violation rows.
 
 The exact pass is a groupBy(key) count — for a near-unique key there is no
 skew by construction (every group ≈1 row, partial aggregation collapses each
-map partition to its local distincts). ``approx_count_distinct`` relative
-error defaults to 2% (rsd=0.02); the screen threshold accounts for it.
+map partition to its local distincts).
 """
 
 from __future__ import annotations
@@ -18,24 +18,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hll_unique_screen(df: DataFrame, key: str, rsd: float = 0.02) -> dict:
-    """Stage 1: HyperLogLog estimate vs exact row count. Returns the two
-    numbers; caller decides (dup_ratio_upper_bound > 0 → run exact)."""
-    row = df.agg(
-        F.count(key).alias("cnt"),
-        F.approx_count_distinct(key, rsd).alias("approx_distinct"),
-    ).first()
-    cnt, ad = row["cnt"], row["approx_distinct"]
-    # HLL can over- or under-estimate by ~rsd; anything below this floor is
-    # indistinguishable from sketch noise
-    suspicious = ad < cnt * (1.0 - 2.0 * rsd)
-    return {"cnt": cnt, "approx_distinct": ad, "suspicious": bool(suspicious)}
-
-
 def exact_duplicates(
     df: DataFrame, key: str, salt_buckets: int | None = None
 ) -> DataFrame:
-    """Stage 2: exact duplicate groups → (key, dup_cnt) with dup_cnt > 1.
+    """Exact duplicate groups → (key, dup_cnt) with dup_cnt > 1.
     One shuffle on the key; map-side combine means the exchange carries at
     most |distinct keys per partition| rows.
 

@@ -1,6 +1,6 @@
 """Plan-inspection helpers: assert the physical plan is the plan we want
-(SURVEY §4 — pushdown, pruning, broadcast, codegen). Used by tests and the
-bench to keep regressions visible."""
+(SURVEY §4 — pushdown, pruning, broadcast, codegen). Used by the
+plan-shape tests to keep regressions visible."""
 
 from __future__ import annotations
 
@@ -9,10 +9,6 @@ from pyspark.sql import DataFrame
 
 def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def explain_formatted(df: DataFrame) -> str:
@@ -51,18 +47,9 @@ def assert_read_schema_only(df: DataFrame, *columns: str) -> None:
     raise AssertionError(f"no ReadSchema in plan:\n{plan}")
 
 
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = physical_plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-
-
-def count_shuffles(df: DataFrame) -> int:
-    return physical_plan(df).count("Exchange hashpartitioning")
-
-
 def audit_plan(df: DataFrame, execute: bool = True) -> dict:
     """Structured audit of the FINAL physical plan (shared by
-    tools/plan_audit.py and tests/test_plans_contract.py). With
+    tests/test_plans_contract.py). With
     ``execute=True`` the DataFrame is collected first so AQE finalizes its
     adaptive plan — codegen markers and runtime join-strategy switches
     only appear in the final plan of the executed instance."""

@@ -78,15 +78,6 @@ def main(argv: list[str] | None = None) -> dict:
         "(ablation / wall-decomposition runs; unknown ids are an error)",
     )
     ap.add_argument(
-        "--lazy-verdicts",
-        dest="eager_verdicts",
-        action="store_false",
-        help="leave family verdict frames as one lazy union job (cluster "
-        "shape: family scans overlap) instead of the default sequential "
-        "localCheckpoint materialization (small-driver shape); results "
-        "are bit-identical either way",
-    )
-    ap.add_argument(
         "--metrics-history",
         default=None,
         help="metrics-repository parquet dir: append this run's verdict "
@@ -230,7 +221,7 @@ def main(argv: list[str] | None = None) -> dict:
     res = run_suite(
         cur, base, dims, suite, args.run_id, checkpoint=ledger,
         salt_buckets=args.salt_buckets, commit=False,
-        eager_verdicts=args.eager_verdicts, sketch_store=sketch_store,
+        sketch_store=sketch_store,
     )
     # persist results (FIXTURES.md §B3/§B4 output contract)
     results_t = open_table(spark, os.path.join(args.warehouse, "results"))

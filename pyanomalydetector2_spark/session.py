@@ -16,11 +16,11 @@ from pyspark.sql import SparkSession
 
 def _resolve_master(cpus: int) -> str:
     """PYAD2_MASTER overrides the local[N] default so the SAME entry
-    points (run_suite, benches) run under a genuinely multi-executor
+    points (run_suite, perfbench) run under a genuinely multi-executor
     master — e.g. spark-submit --master local-cluster[4,1,3072] (separate
-    executor JVMs, real serialization + --py-files shipping;
-    tools/cluster_scaling_bench.py). ``cpus`` then only sizes shuffle
-    partitions; the master decides the slots."""
+    executor JVMs, real serialization + --py-files shipping via
+    tools/submit_suite.py). ``cpus`` then only sizes shuffle partitions;
+    the master decides the slots."""
     return os.environ.get("PYAD2_MASTER") or (
         f"local[{cpus}]" if cpus else "local[*]"
     )

@@ -1,27 +1,22 @@
-"""Delta-dir state layout shared by the streaming components.
+"""Delta-dir state layout of the streaming constraint suite.
 
-Each stateful stream persists its state as per-micro-batch parquet delta
-directories (``<component>/batch=N``) plus optional compacted generations
+Each state component persists per-micro-batch parquet delta directories
+(``<component>/batch=N``) plus optional compacted generations
 (``<component>_base/gen=N``). The pattern gives:
 
 - **idempotent replay**: a re-delivered micro-batch overwrites its own
   ``batch=N`` dirs, so crash/restart cannot double-count;
 - **crash-safe compaction**: a generation is only visible once its
   ``_SUCCESS`` marker exists — an interrupted fold leaves readers on the
-  un-folded deltas (audio_ingest.compact_audio_index);
-- **bounded folds**: ``state_paths(thru=...)`` lets compaction exclude a
-  torn batch's orphan delta (ADVICE r04: folding a delta whose sibling
-  component never landed duplicates rows after replay).
+  un-folded deltas (``suite_stream.compact_suite_state``).
 
-Extracted verbatim from streaming/audio_ingest.py (which now imports from
-here) so the streaming constraint suite shares one proven implementation.
+``suite_stream._component_state`` resolves a component's read list (base
+plus committed deltas after it) from these two helpers.
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def batch_dirs(path: str) -> list[tuple[int, str]]:
@@ -49,38 +44,3 @@ def latest_gen(path: str) -> tuple[int, str] | None:
         and os.path.exists(f"{path}/{f}/_SUCCESS")
     ]
     return max(gens) if gens else None
-
-
-def state_paths(
-    state_dir: str, comp: str, thru: int | None = None
-) -> list[str]:
-    """Concrete read list for one state component: the newest complete
-    compacted base (if any) plus every delta batch AFTER the generation it
-    folded — bounded above by ``thru`` when the caller (compaction) must
-    not fold a torn batch's orphan delta. Concrete directories, not a
-    glob: a glob path makes every read re-probe for a streaming-sink
-    metadata dir (a logged FileNotFound per read)."""
-    base = latest_gen(f"{state_dir}/{comp}_base")
-    folded_thru = base[0] if base else -1
-    paths = [base[1]] if base else []
-    paths += [
-        d
-        for n, d in batch_dirs(f"{state_dir}/{comp}")
-        if n > folded_thru and (thru is None or n <= thru)
-    ]
-    return paths
-
-
-def read_state(
-    spark: SparkSession,
-    state_dir: str,
-    comp: str,
-    schema,
-    thru: int | None = None,
-) -> DataFrame:
-    """Read a state component (compacted base + deltas), or an empty
-    frame of the right schema before the first batch lands."""
-    paths = state_paths(state_dir, comp, thru=thru)
-    if paths:
-        return spark.read.parquet(*paths)
-    return spark.createDataFrame([], schema)

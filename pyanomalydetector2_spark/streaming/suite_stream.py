@@ -804,21 +804,11 @@ def streaming_suite_result(
     run_id: str,
     key_col: str = "clip_id",
     bucket_col: str = "bucket",
-    with_verdicts: bool = True,
 ) -> SuiteResult:
     """Assemble the suite verdict over everything committed so far — the
     same VERDICT/VIOLATION frames the one-shot runner emits over the union
     of all processed batches, computed purely from merged state (no source
-    re-scan). Equality with the batch runner is pytest-pinned.
-
-    ``with_verdicts=False`` (optimization r06, the streaming analog of the
-    batch runner's ``eager_verdicts`` knob): skip verdict assembly — the
-    stat/KLL merges and the uniform/equi/categorical drift driver funnels
-    — and return ``verdicts`` as an EMPTY frame; the violations frame is
-    computed exactly as before. For consumers that read only violations
-    (the violation sink of an ops pipeline), the drift/stat funnels are
-    pure overhead per drain; re-assemble with the default to get verdicts
-    from the same state."""
+    re-scan). Equality with the batch runner is pytest-pinned."""
     ensure_streamable(suite)
     # fail closed on a suite that changed shape mid-stream: the manifest
     # pins per-check state signatures (catches additions WITHIN a family),
@@ -1025,20 +1015,6 @@ def streaming_suite_result(
             )
     violations = violations.cache()
     violations.count()
-
-    if not with_verdicts:
-        if merged_ids is not None:
-            merged_ids.unpersist()
-        return SuiteResult(
-            run_id,
-            empty_frame(spark, VERDICT_SCHEMA),
-            violations,
-            sorted(buckets),
-            [],
-            row_count,
-            time.time() - t0,
-            bucket_rows=bucket_rows,
-        )
 
     verdict_frames: list[DataFrame] = list(hll_frames)
     counted_ids = (

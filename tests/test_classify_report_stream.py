@@ -1,20 +1,17 @@
-"""Classifier (two-level DBSCAN), reporter, streaming rollup, and
-hypothesis property tests for the moment algebra."""
+"""Classifier (two-level DBSCAN) and hypothesis property tests for the
+moment algebra and the clip generator."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from pyanomalydetector2_spark.operators.classify import (
     classify_charts,
     collect_charts,
 )
-from pyanomalydetector2_spark.reporter import build_report
 
 
 def test_classify_charts_two_level():
@@ -49,70 +46,6 @@ def test_collect_charts(spark):
     charts = collect_charts(df)
     np.testing.assert_array_equal(charts[1], [1.0, 2.0, 3.0])  # clock-ordered
     np.testing.assert_array_equal(charts[2], [9.0])
-
-
-def test_build_report_alarms_on_multi_host_clusters(spark):
-    rows = [
-        # cluster 0 spans two hosts -> alarms
-        (1, 100, "grp/a", 1, 0, "h1", "item1", 0.0, 1.0),
-        (2, 100, "grp/a", 2, 0, "h2", "item2", 0.0, 1.0),
-        (3, 100, "grp/a", 2, 0, "h2", "item3", 0.0, 1.0),  # same host, dropped by A15
-        # cluster 1 is single-host -> silent
-        (4, 100, "grp/b", 3, 1, "h3", "item4", 0.0, 1.0),
-        # noise
-        (5, 100, "grp/b", 4, -1, "h4", "item5", 0.0, 1.0),
-        # older epoch ignored (O4)
-        (6, 50, "grp/a", 5, 0, "h5", "item6", 0.0, 1.0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "itemid long, created long, group_name string, hostid int, clusterid int,"
-        " host_name string, item_name string, trend_mean double, trend_std double",
-    )
-    rep = build_report(df)
-    assert list(rep) == ["cluster_0"]
-    hosts = rep["cluster_0"]["grp/a"]
-    assert set(hosts) == {"h1", "h2"}
-    assert [i["itemid"] for i in hosts["h2"]] == [2]  # first per (cluster,host)
-
-
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    from pyanomalydetector2_spark.streaming.rollup import (
-        run_to_memory_sink,
-        streaming_rollup,
-    )
-
-    rng = np.random.default_rng(9)
-    pdf = pd.DataFrame(
-        {
-            "itemid": rng.integers(1, 5, 500),
-            "ts": pd.to_datetime(
-                rng.integers(1_700_000_000, 1_700_007_200, 500), unit="s"
-            ),
-            "value": rng.normal(10, 2, 500),
-        }
-    )
-    src = str(tmp_path / "stream_src")
-    spark.createDataFrame(pdf).write.parquet(src)
-
-    rolled = streaming_rollup(spark, src, window="1 hour", watermark="2 hours")
-    run_to_memory_sink(rolled, "t_rollup")
-    got = (
-        spark.table("t_rollup")
-        .toPandas()
-        .set_index(["itemid", "window_start"])
-        .sort_index()
-    )
-
-    pdf["window_start"] = pdf.ts.dt.floor("h")
-    exp = pdf.groupby(["itemid", "window_start"])["value"].agg(
-        ["count", "mean", "std", "min", "max"]
-    )
-    assert len(got) == len(exp)
-    np.testing.assert_allclose(got["cnt"], exp["count"])
-    np.testing.assert_allclose(got["mean"], exp["mean"], rtol=1e-9)
-    np.testing.assert_allclose(got["std"], exp["std"].fillna(0.0), rtol=1e-6)
-    spark.sql("DROP TABLE IF EXISTS t_rollup")
 
 
 # ---------------------------------------------------------- property tests --

@@ -483,30 +483,6 @@ def test_ann_check_in_suite(spark, clips):
         run_suite(cur, base, dims, bad, "run_ann3", embeddings=emb)
 
 
-def test_lazy_and_eager_verdicts_bit_identical(spark, clips):
-    """VERDICT r04 #3: the eager sequential verdict materialization is a
-    knob, and both settings emit bit-identical verdicts AND violations —
-    the choice is purely an execution-shape question (small driver vs
-    overlapped cluster scans)."""
-    cur, base, dims = clips
-    eager = run_suite(cur, base, dims, default_clips_suite(), "run_vk_e")
-    lazy = run_suite(
-        cur, base, dims, default_clips_suite(), "run_vk_l",
-        eager_verdicts=False,
-    )
-
-    def _vset(res, run):
-        return {
-            tuple(r)
-            for r in res.verdicts.drop("run_id").collect()
-        }
-
-    assert _vset(eager, "e") == _vset(lazy, "l")
-    ev = {tuple(r) for r in eager.violations.drop("run_id").collect()}
-    lv = {tuple(r) for r in lazy.violations.drop("run_id").collect()}
-    assert ev == lv and ev
-
-
 def test_speaking_rate_null_duration_is_missing_evidence(spark):
     """NULL/zero dur_ms carries no rate evidence: the speaking-rate
     predicate must pass (vacuous) instead of the NULL comparison

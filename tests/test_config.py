@@ -96,7 +96,7 @@ def test_yaml_suite_runs_end_to_end(spark, tmp_path):
 
 def test_master_resolution_env_override(monkeypatch):
     """PYAD2_MASTER reroutes every entry point onto a multi-executor
-    master (tools/cluster_scaling_bench.py) without touching callers."""
+    master (e.g. local-cluster) without touching callers."""
     from pyanomalydetector2_spark.session import _resolve_master
 
     monkeypatch.delenv("PYAD2_MASTER", raising=False)

@@ -1,7 +1,6 @@
 """Curation operators: decontamination, split leakage, sequence packing.
 
-Oracles are hand-computed on tiny planted corpora; the contract queries in
-__spark_entry__ carry the DuckDB hash-exact replay at sf0.01."""
+Oracles are hand-computed on tiny planted corpora."""
 
 from __future__ import annotations
 

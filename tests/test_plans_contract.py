@@ -1,122 +1,200 @@
-"""Plan-regression gate over the most expensive contract queries
-(VERDICT r02 next-round #6): the assertions tools/plan_audit.py used to
-check by hand now fail CI when a plan regresses — a global sort sneaking
-into a pipeline, a join degrading to cartesian, a time filter no longer
-reaching the parquet scan, a broadcast turning into a shuffled join.
+"""Plan-shape gate over the package's most expensive operators: a global
+sort sneaking into a pipeline, a join degrading to cartesian, a broadcast
+turning into a shuffled join, or a shuffle count growing fails CI.
 
-Runs at sf0.001 (plan SHAPE is scale-invariant for these checks; AQE is
-finalized by executing each query, which is milliseconds at this SF).
+Each gate builds its input from the small deterministic corpus in
+``conftest.py`` (or the clips generator for the suite's check families)
+and calls the operator directly. Plan shape does not depend on scale for
+these checks; ``audit_plan`` executes each frame so AQE finalizes it,
+which takes milliseconds at this size.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-import __spark_entry__ as ent
+from pyanomalydetector2_spark.operators import dedup, drift, kll, similarity, text
 from pyanomalydetector2_spark.plans import audit_plan
 
-SF = "/root/testdata/sf0.001"
+# recent/baseline split of the January events, and the PSI bin grid
+CUT = "2024-01-28 00:00:00"
+DRIFT_LO, DRIFT_HI, DRIFT_NBINS = 0.0, 500.0, 10
 
 
-def _audit(spark, name):
-    return audit_plan(ent.queries()[name](spark, SF))
+@pytest.fixture(scope="module")
+def corpus(spark, corpus_dir, tmp_path_factory):
+    def read(name):
+        return spark.read.parquet(f"{corpus_dir}/{name}.parquet")
+
+    emb = read("embeddings")
+    return {
+        "docs": read("documents"),
+        "events": read("events"),
+        "emb": emb,
+        "emb_d": emb.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+        ),
+        "tmp": str(tmp_path_factory.mktemp("plans_contract")),
+    }
 
 
-# the bench's most expensive pipelines: any global sort or cartesian here
-# is a regression (their r02-audited shapes have neither)
-HEAVY = [
-    "dedup_keep_best",
-    "dup_clusters",
-    "near_dup_incremental",
-    "embedding_near_dup",
-    "drift_psi",
-    "minhash_lsh_pairs",
-    "ngram_jaccard_pairs",
-    "embedding_near_dup_lsh",
-    "audio_near_dup",
-    "audio_near_dup_incremental",
-    "audio_dup_clusters",
-    "audio_keep_best",
-    "audio_dup_transcript_mismatch",
-    "audio_embed_near_dup",
-    "audio_quality_drift",
-    "vocab_drift",
-]
+def _near_dup(docs):
+    return dedup.near_dup_jaccard(
+        docs, "doc_id", "text", k=8, n=3, bands=4, rows_per_band=2,
+        threshold=0.1, max_bucket_size=None,
+    )
 
 
-@pytest.mark.parametrize("name", HEAVY)
-def test_heavy_queries_no_global_sort_no_cartesian(spark, name):
-    a = _audit(spark, name)
+def _clusters(docs):
+    return dedup.dup_clusters(_near_dup(docs).select("id_a", "id_b"))
+
+
+def _dedup_keep_best(spark, c):
+    scores = text.token_metrics(c["docs"], "text").select(
+        "doc_id", "quality_score"
+    )
+    return dedup.keep_best_per_cluster(_clusters(c["docs"]), scores)
+
+
+def _dup_clusters(spark, c):
+    return _clusters(c["docs"]).select(F.col("id").alias("doc_id"), "cluster_id")
+
+
+def _near_dup_incremental(spark, c):
+    """Probe a 100-doc batch against a stored corpus signature index."""
+    docs = c["docs"]
+    path = f"{c['tmp']}/sigs"
+    dedup.minhash_signatures(
+        docs.filter(F.col("doc_id") >= 100), "doc_id", "text", 8, 3
+    ).write.mode("overwrite").parquet(path)
+    return dedup.near_dup_jaccard_incremental(
+        docs, docs.filter(F.col("doc_id") < 100), "doc_id", "text",
+        index_sigs=spark.read.parquet(path), max_bucket_size=None,
+    )
+
+
+def _embedding_near_dup(spark, c):
+    return similarity.cosine_near_dup_pairs_blocked(
+        c["emb"], threshold=0.4, num_blocks=16
+    )
+
+
+def _drift_psi(spark, c):
+    ev = c["events"]
+    cut = F.to_timestamp_ntz(F.lit(CUT))
+    return drift.drift_scores_df(
+        ev.filter(F.col("ts") >= cut), ev.filter(F.col("ts") < cut), "value",
+        DRIFT_LO, DRIFT_HI, DRIFT_NBINS, "event_type",
+    )
+
+
+def _minhash_lsh_pairs(spark, c):
+    sigs = dedup.minhash_signatures(c["docs"], "doc_id", "text", k=8, n=3)
+    return dedup.lsh_candidate_pairs(
+        sigs, bands=4, rows_per_band=2, max_bucket_size=None
+    )
+
+
+def _ngram_jaccard_pairs(spark, c):
+    return _near_dup(c["docs"])
+
+
+def _embedding_near_dup_lsh(spark, c):
+    return similarity.cosine_near_dup_pairs(
+        c["emb_d"], threshold=0.4, dims=64, planes=4, bands=3,
+        max_bucket_size=None,
+    )
+
+
+def _vocab_drift(spark, c):
+    return text.vocab_drift(c["docs"], c["docs"], vocab_k=10)
+
+
+HEAVY = {
+    "dedup_keep_best": _dedup_keep_best,
+    "dup_clusters": _dup_clusters,
+    "near_dup_incremental": _near_dup_incremental,
+    "embedding_near_dup": _embedding_near_dup,
+    "drift_psi": _drift_psi,
+    "minhash_lsh_pairs": _minhash_lsh_pairs,
+    "ngram_jaccard_pairs": _ngram_jaccard_pairs,
+    "embedding_near_dup_lsh": _embedding_near_dup_lsh,
+    "vocab_drift": _vocab_drift,
+}
+
+
+@pytest.mark.parametrize("name", list(HEAVY))
+def test_heavy_queries_no_global_sort_no_cartesian(spark, corpus, name):
+    a = audit_plan(HEAVY[name](spark, corpus))
     assert a["sorts_global"] == 0, f"{name}: global sort crept in"
     assert a["cartesian"] == 0, f"{name}: shuffle cartesian crept in"
     # broadcast nested-loop joins are allowed ONLY for the tiny-literal
-    # grids that want them (drift_psi's static bin grid)
-    # (vocab_drift's is the ≤ k+1-row broadcast category grid of the
-    # shared categorical-drift machinery)
-    allowed_bnlj = {
-        "drift_psi": 1,
-        "audio_quality_drift": 1,
-        "vocab_drift": 1,
-    }.get(name, 0)
+    # grids that want them (drift_psi's static bin grid; vocab_drift's
+    # ≤ k+1-row broadcast category grid of the shared categorical-drift
+    # machinery)
+    allowed_bnlj = {"drift_psi": 1, "vocab_drift": 1}.get(name, 0)
     assert a["bnlj"] <= allowed_bnlj, f"{name}: unexpected nested-loop join"
 
 
-def test_zscore_screen_pushes_time_filter(spark):
-    """The detect screen's time-range predicate must reach the parquet
-    scan (PushedFilters) and the scan must stay column-pruned."""
-    a = _audit(spark, "zscore_screen")
-    assert any("ts" in p or "clock" in p for p in a["pushed"]), (
-        f"time filter not pushed: {a['pushed']}"
-    )
-    assert a["scan_cols"] and max(a["scan_cols"]) <= 4, (
-        f"scan reads too many columns: {a['scan_cols']}"
-    )
-
-
-def test_star_join_broadcasts_dims(spark):
-    """The metadata star join must broadcast its dimension sides, not
-    shuffle them."""
-    a = _audit(spark, "star_join_agg")
-    assert a["broadcasts"] >= 1, "star join lost its broadcast"
-
-
-def test_drift_psi_shape(spark):
+def test_drift_psi_shape(spark, corpus):
     """drift_psi: fully distributed (two column-pruned scans, broadcast
     grid/baseline, fixed-order running window) — bounded shuffles, no
     driver funnel, no global sort."""
-    a = _audit(spark, "drift_psi")
+    a = audit_plan(_drift_psi(spark, corpus))
     assert a["broadcasts"] >= 1
     assert a["shuffles"] <= 5, f"shuffle blowup: {a['shuffles']}"
 
 
-def test_ann_paths_stay_bucketed(spark):
-    """ANN queries must keep the bucket/cell join shuffled-or-broadcast on
-    the join key — a cartesian there means the candidate pruning is gone.
-    (brute-force embedding_topk is the one INTENTIONAL cross join and is
+def _ivf_index_topk(emb, q, tmp):
+    """IVF against a persisted index: centroids and cell-partitioned
+    assignments written as snapshots, read back and probed."""
+    from pyanomalydetector2_spark.sources.catalog import SnapshotTable
+
+    t_c = SnapshotTable(f"{tmp}/centroids")
+    t_a = SnapshotTable(f"{tmp}/assignments")
+    cents = similarity.ivf_centroids(emb, n_cells=16)
+    t_c.write_snapshot(cents)
+    t_a.write_snapshot(
+        similarity.ivf_assignments(emb, cents), partition_by=["cell"]
+    )
+    spark = emb.sparkSession
+    return similarity.ivf_probe_topk(
+        emb, q, t_c.read(spark), t_a.read(spark), k=5, nprobe=2
+    )
+
+
+def test_ann_paths_stay_bucketed(spark, corpus):
+    """ANN operators must keep the bucket/cell join shuffled-or-broadcast
+    on the join key — a cartesian there means the candidate pruning is
+    gone. (brute-force top-k is the one INTENTIONAL cross join and is
     excluded by design.)"""
-    for name in ("ann_lsh_topk", "ann_ivf_topk", "ann_ivf_index_topk",
-                 "ann_ivf_pq_topk"):
-        a = _audit(spark, name)
+    emb = corpus["emb_d"]
+    q = emb.filter(F.col("vec_id") < 20)
+    plans = {
+        "lsh": similarity.lsh_bucketed_topk(emb, q, dims=64, k=5, planes=6),
+        "ivf": similarity.ivf_topk(emb, q, k=5, n_cells=16, nprobe=2),
+        "ivf_index": _ivf_index_topk(emb, q, corpus["tmp"]),
+        "ivf_pq": similarity.ivf_pq_topk(
+            emb, q, k=5, n_cells=16, nprobe=2, m_sub=8, n_codes=32
+        ),
+    }
+    for name, df in plans.items():
+        a = audit_plan(df)
         assert a["cartesian"] == 0, f"{name}: bucket join degraded to cartesian"
         assert a["bnlj"] == 0, f"{name}: bucket join degraded to nested loop"
         assert a["sorts_global"] == 0, f"{name}: global sort crept in"
 
 
 def test_incremental_probe_core_shape(spark):
-    """The fused incremental probe (BENCH/BASELINE.md §10): ONE flagged
-    aggregation builds both bucket member arrays, so the probe plan must
-    contain at most one aggregation exchange chain — bounded shuffles
-    overall — and the broadcast-prune variant must actually broadcast.
-    Guards the r04-close rebuild against regressing to the
-    aggregate-twice-and-join shape (which showed up as two extra
-    batch-sized shuffles per micro-batch)."""
-    from pyspark.sql import functions as F
-
-    from pyanomalydetector2_spark.operators.dedup import (
-        incremental_pairs_from_banded,
-    )
-    from pyanomalydetector2_spark.plans import audit_plan
-
+    """The fused incremental probe: ONE flagged aggregation builds both
+    bucket member arrays, so the probe plan must contain at most one
+    aggregation exchange chain — bounded shuffles overall — and the
+    broadcast-prune variant must actually broadcast. Guards against a
+    regression to the aggregate-twice-and-join shape (which showed up as
+    two extra batch-sized shuffles per micro-batch)."""
     banded = spark.range(400).select(
         F.col("id"),
         (F.col("id") % 13).cast("int").alias("band"),
@@ -127,7 +205,7 @@ def test_incremental_probe_core_shape(spark):
 
     # no-prune: union -> hot-count -> anti -> collect -> explode/distinct
     a = audit_plan(
-        incremental_pairs_from_banded(index_b, new_b, 10_000, prune=False)
+        dedup.incremental_pairs_from_banded(index_b, new_b, 10_000, prune=False)
     )
     assert a["sorts_global"] == 0 and a["cartesian"] == 0
     assert a["shuffles"] <= 4, f"no-prune probe shuffle blowup: {a['shuffles']}"
@@ -135,7 +213,7 @@ def test_incremental_probe_core_shape(spark):
     # broadcast prune: same plus the key semi, which must be a broadcast
     # (the index side stays at one scan, never index-wide shuffled)
     b = audit_plan(
-        incremental_pairs_from_banded(
+        dedup.incremental_pairs_from_banded(
             index_b, new_b, 10_000, broadcast_keys=True, prune=True
         )
     )
@@ -144,48 +222,104 @@ def test_incremental_probe_core_shape(spark):
     assert b["shuffles"] <= 6, f"pruned probe shuffle blowup: {b['shuffles']}"
 
 
-def test_kll_quantiles_shuffle_budget(spark):
+def test_kll_quantiles_shuffle_budget(spark, corpus):
     """The sketch build's scale claim in plan form: partials are built
     map-side (mapInPandas, no exchange), so the whole kll_quantiles
     pipeline carries at most the one sketch-rows merge exchange plus the
     input cap's window shuffle — and never a global sort of the data."""
-    a = _audit(spark, "kll_quantiles")
+    ev = corpus["events"].filter(F.col("value").isNotNull() & ~F.isnan("value"))
+    w = Window.partitionBy("event_type").orderBy("event_id")
+    capped = (
+        ev.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 4000)
+        .select("event_type", "value")
+    )
+    sk = kll.kll_build(capped, "value", ["event_type"], k=8192)
+    a = audit_plan(kll.kll_quantiles(sk, [0.25, 0.5, 0.75], ["event_type"]))
     assert a["shuffles"] <= 3, f"kll shuffle blowup: {a['shuffles']}"
     assert a["cartesian"] == 0
 
 
-def test_snippet_search_broadcasts_queries(spark):
-    """snippet_search's scale contract: the corpus' exploded pair keys
-    must meet the query keys in a BROADCAST join (the corpus side never
-    shuffles before the match), the only hash exchanges are the
-    offset-groupBy aggregation chains, and no global sort or cartesian
-    appears. exact_substring_dup: bounded shuffles, no global sort."""
-    a = _audit(spark, "audio_snippet_search")
-    assert a["broadcasts"] >= 2, "query keys / n_keys not broadcast"
-    assert a["cartesian"] == 0 and a["bnlj"] == 0
-    assert a["sorts_global"] == 0
-    # budget 3: ONE offset-groupBy aggregation exchange on the corpus
-    # path + the snippet-synth rebalance appearing once per broadcast
-    # subtree (sk and n_keys) — both on the tiny query side. Anything
-    # more means the corpus' exploded keys started shuffling.
-    assert a["shuffles"] <= 3, f"snippet match shuffle blowup: {a['shuffles']}"
-
-    b = _audit(spark, "exact_substring_dup")
+def test_exact_substring_dup_shape(spark, corpus):
+    """exact_substring_dup: bounded shuffles, no global sort."""
+    b = audit_plan(dedup.exact_substring_dup(corpus["docs"], "doc_id", "text", k=5))
     assert b["sorts_global"] == 0 and b["cartesian"] == 0
     assert b["shuffles"] <= 5, f"exact_substring_dup shuffles: {b['shuffles']}"
 
 
-def test_vocab_topk_no_global_sort(spark):
+def test_vocab_topk_no_global_sort(spark, corpus):
     """Top-k compiles to TakeOrderedAndProject (per-partition heaps + a
     k-row driver merge) — never a rangepartitioning sort shuffle of the
     vocabulary."""
-    a = _audit(spark, "vocab_topk")
+    a = audit_plan(text.vocab_topk(corpus["docs"], 20))
     assert a["sorts_global"] == 0, "vocab top-k planned a global sort"
 
 
-def test_oov_rate_broadcasts_vocab(spark):
+def test_oov_rate_broadcasts_vocab(spark, corpus):
     """The reference vocabulary joins broadcast (10^4-row vocab vs a
     10^12-token probe side — a shuffled join would move the corpus)."""
-    a = _audit(spark, "oov_rate")
+    docs = corpus["docs"]
+    vocab = text.vocab_topk(docs, 12, with_docs=False).select("token")
+    a = audit_plan(text.oov_rate(docs, vocab))
     assert a["broadcasts"] >= 1, "vocab join lost its broadcast"
     assert a["sorts_global"] == 0
+
+
+# ---- the suite's check families over the clips table ----------------------
+
+
+@pytest.fixture(scope="module")
+def clips(spark):
+    from pyanomalydetector2_spark.datagen.clips import clips_table
+
+    cur = clips_table(spark, 2000, planted=True, n_buckets=8).cache()
+    base = clips_table(spark, 2000, planted=False, n_buckets=8).cache()
+    yield cur, base
+    cur.unpersist()
+    base.unpersist()
+
+
+def _suite_family_audit(df):
+    a = audit_plan(df)
+    assert a["cartesian"] == 0, "cartesian crept in"
+    assert a["sorts_global"] == 0, "global sort crept in"
+    return a
+
+
+def test_referential_violations_shape(spark, clips):
+    """Broadcast anti-join against the dimension: the fact side never
+    shuffles."""
+    from pyanomalydetector2_spark.datagen.clips import dim_codec
+    from pyanomalydetector2_spark.operators.integrity import (
+        referential_violations,
+    )
+
+    cur, _ = clips
+    a = _suite_family_audit(
+        referential_violations(cur, "codec", dim_codec(spark), ["clip_id", "bucket"])
+    )
+    assert a["shuffles"] == 1, f"referential shuffles: {a['shuffles']}"
+
+
+def test_duplicate_rows_shape(spark, clips):
+    """One groupBy-key exchange, then a broadcast join of the duplicate
+    keys back onto the rows."""
+    from pyanomalydetector2_spark.operators.uniqueness import duplicate_rows
+
+    cur, _ = clips
+    a = _suite_family_audit(duplicate_rows(cur, "clip_id", ["bucket"]))
+    assert a["shuffles"] == 1, f"duplicate_rows shuffles: {a['shuffles']}"
+
+
+def test_snapshot_diff_shape(spark, clips):
+    """One full-outer join of the two snapshots on the key."""
+    from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
+
+    cur, base = clips
+    a = _suite_family_audit(
+        snapshot_diff(
+            base, cur, ["clip_id"], ["codec", "dur_ms", "transcript"],
+            carry_cols=["bucket"],
+        )
+    )
+    assert a["shuffles"] == 2, f"snapshot_diff shuffles: {a['shuffles']}"

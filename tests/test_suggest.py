@@ -1,7 +1,6 @@
 """Constraint suggestion (constraints/suggest.py).
 
-The contract query owns the SQL-replayed emission logic over `part`;
-these tests pin the operator's semantics on hand-planted frames — the
+These tests pin the operator's semantics on hand-planted frames — the
 kind truth table, prefilter == exact mode equality, and the Deequ
 round-trip promise: the suggested suite is green on the snapshot that
 produced it and catches a perturbed snapshot.

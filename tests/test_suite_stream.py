@@ -145,6 +145,23 @@ def test_compaction_preserves_result(spark, drained):
     assert _sorted_verdicts(res) == _sorted_verdicts(stream_res)
 
 
+def test_torn_generation_is_invisible(spark, drained):
+    """A compacted generation without its _SUCCESS marker (a fold that
+    crashed mid-write) is never read: the drain stays on the last complete
+    base and the committed deltas after it."""
+    _, state, base, _, suite, stream_res, _ = drained
+    torn = f"{state}/buckets_base/gen=999"
+    os.makedirs(torn)
+    with open(f"{torn}/part-0.parquet", "w") as f:
+        f.write("not parquet")
+    try:
+        res = streaming_suite_result(spark, state, suite, base, "stream_run")
+        assert res.row_count == N
+        assert _sorted_verdicts(res) == _sorted_verdicts(stream_res)
+    finally:
+        shutil.rmtree(torn, ignore_errors=True)
+
+
 def test_incremental_arrival_resumes(spark, tmp_path):
     """Two drains over a growing source equal one batch run over the
     union — the checkpoint skips already-validated files."""

@@ -1,13 +1,16 @@
 """Vocabulary statistics (operators/text.py: vocab_counts / vocab_topk /
-oov_rate). The contract queries own the SQL replay over documents; these
-pin the operator semantics on hand-planted corpora."""
+oov_rate, ws_tokens) on hand-planted corpora."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from pyanomalydetector2_spark.constraints.dsl import TOKEN_COUNT_SQL
 from pyanomalydetector2_spark.operators.text import (
     oov_rate,
     vocab_counts,
     vocab_topk,
+    ws_tokens,
 )
 
 DOCS = [
@@ -100,3 +103,37 @@ def test_oov_rate_duplicate_vocab_rows_do_not_inflate(spark):
     got = {r["id"]: r for r in oov_rate(_df(spark), vocab_dup).collect()}
     assert got[0].n_tokens == 6  # not multiplied by the dup row
     assert got[0].n_oov == 3     # sat, on, mat
+
+
+def test_token_count_sql_matches_ws_tokens(spark):
+    """The suite DSL's TOKEN_COUNT_SQL and text.ws_tokens must be the
+    SAME tokenizer — including tab/newline
+    separators, which the former's old space-only split miscounted."""
+    rows = [
+        ("a", "hello world"),
+        ("b", "hello\tworld"),
+        ("c", "a\nb c"),
+        ("d", "  padded  "),
+        ("e", ""),
+        ("f", None),
+        ("g", "\t"),
+        ("h", "one"),
+        ("i", "x\r\ny  z"),
+    ]
+    df = spark.createDataFrame(rows, "id string, transcript string")
+    t = F.col("transcript")
+    got = {
+        r["id"]: (r["sql_n"], r["op_n"])
+        for r in df.select(
+            "id",
+            F.expr(TOKEN_COUNT_SQL).alias("sql_n"),
+            F.when(t.isNull(), F.lit(0))
+            .otherwise(F.size(ws_tokens(t)))
+            .alias("op_n"),
+        ).collect()
+    }
+    for rid, (sql_n, op_n) in got.items():
+        assert sql_n == op_n, (rid, sql_n, op_n)
+    assert got["b"] == (2, 2)   # tab separates
+    assert got["g"] == (0, 0)   # whitespace-only counts zero
+    assert got["i"] == (3, 3)   # CRLF + double space

@@ -47,8 +47,8 @@ def test_local_peak(ts_df):
     got = local_peak(df, 500).toPandas().set_index("itemid").sort_index()
     s = pdf.sort_values(["itemid", "clock"])
     for item, g in s.groupby("itemid"):
-        # INCLUSIVE left bound: rangeBetween(-w, 0) covers [c-w, c] — the
-        # DuckDB contract oracle pins the same (RANGE w PRECEDING)
+        # INCLUSIVE left bound: rangeBetween(-w, 0) covers [c-w, c], as
+        # SQL's RANGE w PRECEDING does
         means = [
             g[(g.clock >= c - 500) & (g.clock <= c)]["value"].mean()
             for c in g.clock
