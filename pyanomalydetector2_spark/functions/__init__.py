@@ -108,9 +108,3 @@ def clean_float(c: Column, default: float = 0.0) -> Column:
     with 0 after the closed-form std)."""
     bad = F.isnull(c) | F.isnan(c) | (F.abs(c) == float("inf"))
     return F.when(bad, F.lit(default)).otherwise(c)
-
-
-def zscore(value: Column, mean: Column, std: Column) -> Column:
-    """(x-mean)/std with zero-variance guard (reference
-    classifiers/__init__.py:14-34)."""
-    return safe_div(value - mean, std)
