@@ -28,12 +28,13 @@ def spark():
 
 def _documents(rng: np.random.Generator, n: int = 500) -> pa.Table:
     """Random texts over a 30-word vocabulary; every 17th document is a
-    near copy of the one 5 ids earlier (one token swapped, ``dup``
-    appended), so near-dup pairs exist both among low and high ids."""
+    near copy of the one 13 ids earlier (one token swapped, ``dup``
+    appended), so near-dup pairs exist among low ids, among high ids, and
+    across the id cuts the incremental tests split on (100 and 400)."""
     texts = []
     for i in range(n):
         if i % 17 == 16:
-            toks = texts[i - 5].split()
+            toks = texts[i - 13].split()
             toks[rng.integers(len(toks))] = VOCAB[rng.integers(len(VOCAB))]
             toks.append("dup")
         else:

@@ -263,6 +263,7 @@ def test_incremental_near_dup_matches_full_pipeline(spark, corpus_dir):
         p: j for p, j in full.items() if p[0] >= 400 or p[1] >= 400
     }
     assert expected, "fixture must contain pairs touching the new batch"
+    assert any(a < 400 <= b for a, b in expected), "fixture needs new×old pairs"
     assert len(expected) < len(full), "fixture must contain old-only pairs"
 
     # production shape: the index is a precomputed signature table

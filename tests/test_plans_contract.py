@@ -52,18 +52,18 @@ def _clusters(docs):
     return dedup.dup_clusters(_near_dup(docs).select("id_a", "id_b"))
 
 
-def _dedup_keep_best(spark, c):
+def _dedup_keep_best(c):
     scores = text.token_metrics(c["docs"], "text").select(
         "doc_id", "quality_score"
     )
     return dedup.keep_best_per_cluster(_clusters(c["docs"]), scores)
 
 
-def _dup_clusters(spark, c):
+def _dup_clusters(c):
     return _clusters(c["docs"]).select(F.col("id").alias("doc_id"), "cluster_id")
 
 
-def _near_dup_incremental(spark, c):
+def _near_dup_incremental(c):
     """Probe a 100-doc batch against a stored corpus signature index."""
     docs = c["docs"]
     path = f"{c['tmp']}/sigs"
@@ -72,17 +72,17 @@ def _near_dup_incremental(spark, c):
     ).write.mode("overwrite").parquet(path)
     return dedup.near_dup_jaccard_incremental(
         docs, docs.filter(F.col("doc_id") < 100), "doc_id", "text",
-        index_sigs=spark.read.parquet(path), max_bucket_size=None,
+        index_sigs=docs.sparkSession.read.parquet(path), max_bucket_size=None,
     )
 
 
-def _embedding_near_dup(spark, c):
+def _embedding_near_dup(c):
     return similarity.cosine_near_dup_pairs_blocked(
         c["emb"], threshold=0.4, num_blocks=16
     )
 
 
-def _drift_psi(spark, c):
+def _drift_psi(c):
     ev = c["events"]
     cut = F.to_timestamp_ntz(F.lit(CUT))
     return drift.drift_scores_df(
@@ -91,25 +91,21 @@ def _drift_psi(spark, c):
     )
 
 
-def _minhash_lsh_pairs(spark, c):
+def _minhash_lsh_pairs(c):
     sigs = dedup.minhash_signatures(c["docs"], "doc_id", "text", k=8, n=3)
     return dedup.lsh_candidate_pairs(
         sigs, bands=4, rows_per_band=2, max_bucket_size=None
     )
 
 
-def _ngram_jaccard_pairs(spark, c):
-    return _near_dup(c["docs"])
-
-
-def _embedding_near_dup_lsh(spark, c):
+def _embedding_near_dup_lsh(c):
     return similarity.cosine_near_dup_pairs(
         c["emb_d"], threshold=0.4, dims=64, planes=4, bands=3,
         max_bucket_size=None,
     )
 
 
-def _vocab_drift(spark, c):
+def _vocab_drift(c):
     return text.vocab_drift(c["docs"], c["docs"], vocab_k=10)
 
 
@@ -120,15 +116,15 @@ HEAVY = {
     "embedding_near_dup": _embedding_near_dup,
     "drift_psi": _drift_psi,
     "minhash_lsh_pairs": _minhash_lsh_pairs,
-    "ngram_jaccard_pairs": _ngram_jaccard_pairs,
+    "ngram_jaccard_pairs": lambda c: _near_dup(c["docs"]),
     "embedding_near_dup_lsh": _embedding_near_dup_lsh,
     "vocab_drift": _vocab_drift,
 }
 
 
 @pytest.mark.parametrize("name", list(HEAVY))
-def test_heavy_queries_no_global_sort_no_cartesian(spark, corpus, name):
-    a = audit_plan(HEAVY[name](spark, corpus))
+def test_heavy_queries_no_global_sort_no_cartesian(corpus, name):
+    a = audit_plan(HEAVY[name](corpus))
     assert a["sorts_global"] == 0, f"{name}: global sort crept in"
     assert a["cartesian"] == 0, f"{name}: shuffle cartesian crept in"
     # broadcast nested-loop joins are allowed ONLY for the tiny-literal
@@ -139,11 +135,11 @@ def test_heavy_queries_no_global_sort_no_cartesian(spark, corpus, name):
     assert a["bnlj"] <= allowed_bnlj, f"{name}: unexpected nested-loop join"
 
 
-def test_drift_psi_shape(spark, corpus):
+def test_drift_psi_shape(corpus):
     """drift_psi: fully distributed (two column-pruned scans, broadcast
     grid/baseline, fixed-order running window) — bounded shuffles, no
     driver funnel, no global sort."""
-    a = audit_plan(_drift_psi(spark, corpus))
+    a = audit_plan(_drift_psi(corpus))
     assert a["broadcasts"] >= 1
     assert a["shuffles"] <= 5, f"shuffle blowup: {a['shuffles']}"
 
@@ -166,7 +162,7 @@ def _ivf_index_topk(emb, q, tmp):
     )
 
 
-def test_ann_paths_stay_bucketed(spark, corpus):
+def test_ann_paths_stay_bucketed(corpus):
     """ANN operators must keep the bucket/cell join shuffled-or-broadcast
     on the join key — a cartesian there means the candidate pruning is
     gone. (brute-force top-k is the one INTENTIONAL cross join and is
@@ -222,7 +218,7 @@ def test_incremental_probe_core_shape(spark):
     assert b["shuffles"] <= 6, f"pruned probe shuffle blowup: {b['shuffles']}"
 
 
-def test_kll_quantiles_shuffle_budget(spark, corpus):
+def test_kll_quantiles_shuffle_budget(corpus):
     """The sketch build's scale claim in plan form: partials are built
     map-side (mapInPandas, no exchange), so the whole kll_quantiles
     pipeline carries at most the one sketch-rows merge exchange plus the
@@ -240,14 +236,14 @@ def test_kll_quantiles_shuffle_budget(spark, corpus):
     assert a["cartesian"] == 0
 
 
-def test_exact_substring_dup_shape(spark, corpus):
+def test_exact_substring_dup_shape(corpus):
     """exact_substring_dup: bounded shuffles, no global sort."""
     b = audit_plan(dedup.exact_substring_dup(corpus["docs"], "doc_id", "text", k=5))
     assert b["sorts_global"] == 0 and b["cartesian"] == 0
     assert b["shuffles"] <= 5, f"exact_substring_dup shuffles: {b['shuffles']}"
 
 
-def test_vocab_topk_no_global_sort(spark, corpus):
+def test_vocab_topk_no_global_sort(corpus):
     """Top-k compiles to TakeOrderedAndProject (per-partition heaps + a
     k-row driver merge) — never a rangepartitioning sort shuffle of the
     vocabulary."""
@@ -255,7 +251,7 @@ def test_vocab_topk_no_global_sort(spark, corpus):
     assert a["sorts_global"] == 0, "vocab top-k planned a global sort"
 
 
-def test_oov_rate_broadcasts_vocab(spark, corpus):
+def test_oov_rate_broadcasts_vocab(corpus):
     """The reference vocabulary joins broadcast (10^4-row vocab vs a
     10^12-token probe side — a shuffled join would move the corpus)."""
     docs = corpus["docs"]
@@ -301,7 +297,7 @@ def test_referential_violations_shape(spark, clips):
     assert a["shuffles"] == 1, f"referential shuffles: {a['shuffles']}"
 
 
-def test_duplicate_rows_shape(spark, clips):
+def test_duplicate_rows_shape(clips):
     """One groupBy-key exchange, then a broadcast join of the duplicate
     keys back onto the rows."""
     from pyanomalydetector2_spark.operators.uniqueness import duplicate_rows
@@ -311,7 +307,7 @@ def test_duplicate_rows_shape(spark, clips):
     assert a["shuffles"] == 1, f"duplicate_rows shuffles: {a['shuffles']}"
 
 
-def test_snapshot_diff_shape(spark, clips):
+def test_snapshot_diff_shape(clips):
     """One full-outer join of the two snapshots on the key."""
     from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
 

@@ -1,5 +1,5 @@
-"""Vocabulary statistics (operators/text.py: vocab_counts / vocab_topk /
-oov_rate, ws_tokens) on hand-planted corpora."""
+"""Vocabulary statistics and tokenization (operators/text.py: vocab_counts
+/ vocab_topk / oov_rate / ws_tokens) on hand-planted corpora."""
 
 from __future__ import annotations
 
@@ -107,8 +107,8 @@ def test_oov_rate_duplicate_vocab_rows_do_not_inflate(spark):
 
 def test_token_count_sql_matches_ws_tokens(spark):
     """The suite DSL's TOKEN_COUNT_SQL and text.ws_tokens must be the
-    SAME tokenizer — including tab/newline
-    separators, which the former's old space-only split miscounted."""
+    SAME tokenizer — including tab/newline separators, which the former's
+    old space-only split miscounted."""
     rows = [
         ("a", "hello world"),
         ("b", "hello\tworld"),
