@@ -661,15 +661,14 @@ def fp_near_dup_against_index(
     broadcast_keys: bool = True,
     prune: bool = True,
 ) -> DataFrame:
-    """Probe core shared by ``audio_near_dup_incremental`` and the
-    Structured Streaming ingest (``streaming.audio_ingest``): pairs
+    """Probe core of ``audio_near_dup_incremental``: pairs
     touching at least one fingerprint from ``fp_new``, given the already
     computed batch fingerprints and the stored corpus index. Every stage
     is batch-proportional (key prune before any bucket aggregation;
     re-rank reads index fingerprints only for pair members).
     ``banded_new``: pass the batch's already-materialized banding to skip
-    the recompute — callers that also persist the bands (the streaming
-    ingest appends them to the index) band the batch exactly once.
+    the recompute — a caller that also persists the bands (appending
+    them to the index) then bands the batch exactly once.
     ``broadcast_keys`` / ``prune``: prune strategy, see
     ``dedup.incremental_pairs_from_banded`` — broadcast the key set for
     small batches, shuffled semi once the batch key set outgrows a

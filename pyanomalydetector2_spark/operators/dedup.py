@@ -623,9 +623,10 @@ def incremental_pairs_from_banded(
 ) -> DataFrame:
     """Banding-agnostic incremental-probe core: distinct (id_a < id_b)
     pairs touching at least one id from ``banded_new``, given two
-    pre-banded (id, band, key) frames, used by the MinHash text path
-    (``incremental_candidate_pairs``): it stores a banded index across
-    runs and probes each new batch against it, so pair generation is
+    pre-banded (id, band, key) frames. Shared by the MinHash text path
+    (``incremental_candidate_pairs``) and the audio fingerprint path
+    (``audio_fp.audio_near_dup_incremental``) — both store a banded index
+    across runs and probe each new batch against it, so pair generation is
     proportional to the batch, not the corpus.
 
     ``banded_new`` is consumed by two operators (the union and the key

@@ -3,8 +3,9 @@ sort sneaking into a pipeline, a join degrading to cartesian, a broadcast
 turning into a shuffled join, or a shuffle count growing fails CI.
 
 Each gate builds its input from the small deterministic corpus in
-``conftest.py`` (or the clips generator for the suite's check families)
-and calls the operator directly. Plan shape does not depend on scale for
+``conftest.py`` (the audio gates from ``audio_fp.synth_corpus``, the
+suite's check families from the clips generator) and calls the operator
+directly. Plan shape does not depend on scale for
 these checks; ``audit_plan`` executes each frame so AQE finalizes it,
 which takes milliseconds at this size.
 """
@@ -15,12 +16,23 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pyanomalydetector2_spark.operators import dedup, drift, kll, similarity, text
+from pyanomalydetector2_spark.operators import (
+    audio_fp,
+    dedup,
+    drift,
+    kll,
+    similarity,
+    text,
+)
 from pyanomalydetector2_spark.plans import audit_plan
 
 # recent/baseline split of the January events, and the PSI bin grid
 CUT = "2024-01-28 00:00:00"
 DRIFT_LO, DRIFT_HI, DRIFT_NBINS = 0.0, 500.0, 10
+# audio corpus: 30 content groups of 3 re-encodes, the first 30 clips are
+# the incremental batch; rms_db drift grid of the quality-drift gate
+AUDIO_N, AUDIO_CUT = 90, 30
+AQD_LO, AQD_HI, AQD_NBINS = -20.0, -5.0, 20
 
 
 @pytest.fixture(scope="module")
@@ -29,6 +41,12 @@ def corpus(spark, corpus_dir, tmp_path_factory):
         return spark.read.parquet(f"{corpus_dir}/{name}.parquet")
 
     emb = read("embeddings")
+    tmp = str(tmp_path_factory.mktemp("plans_contract"))
+    # stored like a real input table: the gates then plan a parquet scan,
+    # not the synthesis pass
+    audio_fp.synth_corpus(spark, spark.range(AUDIO_N)).write.parquet(
+        f"{tmp}/clips"
+    )
     return {
         "docs": read("documents"),
         "events": read("events"),
@@ -37,7 +55,8 @@ def corpus(spark, corpus_dir, tmp_path_factory):
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
         ),
-        "tmp": str(tmp_path_factory.mktemp("plans_contract")),
+        "clips": spark.read.parquet(f"{tmp}/clips"),
+        "tmp": tmp,
     }
 
 
@@ -109,6 +128,69 @@ def _vocab_drift(c):
     return text.vocab_drift(c["docs"], c["docs"], vocab_k=10)
 
 
+def _audio_near_dup(c):
+    return audio_fp.audio_near_dup(c["clips"], threshold=0.85, max_bucket_size=None)
+
+
+def _audio_near_dup_incremental(c):
+    """Probe the first clips against a stored fingerprint index of the
+    rest, pre-banded and partitioned by band."""
+    clips = c["clips"]
+    spark = clips.sparkSession
+    fp_path, banded_path = f"{c['tmp']}/audio_fp", f"{c['tmp']}/audio_banded"
+    audio_fp.audio_fingerprints(
+        clips.filter(F.col("clip_id") >= AUDIO_CUT)
+    ).write.mode("overwrite").parquet(fp_path)
+    index_fp = spark.read.parquet(fp_path)
+    audio_fp.fp_banded(index_fp).repartition("band").write.mode(
+        "overwrite"
+    ).partitionBy("band").parquet(banded_path)
+    return audio_fp.audio_near_dup_incremental(
+        clips, clips.filter(F.col("clip_id") < AUDIO_CUT),
+        index_fp=index_fp, index_banded=spark.read.parquet(banded_path),
+        threshold=0.85, max_bucket_size=None,
+    )
+
+
+def _audio_dup_clusters(c):
+    pairs = _audio_near_dup(c)
+    return dedup.dup_clusters(pairs.select("id_a", "id_b")).select(
+        F.col("id").alias("clip_id"), "cluster_id"
+    )
+
+
+def _audio_keep_best(c):
+    """Keep the loudest member of each audio near-dup cluster."""
+    pairs = _audio_near_dup(c)
+    clusters = dedup.dup_clusters(pairs.select("id_a", "id_b"))
+    scores = audio_fp.audio_quality(c["clips"]).select(
+        F.col("id").alias("clip_id"), "rms_db"
+    )
+    return dedup.keep_best_per_cluster(
+        clusters, scores, id_col="clip_id", score_col="rms_db"
+    )
+
+
+def _audio_embed_near_dup(c):
+    return similarity.cosine_near_dup_pairs_blocked(
+        audio_fp.audio_embed(c["clips"]), threshold=0.995, id_col="id",
+        vec_col="embedding", num_blocks=16,
+    )
+
+
+def _audio_quality_drift(c):
+    """rms_db drift of the μ-law/gain-1.15 variants against the
+    WAV/gain-0.85 variants, per bucket."""
+    q = audio_fp.audio_quality(c["clips"].filter(F.col("clip_id") % 3 != 0))
+    cur = q.filter(F.col("id") % 3 == 2).withColumn(
+        "bucket", (F.col("id") % 8).cast("int")
+    )
+    base = q.filter(F.col("id") % 3 == 1)
+    return drift.drift_scores_df(
+        cur, base, "rms_db", AQD_LO, AQD_HI, AQD_NBINS, "bucket"
+    )
+
+
 HEAVY = {
     "dedup_keep_best": _dedup_keep_best,
     "dup_clusters": _dup_clusters,
@@ -118,6 +200,12 @@ HEAVY = {
     "minhash_lsh_pairs": _minhash_lsh_pairs,
     "ngram_jaccard_pairs": lambda c: _near_dup(c["docs"]),
     "embedding_near_dup_lsh": _embedding_near_dup_lsh,
+    "audio_near_dup": _audio_near_dup,
+    "audio_near_dup_incremental": _audio_near_dup_incremental,
+    "audio_dup_clusters": _audio_dup_clusters,
+    "audio_keep_best": _audio_keep_best,
+    "audio_embed_near_dup": _audio_embed_near_dup,
+    "audio_quality_drift": _audio_quality_drift,
     "vocab_drift": _vocab_drift,
 }
 
@@ -128,10 +216,14 @@ def test_heavy_queries_no_global_sort_no_cartesian(corpus, name):
     assert a["sorts_global"] == 0, f"{name}: global sort crept in"
     assert a["cartesian"] == 0, f"{name}: shuffle cartesian crept in"
     # broadcast nested-loop joins are allowed ONLY for the tiny-literal
-    # grids that want them (drift_psi's static bin grid; vocab_drift's
+    # grids that want them (the drift gates' static bin grids; vocab_drift's
     # ≤ k+1-row broadcast category grid of the shared categorical-drift
     # machinery)
-    allowed_bnlj = {"drift_psi": 1, "vocab_drift": 1}.get(name, 0)
+    allowed_bnlj = {
+        "drift_psi": 1,
+        "audio_quality_drift": 1,
+        "vocab_drift": 1,
+    }.get(name, 0)
     assert a["bnlj"] <= allowed_bnlj, f"{name}: unexpected nested-loop join"
 
 
@@ -234,6 +326,29 @@ def test_kll_quantiles_shuffle_budget(corpus):
     a = audit_plan(kll.kll_quantiles(sk, [0.25, 0.5, 0.75], ["event_type"]))
     assert a["shuffles"] <= 3, f"kll shuffle blowup: {a['shuffles']}"
     assert a["cartesian"] == 0
+
+
+def test_snippet_search_broadcasts_queries(spark, corpus):
+    """snippet_search's scale contract: the corpus' exploded pair keys
+    must meet the query keys in a BROADCAST join (the corpus side never
+    shuffles before the match), the only hash exchanges are the
+    offset-groupBy aggregation chains, and no global sort or cartesian
+    appears."""
+    path = f"{corpus['tmp']}/snippets"
+    audio_fp.synth_snippets(spark, spark.range(40), AUDIO_N).write.mode(
+        "overwrite"
+    ).parquet(path)
+    a = audit_plan(
+        audio_fp.snippet_search(corpus["clips"], spark.read.parquet(path))
+    )
+    assert a["broadcasts"] >= 2, "query keys / n_keys not broadcast"
+    assert a["cartesian"] == 0 and a["bnlj"] == 0
+    assert a["sorts_global"] == 0
+    # budget 3: ONE offset-groupBy aggregation exchange on the corpus
+    # path, plus room for an exchange inside each broadcast subtree (sk
+    # and n_keys), both on the tiny query side. Anything more means the
+    # corpus' exploded keys started shuffling.
+    assert a["shuffles"] <= 3, f"snippet match shuffle blowup: {a['shuffles']}"
 
 
 def test_exact_substring_dup_shape(corpus):
