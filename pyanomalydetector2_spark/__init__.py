@@ -18,14 +18,13 @@ Layout
 - ``session``      SparkSession factory (AQE, Arrow, adaptive skew join).
 - ``sources``      the parquet-backed snapshot catalog with an
                    Iceberg-shaped API (snapshots, MERGE-style upsert, time
-                   travel) that persists violations and verdicts, and gzip
-                   CSV scans.
+                   travel) that persists violations and verdicts.
 - ``operators``    moment stats, window kernels, the detect1/2/3 screens,
                    uniqueness, referential integrity, functional
                    dependencies, distribution drift, KLL sketches,
                    reconcile, dedup, similarity search, text analysis,
-                   as-of/interval/session joins, audio fingerprints, and
-                   the audio/image codecs behind the row invariants.
+                   as-of/interval/session joins, and the audio/image
+                   codecs behind the row invariants.
 - ``constraints``  declarative constraint DSL (+ YAML config) → Column
                    compiler + suite runner emitting pass/fail verdicts and
                    violation rows.

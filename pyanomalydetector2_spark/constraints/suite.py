@@ -467,8 +467,6 @@ def run_suite(
     key_col: str = "clip_id",
     bucket_col: str = "bucket",
     checkpoint: CheckpointLedger | None = None,
-    cache: bool = False,
-    verbose: bool = False,
     salt_buckets: int | None = None,
     commit: bool = True,
     embeddings: DataFrame | None = None,
@@ -491,14 +489,6 @@ def run_suite(
     read KBs of sketch state instead of rescanning the baseline, and
     ``kll_merge`` can fold new baseline snapshots forward out-of-band."""
     t0 = time.time()
-    _last = [t0]
-
-    def _tick(label: str) -> None:
-        now = time.time()
-        if verbose:
-            print(f"[suite] {label}: {now - _last[0]:.1f}s", flush=True)
-        _last[0] = now
-
     spark = current.sparkSession
 
     skipped: list[int] = []
@@ -509,15 +499,12 @@ def run_suite(
 
     audio_base = row_check_base(current, suite)
     base = current
-    if cache:  # opt-in only: helps tiny inputs, hurts at scale (see module doc)
-        audio_base = audio_base.cache()
-        base = audio_base
 
     # ONE aggregation job yields the bucket list, the row count, AND the
     # per-bucket HLL distinct estimates for bucket-key checks (bucket =
     # hash(key) % B ⇒ key duplicates co-locate ⇒ global distinct = Σ
     # per-bucket distinct for key_col ONLY — other columns get a global
-    # sketch below) — and materializes the cache as a side effect.
+    # sketch below).
     # HLL over the STRING-CAST key (injective for atomic types, so the
     # distinct count is unchanged) — the streaming suite stores keys
     # string-cast in its ids state and recomputes this screen from them,
@@ -569,7 +556,6 @@ def run_suite(
         )
         for i, c in enumerate(suite.unique_checks)
     ]
-    _tick(f"materialize base ({row_count} rows)")
 
     violation_frames: list[DataFrame] = []
     # Verdicts are assembled as a UNION of per-family aggregate DataFrames
@@ -588,7 +574,6 @@ def run_suite(
     rc_viol = _row_check_violations(audio_base, suite, run_id, key_col, bucket_col)
     if rc_viol is not None:
         violation_frames.append(rc_viol)
-    _tick("row checks (lazy)")
 
     # ---- uniqueness: HLL screen (recorded metric) + exact confirm ---------
     # The HLL estimate is recorded per run (the cheap observability signal,
@@ -623,7 +608,6 @@ def run_suite(
             F.lit(f"unique {c.column}").alias("expected"),
         )
         violation_frames.append(dup_rows)
-    _tick("uniqueness")
 
     # ---- referential integrity: broadcast anti-joins ----------------------
     for c in suite.ref_checks:
@@ -664,8 +648,6 @@ def run_suite(
             ).alias("expected"),
         )
         violation_frames.append(viol)
-    if suite.fd_checks:
-        _tick("functional dependencies (lazy)")
 
     # ---- reconcile vs baseline: removed/changed (and bounded added) rows --
     # Both sides bucket-filtered on resume: bucket = hash(key) is identical
@@ -700,7 +682,6 @@ def run_suite(
     # final verdicts job, and running every family's scan in ONE job blew
     # the 8 GB driver heap at the 8M-row tier (GC overhead limit).
     violations.count()
-    _tick("violations materialized")
     counted_ids = (
         [c.constraint_id for c in suite.row_checks]
         + [c.constraint_id for c in suite.unique_checks]
@@ -724,7 +705,6 @@ def run_suite(
                 suite.reconcile_checks, run_id, bucket_col,
             )
         )
-        _tick("reconcile verdicts (lazy)")
 
     # ---- stat checks: single-pass per-bucket column profile ---------------
     from pyanomalydetector2_spark.constraints.dsl import parse_percentile_stat
@@ -742,7 +722,6 @@ def run_suite(
         # DataFrame-side (no driver pmap)
         prof = column_profile(base, stat_cols, group_cols=[bucket_col]).persist()
         stat_prof = prof  # unpersisted after the verdict legs materialize
-        _tick("stat profile (lazy)")
         verdict_frames.extend(
             stat_verdict_frames(prof, moment_checks, run_id, bucket_col)
         )
@@ -757,7 +736,6 @@ def run_suite(
         verdict_frames.extend(
             stat_verdict_frames(pframe, pct_checks, run_id, "bucket")
         )
-        _tick("percentile stat verdicts (lazy)")
 
     # ---- drift checks: ONE histogram pass per side for ALL uniform-bin ----
     # columns; equi-depth checks run per column (edges from the baseline's
@@ -881,8 +859,6 @@ def run_suite(
             base, baseline, c.column, group_col=bucket_col
         )
         _drift_verdicts(frame, c, "linf")
-    if suite.drift_checks:
-        _tick("drift (all columns)")
     for c, s in scored:
         b = int(s["group"])
         psi, ks = s["psi"], s["ks"]
@@ -940,7 +916,6 @@ def run_suite(
                     0,
                 )
             )
-        _tick("ann recall audit")
 
     # Family verdict frames are materialized sequentially via
     # localCheckpoint — rows stay distributed, driver memory independent

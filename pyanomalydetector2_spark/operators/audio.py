@@ -34,12 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from pyanomalydetector2_spark.datagen.clips import (
-    CODEC_MAGIC,
-    PCM_SAMPLES,
-    reference_pcm,  # noqa: F401 — re-exported for tests/oracles
-    reference_transcript,
-)
+from pyanomalydetector2_spark.datagen.clips import CODEC_MAGIC, PCM_SAMPLES
 
 SNR_CAP_DB = 999.0
 

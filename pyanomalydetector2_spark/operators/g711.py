@@ -20,7 +20,6 @@ from __future__ import annotations
 import numpy as np
 
 MULAW_BIAS = 0x84  # 132
-MULAW_CLIP = 32635
 _MULAW_EXP_LUT = np.array(
     [(MULAW_BIAS << e) - MULAW_BIAS for e in range(8)], dtype=np.int32
 )  # 0, 132, 396, 924, 1980, 4092, 8316, 16764

@@ -188,17 +188,6 @@ def metrics_anomalies(
 
 # --- suite metrics repository ------------------------------------------------
 
-METRICS_HISTORY_SCHEMA = T.StructType(
-    [
-        T.StructField("run_seq", T.LongType()),
-        T.StructField("run_id", T.StringType()),
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("constraint_id", T.StringType()),
-        T.StructField("metric", T.StringType()),
-        T.StructField("observed", T.DoubleType()),
-    ]
-)
-
 
 def append_suite_metrics(
     verdicts: DataFrame, run_seq: int, path: str

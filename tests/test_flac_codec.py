@@ -69,9 +69,11 @@ def test_stereo_restore_all_modes():
         -32768, 32768, 9000).astype(np.int64),        # white noise (escape)
 ], ids=["tone", "zeros", "neg-const", "tiny", "noise"])
 def test_mono_roundtrip_exact(pcm):
-    dec, rate = decode_flac(encode_flac(pcm, 16000))
-    assert rate == 16000
-    assert np.array_equal(dec[:, 0], pcm)
+    # 8 kHz: the telephony rate of the G.711 rows; the rate rides STREAMINFO
+    for sr in (16000, 8000):
+        dec, rate = decode_flac(encode_flac(pcm, sr))
+        assert rate == sr
+        assert np.array_equal(dec[:, 0], pcm)
 
 
 @pytest.mark.parametrize("rice", [False, True])
