@@ -22,6 +22,7 @@ Violation rows mirror the reference's anomalies upsert contract
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass, field
 
@@ -82,10 +83,10 @@ class SuiteResult:
     skipped_buckets: list[int]
     row_count: int
     wall_sec: float
-    # frames persisted on behalf of this result (the verdicts cache) — a
-    # long-lived session running many suites should release them once the
-    # result is materialized, or executor storage memory accrues one
-    # cached frame per run
+    # frames persisted on behalf of this result (the verdicts and
+    # violations caches) — a long-lived session running many suites should
+    # release them once the result is materialized, or executor storage
+    # memory accrues cached frames per run
     cached: tuple = ()
     # rows validated per processed bucket (the ledger's per-bucket lineage)
     bucket_rows: dict = field(default_factory=dict)
@@ -190,8 +191,9 @@ def verdict_frame(
 ) -> DataFrame:
     """Shape one family's aggregate frame into VERDICT_SCHEMA columns.
     ``df`` must carry an int ``bucket`` column; the remaining args are
-    Column expressions evaluated against it. Shared by the one-shot
-    runner and the streaming assembler so both emit identical verdicts."""
+    Column expressions evaluated against it. The batch runner's verdict
+    legs use it; the streaming assembler emits the same rows through the
+    ``*_verdict_rows`` driver twins."""
     return df.select(
         F.lit(run_id).alias("run_id"),
         F.col("bucket").cast("int").alias("bucket"),
@@ -247,6 +249,27 @@ def stat_verdict_frames(
                 ),
             )
         )
+    return out
+
+
+def stat_verdict_rows(prof: dict, stat_checks, run_id: str) -> list[tuple]:
+    """Driver twin of ``stat_verdict_frames`` over a finalized profile
+    held as {(bucket, column): {stat: value}}: one row per key of the
+    check's column, a NULL stat → observed NaN, failed, and NaN fails
+    every op."""
+    out = []
+    for c in stat_checks:
+        for (b, col), stats in prof.items():
+            if col != c.column:
+                continue
+            v = stats.get(c.stat)
+            v = math.nan if v is None else float(v)
+            out.append(
+                (run_id, b, c.constraint_id, f"{c.column}.{c.stat}", v,
+                 float(c.threshold),
+                 not math.isnan(v) and bool(_CMP_OPS[c.op](v, c.threshold)),
+                 0)
+            )
     return out
 
 
@@ -326,6 +349,18 @@ def drift_verdict_frames(
     ]
 
 
+def drift_verdict_rows(run_id: str, bucket, c, psi: float, ks: float) -> list[tuple]:
+    """The psi and ks verdict rows of one scored bucket — the driver-side
+    drift paths (uniform, equi-depth, and the streaming categorical
+    finalizer) emit these; ``drift_verdict_frames`` is the Spark twin."""
+    return [
+        (run_id, bucket, c.constraint_id, "psi", psi, c.psi_max,
+         psi <= c.psi_max, 0),
+        (run_id, bucket, c.constraint_id, "ks", ks, c.ks_max,
+         ks <= c.ks_max, 0),
+    ]
+
+
 def violation_count_verdicts(
     violations: DataFrame,
     bucket_df: DataFrame,
@@ -355,6 +390,22 @@ def violation_count_verdicts(
         (n == 0).alias("passed"),
         n.cast("long").alias("violation_cnt"),
     )
+
+
+def violation_count_verdict_rows(
+    counts: dict, buckets, counted_ids: list[str], run_id: str
+) -> list[tuple]:
+    """Driver twin of ``violation_count_verdicts`` over collected
+    {(bucket, constraint_id): count}: every (bucket × constraint) cell,
+    zero-violation cells passing."""
+    out = []
+    for b in buckets:
+        for cid in counted_ids:
+            n = counts.get((b, cid), 0)
+            out.append(
+                (run_id, b, cid, "violation_cnt", float(n), 0.0, n == 0, n)
+            )
+    return out
 
 
 def reconcile_violation_frame(
@@ -395,9 +446,9 @@ def reconcile_rate_verdicts(
     every ReconcileCheck: counts from the (cached) violations frame, the
     denominator from ONE tiny per-bucket baseline agg. A bucket present
     only in the baseline (fully removed from current) still gets verdict
-    rows — the baseline's buckets are unioned into the grid. Shared by
-    the one-shot runner and the streaming assembler so rate arithmetic
-    is bit-identical between them."""
+    rows — the baseline's buckets are unioned into the grid.
+    ``reconcile_rate_verdict_rows`` is the streaming assembler's driver
+    twin of this arithmetic."""
     bl_counts = baseline.groupBy(
         F.col(bucket_col).cast("int").alias("bucket")
     ).agg(F.count(F.lit(1)).alias("_base_n"))
@@ -455,6 +506,38 @@ def reconcile_rate_verdicts(
                     cnt=F.col(cnt_col),
                 )
             )
+    return out
+
+
+def reconcile_rate_verdict_rows(
+    kind_counts: dict,
+    buckets,
+    base_counts: dict,
+    checks,
+    run_id: str,
+) -> list[tuple]:
+    """Driver twin of ``reconcile_rate_verdicts`` over collected counts:
+    ``kind_counts`` maps (constraint_id, bucket, change kind) → violation
+    rows, ``base_counts`` bucket → baseline rows. The grid is the current
+    buckets plus the baseline's; the rate arithmetic (try_divide, an
+    empty-baseline bucket reading inf or 0) is the Spark twin's."""
+    out = []
+    for c in checks:
+        bounded = [("removed_rate", "removed", c.max_removed_rate),
+                   ("changed_rate", "changed", c.max_changed_rate)]
+        if c.max_added_rate is not None:
+            bounded.append(("added_rate", "added", c.max_added_rate))
+        for b in set(buckets) | set(base_counts):
+            # a NULL bucket matches no join key in the Spark twin
+            known = b is not None
+            base_n = base_counts.get(b, 0) if known else 0
+            for metric, kind, bound in bounded:
+                n = kind_counts.get((c.constraint_id, b, kind), 0) if known else 0
+                rate = n / base_n if base_n else (math.inf if n > 0 else 0.0)
+                out.append(
+                    (run_id, b, c.constraint_id, metric, rate, float(bound),
+                     rate <= float(bound), n)
+                )
     return out
 
 
@@ -860,13 +943,8 @@ def run_suite(
         )
         _drift_verdicts(frame, c, "linf")
     for c, s in scored:
-        b = int(s["group"])
-        psi, ks = s["psi"], s["ks"]
-        verdict_rows.append(
-            (run_id, b, c.constraint_id, "psi", psi, c.psi_max, psi <= c.psi_max, 0)
-        )
-        verdict_rows.append(
-            (run_id, b, c.constraint_id, "ks", ks, c.ks_max, ks <= c.ks_max, 0)
+        verdict_rows.extend(
+            drift_verdict_rows(run_id, int(s["group"]), c, s["psi"], s["ks"])
         )
 
     # ---- ANN recall audit (opt-in: needs an embeddings table) -------------
@@ -938,7 +1016,7 @@ def run_suite(
         skipped,
         row_count,
         time.time() - t0,
-        cached=(verdicts,),
+        cached=(verdicts, violations),
         bucket_rows={int(r[bucket_col]): int(r["_n"]) for r in brows},
     )
     if checkpoint is not None and commit:

@@ -18,6 +18,7 @@ detect_anomalies.py:79-96), not as a cascade of micro-joins.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -544,6 +545,14 @@ def drift_scores_categorical_from_counts(
             "all-null — PSI against it is undefined (fix the baseline "
             "snapshot)"
         )
+    # an all-null current column has no group to score: error like the
+    # numeric paths instead of an empty frame that vacuously passes
+    if cur_cnt.isEmpty():
+        raise ValueError(
+            f"categorical drift on column {column!r} produced no score — "
+            "the column is empty/all-null in every current group (fix the "
+            "snapshot or drop the check)"
+        )
 
     cur_tot = cur_cnt.groupBy(g).agg(F.sum("cur_cat_n").alias("cur_n"))
     cats = base_cnt.select("cat").union(cur_cnt.select("cat")).distinct()
@@ -581,6 +590,34 @@ def drift_scores_categorical_from_counts(
         F.max("base_n").alias("base_n"),
     )
     return out if group_col else out.drop(g)
+
+
+def categorical_scores(cur: dict, base: dict[str, int], column: str) -> dict:
+    """Driver twin of ``drift_scores_categorical_from_counts`` over
+    collected counts: ``cur`` maps group → {category: count}, ``base``
+    maps category → count; returns group → (psi, linf). The category grid
+    is every category seen in the baseline or in ANY current group, PSI
+    terms are summed in category order (the Spark window's order) and
+    linf = max |p − q|; only groups with current counts get a score."""
+    base_n = sum(base.values())
+    if not base_n:
+        raise ValueError(
+            f"categorical drift baseline for column {column!r} is empty or "
+            "all-null — PSI against it is undefined (fix the baseline "
+            "snapshot)"
+        )
+    cats = sorted(set(base).union(*cur.values()))
+    out = {}
+    for g, counts in cur.items():
+        cur_n = sum(counts.values())
+        psi = linf = 0.0
+        for cat in cats:
+            p = counts.get(cat, 0) / cur_n + EPS
+            q = base.get(cat, 0) / base_n + EPS
+            psi += (p - q) * math.log(p / q)
+            linf = max(linf, abs(p - q))
+        out[g] = (psi, linf)
+    return out
 
 
 def drift_scores(

@@ -18,6 +18,7 @@ Python anywhere.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -103,9 +104,9 @@ def column_profile_partial(
     """The exactly-mergeable subset of ``column_profile``: per (group,
     column) — row_cnt, cnt, null_cnt, min, max, sum, sqr_sum — in the same
     long layout and with the same try_cast semantics. The streaming suite
-    persists this frame per micro-batch; ``merge_profile_partials`` +
-    ``finalize_profile_partial`` then reproduce the one-shot profile's
-    null_rate/mean/std/min/max/cnt algebra over the merged scalars.
+    persists this frame per micro-batch; ``profile_from_partial_rows``
+    then reproduces the one-shot profile's null_rate/mean/std/min/max/cnt
+    algebra over the merged scalars on the driver.
     (approx_distinct and quantiles are sketch-backed and NOT derivable
     from these scalars — a streaming StatCheck on those stats must be
     rejected, not silently wrong.)"""
@@ -141,32 +142,74 @@ def column_profile_partial(
     )
 
 
-def merge_profile_partials(
-    parts: DataFrame, group_cols: Sequence[str] = ()
-) -> DataFrame:
-    """Merge per-batch profile partials: counts and sums add, min/max
-    combine — all exact (counts are longs; float sums differ from the
-    one-shot pass only in addition order)."""
-    keys = list(group_cols) + ["column"]
-    return parts.groupBy(*keys).agg(
-        F.sum("row_cnt").alias("row_cnt"),
-        F.sum("cnt").alias("cnt"),
-        F.sum("null_cnt").alias("null_cnt"),
-        F.min("min").alias("min"),
-        F.max("max").alias("max"),
-        F.sum("sum").alias("sum"),
-        F.sum("sqr_sum").alias("sqr_sum"),
-    )
+def _finite_or_zero(x: float | None) -> float:
+    """Driver twin of ``clean_float``: NULL/NaN/±inf → 0."""
+    return x if x is not None and math.isfinite(x) else 0.0
 
 
-def finalize_profile_partial(merged: DataFrame) -> DataFrame:
-    """Derive null_rate/mean/std from merged partials — the identical
-    closed-form algebra ``column_profile`` applies (finalize_moments +
-    try_divide null_rate), so streaming stat verdicts share one
-    definition with the one-shot profile."""
-    return finalize_moments(merged).withColumn(
-        "null_rate", F.try_divide(F.col("null_cnt"), F.col("row_cnt"))
-    )
+def _spark_min(xs: list[float]) -> float | None:
+    """Spark's ``min`` over doubles: NULLs skipped, NaN above every value."""
+    finite = [x for x in xs if not math.isnan(x)]
+    return min(finite) if finite else (xs[0] if xs else None)
+
+
+def _spark_max(xs: list[float]) -> float | None:
+    """Spark's ``max`` over doubles: NULLs skipped, NaN above every value."""
+    if any(math.isnan(x) for x in xs):
+        return math.nan
+    return max(xs) if xs else None
+
+
+def profile_from_partial_rows(rows) -> dict[tuple, dict]:
+    """Merge ``column_profile_partial`` rows on the driver and finalize
+    them: {(bucket, column): {row_cnt, cnt, null_cnt, min, max, sum,
+    sqr_sum, mean, std, null_rate}}. Counts and sums add, min/max combine
+    with Spark's NULL/NaN ordering, then the closed form of
+    ``finalize_moments`` (Bessel, try_divide, inf/NaN→0) and the
+    try_divide null_rate of ``column_profile`` apply — one definition of
+    each stat. Rows are (bucket × column) per batch, so this is kilobytes
+    of state; float sums differ from the one-shot pass only in addition
+    order."""
+    acc: dict[tuple, dict] = {}
+    for r in rows:
+        a = acc.setdefault(
+            (r["bucket"], r["column"]),
+            {"row_cnt": 0, "cnt": 0, "null_cnt": 0, "min": [], "max": [],
+             "sum": [], "sqr_sum": []},
+        )
+        for f in ("row_cnt", "cnt", "null_cnt"):
+            a[f] += r[f]
+        for f in ("min", "max", "sum", "sqr_sum"):
+            if r[f] is not None:
+                a[f].append(r[f])
+    out = {}
+    for key, a in acc.items():
+        cnt = a["cnt"]
+        s = sum(a["sum"]) if a["sum"] else None
+        sq = sum(a["sqr_sum"]) if a["sqr_sum"] else None
+        mean = s / cnt if s is not None and cnt else None
+        var = (
+            (sq - s * s / cnt) / (cnt - 1)
+            if s is not None and sq is not None and cnt > 1
+            else None
+        )
+        out[key] = {
+            "row_cnt": a["row_cnt"],
+            "cnt": cnt,
+            "null_cnt": a["null_cnt"],
+            "min": _spark_min(a["min"]),
+            "max": _spark_max(a["max"]),
+            "sum": s,
+            "sqr_sum": sq,
+            "mean": _finite_or_zero(mean),
+            "std": _finite_or_zero(
+                math.sqrt(var) if var is not None and var >= 0 else None
+            ),
+            "null_rate": (
+                a["null_cnt"] / a["row_cnt"] if a["row_cnt"] else None
+            ),
+        }
+    return out
 
 
 def column_profile(

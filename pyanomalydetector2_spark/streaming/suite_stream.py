@@ -16,12 +16,13 @@ time without touching a single already-processed row:
 - percentile StatChecks ("p95" etc.) keep one KLL sketch row per
   (column, bucket) per batch (operators/kll.py — weight-conserving merge
   is exact state algebra); sketches merge at drain/compaction and the
-  nearest-rank quantile is finalized once, sharing the batch runner's
-  percentile_stat_frame so pXX has ONE definition;
+  nearest-rank quantile is finalized once with the same KLL kernels the
+  batch runner's Spark merge runs, so pXX has ONE definition;
 - numeric drift keeps integer histogram-bin counts, categorical drift
   keeps category counts — exactly additive, so merged counts score
-  bit-identically to the one-shot pass (drift.histogram_counts_df /
-  categorical_counts share the scoring arithmetic);
+  identically to the one-shot pass (drift.histogram_counts_df /
+  categorical_counts write the state; psi_ks / categorical_scores are
+  the driver twins of the batch scoring arithmetic);
 - uniqueness keeps per-(bucket, key) counts — additive; the HLL screen
   estimate recomputed over the stored (string-cast) key set equals the
   batch estimate bit-for-bit because the batch runner hashes the SAME
@@ -54,6 +55,15 @@ time without touching a single already-processed row:
   one meaning across restarts; from there it is the same exactly-additive
   integer-count state as uniform drift.
 
+The drain (``streaming_suite_result``) finalizes every verdict on the
+driver. Small state — per-bucket row counts, moments, bins, category
+counts, sketches: kilobytes, whatever the row count — is read with
+pyarrow, never through a Spark job, and finalized with pure-Python twins
+of the batch arithmetic (stats.profile_from_partial_rows,
+drift.categorical_scores, suite.*_verdict_rows). Only the row-scale
+state (violations, ids, FD pairs, reconcile counts) stays in Spark, and
+only counts cross from it. The verdicts come back as one local frame.
+
 Checks that are NOT mergeable are rejected up front
 (``ensure_streamable``): ANN recall audits, distributed-mode drift (drain
 scoring is the driver funnel over merged counts), StatChecks on the raw
@@ -83,9 +93,14 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from pyanomalydetector2_spark.constraints.dsl import Suite, parse_percentile_stat
 from pyanomalydetector2_spark.constraints.suite import (
@@ -93,17 +108,17 @@ from pyanomalydetector2_spark.constraints.suite import (
     VERDICT_SCHEMA,
     SuiteResult,
     _row_check_violations,
-    drift_verdict_frames,
-    reconcile_rate_verdicts,
+    drift_verdict_rows,
+    reconcile_rate_verdict_rows,
     reconcile_violation_frame,
     row_check_base,
-    stat_verdict_frames,
-    violation_count_verdicts,
+    stat_verdict_rows,
+    violation_count_verdict_rows,
 )
 from pyanomalydetector2_spark.operators.drift import (
     HistSpec,
     binned_counts_edges,
-    drift_scores_categorical_from_counts,
+    categorical_scores,
     hist_rows_to_arrays,
     histogram_counts,
     histogram_counts_df,
@@ -113,8 +128,7 @@ from pyanomalydetector2_spark.operators.drift import (
 from pyanomalydetector2_spark.operators.integrity import referential_violations
 from pyanomalydetector2_spark.operators.stats import (
     column_profile_partial,
-    finalize_profile_partial,
-    merge_profile_partials,
+    profile_from_partial_rows,
 )
 from pyanomalydetector2_spark.functions import empty_frame, local_rows_df
 from pyanomalydetector2_spark.streaming.state import batch_dirs, latest_gen
@@ -691,8 +705,6 @@ def process_suite_batch(
             rec = rec.unionByName(f2)
         writes.append((f"{state_dir}/recon/batch={batch_id}", rec))
 
-    from concurrent.futures import ThreadPoolExecutor
-
     def _write(path: str, df: DataFrame) -> None:
         # conform to the component's DECLARED schema before writing: the
         # drain and compaction read with that schema pinned (empty deltas
@@ -796,6 +808,55 @@ def run_suite_stream(
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _arrow_state(
+    state_dir: str, comp: str, schema: str, committed: set[int]
+) -> pa.Table:
+    """Read a small component's committed state on the driver with pyarrow
+    — no Spark job. The paths come from ``_component_state``, so the
+    base/delta/``_SUCCESS`` rule and torn-batch invisibility are the Spark
+    reader's; tables concatenate in batch order (base first). The declared
+    schema is pinned, so a delta dir holding only ``_SUCCESS`` (an empty
+    frame under AQE) reads as typed-empty."""
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    _, paths, _ = _component_state(state_dir, comp, committed)
+    return pa.concat_tables(
+        [arrow_schema.empty_table()]
+        + [
+            ds.dataset(p, format="parquet", schema=arrow_schema).to_table()
+            for p in paths
+        ]
+    )
+
+
+def _sum_by(table: pa.Table, keys: list[str], col: str) -> list[dict]:
+    """The additive merge of count state: ``col`` summed per ``keys``, as
+    row dicts."""
+    return [
+        {**{k: r[k] for k in keys}, col: r[f"{col}_sum"]}
+        for r in table.group_by(keys).aggregate([(col, "sum")]).to_pylist()
+    ]
+
+
+def _percentile_profile(sketches: pa.Table, pct_checks, buckets) -> dict:
+    """{(bucket, column): {pXX: value}} for every bucket × percentile
+    column. Each pair's sketch rows merge in batch order with the kernels
+    the Spark merge runs (``kll._rows_to_sketch``, ``_Sketch.quantiles``);
+    a pair with no sketch (all-null/NaN column) has no value, so its
+    verdict reads NaN and fails, as ``percentile_stat_frame``'s grid."""
+    from pyanomalydetector2_spark.operators.kll import _rows_to_sketch
+
+    stats = sorted({c.stat for c in pct_checks})
+    qs = [parse_percentile_stat(st) for st in stats]
+    prof: dict = {
+        (b, col): {} for b in buckets for col in {c.column for c in pct_checks}
+    }
+    pdf = sketches.to_pandas()
+    for (col, b), grp in pdf.groupby(["column", "bucket"], sort=False):
+        sk = _rows_to_sketch(grp, int(grp["kll_k"].iloc[0]))
+        prof[(int(b), col)] = dict(zip(stats, sk.quantiles(qs)))
+    return prof
+
+
 def streaming_suite_result(
     spark: SparkSession,
     state_dir: str,
@@ -808,7 +869,19 @@ def streaming_suite_result(
     """Assemble the suite verdict over everything committed so far — the
     same VERDICT/VIOLATION frames the one-shot runner emits over the union
     of all processed batches, computed purely from merged state (no source
-    re-scan). Equality with the batch runner is pytest-pinned."""
+    re-scan). Equality with the batch runner is pytest-pinned.
+
+    Every verdict row is finalized on the driver. The small state
+    (buckets, profile, hist, ehist, cats, ksketch) is read with pyarrow
+    and merged with the batch path's own arithmetic. The row-scale state
+    (violations, ids, fdpairs, recon) stays in Spark as the cached
+    ``violations`` frame; only counts cross to the driver: violations per
+    (bucket, constraint, change kind), the HLL estimates, and the
+    baseline's histogram, category counts and per-bucket rows.
+    ``verdicts`` is one Arrow-backed local frame, deliberately not cached:
+    it collects without a Spark job. Driver memory is O(buckets ×
+    constraints) verdict rows plus O(buckets × bins) drift state — the
+    bound the uniform-drift funnel already had."""
     ensure_streamable(suite)
     # fail closed on a suite that changed shape mid-stream: the manifest
     # pins per-check state signatures (catches additions WITHIN a family),
@@ -818,22 +891,30 @@ def streaming_suite_result(
     _pin_suite_manifest(state_dir, suite, key_col, bucket_col)
     for comp in _needed_components(suite):
         _require_component_coverage(state_dir, comp)
+    if baseline is None:
+        for family, checks in (
+            ("reconcile", suite.reconcile_checks),
+            ("drift", suite.drift_checks),
+        ):
+            if checks:
+                raise ValueError(
+                    f"streaming suite has {family} checks but no baseline "
+                    "frame was provided"
+                )
     t0 = time.time()
+    committed = set(_committed(state_dir))
 
-    # the baseline frame is scanned once per reconcile check (snapshot
-    # diff + rate verdicts) and once per uniform/equi/categorical drift
-    # check below - when it is a DERIVED frame (the contract's 10^6-row
-    # arithmetic projection over events) every reference re-executes the
-    # derivation. Materialize it once; values are unchanged (guide 7.2:
-    # duplicated subtrees).
-    if baseline is not None:
-        baseline = baseline.localCheckpoint()
+    def small_state(comp: str, schema: str | None = None) -> pa.Table:
+        return _arrow_state(
+            state_dir, comp, schema or _component_schema(comp), committed
+        )
 
-    bcounts = _read_component(spark, state_dir, "buckets", _BUCKETS_SCHEMA)
-    brows = bcounts.groupBy("bucket").agg(F.sum("n").alias("n")).collect()
-    buckets = [int(r["bucket"]) for r in brows]
-    row_count = int(sum(r["n"] for r in brows))
-    bucket_rows = {int(r["bucket"]): int(r["n"]) for r in brows}
+    bucket_rows = {
+        int(r["bucket"]): int(r["n"])
+        for r in _sum_by(small_state("buckets", _BUCKETS_SCHEMA), ["bucket"], "n")
+    }
+    buckets = sorted(bucket_rows)
+    row_count = sum(bucket_rows.values())
     if not buckets:
         return SuiteResult(
             run_id,
@@ -841,59 +922,32 @@ def streaming_suite_result(
             empty_frame(spark, VIOLATION_SCHEMA),
             [], [], 0, 0.0,
         )
-    bucket_df = local_rows_df(spark, [(b,) for b in buckets], "bucket int")
+
+    # the baseline feeds the reconcile diff and one small collect per
+    # drift family; when it is a DERIVED frame every reference re-executes
+    # the derivation. Materialize it once, pruned to the columns the
+    # checks read (guide 7.2: duplicated subtrees).
+    base_cols = {c.column for c in suite.drift_checks}
+    if suite.reconcile_checks:
+        base_cols |= {key_col, bucket_col}
+        base_cols |= {x for c in suite.reconcile_checks for x in c.compare_cols}
+    if base_cols:
+        baseline = baseline.select(*sorted(base_cols)).localCheckpoint()
 
     # ---- violations: stored row/ref deltas + uniqueness from merged ids --
     violations = _read_component(
         spark, state_dir, "violations", VIOLATION_SCHEMA
     )
-    ids_all = _read_component(spark, state_dir, "ids", _IDS_SCHEMA)
-    merged_ids = (
-        ids_all.groupBy("column", "bucket", "key")
-        .agg(F.sum("cnt").alias("cnt"))
-        if suite.unique_checks
-        else None
-    )
-    if merged_ids is not None:
-        merged_ids = merged_ids.cache()
-    verdict_rows: list[tuple] = []
-    hll_frames: list[DataFrame] = []
+    merged_ids = None
+    if suite.unique_checks:
+        merged_ids = (
+            _read_component(spark, state_dir, "ids", _IDS_SCHEMA)
+            .groupBy("column", "bucket", "key")
+            .agg(F.sum("cnt").alias("cnt"))
+            .cache()
+        )
     for c in suite.unique_checks:
         col_ids = merged_ids.filter(F.col("column") == c.column)
-        # HLL screen recomputed over the stored key set — identical to the
-        # batch estimate: keys cross the state schema string-cast
-        # (injective for atomic types), and the batch runner hashes the
-        # SAME string cast (constraints/suite.py hll_aggs), so both sides
-        # feed HLL++ identical hash inputs at every cardinality. The
-        # bucket-key column sums per-bucket estimates; others get a global
-        # sketch — same split as the batch runner. Built LAZILY as a 1-row
-        # verdict frame (not a collected scalar): assembling the result
-        # no longer runs an eager HLL job per unique check — consumers
-        # that never force the verdicts frame never pay for the estimate.
-        if c.column == key_col:
-            est_df = (
-                col_ids.groupBy("bucket")
-                .agg(F.approx_count_distinct("key", 0.02).alias("ad"))
-                .agg(F.sum("ad").alias("est"))
-            )
-        else:
-            est_df = col_ids.agg(
-                F.approx_count_distinct("key", 0.02).alias("est")
-            )
-        hll_frames.append(
-            est_df.select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(-1).cast("int").alias("bucket"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                F.lit("hll_approx_distinct").alias("metric"),
-                F.coalesce(F.col("est").cast("double"), F.lit(0.0)).alias(
-                    "observed"
-                ),
-                F.lit(float(row_count)).alias("threshold"),
-                F.lit(True).alias("passed"),
-                F.lit(0).cast("long").alias("violation_cnt"),
-            )
-        )
         # exact violations: one row PER PARTICIPATING ROW of a duplicated
         # key — the batch runner's duplicate_rows multiset, reproduced by
         # exploding the merged per-(bucket, key) count. The dup decision
@@ -981,11 +1035,6 @@ def streaming_suite_result(
     # against the string-cast baseline. String casts are injective for
     # atomic types, so the null-safe compares match the typed batch diff.
     if suite.reconcile_checks:
-        if baseline is None:
-            raise ValueError(
-                "streaming suite has reconcile checks but no baseline "
-                "frame was provided"
-            )
         from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
 
         recon = _read_component(spark, state_dir, "recon", _RECON_SCHEMA)
@@ -1014,28 +1063,89 @@ def streaming_suite_result(
                 reconcile_violation_frame(diff, c, run_id, key_col, "bucket")
             )
     violations = violations.cache()
-    violations.count()
 
-    verdict_frames: list[DataFrame] = list(hll_frames)
+    # ---- the Spark half: only counts cross to the driver. The collects
+    # are independent, so they run as CONCURRENT jobs (wall = the slowest,
+    # the violations materialization, not the sum of the small ones).
+    specs = _uniform_specs(suite)
+    eq_checks = _equi_checks(suite)
+    cat_checks = [c for c in suite.drift_checks if c.categorical]
+    edges = {
+        cid: [float(e) for e in meta["edges"]]
+        for cid, meta in resolve_equi_edges(spark, state_dir, suite, None).items()
+    }
+    recon_ids = [c.constraint_id for c in suite.reconcile_checks]
+    kind = F.when(
+        F.col("constraint_id").isin(recon_ids),
+        F.split(F.col("observed"), ":").getItem(0),
+    )
+    # one job materializes the violations cache and counts it per (bucket,
+    # constraint), reconcile rows also per change kind
+    collects = {
+        "violations": lambda: violations.groupBy(
+            "bucket", "constraint_id", kind.alias("kind")
+        ).count().collect()
+    }
+    if merged_ids is not None:
+        # HLL screen recomputed over the stored key set — identical to the
+        # batch estimate: keys cross the state schema string-cast
+        # (injective for atomic types), and the batch runner hashes the
+        # SAME string cast (constraints/suite.py hll_aggs), so both sides
+        # feed HLL++ identical hash inputs at every cardinality. The
+        # bucket-key column sums per-bucket estimates, others get a global
+        # sketch — the batch runner's split.
+        collects["hll"] = lambda: merged_ids.groupBy(
+            "column",
+            F.when(F.col("column") == key_col, F.col("bucket")).alias("g"),
+        ).agg(F.approx_count_distinct("key", 0.02).alias("est")).collect()
+    if suite.reconcile_checks:
+        collects["base_rows"] = lambda: baseline.groupBy(
+            F.col(bucket_col).cast("int").alias("bucket")
+        ).count().collect()
+    if specs:
+        collects["base_hist"] = lambda: histogram_counts(baseline, specs, None)
+    for c in eq_checks:
+        collects[("ehist", c.constraint_id)] = lambda c=c: binned_counts_edges(
+            baseline, c.column, edges[c.constraint_id], None
+        ).collect()
+    for c in cat_checks:
+        collects[("cats", c.column)] = lambda c=c: categorical_counts(
+            baseline, c.column
+        ).collect()
+    with ThreadPoolExecutor(max_workers=len(collects)) as ex:
+        futs = {k: ex.submit(f) for k, f in collects.items()}
+        got = {k: f.result() for k, f in futs.items()}
+    if merged_ids is not None:
+        merged_ids.unpersist()
+
+    # ---- the driver half: every verdict row from counts and small state --
+    vcounts: dict[tuple, int] = {}
+    kind_counts: dict[tuple, int] = {}
+    for r in got["violations"]:
+        key = (r["bucket"], r["constraint_id"])
+        vcounts[key] = vcounts.get(key, 0) + r["count"]
+        if r["kind"] is not None:
+            kind_counts[(r["constraint_id"], r["bucket"], r["kind"])] = r["count"]
+    hll: dict[str, int] = {}
+    for r in got.get("hll", []):
+        hll[r["column"]] = hll.get(r["column"], 0) + r["est"]
+
+    rows: list[tuple] = [
+        (run_id, -1, c.constraint_id, "hll_approx_distinct",
+         float(hll.get(c.column, 0)), float(row_count), True, 0)
+        for c in suite.unique_checks
+    ]
     counted_ids = (
         [c.constraint_id for c in suite.row_checks]
         + [c.constraint_id for c in suite.unique_checks]
         + [c.constraint_id for c in suite.ref_checks]
         + [c.constraint_id for c in suite.fd_checks]
     )
-    if counted_ids:
-        verdict_frames.append(
-            violation_count_verdicts(violations, bucket_df, counted_ids, run_id)
-        )
-
-    # ---- reconcile rate verdicts: the SHARED helper over the cached ------
-    # violations frame — identical rate arithmetic to the batch runner
+    rows += violation_count_verdict_rows(vcounts, buckets, counted_ids, run_id)
     if suite.reconcile_checks:
-        verdict_frames.extend(
-            reconcile_rate_verdicts(
-                violations, bucket_df, baseline,
-                suite.reconcile_checks, run_id, bucket_col,
-            )
+        base_counts = {r["bucket"]: r["count"] for r in got["base_rows"]}
+        rows += reconcile_rate_verdict_rows(
+            kind_counts, buckets, base_counts, suite.reconcile_checks, run_id
         )
 
     # ---- stat verdicts from merged partials ------------------------------
@@ -1046,49 +1156,18 @@ def streaming_suite_result(
         c for c in suite.stat_checks if parse_percentile_stat(c.stat) is not None
     ]
     if mom_checks:
-        prof = finalize_profile_partial(
-            merge_profile_partials(
-                _read_component(spark, state_dir, "profile", _PROFILE_SCHEMA),
-                group_cols=["bucket"],
-            )
-        )
-        verdict_frames.extend(
-            stat_verdict_frames(prof, mom_checks, run_id, "bucket")
-        )
+        prof = profile_from_partial_rows(small_state("profile").to_pylist())
+        rows += stat_verdict_rows(prof, mom_checks, run_id)
     if pct_checks:
-        from pyanomalydetector2_spark.constraints.suite import (
-            percentile_stat_frame,
-        )
-        from pyanomalydetector2_spark.operators.kll import kll_merge_rows
-
-        merged_sk = kll_merge_rows(
-            _read_component(spark, state_dir, "ksketch", _KSKETCH_SCHEMA),
-            ["column", "bucket"],
-        )
-        verdict_frames.extend(
-            stat_verdict_frames(
-                percentile_stat_frame(merged_sk, pct_checks, bucket_df),
-                pct_checks, run_id, "bucket",
-            )
-        )
+        prof = _percentile_profile(small_state("ksketch"), pct_checks, buckets)
+        rows += stat_verdict_rows(prof, pct_checks, run_id)
 
     # ---- uniform drift: merged integer bins → identical psi/ks -----------
-    specs = _uniform_specs(suite)
     if specs:
-        if baseline is None:
-            raise ValueError(
-                "streaming suite has drift checks but no baseline frame "
-                "was provided"
-            )
-        merged = (
-            _read_component(spark, state_dir, "hist", _HIST_SCHEMA)
-            .groupBy("g", "c", "b")
-            .agg(F.sum("n").alias("n"))
-            .collect()
+        cur_h = hist_rows_to_arrays(
+            _sum_by(small_state("hist"), ["g", "c", "b"], "n"), specs
         )
-        cur_h = hist_rows_to_arrays(merged, specs)
-        base_h = histogram_counts(baseline, specs, None)
-        by_col = {s.column: s for s in specs}
+        base_h = got["base_hist"]
         checks = {
             c.column: c
             for c in suite.drift_checks
@@ -1108,14 +1187,7 @@ def streaming_suite_result(
             psi, ks = psi_ks(counts, base_h[(None, col)])
             c = checks[col]
             seen.add(c.constraint_id)
-            verdict_rows.append(
-                (run_id, int(g), c.constraint_id, "psi", psi, c.psi_max,
-                 psi <= c.psi_max, 0)
-            )
-            verdict_rows.append(
-                (run_id, int(g), c.constraint_id, "ks", ks, c.ks_max,
-                 ks <= c.ks_max, 0)
-            )
+            rows += drift_verdict_rows(run_id, int(g), c, psi, ks)
         for c in checks.values():
             if c.constraint_id not in seen:
                 raise ValueError(
@@ -1128,32 +1200,18 @@ def streaming_suite_result(
     # ---- equi-depth drift: merged edge-binned counts vs the baseline ------
     # binned with the SAME pinned edges — integer counts, so scores are
     # bit-identical to a one-shot pass using those edges
-    eq_checks = _equi_checks(suite)
     if eq_checks:
         import numpy as np
 
-        if baseline is None:
-            raise ValueError(
-                "streaming suite has drift checks but no baseline frame "
-                "was provided"
-            )
-        stored = resolve_equi_edges(spark, state_dir, suite, None)
-        merged_eq = (
-            _read_component(spark, state_dir, "ehist", _EHIST_SCHEMA)
-            .groupBy("cid", "g", "b")
-            .agg(F.sum("n").alias("n"))
-            .collect()
-        )
         by_cid: dict[str, dict[int, dict[int, int]]] = {}
-        for r in merged_eq:
+        for r in _sum_by(small_state("ehist"), ["cid", "g", "b"], "n"):
             by_cid.setdefault(r["cid"], {}).setdefault(int(r["g"]), {})[
                 int(r["b"])
             ] = int(r["n"])
         for c in eq_checks:
-            edges = [float(e) for e in stored[c.constraint_id]["edges"]]
-            nb = len(edges) + 1
+            nb = len(edges[c.constraint_id]) + 1
             base_arr = np.zeros(nb)
-            for r in binned_counts_edges(baseline, c.column, edges, None).collect():
+            for r in got[("ehist", c.constraint_id)]:
                 base_arr[int(r["bin"])] = int(r["n"])
             if base_arr.sum() == 0:
                 raise ValueError(
@@ -1173,52 +1231,38 @@ def streaming_suite_result(
                 for b, n in groups[g].items():
                     arr[b] = n
                 psi, ks = psi_ks(arr, base_arr)
-                verdict_rows.append(
-                    (run_id, int(g), c.constraint_id, "psi", psi, c.psi_max,
-                     psi <= c.psi_max, 0)
-                )
-                verdict_rows.append(
-                    (run_id, int(g), c.constraint_id, "ks", ks, c.ks_max,
-                     ks <= c.ks_max, 0)
-                )
+                rows += drift_verdict_rows(run_id, int(g), c, psi, ks)
 
     # ---- categorical drift from merged category counts -------------------
-    cat_checks = [c for c in suite.drift_checks if c.categorical]
     if cat_checks:
-        if baseline is None:
-            raise ValueError(
-                "streaming suite has drift checks but no baseline frame "
-                "was provided"
-            )
-        cats = _read_component(spark, state_dir, "cats", _CATS_SCHEMA)
+        cur: dict[str, dict] = {}
+        for r in _sum_by(
+            small_state("cats"), ["column", "bucket", "cat"], "cur_cat_n"
+        ):
+            cur.setdefault(r["column"], {}).setdefault(r["bucket"], {})[
+                r["cat"]
+            ] = r["cur_cat_n"]
         for c in cat_checks:
-            cur_cnt = (
-                cats.filter(F.col("column") == c.column)
-                .groupBy("bucket", "cat")
-                .agg(F.sum("cur_cat_n").alias("cur_cat_n"))
-            )
-            frame = drift_scores_categorical_from_counts(
-                cur_cnt, baseline, c.column, group_col="bucket"
-            )
-            verdict_frames.extend(
-                drift_verdict_frames(frame, c, run_id, "bucket", "linf")
-            )
-
-    verdicts = local_rows_df(spark, verdict_rows, VERDICT_SCHEMA)
-    for vf in verdict_frames:
-        verdicts = verdicts.unionByName(vf)
-    verdicts = verdicts.cache()
-    if merged_ids is not None:
-        merged_ids.unpersist()
+            base = {r["cat"]: r["cur_cat_n"] for r in got[("cats", c.column)]}
+            scores = categorical_scores(cur.get(c.column, {}), base, c.column)
+            if not scores:
+                raise ValueError(
+                    f"drift check {c.constraint_id!r} produced no score — "
+                    f"column {c.column!r} is empty/all-null in every "
+                    "processed batch (fix the stream or drop the check)"
+                )
+            for g in sorted(scores):
+                rows += drift_verdict_rows(run_id, g, c, *scores[g])
 
     return SuiteResult(
         run_id,
-        verdicts,
+        local_rows_df(spark, rows, VERDICT_SCHEMA),
         violations,
-        sorted(buckets),
+        buckets,
         [],
         row_count,
         time.time() - t0,
+        cached=(violations,),
         bucket_rows=bucket_rows,
     )
 

@@ -447,7 +447,7 @@ def test_opus_mp3_real_container_fake_codec_roundtrip():
     assert decode_pcm_batch(b"\x00" * 100, "mp3") is None
 
 
-def test_ann_check_in_suite(spark, clips):
+def test_ann_check_in_suite(spark, clips, corpus_dir):
     """AnnCheck wiring: an enabled ANN recall audit emits a corpus-level
     verdict row (bucket -1, metric recall_at_k); enabling it without an
     embeddings table is a hard error, not a silent skip."""
@@ -460,7 +460,7 @@ def test_ann_check_in_suite(spark, clips):
                                        n_queries=10, min_recall=0.0,
                                        planes=4),))
     emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        spark.read.parquet(f"{corpus_dir}/embeddings.parquet")
         .select(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias(

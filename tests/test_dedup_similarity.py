@@ -438,8 +438,8 @@ def test_sample_queries_deterministic(spark):
     assert s1 == s2 and len(s1) == 20
 
 
-def test_recall_audit_on_real_ann_paths(spark):
-    """LSH and IVF recall measured against brute force on the sf0.001
+def test_recall_audit_on_real_ann_paths(spark, corpus_dir):
+    """LSH and IVF recall measured against brute force on the corpus
     embeddings — sanity: recall in (0, 1], exact self-audit is 1.0."""
     from pyspark.sql import functions as F
 
@@ -452,7 +452,7 @@ def test_recall_audit_on_real_ann_paths(spark):
     )
 
     emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        spark.read.parquet(f"{corpus_dir}/embeddings.parquet")
         .select(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias(

@@ -15,11 +15,9 @@ from pyanomalydetector2_spark.plans import (
     assert_read_schema_only,
 )
 
-SF = "/root/testdata/sf0.01"
 
-
-def test_parquet_pushdown_and_pruning(spark):
-    ev = spark.read.parquet(f"{SF}/events.parquet")
+def test_parquet_pushdown_and_pruning(spark, corpus_dir):
+    ev = spark.read.parquet(f"{corpus_dir}/events.parquet")
     q = ev.filter(F.col("user_id") == 7).select("user_id", "value")
     assert_pushed_filters(q, "user_id")
     assert_read_schema_only(q, "user_id", "value")

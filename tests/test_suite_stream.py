@@ -23,6 +23,7 @@ from pyanomalydetector2_spark.datagen.clips import (
     dim_codec,
     dim_sr,
 )
+from pyanomalydetector2_spark.functions import local_rows_df
 from pyanomalydetector2_spark.streaming.suite_stream import (
     batch_metrics,
     compact_suite_state,
@@ -104,6 +105,19 @@ def test_stream_equals_batch(drained):
     assert len(metrics) == K_FILES
     assert sum(m["rows"] for m in metrics) == N
     assert all(m["wall_sec"] > 0 for m in metrics)
+
+
+def test_verdict_collect_runs_no_job(spark, drained):
+    """The streaming verdicts are one driver-local frame, finalized from
+    merged state: collecting them runs no Spark job."""
+    stream_res = drained[5]
+    sc = spark.sparkContext
+    sc.setJobGroup("stream-verdict-collect", "collect streaming verdicts")
+    try:
+        assert stream_res.verdicts.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("stream-verdict-collect")
 
 
 def test_redelivered_batch_is_noop(spark, drained):
@@ -542,3 +556,69 @@ def test_all_null_percentile_column_drains_to_failed_verdict(
     res = streaming_suite_result(spark, state, suite, None, "nul")
     rows = res.verdicts.filter("constraint_id = 'p'").collect()
     assert rows and all(not r["passed"] for r in rows)
+
+
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+def test_result_unpersist_releases_every_cache(spark, tmp_path, engine):
+    """``SuiteResult.unpersist`` releases every frame the result cached
+    (the violations cache included): an uncached input leaves the
+    session's cache empty afterwards."""
+    from pyanomalydetector2_spark.constraints.dsl import RowCheck, UniqueCheck
+
+    cur = local_rows_df(
+        spark,
+        [(f"c{i % 30}", i % 4, float(i)) for i in range(40)],
+        "clip_id string, bucket int, dur_ms double",
+    )
+    suite = Suite(
+        row_checks=(
+            RowCheck("pos", "dur_ms > 0", "cast(dur_ms as string)", "positive"),
+        ),
+        unique_checks=(UniqueCheck("u", "clip_id"),),
+        stat_checks=(StatCheck("m", "dur_ms", "mean", ">", 0.0),),
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    if engine == "batch":
+        res = run_suite(cur, cur, {}, suite, "uc")
+    else:
+        state = str(tmp_path / "state")
+        process_suite_batch(cur, 0, state, suite, None, "uc")
+        res = streaming_suite_result(spark, state, suite, None, "uc")
+    assert res.verdicts.collect() and res.violations.collect()
+    res.unpersist()
+    assert cache.isEmpty()
+
+
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+@pytest.mark.parametrize("kind", ["uniform", "categorical"])
+def test_all_null_current_drift_column_produces_no_score(
+    spark, tmp_path, engine, kind
+):
+    """A drift column that is all-null in the current rows has nothing to
+    score: both engines raise instead of passing vacuously, for uniform
+    and categorical drift alike (the stream reads empty hist/cats
+    deltas)."""
+    schema = "clip_id string, bucket int, codec string, dur_ms double"
+    cur = local_rows_df(
+        spark, [(f"c{i}", i % 2, None, None) for i in range(40)], schema
+    )
+    base = local_rows_df(
+        spark,
+        [(f"c{i}", i % 2, ("wav", "flac")[i % 2], 500.0 * i) for i in range(40)],
+        schema,
+    )
+    check = (
+        DriftCheck("d", "codec", 0.0, 0.0, categorical=True)
+        if kind == "categorical"
+        else DriftCheck("d", "dur_ms", 0.0, 20000.0, nbins=10)
+    )
+    suite = Suite(drift_checks=(check,))
+    if engine == "batch":
+        with pytest.raises(ValueError, match="produced no score"):
+            run_suite(cur, base, {}, suite, "nul")
+    else:
+        state = str(tmp_path / "state")
+        process_suite_batch(cur, 0, state, suite, None, "nul")
+        with pytest.raises(ValueError, match="produced no score"):
+            streaming_suite_result(spark, state, suite, base, "nul")
