@@ -103,8 +103,9 @@ class DriftCheck:
     distributed: bool = False
     # categorical mode: frequency-PSI + max-share-deviation (linf, the
     # order-free KS analog) over category counts instead of numeric bins —
-    # lo/hi/nbins/equi_depth ignored; always distributed
-    # (drift.drift_scores_categorical_df). ks_max bounds linf.
+    # lo/hi/nbins/equi_depth ignored. The per-bucket category counts and
+    # the baseline's are collected and scored on the driver
+    # (drift.categorical_scores); ks_max bounds linf.
     categorical: bool = False
 
 

@@ -11,10 +11,15 @@ Execution shape (the scale story):
   pruned parquet re-scan is ~10× cheaper than building + reading a
   deserialized in-memory cache of all columns, and at 100 TB the same holds
   more strongly — each family's scan reads only its own few columns.
-- Verdict assembly happens on the driver over TINY frames (buckets ×
-  constraints rows) — the same driver-side funnel the reference uses for
-  survivor sets (detect_anomalies.py:79-96); all heavy lifting stays
-  distributed.
+- Verdicts are finalized on the driver. Each family reduces to a small
+  aggregate — violation counts per (bucket, constraint), the per-bucket
+  moment profile, merged KLL sketch rows, histograms, category counts,
+  per-bucket drift scores — collected one job at a time, the same
+  driver-side funnel the reference uses for survivor sets
+  (detect_anomalies.py:79-96). ``suite_verdict_rows`` turns them into
+  verdict rows; the streaming drain calls it over its merged state, so the
+  verdict arithmetic has one definition. All heavy lifting stays
+  distributed; the verdicts come back as one driver-local frame.
 
 Violation rows mirror the reference's anomalies upsert contract
 (models/anomalies.py:9,59-79 → FIXTURES.md §B3).
@@ -24,16 +29,19 @@ from __future__ import annotations
 
 import math
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pyanomalydetector2_spark.constraints.dsl import Suite
+from pyanomalydetector2_spark.constraints.dsl import Suite, parse_percentile_stat
 from pyanomalydetector2_spark.operators.audio import with_audio_invariants
 from pyanomalydetector2_spark.operators.drift import (
     HistSpec,
+    categorical_counts,
+    categorical_scores,
     drift_scores_multi,
     drift_scores_quantile,
 )
@@ -83,10 +91,10 @@ class SuiteResult:
     skipped_buckets: list[int]
     row_count: int
     wall_sec: float
-    # frames persisted on behalf of this result (the verdicts and
-    # violations caches) — a long-lived session running many suites should
-    # release them once the result is materialized, or executor storage
-    # memory accrues cached frames per run
+    # frames persisted on behalf of this result (the violations cache) — a
+    # long-lived session running many suites should release them once the
+    # result is materialized, or executor storage memory accrues cached
+    # frames per run
     cached: tuple = ()
     # rows validated per processed bucket (the ledger's per-bucket lineage)
     bucket_rows: dict = field(default_factory=dict)
@@ -96,8 +104,8 @@ class SuiteResult:
 
     def unpersist(self) -> None:
         """Release the caches backing this result (safe after the caller
-        has collected/persisted verdicts and violations; lazy legs stay
-        valid and simply recompute if re-materialized)."""
+        has collected/persisted the violations; an uncached frame stays
+        valid and simply recomputes if re-materialized)."""
         for df in self.cached:
             df.unpersist()
 
@@ -185,31 +193,6 @@ def row_check_base(current: DataFrame, suite: Suite) -> DataFrame:
     return audio_base
 
 
-def verdict_frame(
-    df: DataFrame, run_id: str, cid: str, metric, observed, threshold,
-    passed, cnt=None,
-) -> DataFrame:
-    """Shape one family's aggregate frame into VERDICT_SCHEMA columns.
-    ``df`` must carry an int ``bucket`` column; the remaining args are
-    Column expressions evaluated against it. The batch runner's verdict
-    legs use it; the streaming assembler emits the same rows through the
-    ``*_verdict_rows`` driver twins."""
-    return df.select(
-        F.lit(run_id).alias("run_id"),
-        F.col("bucket").cast("int").alias("bucket"),
-        F.lit(cid).alias("constraint_id"),
-        (F.lit(metric) if isinstance(metric, str) else metric).alias(
-            "metric"
-        ),
-        observed.cast("double").alias("observed"),
-        threshold.cast("double").alias("threshold"),
-        passed.cast("boolean").alias("passed"),
-        (F.lit(0) if cnt is None else cnt).cast("long").alias(
-            "violation_cnt"
-        ),
-    )
-
-
 _CMP_OPS = {
     "<": lambda a, b: a < b,
     "<=": lambda a, b: a <= b,
@@ -219,44 +202,11 @@ _CMP_OPS = {
 }
 
 
-def stat_verdict_frames(
-    prof: DataFrame, stat_checks, run_id: str, bucket_col: str
-) -> list[DataFrame]:
-    """Per-check verdict frames from a (long-layout) column profile.
-    NULL stat (all-null column in a bucket) → observed NaN, failed — and
-    NaN must fail EVERY op: Spark orders NaN above all doubles (NaN >= x
-    is true), unlike the old driver-side Python comparison where NaN
-    compares false — the old semantics are pinned explicitly."""
-    out = []
-    for c in stat_checks:
-        rows = prof.filter(F.col("column") == c.column).withColumn(
-            "bucket", F.col(bucket_col).cast("int")
-        )
-        stat = F.col(c.stat)
-        out.append(
-            verdict_frame(
-                rows,
-                run_id,
-                c.constraint_id,
-                f"{c.column}.{c.stat}",
-                F.coalesce(stat.cast("double"), F.lit(float("nan"))),
-                F.lit(float(c.threshold)),
-                F.when(F.isnan(stat.cast("double")), F.lit(False)).otherwise(
-                    F.coalesce(
-                        _CMP_OPS[c.op](stat.cast("double"), F.lit(c.threshold)),
-                        F.lit(False),
-                    )
-                ),
-            )
-        )
-    return out
-
-
 def stat_verdict_rows(prof: dict, stat_checks, run_id: str) -> list[tuple]:
-    """Driver twin of ``stat_verdict_frames`` over a finalized profile
-    held as {(bucket, column): {stat: value}}: one row per key of the
-    check's column, a NULL stat → observed NaN, failed, and NaN fails
-    every op."""
+    """Per-check verdict rows over a finalized profile held as
+    {(bucket, column): {stat: value}}: one row per key of the check's
+    column. A NULL stat (the column is all-null in the bucket) reads as
+    observed NaN, and NaN fails every op."""
     out = []
     for c in stat_checks:
         for (b, col), stats in prof.items():
@@ -294,65 +244,37 @@ def percentile_sketches(
     )
 
 
-def percentile_stat_frame(
-    sketches: DataFrame, pct_checks, bucket_df: DataFrame
-) -> DataFrame:
-    """Long (bucket, column, p<NN>…) frame from merged sketch rows, shaped
-    for ``stat_verdict_frames``. Every (bucket, column) pair of the run is
-    present: a bucket whose column was all-null/NaN has no sketch row and
-    surfaces as NULL → NaN observed → FAILED verdict, matching the moment
-    profile's all-null semantics."""
-    from pyanomalydetector2_spark.constraints.dsl import parse_percentile_stat
-    from pyanomalydetector2_spark.operators.kll import kll_quantiles
+def _percentile_profile(sketch_rows, pct_checks, buckets) -> dict:
+    """{(bucket, column): {pXX: value}} for every bucket × percentile
+    column. Each pair's sketch rows merge in the order given, and the
+    nearest-rank quantiles are read off the merged sketch. A pair with no
+    sketch row (its column is all-null/NaN in the bucket) has no value, so
+    its verdict reads NaN and fails, like an all-null moment stat."""
+    from pyanomalydetector2_spark.operators.kll import _Sketch
 
     stats = sorted({c.stat for c in pct_checks})
-    qs = [parse_percentile_stat(s) for s in stats]
-    q = kll_quantiles(sketches, qs, ["column", "bucket"])
-    vals = q.select(
-        "column",
-        "bucket",
-        *[
-            F.element_at("q_values", i + 1).alias(s)
-            for i, s in enumerate(stats)
-        ],
-    )
-    cols_df = local_rows_df(
-        vals.sparkSession,
-        [(c,) for c in sorted({c.column for c in pct_checks})], "column string",
-    )
-    grid = bucket_df.select(F.col("bucket").cast("int").alias("bucket")).crossJoin(
-        F.broadcast(cols_df)
-    )
-    return grid.join(vals, ["bucket", "column"], "left")
-
-
-def drift_verdict_frames(
-    frame: DataFrame, c, run_id: str, bucket_col: str, ks_col: str
-) -> list[DataFrame]:
-    """Per-bucket psi + ks verdict frames from a drift-score DataFrame —
-    the scores never reach the driver (VERDICT r03 #7). psi/ks cannot
-    be NULL here: the drift APIs validate an empty/all-null baseline
-    EAGERLY (raising the contract ValueError) and the ε-smoothed
-    algebra is total after that — a hypothetical NULL still FAILS via
-    coalesce(False) rather than vacuously passing."""
-    rows = frame.withColumn("bucket", F.col(bucket_col).cast("int"))
-    psi, ks = F.col("psi"), F.col(ks_col)
-    return [
-        verdict_frame(
-            rows, run_id, c.constraint_id, "psi", psi, F.lit(c.psi_max),
-            F.coalesce(psi <= c.psi_max, F.lit(False)),
-        ),
-        verdict_frame(
-            rows, run_id, c.constraint_id, "ks", ks, F.lit(c.ks_max),
-            F.coalesce(ks <= c.ks_max, F.lit(False)),
-        ),
-    ]
+    qs = [parse_percentile_stat(st) for st in stats]
+    merged: dict = {}
+    for r in sketch_rows:
+        merged.setdefault(
+            (r["bucket"], r["column"]), _Sketch(int(r["kll_k"]))
+        ).merge(
+            _Sketch.from_row(
+                r["kll_k"], r["kll_n"], r["kll_levels"], r["kll_compactions"]
+            )
+        )
+    prof: dict = {
+        (b, col): {} for b in buckets for col in {c.column for c in pct_checks}
+    }
+    for key, sk in merged.items():
+        prof[key] = dict(zip(stats, sk.quantiles(qs)))
+    return prof
 
 
 def drift_verdict_rows(run_id: str, bucket, c, psi: float, ks: float) -> list[tuple]:
-    """The psi and ks verdict rows of one scored bucket — the driver-side
-    drift paths (uniform, equi-depth, and the streaming categorical
-    finalizer) emit these; ``drift_verdict_frames`` is the Spark twin."""
+    """The psi and ks verdict rows of one scored bucket: each passes when
+    its score is within the check's bound (categorical drift reports linf
+    in the ks slot)."""
     return [
         (run_id, bucket, c.constraint_id, "psi", psi, c.psi_max,
          psi <= c.psi_max, 0),
@@ -361,43 +283,12 @@ def drift_verdict_rows(run_id: str, bucket, c, psi: float, ks: float) -> list[tu
     ]
 
 
-def violation_count_verdicts(
-    violations: DataFrame,
-    bucket_df: DataFrame,
-    counted_ids: list[str],
-    run_id: str,
-) -> DataFrame:
-    """(bucket × constraint) grid left-joined to the violation counts so
-    zero-violation cells still emit a passing verdict — all
-    DataFrame-side, no counts dict on the driver."""
-    spark = violations.sparkSession
-    cid_df = local_rows_df(
-        spark, [(c,) for c in counted_ids], "constraint_id string"
-    )
-    vcounts = violations.groupBy("bucket", "constraint_id").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    grid = bucket_df.crossJoin(F.broadcast(cid_df))
-    joined = grid.join(vcounts, ["bucket", "constraint_id"], "left")
-    n = F.coalesce(F.col("cnt"), F.lit(0))
-    return joined.select(
-        F.lit(run_id).alias("run_id"),
-        F.col("bucket").cast("int").alias("bucket"),
-        "constraint_id",
-        F.lit("violation_cnt").alias("metric"),
-        n.cast("double").alias("observed"),
-        F.lit(0.0).alias("threshold"),
-        (n == 0).alias("passed"),
-        n.cast("long").alias("violation_cnt"),
-    )
-
-
 def violation_count_verdict_rows(
     counts: dict, buckets, counted_ids: list[str], run_id: str
 ) -> list[tuple]:
-    """Driver twin of ``violation_count_verdicts`` over collected
-    {(bucket, constraint_id): count}: every (bucket × constraint) cell,
-    zero-violation cells passing."""
+    """Violation-count verdicts over collected {(bucket, constraint_id):
+    count}: every (bucket × constraint) cell, zero-violation cells
+    passing."""
     out = []
     for b in buckets:
         for cid in counted_ids:
@@ -434,81 +325,6 @@ def reconcile_violation_frame(
     )
 
 
-def reconcile_rate_verdicts(
-    violations: DataFrame,
-    bucket_df: DataFrame,
-    baseline: DataFrame,
-    checks,
-    run_id: str,
-    bucket_col: str,
-) -> list[DataFrame]:
-    """Per-bucket removed/changed/(bounded added) RATE verdict frames for
-    every ReconcileCheck: counts from the (cached) violations frame, the
-    denominator from ONE tiny per-bucket baseline agg. A bucket present
-    only in the baseline (fully removed from current) still gets verdict
-    rows — the baseline's buckets are unioned into the grid.
-    ``reconcile_rate_verdict_rows`` is the streaming assembler's driver
-    twin of this arithmetic."""
-    bl_counts = baseline.groupBy(
-        F.col(bucket_col).cast("int").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("_base_n"))
-    rec_buckets = bucket_df.unionByName(bl_counts.select("bucket")).distinct()
-    kind = F.split(F.col("observed"), ":").getItem(0)
-    out: list[DataFrame] = []
-    for c in checks:
-        kc = (
-            violations.filter(F.col("constraint_id") == c.constraint_id)
-            .groupBy("bucket")
-            .agg(
-                F.sum((kind == "removed").cast("long")).alias("_rm"),
-                F.sum((kind == "changed").cast("long")).alias("_ch"),
-                F.sum((kind == "added").cast("long")).alias("_ad"),
-            )
-        )
-        g = (
-            rec_buckets.join(kc, "bucket", "left")
-            .join(bl_counts, "bucket", "left")
-            .select(
-                "bucket",
-                *[
-                    F.coalesce(F.col(x), F.lit(0)).alias(x)
-                    for x in ("_rm", "_ch", "_ad", "_base_n")
-                ],
-            )
-        )
-        bounded = [("removed_rate", "_rm", c.max_removed_rate),
-                   ("changed_rate", "_ch", c.max_changed_rate)]
-        if c.max_added_rate is not None:
-            bounded.append(("added_rate", "_ad", c.max_added_rate))
-        for metric, cnt_col, bound in bounded:
-            # empty-baseline bucket: removed/changed are impossible
-            # (cnt 0 → rate 0 passes); added with a bound but no
-            # baseline denominator fails unless the bound is given —
-            # try_divide NULL → coalesce to cnt>0 ? inf : 0
-            rate = F.coalesce(
-                F.try_divide(
-                    F.col(cnt_col).cast("double"),
-                    F.col("_base_n").cast("double"),
-                ),
-                F.when(F.col(cnt_col) > 0, F.lit(float("inf"))).otherwise(
-                    F.lit(0.0)
-                ),
-            )
-            out.append(
-                verdict_frame(
-                    g,
-                    run_id,
-                    c.constraint_id,
-                    metric,
-                    rate,
-                    F.lit(float(bound)),
-                    rate <= F.lit(float(bound)),
-                    cnt=F.col(cnt_col),
-                )
-            )
-    return out
-
-
 def reconcile_rate_verdict_rows(
     kind_counts: dict,
     buckets,
@@ -516,11 +332,13 @@ def reconcile_rate_verdict_rows(
     checks,
     run_id: str,
 ) -> list[tuple]:
-    """Driver twin of ``reconcile_rate_verdicts`` over collected counts:
-    ``kind_counts`` maps (constraint_id, bucket, change kind) → violation
-    rows, ``base_counts`` bucket → baseline rows. The grid is the current
-    buckets plus the baseline's; the rate arithmetic (try_divide, an
-    empty-baseline bucket reading inf or 0) is the Spark twin's."""
+    """Per-bucket removed/changed/(bounded added) RATE verdicts for every
+    ReconcileCheck: ``kind_counts`` maps (constraint_id, bucket, change
+    kind) → violation rows, ``base_counts`` bucket → baseline rows. The
+    grid is the current buckets plus the baseline's, so a bucket removed
+    from current still gets its rows. A bucket with no baseline rows reads
+    rate inf when it has violations of the kind and 0 otherwise; a NULL
+    bucket counts nothing."""
     out = []
     for c in checks:
         bounded = [("removed_rate", "removed", c.max_removed_rate),
@@ -528,7 +346,6 @@ def reconcile_rate_verdict_rows(
         if c.max_added_rate is not None:
             bounded.append(("added_rate", "added", c.max_added_rate))
         for b in set(buckets) | set(base_counts):
-            # a NULL bucket matches no join key in the Spark twin
             known = b is not None
             base_n = base_counts.get(b, 0) if known else 0
             for metric, kind, bound in bounded:
@@ -539,6 +356,104 @@ def reconcile_rate_verdict_rows(
                      rate <= float(bound), n)
                 )
     return out
+
+
+def violation_counts_frame(violations: DataFrame, suite: Suite) -> DataFrame:
+    """Violation rows counted per (bucket, constraint), reconcile rows also
+    per change kind (``kind`` is NULL for every other family): the one
+    aggregate ``suite_verdict_rows`` reads of the violations."""
+    recon_ids = [c.constraint_id for c in suite.reconcile_checks]
+    kind = F.when(
+        F.col("constraint_id").isin(recon_ids),
+        F.split(F.col("observed"), ":").getItem(0),
+    )
+    return violations.groupBy(
+        "bucket", "constraint_id", kind.alias("kind")
+    ).count()
+
+
+def suite_verdict_rows(
+    suite: Suite,
+    run_id: str,
+    buckets,
+    row_count: int,
+    hll: dict,
+    violation_counts,
+    base_rows: dict,
+    moment_profile: dict,
+    sketch_rows,
+    category_counts: dict,
+    scored_drift: list[tuple],
+) -> list[tuple]:
+    """Every verdict row of a suite run but the ANN recall audits,
+    finalized on the driver from small collected state. Both engines call
+    it, so the verdict arithmetic has one definition:
+
+    - ``hll``: column → HLL distinct estimate (one informational row per
+      UniqueCheck, bucket -1);
+    - ``violation_counts``: ``violation_counts_frame`` rows;
+    - ``base_rows``: bucket → baseline rows, the reconcile rate denominator;
+    - ``moment_profile``: {(bucket, column): {stat: value}};
+    - ``sketch_rows``: percentile KLL sketch rows (``percentile_sketches``
+      shape), merged per (bucket, column) in the order given;
+    - ``category_counts``: column → (bucket → {category: count}, baseline
+      {category: count}) for categorical drift;
+    - ``scored_drift``: (check, bucket, psi, ks) of the numeric drift
+      checks, scored by the caller."""
+    vcounts: dict[tuple, int] = {}
+    kind_counts: dict[tuple, int] = {}
+    for r in violation_counts:
+        key = (r["bucket"], r["constraint_id"])
+        vcounts[key] = vcounts.get(key, 0) + r["count"]
+        if r["kind"] is not None:
+            kind_counts[(r["constraint_id"], r["bucket"], r["kind"])] = r["count"]
+    rows: list[tuple] = [
+        (run_id, -1, c.constraint_id, "hll_approx_distinct",
+         float(hll.get(c.column, 0)), float(row_count), True, 0)
+        for c in suite.unique_checks
+    ]
+    counted_ids = [
+        c.constraint_id
+        for checks in (
+            suite.row_checks, suite.unique_checks, suite.ref_checks,
+            suite.fd_checks,
+        )
+        for c in checks
+    ]
+    rows += violation_count_verdict_rows(vcounts, buckets, counted_ids, run_id)
+    rows += reconcile_rate_verdict_rows(
+        kind_counts, buckets, base_rows, suite.reconcile_checks, run_id
+    )
+    rows += stat_verdict_rows(
+        moment_profile,
+        [c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None],
+        run_id,
+    )
+    pct_checks = [
+        c for c in suite.stat_checks if parse_percentile_stat(c.stat) is not None
+    ]
+    if pct_checks:
+        rows += stat_verdict_rows(
+            _percentile_profile(sketch_rows, pct_checks, buckets),
+            pct_checks,
+            run_id,
+        )
+    scored = list(scored_drift)
+    for c in suite.drift_checks:
+        if not c.categorical:
+            continue
+        cur, base = category_counts[c.column]
+        scores = categorical_scores(cur, base, c.column)
+        if not scores:
+            raise ValueError(
+                f"drift check {c.constraint_id!r} produced no score — "
+                f"column {c.column!r} is empty/all-null in every current "
+                "bucket (fix the snapshot or drop the check)"
+            )
+        scored += [(c, g, *scores[g]) for g in sorted(scores)]
+    for c, g, psi, ks in scored:
+        rows += drift_verdict_rows(run_id, g, c, psi, ks)
+    return rows
 
 
 def run_suite(
@@ -603,7 +518,7 @@ def run_suite(
     brows = base.groupBy(bucket_col).agg(
         F.count(F.lit(1)).alias("_n"), *hll_aggs
     ).collect()
-    buckets = [r[bucket_col] for r in brows]
+    buckets = sorted(int(r[bucket_col]) for r in brows)
     row_count = sum(r["_n"] for r in brows)
     if not buckets:  # everything committed already — idempotent no-op
         return SuiteResult(
@@ -631,27 +546,16 @@ def run_suite(
         if non_key
         else None
     )
-    hll_totals = [
-        (
+    hll = {
+        c.column: (
             sum(r[f"_hll_{i}"] for r in brows)
             if c.column == key_col
             else grow[f"_g_{i}"]
         )
         for i, c in enumerate(suite.unique_checks)
-    ]
+    }
 
     violation_frames: list[DataFrame] = []
-    # Verdicts are assembled as a UNION of per-family aggregate DataFrames
-    # (VERDICT r03 next-round #7): driver memory no longer scales with
-    # buckets × constraints. ``verdict_rows`` keeps only the handful of
-    # scalar whole-table rows (HLL metric, ANN recall); the bucket-shaped
-    # families build frames in ``verdict_frames``.
-    verdict_frames: list[DataFrame] = []
-    verdict_rows: list[tuple] = []
-    stat_prof: DataFrame | None = None
-    bucket_df = local_rows_df(
-        spark, [(int(b),) for b in buckets], "bucket int"
-    )
 
     # ---- row checks: one scan (with audio invariants), all predicates -----
     rc_viol = _row_check_violations(audio_base, suite, run_id, key_col, bucket_col)
@@ -663,19 +567,7 @@ def run_suite(
     # and at 10^12 rows the early-exit for grossly-duplicated inputs), but
     # pass/fail truth always comes from the exact pass: HLL's relative error
     # (~2%) cannot certify uniqueness at realistic dup rates.
-    for i, c in enumerate(suite.unique_checks):
-        verdict_rows.append(
-            (
-                run_id,
-                -1,  # whole-table metric, not per-bucket
-                c.constraint_id,
-                "hll_approx_distinct",
-                float(hll_totals[i]),
-                float(row_count),
-                True,  # informational; exact pass decides
-                0,
-            )
-        )
+    for c in suite.unique_checks:
         # salt_buckets (opt-in, north_rule skew handling): the uniqueness
         # groupBy is the suite's one aggregation whose reduce key is the
         # DATA key — a degenerate hot clip_id pins one reducer there. The
@@ -752,7 +644,10 @@ def run_suite(
             reconcile_violation_frame(diff, c, run_id, key_col, bucket_col)
         )
 
-    # ---- materialize violations once, derive per-bucket counts ------------
+    # ---- each family reduces to a small aggregate, collected on the ------
+    # driver one job at a time: a lazy union of every family's scan in ONE
+    # job blew the 8 GB driver heap at the 8M-row tier (GC overhead limit).
+    # The collect below also materializes the violations cache.
     if violation_frames:
         violations = violation_frames[0]
         for vf in violation_frames[1:]:
@@ -760,65 +655,47 @@ def run_suite(
     else:
         violations = empty_frame(spark, VIOLATION_SCHEMA)
     violations = violations.cache()
-    # Force the cache NOW (the pre-r04 counts collect did this implicitly):
-    # without it the violations scan becomes one more concurrent leg of the
-    # final verdicts job, and running every family's scan in ONE job blew
-    # the 8 GB driver heap at the 8M-row tier (GC overhead limit).
-    violations.count()
-    counted_ids = (
-        [c.constraint_id for c in suite.row_checks]
-        + [c.constraint_id for c in suite.unique_checks]
-        + [c.constraint_id for c in suite.ref_checks]
-        + [c.constraint_id for c in suite.fd_checks]
+    violation_counts = violation_counts_frame(violations, suite).collect()
+    # reconcile rates divide by the baseline's per-bucket rows
+    base_rows = (
+        {
+            r["bucket"]: r["count"]
+            for r in baseline_rec.groupBy(
+                F.col(bucket_col).cast("int").alias("bucket")
+            ).count().collect()
+        }
+        if suite.reconcile_checks
+        else {}
     )
-    if counted_ids:
-        verdict_frames.append(
-            violation_count_verdicts(violations, bucket_df, counted_ids, run_id)
-        )
-
-    # ---- reconcile rate verdicts: counts from the CACHED violations frame -
-    # (the diff join never runs twice), baseline sizes from one tiny
-    # algebraic agg; rates per bucket vs the check's bounds. Reconcile ids
-    # are deliberately NOT in counted_ids — pass/fail is the rate bound,
-    # not zero-violations.
-    if suite.reconcile_checks:
-        verdict_frames.extend(
-            reconcile_rate_verdicts(
-                violations, bucket_df, baseline_rec,
-                suite.reconcile_checks, run_id, bucket_col,
-            )
-        )
 
     # ---- stat checks: single-pass per-bucket column profile ---------------
-    from pyanomalydetector2_spark.constraints.dsl import parse_percentile_stat
-
-    pct_checks = [
-        c for c in suite.stat_checks if parse_percentile_stat(c.stat) is not None
-    ]
     moment_checks = [
         c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None
     ]
+    pct_cols = sorted(
+        {
+            c.column
+            for c in suite.stat_checks
+            if parse_percentile_stat(c.stat) is not None
+        }
+    )
+    moment_profile = {}
     if moment_checks:
-        stat_cols = sorted({c.column for c in moment_checks})
-        # profile rows are O(buckets × columns); persisted so the per-check
-        # verdict selects below don't recompute the scan — and they stay
-        # DataFrame-side (no driver pmap)
-        prof = column_profile(base, stat_cols, group_cols=[bucket_col]).persist()
-        stat_prof = prof  # unpersisted after the verdict legs materialize
-        verdict_frames.extend(
-            stat_verdict_frames(prof, moment_checks, run_id, bucket_col)
-        )
-    if pct_checks:
-        # percentile stats ride the mergeable KLL sketch — the SAME sketch
-        # the streaming suite merges per micro-batch, so exact-regime
-        # verdicts agree bit-for-bit between the two engines
-        sk = percentile_sketches(
-            base, sorted({c.column for c in pct_checks}), bucket_col
-        )
-        pframe = percentile_stat_frame(sk, pct_checks, bucket_df)
-        verdict_frames.extend(
-            stat_verdict_frames(pframe, pct_checks, run_id, "bucket")
-        )
+        stats = sorted({c.stat for c in moment_checks})
+        for r in column_profile(
+            base, sorted({c.column for c in moment_checks}), [bucket_col]
+        ).select(
+            F.col(bucket_col).cast("int").alias("bucket"), "column", *stats
+        ).collect():
+            moment_profile[(r["bucket"], r["column"])] = r.asDict()
+    # percentile stats ride the mergeable KLL sketch — the SAME sketch the
+    # streaming suite merges per micro-batch, so exact-regime verdicts
+    # agree bit-for-bit between the two engines
+    sketch_rows = (
+        percentile_sketches(base, pct_cols, bucket_col).collect()
+        if pct_cols
+        else []
+    )
 
     # ---- drift checks: ONE histogram pass per side for ALL uniform-bin ----
     # columns; equi-depth checks run per column (edges from the baseline's
@@ -828,17 +705,19 @@ def run_suite(
     uniform = [c for c in numeric if not c.equi_depth and not c.distributed]
     equi = [c for c in numeric if c.equi_depth and not c.distributed]
     dist = [c for c in numeric if c.distributed]
-    scored: list[tuple] = []  # (check, score dict)
+    scored: list[tuple] = []  # (check, bucket, psi, ks)
     if uniform:
         specs = [HistSpec(c.column, c.lo, c.hi, c.nbins) for c in uniform]
         by_col = {c.column: c for c in uniform}
         for s in drift_scores_multi(base, baseline, specs, group_col=bucket_col):
-            scored.append((by_col[s["column"]], s))
+            scored.append(
+                (by_col[s["column"]], int(s["group"]), s["psi"], s["ks"])
+            )
         # a check that produced NO score means the baseline histogram for
         # that column was empty/all-null — the same condition the
         # equi-depth and distributed paths raise on; silence here would
         # let a misconfigured baseline pass the whole suite
-        seen_ids = {c.constraint_id for c, _ in scored}
+        seen_ids = {c.constraint_id for c, *_ in scored}
         for c in uniform:
             if c.constraint_id not in seen_ids:
                 raise ValueError(
@@ -905,15 +784,11 @@ def run_suite(
             base, baseline, c.column, c.nbins, group_col=bucket_col,
             edges=equi_edges_map[(c.column, c.nbins)],
         ):
-            scored.append((c, s))
-    def _drift_verdicts(frame: DataFrame, c, ks_col: str) -> None:
-        verdict_frames.extend(
-            drift_verdict_frames(frame, c, run_id, bucket_col, ks_col)
-        )
-
+            scored.append((c, int(s["group"]), s["psi"], s["ks"]))
     for c in dist:
-        # no-histogram-collect path (high-cardinality bucket columns):
-        # scores AND verdicts stay DataFrame-side
+        # no-histogram-collect path (high-cardinality bucket columns): the
+        # histograms stay DataFrame-side, only the per-bucket scores
+        # (O(buckets) rows) come back
         from pyanomalydetector2_spark.operators.drift import (
             drift_scores_df,
             drift_scores_quantile_df,
@@ -929,23 +804,28 @@ def run_suite(
                 base, baseline, c.column, c.lo, c.hi, c.nbins, group_col=bucket_col
             )
         )
-        _drift_verdicts(frame, c, "ks")
-    for c in cat:
-        # categorical: frequency-PSI + linf (reported in the ks verdict
-        # slot — the order-free analog, bounded by ks_max). Always the
-        # no-collect path.
-        from pyanomalydetector2_spark.operators.drift import (
-            drift_scores_categorical_df,
+        scored += [
+            (c, r["bucket"], r["psi"], r["ks"])
+            for r in frame.select(
+                F.col(bucket_col).cast("int").alias("bucket"), "psi", "ks"
+            ).collect()
+        ]
+    # categorical: category counts per current bucket and of the baseline,
+    # once per column; the driver scores frequency-PSI + linf from them
+    category_counts = {}
+    for col in sorted({c.column for c in cat}):
+        cur: dict = {}
+        for r in categorical_counts(base, col, bucket_col).collect():
+            cur.setdefault(int(r[bucket_col]), {})[r["cat"]] = r["cur_cat_n"]
+        base_cats = categorical_counts(baseline, col).collect()
+        category_counts[col] = (
+            cur, {r["cat"]: r["cur_cat_n"] for r in base_cats}
         )
 
-        frame = drift_scores_categorical_df(
-            base, baseline, c.column, group_col=bucket_col
-        )
-        _drift_verdicts(frame, c, "linf")
-    for c, s in scored:
-        verdict_rows.extend(
-            drift_verdict_rows(run_id, int(s["group"]), c, s["psi"], s["ks"])
-        )
+    verdict_rows = suite_verdict_rows(
+        suite, run_id, buckets, row_count, hll, violation_counts, base_rows,
+        moment_profile, sketch_rows, category_counts, scored,
+    )
 
     # ---- ANN recall audit (opt-in: needs an embeddings table) -------------
     # Corpus-level metric → bucket -1 (not a per-bucket verdict; excluded
@@ -995,28 +875,16 @@ def run_suite(
                 )
             )
 
-    # Family verdict frames are materialized sequentially via
-    # localCheckpoint — rows stay distributed, driver memory independent
-    # of bucket count, families execute one job at a time. A lazy union of
-    # all families runs every family's table scan concurrently and blew an
-    # 8g driver at the 8M-row tier.
-    verdicts = local_rows_df(spark, verdict_rows, VERDICT_SCHEMA)
-    for vf in verdict_frames:
-        verdicts = verdicts.unionByName(vf.localCheckpoint())
-    verdicts = verdicts.cache()
-    if stat_prof is not None:
-        # its verdict legs are materialized above
-        stat_prof.unpersist()
-
     result = SuiteResult(
         run_id,
-        verdicts,
+        # driver-local rows: collecting them runs no Spark job
+        local_rows_df(spark, verdict_rows, VERDICT_SCHEMA),
         violations,
-        sorted(int(b) for b in buckets),
+        buckets,
         skipped,
         row_count,
         time.time() - t0,
-        cached=(verdicts, violations),
+        cached=(violations,),
         bucket_rows={int(r[bucket_col]): int(r["_n"]) for r in brows},
     )
     if checkpoint is not None and commit:
@@ -1038,14 +906,12 @@ def commit_checkpoint(
     persisted in. A result with no processed bucket commits nothing."""
     if not res.processed_buckets:
         return
-    # per-bucket fail counts via ONE aggregation over the verdicts frame —
-    # O(buckets) ledger marks are collected, never buckets × constraints
-    fails = dict.fromkeys(res.processed_buckets, 0)
-    for r in (
-        res.verdicts.filter(~F.col("passed")).groupBy("bucket").count().collect()
-    ):
-        if int(r["bucket"]) in fails:
-            fails[int(r["bucket"])] = int(r["count"])
+    # the verdicts are driver-local rows, so reading the failed ones back
+    # runs no Spark job (a groupBy count over them would run two)
+    fails = Counter(
+        r["bucket"]
+        for r in res.verdicts.filter(~F.col("passed")).select("bucket").collect()
+    )
     for b in res.processed_buckets:
         checkpoint.mark_committed(
             res.run_id,

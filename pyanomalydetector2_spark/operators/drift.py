@@ -593,12 +593,14 @@ def drift_scores_categorical_from_counts(
 
 
 def categorical_scores(cur: dict, base: dict[str, int], column: str) -> dict:
-    """Driver twin of ``drift_scores_categorical_from_counts`` over
-    collected counts: ``cur`` maps group → {category: count}, ``base``
-    maps category → count; returns group → (psi, linf). The category grid
-    is every category seen in the baseline or in ANY current group, PSI
-    terms are summed in category order (the Spark window's order) and
-    linf = max |p − q|; only groups with current counts get a score."""
+    """Categorical drift scored on the driver from collected counts — what
+    both suite engines run; ``drift_scores_categorical_from_counts`` is
+    the same arithmetic in Spark. ``cur`` maps group → {category: count},
+    ``base`` maps category → count; returns group → (psi, linf). The
+    category grid is every category seen in the baseline or in ANY current
+    group, PSI terms are summed in category order (the Spark window's
+    order) and linf = max |p − q|; only groups with current counts get a
+    score."""
     base_n = sum(base.values())
     if not base_n:
         raise ValueError(

@@ -18,8 +18,8 @@ re-expressed; see operators/stats.py). This module provides that:
 - ``kll_merge(a, b, group_cols)`` — union two persisted sketch tables and
   re-merge (incremental maintenance across snapshots, exactly the
   ``merge_moments`` union-reaggregate shape: one shuffle of sketch rows).
-- ``kll_quantiles(sketches, qs, group_cols)`` — query quantiles out of sketch
-  rows with a vectorized pandas UDF (each row independent).
+- ``_Sketch.from_row(...).quantiles(qs)`` — query quantiles out of one
+  sketch row on the driver (sketch rows are KBs, whatever the row count).
 
 Sketch structure: levels of double arrays, level ``i`` items carry weight
 ``2**i``; every level has capacity ``k``. A full level is sorted and every
@@ -49,7 +49,8 @@ Consumers inside the engine: equi-depth drift baselines
 (drift.quantile_edges_from_sketch + the suite/CLI sketch store) and
 percentile StatChecks in the batch AND streaming suites
 (constraints/suite.percentile_sketches shares ``STAT_SKETCH_K`` so the two
-engines agree bit-for-bit in the exact regime; streaming state folds via
+engines agree bit-for-bit in the exact regime; both read the quantiles off
+the merged sketch rows on the driver; streaming state folds via
 ``kll_merge_rows``).
 """
 
@@ -370,28 +371,3 @@ def kll_merge(a: DataFrame, b: DataFrame, group_cols: Sequence[str] = ()) -> Dat
         a.select(*cols).unionByName(b.select(*cols)), group_cols
     )
 
-
-def kll_quantiles(
-    sketches: DataFrame,
-    qs: Sequence[float],
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Query quantiles from sketch rows → one row per group with
-    ``q_values array<double>`` plus ``kll_n``. Vectorized over rows; each
-    sketch is queried independently (rows are tiny — this is driver-free)."""
-    qlist = [float(q) for q in qs]
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _q(
-        kk: pd.Series, n: pd.Series, levels: pd.Series, comps: pd.Series
-    ) -> pd.Series:
-        out = []
-        for a, b, c, d in zip(kk, n, levels, comps):
-            out.append(_Sketch.from_row(a, b, c, d).quantiles(qlist))
-        return pd.Series(out)
-
-    return sketches.select(
-        *group_cols,
-        F.col("kll_n").alias("n"),
-        _q("kll_k", "kll_n", "kll_levels", "kll_compactions").alias("q_values"),
-    )

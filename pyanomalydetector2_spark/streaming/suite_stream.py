@@ -21,8 +21,8 @@ time without touching a single already-processed row:
 - numeric drift keeps integer histogram-bin counts, categorical drift
   keeps category counts — exactly additive, so merged counts score
   identically to the one-shot pass (drift.histogram_counts_df /
-  categorical_counts write the state; psi_ks / categorical_scores are
-  the driver twins of the batch scoring arithmetic);
+  categorical_counts write the state; psi_ks / categorical_scores score
+  it, as they score the batch runner's collected counts);
 - uniqueness keeps per-(bucket, key) counts — additive; the HLL screen
   estimate recomputed over the stored (string-cast) key set equals the
   batch estimate bit-for-bit because the batch runner hashes the SAME
@@ -58,11 +58,11 @@ time without touching a single already-processed row:
 The drain (``streaming_suite_result``) finalizes every verdict on the
 driver. Small state — per-bucket row counts, moments, bins, category
 counts, sketches: kilobytes, whatever the row count — is read with
-pyarrow, never through a Spark job, and finalized with pure-Python twins
-of the batch arithmetic (stats.profile_from_partial_rows,
-drift.categorical_scores, suite.*_verdict_rows). Only the row-scale
-state (violations, ids, FD pairs, reconcile counts) stays in Spark, and
-only counts cross from it. The verdicts come back as one local frame.
+pyarrow, never through a Spark job, merged (stats.profile_from_partial_rows
+for the moments) and handed to ``suite.suite_verdict_rows``, the verdict
+finalizer the batch runner calls too. Only the row-scale state
+(violations, ids, FD pairs, reconcile counts) stays in Spark, and only
+counts cross from it. The verdicts come back as one local frame.
 
 Checks that are NOT mergeable are rejected up front
 (``ensure_streamable``): ANN recall audits, distributed-mode drift (drain
@@ -108,17 +108,14 @@ from pyanomalydetector2_spark.constraints.suite import (
     VERDICT_SCHEMA,
     SuiteResult,
     _row_check_violations,
-    drift_verdict_rows,
-    reconcile_rate_verdict_rows,
     reconcile_violation_frame,
     row_check_base,
-    stat_verdict_rows,
-    violation_count_verdict_rows,
+    suite_verdict_rows,
+    violation_counts_frame,
 )
 from pyanomalydetector2_spark.operators.drift import (
     HistSpec,
     binned_counts_edges,
-    categorical_scores,
     hist_rows_to_arrays,
     histogram_counts,
     histogram_counts_df,
@@ -183,8 +180,9 @@ def ensure_streamable(suite: Suite) -> None:
             "streaming suite: multiple uniform drift checks share "
             f"column(s) {dup_cols} — the hist state is keyed by column, so "
             "their differently-binned counts would merge and one check "
-            "would silently lose its verdicts; use distinct columns or the "
-            "equi-depth/categorical variants (keyed by check id)"
+            "would silently lose its verdicts; use distinct columns, the "
+            "equi-depth variant (keyed by check id) or categorical drift "
+            "(its category counts do not depend on the check)"
         )
     for c in suite.stat_checks:
         if c.stat not in _MERGEABLE_STATS and parse_percentile_stat(c.stat) is None:
@@ -621,16 +619,18 @@ def process_suite_batch(
             eh = eh.unionByName(f2)
         writes.append((f"{state_dir}/ehist/batch={batch_id}", eh))
 
-    cat_checks = [c for c in suite.drift_checks if c.categorical]
-    if cat_checks:
+    # category and key counts are keyed by column: one frame per distinct
+    # column, or two checks on one column would double its merged counts
+    cat_cols = sorted({c.column for c in suite.drift_checks if c.categorical})
+    if cat_cols:
         frames = [
-            categorical_counts(batch, c.column, bucket_col).select(
-                F.lit(c.column).alias("column"),
+            categorical_counts(batch, col, bucket_col).select(
+                F.lit(col).alias("column"),
                 F.col(bucket_col).cast("int").alias("bucket"),
                 "cat",
                 "cur_cat_n",
             )
-            for c in cat_checks
+            for col in cat_cols
         ]
         cats = frames[0]
         for f2 in frames[1:]:
@@ -644,11 +644,11 @@ def process_suite_batch(
         frames = [
             batch.groupBy(
                 F.col(bucket_col).cast("int").alias("bucket"),
-                F.col(c.column).cast("string").alias("key"),
+                F.col(col).cast("string").alias("key"),
             )
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.lit(c.column).alias("column"), "bucket", "key", "cnt")
-            for c in suite.unique_checks
+            .select(F.lit(col).alias("column"), "bucket", "key", "cnt")
+            for col in sorted({c.column for c in suite.unique_checks})
         ]
         ids = frames[0]
         for f2 in frames[1:]:
@@ -837,26 +837,6 @@ def _sum_by(table: pa.Table, keys: list[str], col: str) -> list[dict]:
     ]
 
 
-def _percentile_profile(sketches: pa.Table, pct_checks, buckets) -> dict:
-    """{(bucket, column): {pXX: value}} for every bucket × percentile
-    column. Each pair's sketch rows merge in batch order with the kernels
-    the Spark merge runs (``kll._rows_to_sketch``, ``_Sketch.quantiles``);
-    a pair with no sketch (all-null/NaN column) has no value, so its
-    verdict reads NaN and fails, as ``percentile_stat_frame``'s grid."""
-    from pyanomalydetector2_spark.operators.kll import _rows_to_sketch
-
-    stats = sorted({c.stat for c in pct_checks})
-    qs = [parse_percentile_stat(st) for st in stats]
-    prof: dict = {
-        (b, col): {} for b in buckets for col in {c.column for c in pct_checks}
-    }
-    pdf = sketches.to_pandas()
-    for (col, b), grp in pdf.groupby(["column", "bucket"], sort=False):
-        sk = _rows_to_sketch(grp, int(grp["kll_k"].iloc[0]))
-        prof[(int(b), col)] = dict(zip(stats, sk.quantiles(qs)))
-    return prof
-
-
 def streaming_suite_result(
     spark: SparkSession,
     state_dir: str,
@@ -873,7 +853,8 @@ def streaming_suite_result(
 
     Every verdict row is finalized on the driver. The small state
     (buckets, profile, hist, ehist, cats, ksketch) is read with pyarrow
-    and merged with the batch path's own arithmetic. The row-scale state
+    and merged; ``suite_verdict_rows``, the batch runner's own finalizer,
+    turns it into verdict rows. The row-scale state
     (violations, ids, fdpairs, recon) stays in Spark as the cached
     ``violations`` frame; only counts cross to the driver: violations per
     (bucket, constraint, change kind), the HLL estimates, and the
@@ -889,7 +870,8 @@ def streaming_suite_result(
     # batch (catches a family that is entirely new, or legacy state dirs
     # without a manifest)
     _pin_suite_manifest(state_dir, suite, key_col, bucket_col)
-    for comp in _needed_components(suite):
+    needed = _needed_components(suite)
+    for comp in needed:
         _require_component_coverage(state_dir, comp)
     if baseline is None:
         for family, checks in (
@@ -1074,17 +1056,10 @@ def streaming_suite_result(
         cid: [float(e) for e in meta["edges"]]
         for cid, meta in resolve_equi_edges(spark, state_dir, suite, None).items()
     }
-    recon_ids = [c.constraint_id for c in suite.reconcile_checks]
-    kind = F.when(
-        F.col("constraint_id").isin(recon_ids),
-        F.split(F.col("observed"), ":").getItem(0),
-    )
     # one job materializes the violations cache and counts it per (bucket,
     # constraint), reconcile rows also per change kind
     collects = {
-        "violations": lambda: violations.groupBy(
-            "bucket", "constraint_id", kind.alias("kind")
-        ).count().collect()
+        "violations": lambda: violation_counts_frame(violations, suite).collect()
     }
     if merged_ids is not None:
         # HLL screen recomputed over the stored key set — identical to the
@@ -1118,49 +1093,12 @@ def streaming_suite_result(
     if merged_ids is not None:
         merged_ids.unpersist()
 
-    # ---- the driver half: every verdict row from counts and small state --
-    vcounts: dict[tuple, int] = {}
-    kind_counts: dict[tuple, int] = {}
-    for r in got["violations"]:
-        key = (r["bucket"], r["constraint_id"])
-        vcounts[key] = vcounts.get(key, 0) + r["count"]
-        if r["kind"] is not None:
-            kind_counts[(r["constraint_id"], r["bucket"], r["kind"])] = r["count"]
+    # ---- the driver half: drift scores from merged bins, then every -----
+    # verdict row through the batch runner's own finalizer
     hll: dict[str, int] = {}
     for r in got.get("hll", []):
         hll[r["column"]] = hll.get(r["column"], 0) + r["est"]
-
-    rows: list[tuple] = [
-        (run_id, -1, c.constraint_id, "hll_approx_distinct",
-         float(hll.get(c.column, 0)), float(row_count), True, 0)
-        for c in suite.unique_checks
-    ]
-    counted_ids = (
-        [c.constraint_id for c in suite.row_checks]
-        + [c.constraint_id for c in suite.unique_checks]
-        + [c.constraint_id for c in suite.ref_checks]
-        + [c.constraint_id for c in suite.fd_checks]
-    )
-    rows += violation_count_verdict_rows(vcounts, buckets, counted_ids, run_id)
-    if suite.reconcile_checks:
-        base_counts = {r["bucket"]: r["count"] for r in got["base_rows"]}
-        rows += reconcile_rate_verdict_rows(
-            kind_counts, buckets, base_counts, suite.reconcile_checks, run_id
-        )
-
-    # ---- stat verdicts from merged partials ------------------------------
-    mom_checks = [
-        c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None
-    ]
-    pct_checks = [
-        c for c in suite.stat_checks if parse_percentile_stat(c.stat) is not None
-    ]
-    if mom_checks:
-        prof = profile_from_partial_rows(small_state("profile").to_pylist())
-        rows += stat_verdict_rows(prof, mom_checks, run_id)
-    if pct_checks:
-        prof = _percentile_profile(small_state("ksketch"), pct_checks, buckets)
-        rows += stat_verdict_rows(prof, pct_checks, run_id)
+    scored: list[tuple] = []  # (check, bucket, psi, ks)
 
     # ---- uniform drift: merged integer bins → identical psi/ks -----------
     if specs:
@@ -1180,14 +1118,12 @@ def streaming_suite_result(
                     "all-null — no histogram to compare against (fix the "
                     "baseline snapshot)"
                 )
-        seen = set()
         for (g, col), counts in sorted(
             cur_h.items(), key=lambda kv: (str(kv[0][0]), kv[0][1])
         ):
             psi, ks = psi_ks(counts, base_h[(None, col)])
-            c = checks[col]
-            seen.add(c.constraint_id)
-            rows += drift_verdict_rows(run_id, int(g), c, psi, ks)
+            scored.append((checks[col], int(g), psi, ks))
+        seen = {c.constraint_id for c, *_ in scored}
         for c in checks.values():
             if c.constraint_id not in seen:
                 raise ValueError(
@@ -1230,29 +1166,37 @@ def streaming_suite_result(
                 arr = np.zeros(nb)
                 for b, n in groups[g].items():
                     arr[b] = n
-                psi, ks = psi_ks(arr, base_arr)
-                rows += drift_verdict_rows(run_id, int(g), c, psi, ks)
+                scored.append((c, int(g), *psi_ks(arr, base_arr)))
 
-    # ---- categorical drift from merged category counts -------------------
+    # ---- categorical drift: merged category counts vs the baseline's -----
+    cur_cats: dict[str, dict] = {}
     if cat_checks:
-        cur: dict[str, dict] = {}
         for r in _sum_by(
             small_state("cats"), ["column", "bucket", "cat"], "cur_cat_n"
         ):
-            cur.setdefault(r["column"], {}).setdefault(r["bucket"], {})[
+            cur_cats.setdefault(r["column"], {}).setdefault(r["bucket"], {})[
                 r["cat"]
             ] = r["cur_cat_n"]
-        for c in cat_checks:
-            base = {r["cat"]: r["cur_cat_n"] for r in got[("cats", c.column)]}
-            scores = categorical_scores(cur.get(c.column, {}), base, c.column)
-            if not scores:
-                raise ValueError(
-                    f"drift check {c.constraint_id!r} produced no score — "
-                    f"column {c.column!r} is empty/all-null in every "
-                    "processed batch (fix the stream or drop the check)"
-                )
-            for g in sorted(scores):
-                rows += drift_verdict_rows(run_id, g, c, *scores[g])
+    category_counts = {
+        c.column: (
+            cur_cats.get(c.column, {}),
+            {r["cat"]: r["cur_cat_n"] for r in got[("cats", c.column)]},
+        )
+        for c in cat_checks
+    }
+
+    rows = suite_verdict_rows(
+        suite, run_id, buckets, row_count, hll, got["violations"],
+        {r["bucket"]: r["count"] for r in got.get("base_rows", [])},
+        (
+            profile_from_partial_rows(small_state("profile").to_pylist())
+            if "profile" in needed
+            else {}
+        ),
+        small_state("ksketch").to_pylist() if "ksketch" in needed else [],
+        category_counts,
+        scored,
+    )
 
     return SuiteResult(
         run_id,

@@ -15,10 +15,24 @@ from pyanomalydetector2_spark.operators.kll import (
     _Sketch,
     kll_build,
     kll_merge,
-    kll_quantiles,
 )
 
 QS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+
+
+def _quantiles(sketches, qs, group_cols=()):
+    """Query each collected sketch row on the driver: its group keys, ``n``
+    and ``q_values``."""
+    return [
+        {
+            **{g: r[g] for g in group_cols},
+            "n": r["kll_n"],
+            "q_values": _Sketch.from_row(
+                r["kll_k"], r["kll_n"], r["kll_levels"], r["kll_compactions"]
+            ).quantiles(qs),
+        }
+        for r in sketches.collect()
+    ]
 
 
 def _disc_quantile(sorted_vals: np.ndarray, q: float) -> float:
@@ -125,7 +139,7 @@ def test_spark_exact_regime_grouped_matches_oracle(spark):
     got = {}
     for parts in (1, 7):
         sk = kll_build(df.repartition(parts), "v", ["g"], k=8192)
-        out = kll_quantiles(sk, [0.25, 0.5, 0.75], ["g"]).collect()
+        out = _quantiles(sk, [0.25, 0.5, 0.75], ["g"])
         got[parts] = {r["g"]: (r["n"], tuple(r["q_values"])) for r in out}
     clean = pdf.dropna()
     expect = {}
@@ -139,7 +153,7 @@ def test_spark_exact_regime_grouped_matches_oracle(spark):
 def test_spark_global_sketch_no_groups(spark):
     df, pdf = _events_df(spark, n=2000)
     sk = kll_build(df, "v", (), k=4096)
-    rows = kll_quantiles(sk, [0.5]).collect()
+    rows = _quantiles(sk, [0.5])
     s = np.sort(pdf.dropna()["v"].to_numpy())
     assert len(rows) == 1
     assert rows[0]["n"] == len(s)
@@ -151,7 +165,7 @@ def test_spark_compacting_regime_bounded(spark):
     vals = rng.gamma(2.0, size=120000)
     df = spark.createDataFrame(pd.DataFrame({"v": vals})).repartition(16)
     sk = kll_build(df, "v", (), k=256)
-    row = kll_quantiles(sk, QS).collect()[0]
+    row = _quantiles(sk, QS)[0]
     assert row["n"] == len(vals)
     s = np.sort(vals)
     bound = _error_bound(len(vals), 256)
@@ -172,8 +186,8 @@ def test_spark_incremental_merge_equals_full_build_exact_regime(spark):
         ["g"],
     )
     full = kll_build(df, "v", ["g"], k=8192)
-    q_m = kll_quantiles(merged, QS, ["g"]).collect()
-    q_f = kll_quantiles(full, QS, ["g"]).collect()
+    q_m = _quantiles(merged, QS, ["g"])
+    q_f = _quantiles(full, QS, ["g"])
     as_map = lambda rows: {r["g"]: (r["n"], tuple(r["q_values"])) for r in rows}
     assert as_map(q_m) == as_map(q_f)
 
@@ -260,7 +274,7 @@ def test_spark_null_group_key_survives(spark):
          "v": [1.0, 3.0, 5.0, 7.0, 9.0]}
     )
     df = spark.createDataFrame(pdf)
-    out = kll_quantiles(kll_build(df, "v", ["g"], k=64), [0.5], ["g"]).collect()
+    out = _quantiles(kll_build(df, "v", ["g"], k=64), [0.5], ["g"])
     got = {r["g"]: (r["n"], r["q_values"][0]) for r in out}
     assert got == {1: (2, 1.0), None: (2, 5.0), 2: (1, 9.0)}
 
@@ -304,6 +318,6 @@ def test_nan_float_group_key_joins_null_group(spark):
         [(1.0, 10.0), (1.0, 30.0), (None, 5.0), (float("nan"), 7.0)],
         "g double, v double",
     )
-    out = kll_quantiles(kll_build(df, "v", ["g"], k=64), [0.5], ["g"]).collect()
+    out = _quantiles(kll_build(df, "v", ["g"], k=64), [0.5], ["g"])
     got = {r["g"]: (r["n"], r["q_values"][0]) for r in out}
     assert got == {1.0: (2, 10.0), None: (2, 5.0)}

@@ -107,17 +107,24 @@ def test_stream_equals_batch(drained):
     assert all(m["wall_sec"] > 0 for m in metrics)
 
 
-def test_verdict_collect_runs_no_job(spark, drained):
-    """The streaming verdicts are one driver-local frame, finalized from
-    merged state: collecting them runs no Spark job."""
-    stream_res = drained[5]
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+def test_verdict_collect_runs_no_job(spark, drained, tmp_path, engine):
+    """Both engines' verdicts are one driver-local frame, finalized from
+    small collected state: collecting them, and committing the ledger
+    from them, runs no Spark job."""
+    from pyanomalydetector2_spark.constraints.suite import commit_checkpoint
+    from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
+
+    res = drained[6] if engine == "batch" else drained[5]
+    group = f"{engine}-verdict-collect"
     sc = spark.sparkContext
-    sc.setJobGroup("stream-verdict-collect", "collect streaming verdicts")
+    sc.setJobGroup(group, f"collect {engine} verdicts")
     try:
-        assert stream_res.verdicts.collect()
+        assert res.verdicts.collect()
+        commit_checkpoint(res, CheckpointLedger(str(tmp_path / "ledger")))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert not sc.statusTracker().getJobIdsForGroup("stream-verdict-collect")
+    assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_redelivered_batch_is_noop(spark, drained):
@@ -509,6 +516,37 @@ def test_compaction_refuses_uncovered_component(spark, tmp_path):
     assert os.path.isdir(f"{state}/buckets_base/gen={gen}")
     with pytest.raises(ValueError, match="profile.*no delta"):
         streaming_suite_result(spark, state, suite, cur, "cv")
+
+
+def test_checks_sharing_a_column_stream_equals_batch(spark, tmp_path):
+    """Two UniqueChecks on one key column and two categorical drift checks
+    on one column: the key and category counts are kept once per column,
+    so the stream equals the batch run instead of doubling them (20
+    distinct ids would read as 80 duplicate-row violations)."""
+    from pyanomalydetector2_spark.constraints.dsl import UniqueCheck
+
+    schema = "clip_id string, bucket int, codec string"
+    codecs = ("wav", "flac", "mp3")
+    cur = local_rows_df(
+        spark, [(f"c{i}", i % 4, codecs[i % 3]) for i in range(20)], schema
+    )
+    base = local_rows_df(
+        spark, [(f"c{i}", i % 4, codecs[i % 2]) for i in range(20)], schema
+    )
+    suite = Suite(
+        unique_checks=(UniqueCheck("u1", "clip_id"), UniqueCheck("u2", "clip_id")),
+        drift_checks=(
+            DriftCheck("d1", "codec", 0, 0, categorical=True),
+            DriftCheck("d2", "codec", 0, 0, psi_max=5.0, ks_max=1.0,
+                       categorical=True),
+        ),
+    )
+    state = str(tmp_path / "state")
+    process_suite_batch(cur, 0, state, suite, None, "dup")
+    stream_res = streaming_suite_result(spark, state, suite, base, "dup")
+    batch_res = run_suite(cur, base, {}, suite, "dup")
+    assert not batch_res.violations.collect()
+    _assert_results_equal(stream_res, batch_res)
 
 
 def test_duplicate_uniform_drift_columns_rejected():
