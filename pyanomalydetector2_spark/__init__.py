@@ -22,8 +22,7 @@ Layout
 - ``operators``    moment stats, window kernels, the detect1/2/3 screens,
                    uniqueness, referential integrity, functional
                    dependencies, distribution drift, KLL sketches,
-                   reconcile, dedup, similarity search, text analysis,
-                   as-of/interval/session joins, and the audio/image
+                   reconcile, dedup, text analysis, and the audio/image
                    codecs behind the row invariants.
 - ``constraints``  declarative constraint DSL (+ YAML config) → Column
                    compiler + suite runner emitting pass/fail verdicts and

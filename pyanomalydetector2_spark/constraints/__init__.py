@@ -7,7 +7,6 @@ from pyanomalydetector2_spark.constraints.config import (  # noqa: F401
     suite_from_dict,
 )
 from pyanomalydetector2_spark.constraints.dsl import (  # noqa: F401
-    AnnCheck,
     DriftCheck,
     RefCheck,
     RowCheck,

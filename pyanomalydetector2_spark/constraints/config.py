@@ -9,9 +9,10 @@ config layer (utils/config_loader.py:15-78 + samples/zabbix.yml:26-81):
   ``${NAME:-default}`` substitution over os.environ + an optional extra
   context dict — no template engine needed for the surface actually used
   (the sample configs only substitute scalar variables);
-- the ``suite:`` section compiles to the constraint DSL (all five check
-  kinds), the analog of item_conds/item_diff_conds compiling to
-  _evaluate_cond thresholds (detector.py:169-185).
+- the ``suite:`` section compiles to the constraint DSL (every check
+  kind; an unknown family or field key is an error), the analog of
+  item_conds/item_diff_conds compiling to _evaluate_cond thresholds
+  (detector.py:169-185).
 
 A user porting samples/zabbix.yml writes the same {filter → predicate,
 condition: {operator, value} → op/threshold} shapes against the clips table.
@@ -19,13 +20,13 @@ condition: {operator, value} → op/threshold} shapes against the clips table.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import re
 
 import yaml
 
 from pyanomalydetector2_spark.constraints.dsl import (
-    AnnCheck,
     DriftCheck,
     FdCheck,
     ReconcileCheck,
@@ -80,9 +81,48 @@ def load_config(
     return conf
 
 
+_FAMILIES = {
+    "row_checks": RowCheck,
+    "stat_checks": StatCheck,
+    "unique_checks": UniqueCheck,
+    "ref_checks": RefCheck,
+    "drift_checks": DriftCheck,
+    "fd_checks": FdCheck,
+    "reconcile_checks": ReconcileCheck,
+}
+# YAML alias → DSL field name
+_ALIASES = {"id": "constraint_id", "dim": "dim_name"}
+
+
+def _reject_unknown_keys(spec: dict) -> None:
+    """A misspelled key must not change what a verdict means: an unknown
+    family would drop its checks (a suite with none passes vacuously) and
+    an unknown field would leave its default threshold in place."""
+    if "ann_checks" in spec:
+        raise ValueError(
+            "suite config: 'ann_checks' was removed (the ANN recall audit "
+            "is no longer a check kind)"
+        )
+    unknown = sorted(set(spec) - set(_FAMILIES))
+    if unknown:
+        raise ValueError(f"suite config: unknown check families {unknown}")
+    for family, cls in _FAMILIES.items():
+        names = {f.name for f in dataclasses.fields(cls)}
+        names |= {a for a, n in _ALIASES.items() if n in names}
+        for d in spec.get(family, []):
+            bad = sorted(set(d) - names)
+            if bad:
+                raise ValueError(
+                    f"suite config: unknown keys {bad} in {family} entry "
+                    f"{d.get('id') or d.get('constraint_id')!r}"
+                )
+
+
 def suite_from_dict(spec: dict) -> Suite:
     """Compile the ``suite:`` section to the frozen Suite dataclasses. Field
-    names mirror the DSL; ``id`` is accepted for constraint_id."""
+    names mirror the DSL; ``id`` is accepted for constraint_id and ``dim``
+    for dim_name. An unknown family or field key raises ValueError."""
+    _reject_unknown_keys(spec)
 
     def cid(d: dict) -> str:
         return d.get("constraint_id") or d["id"]
@@ -124,20 +164,6 @@ def suite_from_dict(spec: dict) -> Suite:
         )
         for d in spec.get("drift_checks", [])
     )
-    anns = tuple(
-        AnnCheck(
-            cid(d),
-            int(d["dims"]),
-            k=int(d.get("k", 10)),
-            n_queries=int(d.get("n_queries", 50)),
-            min_recall=float(d.get("min_recall", 0.8)),
-            method=str(d.get("method", "lsh")),
-            planes=int(d.get("planes", 8)),
-            n_cells=int(d.get("n_cells", 16)),
-            nprobe=int(d.get("nprobe", 2)),
-        )
-        for d in spec.get("ann_checks", [])
-    )
     fds = tuple(
         FdCheck(
             cid(d),
@@ -168,7 +194,15 @@ def suite_from_dict(spec: dict) -> Suite:
         )
         for d in spec.get("reconcile_checks", [])
     )
-    suite = Suite(rows, stats, uniques, refs, drifts, anns, fds, recs)
+    suite = Suite(
+        row_checks=rows,
+        stat_checks=stats,
+        unique_checks=uniques,
+        ref_checks=refs,
+        drift_checks=drifts,
+        fd_checks=fds,
+        reconcile_checks=recs,
+    )
     ids = suite.all_ids()
     dupes = {i for i in ids if ids.count(i) > 1}
     if dupes:
@@ -196,8 +230,6 @@ def suite_to_dict(suite: Suite) -> dict:
     persist a suggested suite as a YAML file a later run loads unchanged —
     the Deequ suggestion loop closed operationally, and the same mirror
     convention as the shipped clips-suite YAML."""
-    import dataclasses
-
     def rows(checks, field_map: dict[str, str], drop_defaults: dict):
         out = []
         for c in checks:
@@ -235,7 +267,6 @@ def suite_to_dict(suite: Suite) -> dict:
                 "categorical": False,
             },
         ),
-        "ann_checks": rows(suite.ann_checks, {}, {}),
         "fd_checks": rows(suite.fd_checks, {}, {}),
         "reconcile_checks": rows(suite.reconcile_checks, {}, {}),
     }

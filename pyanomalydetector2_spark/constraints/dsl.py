@@ -14,7 +14,6 @@ Constraint kinds covering the north_rule surface:
 - UniqueCheck     key uniqueness (HLL screen → exact confirm).
 - RefCheck        referential integrity vs a dimension table.
 - DriftCheck      PSI/KS distribution drift vs the baseline snapshot.
-- AnnCheck        sampled ANN recall audit vs brute-force exact.
 - FdCheck         functional dependency (determinant → single dependent).
 - ReconcileCheck  bounded row-level diff vs the baseline snapshot.
 """
@@ -145,32 +144,12 @@ class ReconcileCheck:
 
 
 @dataclass(frozen=True)
-class AnnCheck:
-    """Sampled ANN recall audit (VERDICT r03 next-round #6): compare the
-    LSH/IVF top-k against brute-force exact top-k on a deterministic query
-    sample and gate mean recall@k. Requires an embeddings table passed to
-    ``run_suite(embeddings=...)`` — ANN recall is < 1 by construction, so
-    production measures it instead of assuming it."""
-
-    constraint_id: str
-    dims: int
-    k: int = 10
-    n_queries: int = 50
-    min_recall: float = 0.8
-    method: str = "lsh"  # "lsh" | "ivf"
-    planes: int = 8  # lsh signature width
-    n_cells: int = 16  # ivf cells
-    nprobe: int = 2  # ivf probed cells
-
-
-@dataclass(frozen=True)
 class Suite:
     row_checks: tuple[RowCheck, ...] = ()
     stat_checks: tuple[StatCheck, ...] = ()
     unique_checks: tuple[UniqueCheck, ...] = ()
     ref_checks: tuple[RefCheck, ...] = ()
     drift_checks: tuple[DriftCheck, ...] = ()
-    ann_checks: tuple[AnnCheck, ...] = ()
     fd_checks: tuple[FdCheck, ...] = ()
     reconcile_checks: tuple[ReconcileCheck, ...] = ()
 
@@ -183,7 +162,6 @@ class Suite:
                 self.unique_checks,
                 self.ref_checks,
                 self.drift_checks,
-                self.ann_checks,
                 self.fd_checks,
                 self.reconcile_checks,
             )

@@ -385,9 +385,9 @@ def suite_verdict_rows(
     category_counts: dict,
     scored_drift: list[tuple],
 ) -> list[tuple]:
-    """Every verdict row of a suite run but the ANN recall audits,
-    finalized on the driver from small collected state. Both engines call
-    it, so the verdict arithmetic has one definition:
+    """Every verdict row of a suite run, finalized on the driver from
+    small collected state. Both engines call it, so the verdict arithmetic
+    has one definition:
 
     - ``hll``: column → HLL distinct estimate (one informational row per
       UniqueCheck, bucket -1);
@@ -467,7 +467,6 @@ def run_suite(
     checkpoint: CheckpointLedger | None = None,
     salt_buckets: int | None = None,
     commit: bool = True,
-    embeddings: DataFrame | None = None,
     sketch_store=None,
 ) -> SuiteResult:
     """Run the full suite over ``current`` (minus already-committed buckets
@@ -826,54 +825,6 @@ def run_suite(
         suite, run_id, buckets, row_count, hll, violation_counts, base_rows,
         moment_profile, sketch_rows, category_counts, scored,
     )
-
-    # ---- ANN recall audit (opt-in: needs an embeddings table) -------------
-    # Corpus-level metric → bucket -1 (not a per-bucket verdict; excluded
-    # from checkpoint commit marks, included in passed()).
-    if suite.ann_checks:
-        if embeddings is None:
-            raise ValueError(
-                "suite has ann_checks but run_suite received no embeddings "
-                "table — pass embeddings=... (skipping an enabled check "
-                "would vacuously pass the suite)"
-            )
-        from pyanomalydetector2_spark.operators.similarity import (
-            brute_force_topk,
-            ivf_topk,
-            lsh_bucketed_topk,
-            recall_audit,
-            sample_queries,
-        )
-
-        for c in suite.ann_checks:
-            q = sample_queries(embeddings, c.n_queries)
-            exact = brute_force_topk(embeddings, q, k=c.k)
-            if c.method == "lsh":
-                ann = lsh_bucketed_topk(
-                    embeddings, q, dims=c.dims, k=c.k, planes=c.planes
-                )
-            elif c.method == "ivf":
-                ann = ivf_topk(
-                    embeddings, q, k=c.k, n_cells=c.n_cells, nprobe=c.nprobe
-                )
-            else:
-                raise ValueError(f"unknown ann method {c.method!r}")
-            row = recall_audit(ann, exact).agg(
-                F.avg("recall").alias("r")
-            ).first()
-            mean_r = float(row["r"]) if row and row["r"] is not None else 0.0
-            verdict_rows.append(
-                (
-                    run_id,
-                    -1,
-                    c.constraint_id,
-                    f"recall_at_{c.k}",
-                    mean_r,
-                    c.min_recall,
-                    mean_r >= c.min_recall,
-                    0,
-                )
-            )
 
     result = SuiteResult(
         run_id,

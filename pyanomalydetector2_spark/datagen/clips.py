@@ -155,15 +155,9 @@ def reference_pcm(num_id: int) -> np.ndarray:
     return np.sin(2.0 * np.pi * f * t / 8000.0) * PCM_AMP
 
 
-def reference_transcript(num_id: int) -> str:
-    n_tok = 5 + int(u01(np.array([num_id]), 7)[0] * 10)
-    idx = (u01(np.arange(num_id, num_id + n_tok), 11) * len(VOCAB)).astype(int)
-    return " ".join(VOCAB[i] for i in idx)
-
-
 def reference_transcripts_batch(num_ids: np.ndarray) -> list[str]:
-    """Vectorized batch variant of :func:`reference_transcript` — identical
-    output per id (hash math batched, only the final join is per row)."""
+    """The reference transcript of each clip id: 5–14 seeded vocabulary
+    tokens (hash math batched, only the final join is per row)."""
     n = len(num_ids)
     n_tok = 5 + (u01(num_ids, 7) * 10).astype(int)
     idx = (

@@ -11,7 +11,6 @@ Scale notes:
   pair search into a per-(band, key) bucket self-join where buckets are
   tiny by construction. Hot buckets (degenerate texts) are the skew risk —
   cap bucket size upstream or salt.
-- SimHash: one explode+groupBy pass with one signed sum per bit.
 """
 
 from __future__ import annotations
@@ -24,11 +23,6 @@ def h60(c: Column) -> Column:
     """Portable 60-bit hash: first 15 hex chars of md5 → long.
     DuckDB equivalent: ('0x' || substr(md5(x),1,15))::BIGINT."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-def norm_tokens(text: Column) -> Column:
-    """lower + whitespace tokenize (the shared normalization)."""
-    return F.split(F.lower(F.trim(text)), r"\s+")
 
 
 def shingle_frame(
@@ -142,8 +136,8 @@ def pairs_from_banded(
     ``_capped_buckets`` hot-bucket prune, then the two-stage streamed
     member/partner explode (pairs generated row-by-row inside codegen — no
     value ever holds a bucket's full O(b²) pair set), then a distinct over
-    the (tiny) cross-band pair set. Shared by the MinHash-LSH text path and
-    the hyperplane-LSH embedding path."""
+    the (tiny) cross-band pair set. The pair core of the MinHash-LSH text
+    path."""
     buckets = _capped_buckets(banded, max_bucket_size).filter(F.size("ids") >= 2)
     member = buckets.select(
         F.array_sort(F.col("ids")).alias("ids")
@@ -790,36 +784,6 @@ def keep_best_per_cluster(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
-    """Per-doc SimHash over tokens: bit b = sign of Σ_tokens (±1 by token
-    hash bit b). One explode + one groupBy with ``bits`` signed sums."""
-    from pyanomalydetector2_spark.functions import rebalance_for_expansion
-
-    df = rebalance_for_expansion(df.select(id_col, text_col))
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(norm_tokens(F.col(text_col))).alias("tok"),
-    ).withColumn("th", h60(F.col("tok")))
-    aggs = [
-        F.sum(
-            F.when(F.shiftright("th", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(bits)
-    ]
-    sums = toks.groupBy("id").agg(*aggs)
-    sig = sums.select(
-        "id",
-        sum(
-            [
-                F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-                for b in range(bits)
-            ],
-            F.lit(0),
-        ).cast("long").alias("simhash"),
-    )
-    return sig
-
-
 def edit_near_dup(
     df: DataFrame,
     id_col: str,
@@ -854,7 +818,7 @@ def edit_near_dup(
 
     Reference analog: none (the reference has no text dedup at all); this
     extends the training-data-pipeline dedup family mandated by the build
-    brief alongside MinHash/SimHash/embedding near-dup.
+    brief alongside MinHash near-dup.
     """
     sigs = minhash_signatures(df, id_col, text_col, k, n)
     pairs = lsh_candidate_pairs(sigs, bands, rows_per_band, max_bucket_size)

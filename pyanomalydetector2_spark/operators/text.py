@@ -1,6 +1,5 @@
 """Text-analysis operators for training-data pipelines: token counting,
-quality scoring, vocabulary statistics and drift, feature-hash
-embeddings.
+quality scoring, vocabulary statistics and drift.
 
 Everything is built-in Column expressions (JVM, codegen) — tokenization is
 split/regex, no Python in the data path. All formulas are deliberately
@@ -11,8 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from pyanomalydetector2_spark.operators.dedup import h60
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -69,97 +66,6 @@ def token_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
             "quality_score": quality,
         }
     )
-
-
-def text_embed(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    dims: int = 64,
-    round6: bool = True,
-) -> DataFrame:
-    """(id, embedding array<double>): deterministic feature-hash embedding
-    — the hashing trick (Weinberger et al., "Feature Hashing for Large
-    Scale Multitask Learning", ICML 2009, public literature) — so the
-    whole ANN / embedding-near-dup stack runs on corpora that arrive
-    WITHOUT vectors, with zero trained state.
-
-    Each whitespace token lands in bucket j = h60(token) % dims with sign
-    +1/−1 from an independent hash bit (the 16th md5 hex char < '8' — NOT
-    a bit of the bucket hash, which would correlate sign with bucket);
-    signed counts are L2-normalized and rounded to 6. Every step is a
-    built-in column expression (explode → groupBy → map_from_entries →
-    transform), exactly replayable in ANSI-ish SQL — identical texts give
-    identical vectors (cosine 1.0), near-identical texts give high cosine.
-
-    Scale shape: one explode + two key-local aggregations; the dense
-    vector is built per id from a dims-entry map, never via a pivot. Docs
-    with no tokens keep an all-zero vector (norm guard skips the divide).
-
-    ``round6=False`` returns the raw normalized components. Use it when
-    the vectors feed a further float computation that is itself
-    oracle-compared (cosine pairs): 6-dp components make pair dot
-    products 12-dp decimals that frequently land EXACTLY on 6-dp rounding
-    midpoints, where numpy (half-to-even) and SQL engines (half-away)
-    systematically disagree — the raw v/n doubles are bit-identical
-    across engines (v and n derive from exact integer sums) and their
-    dots have no decimal structure, so midpoint hits vanish."""
-    from pyanomalydetector2_spark.functions import rebalance_for_expansion
-
-    toks = ws_tokens(F.col(text_col))
-    # explode + two md5s per token dominate the scan by ~100×: spread a
-    # tiny/single-split input across the slots before the expansion
-    t = rebalance_for_expansion(
-        df.select(id_col, text_col), min_bytes=1_000_000
-    ).select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("tok")
-    )
-    h = h60(F.col("tok"))
-    sign = F.when(
-        F.substring(F.md5(F.col("tok")), 16, 1) < "8", F.lit(1)
-    ).otherwise(F.lit(-1))
-    agg = (
-        t.select("id", (h % dims).cast("int").alias("j"), sign.alias("s"))
-        .groupBy("id", "j")
-        .agg(F.sum("s").cast("double").alias("v"))
-    )
-    m = agg.groupBy("id").agg(
-        F.map_from_entries(F.collect_list(F.struct("j", "v"))).alias("m")
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dims - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("m"), i.cast("int")), F.lit(0.0)),
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("_raw"), F.lit(0.0), lambda acc, x: acc + x * x
-        )
-    )
-    all_ids = df.select(F.col(id_col).alias("id")).distinct()
-    out = (
-        all_ids.join(m, "id", "left")
-        .withColumn(
-            "_raw",
-            F.when(F.col("m").isNull(), F.array_repeat(F.lit(0.0), dims))
-            .otherwise(dense),
-        )
-        .withColumn("_n", norm)
-        .select(
-            "id",
-            F.when(
-                F.col("_n") > 0,
-                F.transform(
-                    F.col("_raw"),
-                    lambda x: F.round(x / F.col("_n"), 6)
-                    if round6
-                    else x / F.col("_n"),
-                ),
-            )
-            .otherwise(F.col("_raw"))
-            .alias("embedding"),
-        )
-    )
-    return out
 
 
 def _neighbor_dup_chars(sorted_arr: Column) -> Column:

@@ -65,8 +65,9 @@ finalizer the batch runner calls too. Only the row-scale state
 counts cross from it. The verdicts come back as one local frame.
 
 Checks that are NOT mergeable are rejected up front
-(``ensure_streamable``): ANN recall audits, distributed-mode drift (drain
-scoring is the driver funnel over merged counts), StatChecks on the raw
+(``ensure_streamable``): distributed-mode drift (drain scoring is the
+driver funnel over merged counts), uniform drift checks that share a
+column (the hist state is keyed by column), StatChecks on the raw
 ``quantiles``/``approx_distinct`` profile outputs (use pXX percentile
 stats, which stream exactly) — a silently-wrong streaming verdict would
 be worse than an error.
@@ -155,12 +156,6 @@ _RECON_SCHEMA = "cid string, key string, vals array<string>, b int, cnt long"
 def ensure_streamable(suite: Suite) -> None:
     """Reject checks whose state cannot be maintained from mergeable
     scalars — erroring beats a silently-wrong streaming verdict."""
-    if suite.ann_checks:
-        raise ValueError(
-            "streaming suite: AnnChecks are not streamable (recall audits "
-            "need the full embedding corpus per run) — run them in the "
-            "batch suite"
-        )
     for c in suite.drift_checks:
         if c.distributed:
             raise ValueError(

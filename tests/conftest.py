@@ -1,5 +1,5 @@
 """Shared SparkSession for the test suite (session-scoped, local[4]) and a
-small deterministic corpus (documents, events, embeddings) written once as
+small deterministic corpus (documents and events) written once as
 parquet for the operator and plan-shape tests."""
 
 from __future__ import annotations
@@ -63,31 +63,15 @@ def _events(rng: np.random.Generator, n: int = 1000) -> pa.Table:
     })
 
 
-def _embeddings(rng: np.random.Generator, n: int = 500, dims: int = 64) -> pa.Table:
-    """Unit vectors in 10 label clusters."""
-    centers = rng.normal(0, 1, (10, dims))
-    label = rng.integers(0, 10, n)
-    vecs = centers[label] + rng.normal(0, 0.8, (n, dims))
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    return pa.table({
-        "vec_id": pa.array(np.arange(n), pa.int64()),
-        "embedding": pa.array(
-            [v.astype(np.float32) for v in vecs], pa.list_(pa.float32())
-        ),
-        "label": pa.array(label, pa.int32()),
-    })
-
-
 @pytest.fixture(scope="session")
 def corpus_dir(tmp_path_factory) -> str:
-    """Directory holding ``documents``, ``events`` and ``embeddings``
-    parquet tables; read them with ``spark.read.parquet(f"{dir}/{name}.parquet")``."""
+    """Directory holding the ``documents`` and ``events`` parquet tables;
+    read them with ``spark.read.parquet(f"{dir}/{name}.parquet")``."""
     d = tmp_path_factory.mktemp("corpus")
     rng = np.random.default_rng(42)
     for name, table in (
         ("documents", _documents(rng)),
         ("events", _events(rng)),
-        ("embeddings", _embeddings(rng)),
     ):
         pq.write_table(table, d / f"{name}.parquet")
     return str(d)

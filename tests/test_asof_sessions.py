@@ -1,145 +1,8 @@
-"""as-of join, sessionization, and edit-distance near-dup.
-
-Oracles here are tiny hand-walkable fixtures plus a pure-Python Levenshtein
-DP — the contract queries (`asof_join`, `sessionize`, `edit_near_dup`)
-re-verify the same operators hash-exact against DuckDB at sf0.01.
-"""
+"""Edit-distance near-dup against a pure-Python Levenshtein DP oracle."""
 
 from __future__ import annotations
 
-from datetime import datetime
-
-from pyspark.sql import functions as F
-
-from pyanomalydetector2_spark.operators.asof import asof_join
 from pyanomalydetector2_spark.operators.dedup import edit_near_dup
-from pyanomalydetector2_spark.operators.intervals import interval_join
-from pyanomalydetector2_spark.operators.sessions import (
-    session_stats,
-    sessionize,
-)
-
-
-def _ts(s: str) -> datetime:
-    return datetime.fromisoformat(s)
-
-
-# ------------------------------------------------------------------ asof --
-
-
-def _asof_fixture(spark):
-    probe = spark.createDataFrame(
-        [
-            (1, _ts("2024-01-01 10:00:00"), "p1"),
-            (1, _ts("2024-01-01 12:00:00"), "p2"),
-            (1, _ts("2024-01-01 09:00:00"), "p0"),  # before any build row
-            (2, _ts("2024-01-01 10:30:00"), "p3"),
-            (3, _ts("2024-01-01 10:00:00"), "p4"),  # key with no build rows
-        ],
-        "user_id long, ts timestamp, tag string",
-    )
-    build = spark.createDataFrame(
-        [
-            (1, _ts("2024-01-01 09:30:00"), 10.0),
-            (1, _ts("2024-01-01 10:00:00"), 20.0),  # ties probe p1 exactly
-            (1, _ts("2024-01-01 11:00:00"), 30.0),
-            (2, _ts("2024-01-01 08:00:00"), 40.0),
-        ],
-        "user_id long, ts timestamp, ref double",
-    )
-    return probe, build
-
-
-def test_asof_join_matches_most_recent(spark):
-    probe, build = _asof_fixture(spark)
-    out = asof_join(probe, build, "user_id").collect()
-    got = {r.tag: (r.ref_b, r.asof_lag) for r in out}
-    assert len(out) == 5  # left join: every probe row survives
-    # equal-ts build row matches (inclusive, DuckDB ASOF semantics)
-    assert got["p1"] == (20.0, 0)
-    assert got["p2"] == (30.0, 3_600_000_000)  # micros
-    assert got["p0"] == (None, None)  # no build row at or before
-    assert got["p3"] == (40.0, 2 * 3_600_000_000 + 1_800_000_000)
-    assert got["p4"] == (None, None)  # key absent from build
-
-
-def test_asof_join_tolerance_nulls_stale_match(spark):
-    probe, build = _asof_fixture(spark)
-    out = asof_join(
-        probe, build, "user_id", tolerance_us=3_600_000_000
-    ).collect()
-    got = {r.tag: r.ref_b for r in out}
-    assert got["p2"] == 30.0  # exactly at tolerance: inclusive
-    assert got["p3"] is None  # 2.5h stale — nulled, no older fallback
-    assert got["p1"] == 20.0
-
-
-def test_asof_join_plan_has_no_join(spark):
-    """The encoding's whole point: window over a union — no join operator,
-    one exchange on the key."""
-    probe, build = _asof_fixture(spark)
-    plan = asof_join(probe, build, "user_id")._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert plan.count("Exchange") == 1
-
-
-# -------------------------------------------------------------- sessions --
-
-
-def _events(spark):
-    rows = [
-        # user 1: three events 1h apart (one session), then a 7h gap
-        (1, _ts("2024-01-01 00:00:00")),
-        (1, _ts("2024-01-01 01:00:00")),
-        (1, _ts("2024-01-01 02:00:00")),
-        (1, _ts("2024-01-01 09:00:00")),
-        # exactly the 6h gap: NOT a new session (strict >)
-        (1, _ts("2024-01-01 15:00:00")),
-        # one microsecond past the gap: new session
-        (1, _ts("2024-01-01 21:00:00.000001")),
-        (2, _ts("2024-01-01 00:00:00")),
-    ]
-    return spark.createDataFrame(rows, "user_id long, ts timestamp")
-
-
-def test_sessionize_boundaries(spark):
-    out = sessionize(_events(spark), "user_id", "ts").collect()
-    seqs = {
-        (r.user_id, r.ts.isoformat()): r.session_seq for r in out
-    }
-    assert seqs[(1, "2024-01-01T00:00:00")] == 1
-    assert seqs[(1, "2024-01-01T02:00:00")] == 1
-    assert seqs[(1, "2024-01-01T09:00:00")] == 2  # 7h gap
-    assert seqs[(1, "2024-01-01T15:00:00")] == 2  # exactly 6h: same session
-    assert seqs[(1, "2024-01-01T21:00:00.000001")] == 3  # 6h + 1us
-    assert seqs[(2, "2024-01-01T00:00:00")] == 1
-
-
-def test_session_stats_rollup(spark):
-    out = session_stats(_events(spark), "user_id", "ts").collect()
-    rows = {(r.user_id, r.session_seq): r for r in out}
-    assert len(rows) == 4
-    s1 = rows[(1, 1)]
-    assert s1.n_events == 3
-    assert s1.dur_us == 2 * 3_600_000_000
-    s2 = rows[(1, 2)]
-    assert s2.n_events == 2
-    assert s2.dur_us == 6 * 3_600_000_000
-    assert rows[(1, 3)].n_events == 1
-    assert rows[(2, 1)].dur_us == 0
-
-
-def test_sessionize_single_shuffle(spark):
-    plan = (
-        session_stats(_events(spark), "user_id", "ts")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # one exchange for the window; the groupBy extends the window key so
-    # the aggregate must reuse that partitioning, not add a second one
-    assert plan.count("Exchange") == 1
-
-
-# ---------------------------------------------------------- edit near-dup --
 
 
 def _lev(a: str, b: str) -> int:
@@ -193,199 +56,3 @@ def test_edit_near_dup_length_prune_is_lossless(spark):
     out = edit_near_dup(df, "doc_id", "text", max_dist=21,
                         max_bucket_size=None).collect()
     assert out == []
-
-
-# ----------------------------------------------------------- interval join --
-
-
-def _interval_fixture(spark):
-    # numeric "ts" in seconds to exercise the non-timestamp path;
-    # bucket width 100 so the [50, 350] interval spans 4 buckets
-    points = spark.createDataFrame(
-        [
-            (1, 50, "on_start"),
-            (1, 350, "on_end"),
-            (1, 200, "inside_long"),
-            (1, 351, "outside"),
-            (1, 120, "in_two"),  # inside [50,350] and [100,130]
-            (2, 200, "other_key"),
-        ],
-        "user_id long, ts long, tag string",
-    )
-    intervals = spark.createDataFrame(
-        [
-            (1, 50, 350, "long"),
-            (1, 100, 130, "short"),
-            (1, 400, 399, "degenerate"),  # start > end: dropped
-            (2, 500, 600, "elsewhere"),
-        ],
-        "user_id long, start_us long, end_us long, name string",
-    )
-    return points, intervals
-
-
-def test_interval_join_containment_inclusive_and_no_dups(spark):
-    points, intervals = _interval_fixture(spark)
-    out = interval_join(points, intervals, "user_id", point_ts="ts",
-                        bucket_us=100).collect()
-    got = sorted((r.tag, r.name_iv) for r in out)
-    # boundary-inclusive both ends; the 4-bucket interval matches each
-    # point exactly ONCE (a point lives in one bucket); overlaps multiply
-    assert got == [
-        ("in_two", "long"),
-        ("in_two", "short"),
-        ("inside_long", "long"),
-        ("on_end", "long"),
-        ("on_start", "long"),
-    ]
-
-
-def test_interval_join_left_keeps_unmatched(spark):
-    points, intervals = _interval_fixture(spark)
-    out = interval_join(points, intervals, "user_id", point_ts="ts",
-                        bucket_us=100, how="left").collect()
-    by_tag = {}
-    for r in out:
-        by_tag.setdefault(r.tag, []).append(r.name_iv)
-    assert by_tag["outside"] == [None]
-    assert by_tag["other_key"] == [None]  # key 2's interval doesn't cover 200
-    assert sorted(by_tag["in_two"]) == ["long", "short"]
-    assert len(out) == 7  # 5 matches + 2 null-padded
-
-
-def test_interval_join_plan_is_equi_hash_join(spark):
-    """The whole point vs the naive range join: an equi join on
-    (key, bucket), never a BroadcastNestedLoopJoin."""
-    points, intervals = _interval_fixture(spark)
-    plan = (
-        interval_join(points, intervals, "user_id", point_ts="ts",
-                      bucket_us=100)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoop" not in plan
-    assert "Join" in plan
-
-
-# ------------------------------------------------- randomized asof oracle --
-
-
-def test_asof_join_matches_pandas_merge_asof(spark):
-    """Independent-oracle cross-check: pandas.merge_asof implements the
-    same backward-inclusive-with-tolerance contract."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(7)
-    n_p, n_b = 400, 300
-    probe = pd.DataFrame({
-        "k": rng.integers(0, 8, n_p),
-        "t": rng.integers(0, 10_000, n_p),
-    })
-    build = pd.DataFrame({
-        "k": rng.integers(0, 8, n_b),
-        "t": rng.integers(0, 10_000, n_b),
-        "ref": rng.integers(0, 1_000_000, n_b).astype("float64"),
-    }).drop_duplicates(["k", "t"])
-    tol = 500
-
-    sp = asof_join(
-        spark.createDataFrame(probe, "k long, t long"),
-        spark.createDataFrame(build, "k long, t long, ref double"),
-        on="k", probe_ts="t", build_ts="t", tolerance_us=tol,
-    ).toPandas()
-
-    exp = pd.merge_asof(
-        probe.sort_values(["t", "k"], kind="stable"),
-        build.sort_values(["t", "k"], kind="stable"),
-        on="t", by="k", direction="backward", tolerance=tol,
-        allow_exact_matches=True,
-    )
-    key = ["k", "t"]
-    got = sp.sort_values(key).reset_index(drop=True)
-    exp = exp.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(exp) == n_p
-    pd.testing.assert_series_equal(
-        got["ref_b"], exp["ref"], check_names=False
-    )
-
-
-# ------------------------------------------------ randomized invariances --
-
-
-def test_sessionize_matches_python_reference(spark):
-    """Randomized cross-check: session ordinals from a trivial sequential
-    scan must equal the window-expression encoding's."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    n = 600
-    ks = rng.integers(0, 12, n)
-    ts = rng.integers(0, 100_000, n)
-    # force some exact-gap edges: gap == 500 must NOT split (strict >)
-    ts[:10] = np.arange(10) * 500
-    ks[:10] = 99
-    rows = sorted(zip(ks.tolist(), ts.tolist()))
-    rows = [(k, t) for i, (k, t) in enumerate(rows)
-            if i == 0 or (k, t) != rows[i - 1]]  # unique (k, t)
-    gap = 500
-
-    expect = {}
-    prev_k, prev_t, seq = None, None, 0
-    for k, t in rows:
-        seq = 1 if k != prev_k else (seq + 1 if t - prev_t > gap else seq)
-        expect[(k, t)] = seq
-        prev_k, prev_t = k, t
-
-    df = spark.createDataFrame(rows, "k long, t long")
-    got = {
-        (r.k, r.t): r.session_seq
-        for r in sessionize(df, "k", "t", gap_us=gap).collect()
-    }
-    assert got == expect
-
-
-def test_interval_join_bucket_width_invariance(spark):
-    """The bucket width is a physical knob only: results must be identical
-    for any width, and equal to brute-force containment."""
-    import numpy as np
-
-    rng = np.random.default_rng(13)
-    pts = [(int(k), int(t)) for k, t in
-           zip(rng.integers(0, 6, 200), rng.integers(0, 5_000, 200))]
-    ivs = []
-    for k, s, span in zip(rng.integers(0, 6, 60),
-                          rng.integers(0, 5_000, 60),
-                          rng.integers(0, 900, 60)):
-        ivs.append((int(k), int(s), int(s + span)))
-
-    brute = sorted(
-        (k, t, s, e)
-        for k, t in pts
-        for k2, s, e in ivs
-        if k == k2 and s <= t <= e
-    )
-    p_df = spark.createDataFrame(pts, "k long, t long")
-    iv_df = spark.createDataFrame(ivs, "k long, start_us long, end_us long")
-    for width in (7, 256, 1_000_000):
-        got = sorted(
-            (r.k, r.t, r.start_us_iv, r.end_us_iv)
-            for r in interval_join(
-                p_df, iv_df, "k", point_ts="t", bucket_us=width
-            ).collect()
-        )
-        assert got == brute, f"bucket_us={width}"
-
-
-def test_asof_join_null_ts_rows_are_inert(spark):
-    """A null-ts build row must not become 'the most recent build row' for
-    anything; a null-ts probe row comes back unmatched."""
-    probe = spark.createDataFrame(
-        [(1, _ts("2024-01-01 10:00:00"), "p"), (1, None, "pnull")],
-        "user_id long, ts timestamp, tag string",
-    )
-    build = spark.createDataFrame(
-        [(1, None, 99.0), (1, _ts("2024-01-01 09:00:00"), 7.0)],
-        "user_id long, ts timestamp, ref double",
-    )
-    got = {r.tag: r.ref_b for r in asof_join(probe, build, "user_id").collect()}
-    assert got == {"p": 7.0, "pnull": None}

@@ -447,42 +447,6 @@ def test_opus_mp3_real_container_fake_codec_roundtrip():
     assert decode_pcm_batch(b"\x00" * 100, "mp3") is None
 
 
-def test_ann_check_in_suite(spark, clips, corpus_dir):
-    """AnnCheck wiring: an enabled ANN recall audit emits a corpus-level
-    verdict row (bucket -1, metric recall_at_k); enabling it without an
-    embeddings table is a hard error, not a silent skip."""
-    from pyspark.sql import functions as F
-
-    from pyanomalydetector2_spark.constraints import AnnCheck, Suite
-
-    cur, base, dims = clips
-    suite = Suite(ann_checks=(AnnCheck("ann_lsh_recall", dims=64, k=5,
-                                       n_queries=10, min_recall=0.0,
-                                       planes=4),))
-    emb = (
-        spark.read.parquet(f"{corpus_dir}/embeddings.parquet")
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "embedding"
-            ),
-        )
-    )
-    res = run_suite(cur, base, dims, suite, "run_ann", embeddings=emb)
-    row = res.verdicts.filter("constraint_id = 'ann_lsh_recall'").first()
-    assert row is not None
-    assert row["bucket"] == -1 and row["metric"] == "recall_at_5"
-    assert 0.0 <= row["observed"] <= 1.0 and row["passed"]
-    assert res.passed()
-
-    with pytest.raises(ValueError, match="no embeddings"):
-        run_suite(cur, base, dims, suite, "run_ann2")
-
-    bad = Suite(ann_checks=(AnnCheck("x", dims=64, method="faiss"),))
-    with pytest.raises(ValueError, match="unknown ann method"):
-        run_suite(cur, base, dims, bad, "run_ann3", embeddings=emb)
-
-
 def test_speaking_rate_null_duration_is_missing_evidence(spark):
     """NULL/zero dur_ms carries no rate evidence: the speaking-rate
     predicate must pass (vacuous) instead of the NULL comparison

@@ -70,6 +70,29 @@ def test_duplicate_ids_rejected():
         )
 
 
+def test_unknown_suite_keys_rejected():
+    """A misspelled family or field key raises instead of loading a suite
+    whose verdicts mean something else: an unknown family would drop its
+    checks (an empty suite passes vacuously), an unknown field would keep
+    the default threshold."""
+    drift = {"id": "d", "column": "dur_ms", "lo": 0.0, "hi": 1.0}
+    with pytest.raises(ValueError, match="drift_check"):
+        suite_from_dict({"drift_check": [drift], "uniqe_checks": []})
+    with pytest.raises(ValueError, match="psi_mx"):
+        suite_from_dict({"drift_checks": [{**drift, "psi_mx": 0.01}]})
+    with pytest.raises(ValueError, match="ann_checks.*removed"):
+        suite_from_dict({"ann_checks": [{"id": "a", "dims": 64}]})
+    # the documented aliases still load
+    s = suite_from_dict(
+        {
+            "ref_checks": [{"id": "r", "column": "codec", "dim": "dim_codec"}],
+            "drift_checks": [{**drift, "psi_max": 0.01}],
+        }
+    )
+    assert s.ref_checks[0].dim_name == "dim_codec"
+    assert s.drift_checks[0].psi_max == 0.01
+
+
 def test_yaml_suite_runs_end_to_end(spark, tmp_path):
     """The YAML-loaded suite produces identical verdicts to the built-in
     suite on the same planted clips table (reference pattern: config-driven
@@ -108,7 +131,7 @@ def test_master_resolution_env_override(monkeypatch):
 
 
 def test_drop_checks_preserves_every_group():
-    """drop_checks must rebuild over ALL eight Suite groups — a positional
+    """drop_checks must rebuild over ALL seven Suite groups — a positional
     rebuild once silently zeroed fd_checks/reconcile_checks (r05 review)."""
     from pyanomalydetector2_spark.constraints.dsl import (
         FdCheck,
@@ -124,7 +147,6 @@ def test_drop_checks_preserves_every_group():
         unique_checks=base.unique_checks,
         ref_checks=base.ref_checks,
         drift_checks=base.drift_checks,
-        ann_checks=base.ann_checks,
         fd_checks=(FdCheck("fd1", ("codec",), "container"),),
         reconcile_checks=(ReconcileCheck("rc1", ("codec",)),),
     )

@@ -3,7 +3,7 @@ sort sneaking into a pipeline, a join degrading to cartesian, a broadcast
 turning into a shuffled join, or a shuffle count growing fails CI.
 
 Each gate builds its input from the small deterministic corpus in
-``conftest.py`` (documents, events, embeddings), or for the suite's check
+``conftest.py`` (documents, events), or for the suite's check
 families from the clips generator, and calls the operator directly. Plan
 shape does not depend on scale for these checks; ``audit_plan`` executes
 each frame so AQE finalizes it, which takes milliseconds at this size.
@@ -19,7 +19,6 @@ from pyanomalydetector2_spark.operators import (
     dedup,
     drift,
     kll,
-    similarity,
     text,
 )
 from pyanomalydetector2_spark.plans import audit_plan
@@ -34,16 +33,10 @@ def corpus(spark, corpus_dir, tmp_path_factory):
     def read(name):
         return spark.read.parquet(f"{corpus_dir}/{name}.parquet")
 
-    emb = read("embeddings")
     tmp = str(tmp_path_factory.mktemp("plans_contract"))
     return {
         "docs": read("documents"),
         "events": read("events"),
-        "emb": emb,
-        "emb_d": emb.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-        ),
         "tmp": tmp,
     }
 
@@ -83,12 +76,6 @@ def _near_dup_incremental(c):
     )
 
 
-def _embedding_near_dup(c):
-    return similarity.cosine_near_dup_pairs_blocked(
-        c["emb"], threshold=0.4, num_blocks=16
-    )
-
-
 def _drift_psi(c):
     ev = c["events"]
     cut = F.to_timestamp_ntz(F.lit(CUT))
@@ -105,13 +92,6 @@ def _minhash_lsh_pairs(c):
     )
 
 
-def _embedding_near_dup_lsh(c):
-    return similarity.cosine_near_dup_pairs(
-        c["emb_d"], threshold=0.4, dims=64, planes=4, bands=3,
-        max_bucket_size=None,
-    )
-
-
 def _vocab_drift(c):
     return text.vocab_drift(c["docs"], c["docs"], vocab_k=10)
 
@@ -120,11 +100,9 @@ HEAVY = {
     "dedup_keep_best": _dedup_keep_best,
     "dup_clusters": _dup_clusters,
     "near_dup_incremental": _near_dup_incremental,
-    "embedding_near_dup": _embedding_near_dup,
     "drift_psi": _drift_psi,
     "minhash_lsh_pairs": _minhash_lsh_pairs,
     "ngram_jaccard_pairs": lambda c: _near_dup(c["docs"]),
-    "embedding_near_dup_lsh": _embedding_near_dup_lsh,
     "vocab_drift": _vocab_drift,
 }
 
@@ -149,46 +127,6 @@ def test_drift_psi_shape(corpus):
     a = audit_plan(_drift_psi(corpus))
     assert a["broadcasts"] >= 1
     assert a["shuffles"] <= 5, f"shuffle blowup: {a['shuffles']}"
-
-
-def _ivf_index_topk(emb, q, tmp):
-    """IVF against a persisted index: centroids and cell-partitioned
-    assignments written as snapshots, read back and probed."""
-    from pyanomalydetector2_spark.sources.catalog import SnapshotTable
-
-    t_c = SnapshotTable(f"{tmp}/centroids")
-    t_a = SnapshotTable(f"{tmp}/assignments")
-    cents = similarity.ivf_centroids(emb, n_cells=16)
-    t_c.write_snapshot(cents)
-    t_a.write_snapshot(
-        similarity.ivf_assignments(emb, cents), partition_by=["cell"]
-    )
-    spark = emb.sparkSession
-    return similarity.ivf_probe_topk(
-        emb, q, t_c.read(spark), t_a.read(spark), k=5, nprobe=2
-    )
-
-
-def test_ann_paths_stay_bucketed(corpus):
-    """ANN operators must keep the bucket/cell join shuffled-or-broadcast
-    on the join key — a cartesian there means the candidate pruning is
-    gone. (brute-force top-k is the one INTENTIONAL cross join and is
-    excluded by design.)"""
-    emb = corpus["emb_d"]
-    q = emb.filter(F.col("vec_id") < 20)
-    plans = {
-        "lsh": similarity.lsh_bucketed_topk(emb, q, dims=64, k=5, planes=6),
-        "ivf": similarity.ivf_topk(emb, q, k=5, n_cells=16, nprobe=2),
-        "ivf_index": _ivf_index_topk(emb, q, corpus["tmp"]),
-        "ivf_pq": similarity.ivf_pq_topk(
-            emb, q, k=5, n_cells=16, nprobe=2, m_sub=8, n_codes=32
-        ),
-    }
-    for name, df in plans.items():
-        a = audit_plan(df)
-        assert a["cartesian"] == 0, f"{name}: bucket join degraded to cartesian"
-        assert a["bnlj"] == 0, f"{name}: bucket join degraded to nested loop"
-        assert a["sorts_global"] == 0, f"{name}: global sort crept in"
 
 
 def test_incremental_probe_core_shape(spark):

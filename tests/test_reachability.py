@@ -3,8 +3,7 @@ runs, no Spark).
 
 Module gate: every package module is imported, directly or through other
 package modules, from one of the product's entry points, following
-module-level and function-level imports alike. ``UNREACHED`` names the few
-unreached modules still kept for their tests until they are deleted.
+module-level and function-level imports alike.
 
 Def gate: every top-level function and class of a reached module is named
 by code that the product runs. Roots are the entry-point modules' own defs
@@ -17,8 +16,8 @@ over-approximates what runs, so live code is never flagged. Tests are not
 roots: a def only tests call is dead code. ``UNREACHED_DEFS`` lists the
 unreached defs still kept.
 
-Both lists may only shrink: a listed module or def that was deleted or
-became reachable fails the gate until it leaves the list.
+The list may only shrink: a listed def that was deleted or became
+reachable fails the gate until it leaves the list.
 """
 
 from __future__ import annotations
@@ -43,16 +42,9 @@ ENTRY_POINTS = [
     f"{PKG}.plans",
 ]
 
-UNREACHED = {
-    f"{PKG}.operators.asof",
-    f"{PKG}.operators.intervals",
-    f"{PKG}.operators.sessions",
-}
-
 # "module:name" (module relative to the package) of each unreached def
 UNREACHED_DEFS = {
     "datagen.clips:reference_pcm",
-    "datagen.clips:reference_transcript",
     "functions:safe_div",
     "operators.audio:snr_db",
     "operators.curation:bench_bucket",
@@ -69,6 +61,7 @@ UNREACHED_DEFS = {
     "operators.dedup:dup_clusters",
     "operators.dedup:edit_near_dup",
     "operators.dedup:exact_substring_dup",
+    "operators.dedup:h60",
     "operators.dedup:incremental_candidate_pairs",
     "operators.dedup:incremental_pairs_from_banded",
     "operators.dedup:jaccard_from_shingles",
@@ -81,10 +74,8 @@ UNREACHED_DEFS = {
     "operators.dedup:minhash_signatures",
     "operators.dedup:near_dup_jaccard",
     "operators.dedup:near_dup_jaccard_incremental",
-    "operators.dedup:norm_tokens",
     "operators.dedup:pairs_from_banded",
     "operators.dedup:shingle_frame",
-    "operators.dedup:simhash",
     "operators.drift:drift_scores",
     "operators.image_codec:_jpeg_header_impl",
     "operators.image_codec:_paeth",
@@ -140,24 +131,6 @@ UNREACHED_DEFS = {
     "operators.sampling:sample_bucket",
     "operators.sampling:stratified_hash_sample",
     "operators.sampling:train_split",
-    "operators.similarity:_candidate_pairs",
-    "operators.similarity:_check_pq_dims",
-    "operators.similarity:_mm_scratch",
-    "operators.similarity:_pairs_ge_threshold",
-    "operators.similarity:_pq_encode_udf",
-    "operators.similarity:_pq_matrix",
-    "operators.similarity:_pq_reconstruct_udf",
-    "operators.similarity:cosine_near_dup_pairs",
-    "operators.similarity:cosine_near_dup_pairs_bf",
-    "operators.similarity:cosine_near_dup_pairs_blocked",
-    "operators.similarity:embedding_lsh_bucket_stats",
-    "operators.similarity:hyperplane_band_signatures_udf",
-    "operators.similarity:ivf_assignments",
-    "operators.similarity:ivf_pq_probe_topk",
-    "operators.similarity:ivf_pq_topk",
-    "operators.similarity:ivf_probe_topk",
-    "operators.similarity:pq_codebook",
-    "operators.similarity:pq_index",
     "operators.skew:salted_moment_stats",
     "operators.stats:freshness",
     "operators.text:_neighbor_dup_chars",
@@ -165,7 +138,6 @@ UNREACHED_DEFS = {
     "operators.text:ngram_array",
     "operators.text:oov_rate",
     "operators.text:repetition_metrics",
-    "operators.text:text_embed",
     "operators.text:token_metrics",
     "operators.text:vocab_counts",
     "operators.text:vocab_drift",
@@ -234,9 +206,7 @@ def test_entry_points_exist():
 def test_every_package_module_is_reached_from_an_entry_point():
     mods = _package_modules()
     unreached = set(mods) - _closure(mods)
-    assert sorted(unreached - UNREACHED) == [], "modules no entry point imports"
-    # a listed module that was deleted or became reachable leaves the list
-    assert sorted(UNREACHED - unreached) == []
+    assert sorted(unreached) == [], "modules no entry point imports"
 
 
 def _names(node: ast.AST) -> set[str]:

@@ -135,7 +135,6 @@ def test_suite_yaml_round_trip_every_kind(tmp_path):
         suite_to_dict,
     )
     from pyanomalydetector2_spark.constraints.dsl import (
-        AnnCheck,
         DriftCheck,
         FdCheck,
         ReconcileCheck,
@@ -158,7 +157,6 @@ def test_suite_yaml_round_trip_every_kind(tmp_path):
             DriftCheck("d1", "dur_ms", 0.0, 5000.0, nbins=10),
             DriftCheck("d2", "codec", 0.0, 0.0, categorical=True),
         ),
-        ann_checks=(AnnCheck("a1", 64, k=5),),
         fd_checks=(FdCheck("fd1", ("brand",), "mfgr"),),
         reconcile_checks=(
             ReconcileCheck("rc1", ("codec", "sr_hz"), max_added_rate=0.5),

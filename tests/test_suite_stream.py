@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from pyanomalydetector2_spark.constraints import default_clips_suite, run_suite
 from pyanomalydetector2_spark.constraints.dsl import (
-    AnnCheck,
     DriftCheck,
     StatCheck,
     Suite,
@@ -412,10 +411,6 @@ def test_mid_stream_check_family_addition_fails_closed(spark, tmp_path):
 def test_ensure_streamable_rejects_non_mergeable():
     ok = default_clips_suite()
     ensure_streamable(ok)  # the default suite is fully streamable
-    with pytest.raises(ValueError, match="AnnChecks"):
-        ensure_streamable(
-            Suite(ann_checks=(AnnCheck("ann", dims=8),))
-        )
     # equi-depth IS streamable (edges pinned from the KLL sketch store);
     # distributed-mode scoring is not
     ensure_streamable(
