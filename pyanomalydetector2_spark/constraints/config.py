@@ -121,7 +121,10 @@ def _reject_unknown_keys(spec: dict) -> None:
 def suite_from_dict(spec: dict) -> Suite:
     """Compile the ``suite:`` section to the frozen Suite dataclasses. Field
     names mirror the DSL; ``id`` is accepted for constraint_id and ``dim``
-    for dim_name. An unknown family or field key raises ValueError."""
+    for dim_name. A family key with no entries (YAML ``row_checks:`` on a
+    line of its own loads as None) is an empty family. An unknown family
+    or field key raises ValueError."""
+    spec = {k: [] if v is None else v for k, v in spec.items()}
     _reject_unknown_keys(spec)
 
     def cid(d: dict) -> str:

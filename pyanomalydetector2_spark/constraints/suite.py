@@ -11,15 +11,19 @@ Execution shape (the scale story):
   pruned parquet re-scan is ~10× cheaper than building + reading a
   deserialized in-memory cache of all columns, and at 100 TB the same holds
   more strongly — each family's scan reads only its own few columns.
-- Verdicts are finalized on the driver. Each family reduces to a small
-  aggregate — violation counts per (bucket, constraint), the per-bucket
-  moment profile, merged KLL sketch rows, histograms, category counts,
-  per-bucket drift scores — collected one job at a time, the same
-  driver-side funnel the reference uses for survivor sets
-  (detect_anomalies.py:79-96). ``suite_verdict_rows`` turns them into
-  verdict rows; the streaming drain calls it over its merged state, so the
-  verdict arithmetic has one definition. All heavy lifting stays
-  distributed; the verdicts come back as one driver-local frame.
+- Verdicts are finalized on the driver. After the one job that counts
+  the buckets, each family reduces to a small aggregate — violation
+  counts per (bucket, constraint), the per-bucket mergeable moment
+  partial, KLL sketch rows, category counts, per-bucket drift scores —
+  built and collected in its own thread as concurrent Spark jobs
+  (``functions.collect_concurrently``, which keeps the caller's job
+  group), the same driver-side funnel the reference uses for survivor
+  sets (detect_anomalies.py:79-96). ``suite_verdict_rows`` turns them
+  into verdict rows; the streaming drain calls it over its merged state,
+  and moment stats finalize through ``stats.profile_from_partial_rows``
+  in both engines, so the verdict arithmetic has one definition. All
+  heavy lifting stays distributed; the verdicts come back as one
+  driver-local frame.
 
 Violation rows mirror the reference's anomalies upsert contract
 (models/anomalies.py:9,59-79 → FIXTURES.md §B3).
@@ -28,6 +32,7 @@ Violation rows mirror the reference's anomalies upsert contract
 from __future__ import annotations
 
 import math
+import threading
 import time
 from collections import Counter
 from dataclasses import dataclass, field
@@ -52,10 +57,17 @@ from pyanomalydetector2_spark.operators.integrity import (
     referential_violations,
 )
 from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
-from pyanomalydetector2_spark.operators.stats import column_profile
+from pyanomalydetector2_spark.operators.stats import (
+    column_profile_partial,
+    profile_from_partial_rows,
+)
 from pyanomalydetector2_spark.operators.uniqueness import duplicate_rows
 from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
-from pyanomalydetector2_spark.functions import empty_frame, local_rows_df
+from pyanomalydetector2_spark.functions import (
+    collect_concurrently,
+    empty_frame,
+    local_rows_df,
+)
 
 VIOLATION_SCHEMA = T.StructType(
     [
@@ -200,6 +212,31 @@ _CMP_OPS = {
     ">=": lambda a, b: a >= b,
     "==": lambda a, b: a == b,
 }
+
+
+# the moment stats ``stats.profile_from_partial_rows`` finalizes from the
+# mergeable partial; a StatCheck names one of these or a percentile "pXX"
+_MERGEABLE_STATS = {
+    "row_cnt", "cnt", "null_cnt", "null_rate", "min", "max", "sum",
+    "sqr_sum", "mean", "std",
+}
+
+
+def ensure_known_stats(suite: Suite) -> None:
+    """Reject a StatCheck whose stat neither engine computes: both finalize
+    moment stats from the same mergeable partial, so the sketch-backed
+    profile outputs (``approx_distinct``, ``quantiles``) and misspelled
+    stats raise here instead of reading as a NaN verdict."""
+    for c in suite.stat_checks:
+        if c.stat not in _MERGEABLE_STATS and parse_percentile_stat(c.stat) is None:
+            raise ValueError(
+                f"stat check {c.constraint_id!r} uses stat {c.stat!r}, which "
+                f"is neither a moment stat ({', '.join(sorted(_MERGEABLE_STATS))}) "
+                "nor a percentile 'p<NN>': sketch-backed profile outputs "
+                "(approx_distinct, quantiles) do not merge from per-batch "
+                "scalars, while percentiles do, through per-batch KLL "
+                "sketch partials"
+            )
 
 
 def stat_verdict_rows(prof: dict, stat_checks, run_id: str) -> list[tuple]:
@@ -456,6 +493,119 @@ def suite_verdict_rows(
     return rows
 
 
+def _violation_frame(
+    current: DataFrame,
+    baseline: DataFrame,
+    dims: dict[str, DataFrame],
+    suite: Suite,
+    run_id: str,
+    key_col: str,
+    bucket_col: str,
+    salt_buckets: int | None,
+) -> DataFrame:
+    """The union of every violation family's rows (VIOLATION_SCHEMA), as
+    one lazy plan; ``baseline`` is the reconcile side, bucket-filtered like
+    ``current`` on a resume."""
+    violation_frames: list[DataFrame] = []
+
+    # ---- row checks: one scan (with audio invariants), all predicates -----
+    rc_viol = _row_check_violations(
+        row_check_base(current, suite), suite, run_id, key_col, bucket_col
+    )
+    if rc_viol is not None:
+        violation_frames.append(rc_viol)
+
+    # ---- uniqueness: HLL screen (recorded metric) + exact confirm ---------
+    # The HLL estimate is recorded per run (the cheap observability signal,
+    # and at 10^12 rows the early-exit for grossly-duplicated inputs), but
+    # pass/fail truth always comes from the exact pass: HLL's relative error
+    # (~2%) cannot certify uniqueness at realistic dup rates.
+    for c in suite.unique_checks:
+        # salt_buckets (opt-in, north_rule skew handling): the uniqueness
+        # groupBy is the suite's one aggregation whose reduce key is the
+        # DATA key — a degenerate hot clip_id pins one reducer there. The
+        # other families are immune by construction: profile/drift group on
+        # the bucket column with algebraic aggs, so map-side combine
+        # collapses any hot key before the exchange.
+        dup_rows = duplicate_rows(
+            current, c.column, [bucket_col], salt_buckets
+        ).select(
+            F.lit(run_id).alias("run_id"),
+            F.col(bucket_col).cast("int").alias("bucket"),
+            F.col(c.column).cast("string").alias("clip_id"),
+            F.lit(c.constraint_id).alias("constraint_id"),
+            F.concat(F.lit("dup_cnt="), F.col("dup_cnt")).alias("observed"),
+            F.lit(f"unique {c.column}").alias("expected"),
+        )
+        violation_frames.append(dup_rows)
+
+    # ---- referential integrity: broadcast anti-joins ----------------------
+    for c in suite.ref_checks:
+        dim = dims[c.dim_name]
+        viol = referential_violations(
+            current, c.column, dim, keep_cols=[key_col, bucket_col]
+        ).select(
+            F.lit(run_id).alias("run_id"),
+            F.col(bucket_col).cast("int").alias("bucket"),
+            F.col(key_col).alias("clip_id"),
+            F.lit(c.constraint_id).alias("constraint_id"),
+            F.col(c.column).cast("string").alias("observed"),
+            F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
+        )
+        violation_frames.append(viol)
+
+    # ---- functional dependencies: algebraic two-stage agg ------------------
+    # Resume semantics match uniqueness: on a bucket-filtered resume the FD
+    # is evaluated over the remaining buckets' rows only (determinant-global
+    # conflicts already caught in committed buckets were reported then).
+    for c in suite.fd_checks:
+        det = list(c.determinant)
+        grp = fd_violations(
+            current, det, c.dependent, carry_min=[key_col, bucket_col]
+        )
+        viol = grp.select(
+            F.lit(run_id).alias("run_id"),
+            F.col(bucket_col).cast("int").alias("bucket"),
+            F.col(key_col).cast("string").alias("clip_id"),
+            F.lit(c.constraint_id).alias("constraint_id"),
+            fd_observed(
+                fd_det_repr(det),
+                F.col("n_values"),
+                F.col("n_rows"),
+                F.col("dep_min"),
+                F.col("dep_max"),
+            ).alias("observed"),
+            F.lit(
+                f"{c.dependent} functionally determined by ({', '.join(det)})"
+            ).alias("expected"),
+        )
+        violation_frames.append(viol)
+
+    # ---- reconcile vs baseline: removed/changed (and bounded added) rows --
+    # Both sides bucket-filtered on resume: bucket = hash(key) is identical
+    # across snapshots, so per-bucket resume composes with the diff — a
+    # committed bucket's reconcile rows were persisted by the run that
+    # committed it.
+    for c in suite.reconcile_checks:
+        diff = snapshot_diff(
+            baseline,
+            current,
+            [key_col],
+            list(c.compare_cols),
+            carry_cols=[bucket_col],
+        )
+        violation_frames.append(
+            reconcile_violation_frame(diff, c, run_id, key_col, bucket_col)
+        )
+
+    if not violation_frames:
+        return empty_frame(current.sparkSession, VIOLATION_SCHEMA)
+    violations = violation_frames[0]
+    for vf in violation_frames[1:]:
+        violations = violations.unionByName(vf)
+    return violations
+
+
 def run_suite(
     current: DataFrame,
     baseline: DataFrame,
@@ -485,6 +635,7 @@ def run_suite(
     equi-depth column, merge-upserted under the ``column`` key); later runs
     read KBs of sketch state instead of rescanning the baseline, and
     ``kll_merge`` can fold new baseline snapshots forward out-of-band."""
+    ensure_known_stats(suite)
     t0 = time.time()
     spark = current.sparkSession
 
@@ -493,9 +644,6 @@ def run_suite(
         skipped = checkpoint.committed_buckets(run_id)
         if skipped:
             current = current.filter(~F.col(bucket_col).isin(skipped))
-
-    audio_base = row_check_base(current, suite)
-    base = current
 
     # ONE aggregation job yields the bucket list, the row count, AND the
     # per-bucket HLL distinct estimates for bucket-key checks (bucket =
@@ -514,7 +662,7 @@ def run_suite(
         )
         for i, c in enumerate(suite.unique_checks)
     ]
-    brows = base.groupBy(bucket_col).agg(
+    brows = current.groupBy(bucket_col).agg(
         F.count(F.lit(1)).alias("_n"), *hll_aggs
     ).collect()
     buckets = sorted(int(r[bucket_col]) for r in brows)
@@ -526,151 +674,26 @@ def run_suite(
             empty_frame(spark, VIOLATION_SCHEMA),
             [], skipped, 0, 0.0,
         )
-    # Σ per-bucket distinct is exact ONLY for the bucket key itself
-    # (bucket = hash(key_col) co-locates each key in one bucket); any other
-    # column appears in every bucket and the sum would overcount by up to
-    # ×n_buckets — those checks get a global sketch in one extra tiny agg
-    non_key = [
-        i for i, c in enumerate(suite.unique_checks) if c.column != key_col
-    ]
-    grow = (
-        base.agg(
-            *[
-                F.approx_count_distinct(
-                    F.col(suite.unique_checks[i].column).cast("string"), 0.02
-                ).alias(f"_g_{i}")
-                for i in non_key
-            ]
-        ).first()
-        if non_key
-        else None
-    )
-    hll = {
-        c.column: (
-            sum(r[f"_hll_{i}"] for r in brows)
-            if c.column == key_col
-            else grow[f"_g_{i}"]
-        )
-        for i, c in enumerate(suite.unique_checks)
-    }
 
-    violation_frames: list[DataFrame] = []
-
-    # ---- row checks: one scan (with audio invariants), all predicates -----
-    rc_viol = _row_check_violations(audio_base, suite, run_id, key_col, bucket_col)
-    if rc_viol is not None:
-        violation_frames.append(rc_viol)
-
-    # ---- uniqueness: HLL screen (recorded metric) + exact confirm ---------
-    # The HLL estimate is recorded per run (the cheap observability signal,
-    # and at 10^12 rows the early-exit for grossly-duplicated inputs), but
-    # pass/fail truth always comes from the exact pass: HLL's relative error
-    # (~2%) cannot certify uniqueness at realistic dup rates.
-    for c in suite.unique_checks:
-        # salt_buckets (opt-in, north_rule skew handling): the uniqueness
-        # groupBy is the suite's one aggregation whose reduce key is the
-        # DATA key — a degenerate hot clip_id pins one reducer there. The
-        # other families are immune by construction: profile/drift group on
-        # the bucket column with algebraic aggs, so map-side combine
-        # collapses any hot key before the exchange.
-        dup_rows = duplicate_rows(base, c.column, [bucket_col], salt_buckets).select(
-            F.lit(run_id).alias("run_id"),
-            F.col(bucket_col).cast("int").alias("bucket"),
-            F.col(c.column).cast("string").alias("clip_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            F.concat(F.lit("dup_cnt="), F.col("dup_cnt")).alias("observed"),
-            F.lit(f"unique {c.column}").alias("expected"),
-        )
-        violation_frames.append(dup_rows)
-
-    # ---- referential integrity: broadcast anti-joins ----------------------
-    for c in suite.ref_checks:
-        dim = dims[c.dim_name]
-        viol = referential_violations(
-            base, c.column, dim, keep_cols=[key_col, bucket_col]
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.col(bucket_col).cast("int").alias("bucket"),
-            F.col(key_col).alias("clip_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            F.col(c.column).cast("string").alias("observed"),
-            F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
-        )
-        violation_frames.append(viol)
-
-    # ---- functional dependencies: algebraic two-stage agg ------------------
-    # Resume semantics match uniqueness: on a bucket-filtered resume the FD
-    # is evaluated over the remaining buckets' rows only (determinant-global
-    # conflicts already caught in committed buckets were reported then).
-    for c in suite.fd_checks:
-        det = list(c.determinant)
-        grp = fd_violations(base, det, c.dependent, carry_min=[key_col, bucket_col])
-        viol = grp.select(
-            F.lit(run_id).alias("run_id"),
-            F.col(bucket_col).cast("int").alias("bucket"),
-            F.col(key_col).cast("string").alias("clip_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            fd_observed(
-                fd_det_repr(det),
-                F.col("n_values"),
-                F.col("n_rows"),
-                F.col("dep_min"),
-                F.col("dep_max"),
-            ).alias("observed"),
-            F.lit(
-                f"{c.dependent} functionally determined by ({', '.join(det)})"
-            ).alias("expected"),
-        )
-        violation_frames.append(viol)
-
-    # ---- reconcile vs baseline: removed/changed (and bounded added) rows --
-    # Both sides bucket-filtered on resume: bucket = hash(key) is identical
-    # across snapshots, so per-bucket resume composes with the diff — a
-    # committed bucket's reconcile rows were persisted by the run that
-    # committed it.
+    # ---- every family reduces to a small aggregate — violation counts per
+    # (bucket, constraint), the per-bucket moment partials, KLL sketch
+    # rows, category counts, per-bucket drift scores — and each is built
+    # and collected in its own thread, as concurrent jobs: the wall is the
+    # slowest collect, not the sum. Each collect returns O(buckets × bins)
+    # rows. What blew the 8 GB driver heap at the 8M-row tier (GC overhead
+    # limit) was a lazy union of every family's scan in ONE job; here every
+    # family stays its own small job, and concurrent tasks share the
+    # session's executor slots.
     baseline_rec = (
         baseline.filter(~F.col(bucket_col).isin(skipped)) if skipped else baseline
     )
-    for c in suite.reconcile_checks:
-        diff = snapshot_diff(
-            baseline_rec,
-            current,
-            [key_col],
-            list(c.compare_cols),
-            carry_cols=[bucket_col],
-        )
-        violation_frames.append(
-            reconcile_violation_frame(diff, c, run_id, key_col, bucket_col)
-        )
-
-    # ---- each family reduces to a small aggregate, collected on the ------
-    # driver one job at a time: a lazy union of every family's scan in ONE
-    # job blew the 8 GB driver heap at the 8M-row tier (GC overhead limit).
-    # The collect below also materializes the violations cache.
-    if violation_frames:
-        violations = violation_frames[0]
-        for vf in violation_frames[1:]:
-            violations = violations.unionByName(vf)
-    else:
-        violations = empty_frame(spark, VIOLATION_SCHEMA)
-    violations = violations.cache()
-    violation_counts = violation_counts_frame(violations, suite).collect()
-    # reconcile rates divide by the baseline's per-bucket rows
-    base_rows = (
+    moment_cols = sorted(
         {
-            r["bucket"]: r["count"]
-            for r in baseline_rec.groupBy(
-                F.col(bucket_col).cast("int").alias("bucket")
-            ).count().collect()
+            c.column
+            for c in suite.stat_checks
+            if parse_percentile_stat(c.stat) is None
         }
-        if suite.reconcile_checks
-        else {}
     )
-
-    # ---- stat checks: single-pass per-bucket column profile ---------------
-    moment_checks = [
-        c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None
-    ]
     pct_cols = sorted(
         {
             c.column
@@ -678,40 +701,40 @@ def run_suite(
             if parse_percentile_stat(c.stat) is not None
         }
     )
-    moment_profile = {}
-    if moment_checks:
-        stats = sorted({c.stat for c in moment_checks})
-        for r in column_profile(
-            base, sorted({c.column for c in moment_checks}), [bucket_col]
-        ).select(
-            F.col(bucket_col).cast("int").alias("bucket"), "column", *stats
-        ).collect():
-            moment_profile[(r["bucket"], r["column"])] = r.asDict()
-    # percentile stats ride the mergeable KLL sketch — the SAME sketch the
-    # streaming suite merges per micro-batch, so exact-regime verdicts
-    # agree bit-for-bit between the two engines
-    sketch_rows = (
-        percentile_sketches(base, pct_cols, bucket_col).collect()
-        if pct_cols
-        else []
-    )
-
-    # ---- drift checks: ONE histogram pass per side for ALL uniform-bin ----
-    # columns; equi-depth checks run per column (edges from the baseline's
-    # quantile sketch)
-    cat = [c for c in suite.drift_checks if c.categorical]
+    cat_cols = sorted({c.column for c in suite.drift_checks if c.categorical})
     numeric = [c for c in suite.drift_checks if not c.categorical]
     uniform = [c for c in numeric if not c.equi_depth and not c.distributed]
-    equi = [c for c in numeric if c.equi_depth and not c.distributed]
-    dist = [c for c in numeric if c.distributed]
-    scored: list[tuple] = []  # (check, bucket, psi, ks)
-    if uniform:
+    # equi-depth (edges from the baseline's quantile sketch), then
+    # distributed: scored per check
+    binned = [c for c in numeric if c.equi_depth and not c.distributed] + [
+        c for c in numeric if c.distributed
+    ]
+    # Σ per-bucket distinct is exact ONLY for the bucket key itself
+    # (bucket = hash(key_col) co-locates each key in one bucket); any other
+    # column appears in every bucket and the sum would overcount by up to
+    # ×n_buckets — those checks get a global sketch in one extra tiny agg
+    non_key = [
+        i for i, c in enumerate(suite.unique_checks) if c.column != key_col
+    ]
+
+    def _violations() -> tuple:
+        # the collect of the counts also materializes the violations cache
+        violations = _violation_frame(
+            current, baseline_rec, dims, suite, run_id, key_col, bucket_col,
+            salt_buckets,
+        ).cache()
+        return violations, violation_counts_frame(violations, suite).collect()
+
+    def _uniform_scores() -> list[tuple]:
+        # ONE histogram pass per side for ALL uniform-bin columns
         specs = [HistSpec(c.column, c.lo, c.hi, c.nbins) for c in uniform]
         by_col = {c.column: c for c in uniform}
-        for s in drift_scores_multi(base, baseline, specs, group_col=bucket_col):
-            scored.append(
-                (by_col[s["column"]], int(s["group"]), s["psi"], s["ks"])
+        scored = [
+            (by_col[s["column"]], int(s["group"]), s["psi"], s["ks"])
+            for s in drift_scores_multi(
+                current, baseline, specs, group_col=bucket_col
             )
+        ]
         # a check that produced NO score means the baseline histogram for
         # that column was empty/all-null — the same condition the
         # equi-depth and distributed paths raise on; silence here would
@@ -725,6 +748,8 @@ def run_suite(
                     "or in every current bucket (fix the snapshot or drop "
                     "the check)"
                 )
+        return scored
+
     def _equi_edges_map() -> dict[tuple[str, int], list[float] | None]:
         """Equi-depth edges from the persisted KLL store when one is wired
         (``sketch_store``): hit → KBs of sketch state replace the baseline
@@ -733,10 +758,7 @@ def run_suite(
         the Arrow transfer dominates a sketch build (BASELINE.md §24), so E
         equi-depth columns must not pay E baseline scans. No store → all
         None (inline edge derivation, unchanged)."""
-        wanted = [
-            (c.column, c.nbins)
-            for c in equi + [c for c in dist if c.equi_depth]
-        ]
+        wanted = [(c.column, c.nbins) for c in binned if c.equi_depth]
         edges_map: dict[tuple[str, int], list[float] | None] = {
             w: None for w in wanted
         }
@@ -749,8 +771,6 @@ def run_suite(
             SKETCH_FIELDS,
             kll_build_multi,
         )
-
-        spark = baseline.sparkSession
 
         def _resolve() -> None:
             state = sketch_store.read(spark)
@@ -773,18 +793,28 @@ def run_suite(
             _resolve()
         return edges_map
 
-    equi_edges_map = (
-        _equi_edges_map()
-        if (equi or any(c.equi_depth for c in dist))
-        else {}
-    )
-    for c in equi:
-        for s in drift_scores_quantile(
-            base, baseline, c.column, c.nbins, group_col=bucket_col,
-            edges=equi_edges_map[(c.column, c.nbins)],
-        ):
-            scored.append((c, int(s["group"]), s["psi"], s["ks"]))
-    for c in dist:
+    # the edge map resolves once, for every equi-depth check, in whichever
+    # drift thread asks first
+    edges_lock = threading.Lock()
+    equi_edges: dict[tuple[str, int], list[float] | None] = {}
+
+    def _binned_scores(c) -> list[tuple]:
+        """Scores of one equi-depth (edges from the baseline's quantile
+        sketch) or distributed drift check."""
+        edges = None
+        if c.equi_depth:
+            with edges_lock:
+                if not equi_edges:
+                    equi_edges.update(_equi_edges_map())
+            edges = equi_edges[(c.column, c.nbins)]
+        if not c.distributed:
+            return [
+                (c, int(s["group"]), s["psi"], s["ks"])
+                for s in drift_scores_quantile(
+                    current, baseline, c.column, c.nbins, group_col=bucket_col,
+                    edges=edges,
+                )
+            ]
         # no-histogram-collect path (high-cardinality bucket columns): the
         # histograms stay DataFrame-side, only the per-bucket scores
         # (O(buckets) rows) come back
@@ -795,35 +825,93 @@ def run_suite(
 
         frame = (
             drift_scores_quantile_df(
-                base, baseline, c.column, c.nbins, group_col=bucket_col,
-                edges=equi_edges_map[(c.column, c.nbins)],
+                current, baseline, c.column, c.nbins, group_col=bucket_col,
+                edges=edges,
             )
             if c.equi_depth
             else drift_scores_df(
-                base, baseline, c.column, c.lo, c.hi, c.nbins, group_col=bucket_col
+                current, baseline, c.column, c.lo, c.hi, c.nbins,
+                group_col=bucket_col,
             )
         )
-        scored += [
+        return [
             (c, r["bucket"], r["psi"], r["ks"])
             for r in frame.select(
                 F.col(bucket_col).cast("int").alias("bucket"), "psi", "ks"
             ).collect()
         ]
+
+    entries = {"violations": _violations}
+    if non_key:
+        entries["hll"] = lambda: current.agg(
+            *[
+                F.approx_count_distinct(
+                    F.col(suite.unique_checks[i].column).cast("string"), 0.02
+                ).alias(f"_g_{i}")
+                for i in non_key
+            ]
+        ).first()
+    if suite.reconcile_checks:
+        # reconcile rates divide by the baseline's per-bucket rows
+        entries["base_rows"] = lambda: baseline_rec.groupBy(
+            F.col(bucket_col).cast("int").alias("bucket")
+        ).count().collect()
+    if moment_cols:
+        # the mergeable moment partial the streaming suite persists, so
+        # both engines finalize moment stats with one function
+        entries["profile"] = lambda: column_profile_partial(
+            current, moment_cols, [bucket_col]
+        ).withColumn("bucket", F.col(bucket_col).cast("int")).collect()
+    if pct_cols:
+        # percentile stats ride the mergeable KLL sketch — the SAME sketch
+        # the streaming suite merges per micro-batch, so exact-regime
+        # verdicts agree bit-for-bit between the two engines
+        entries["sketches"] = lambda: percentile_sketches(
+            current, pct_cols, bucket_col
+        ).collect()
+    if uniform:
+        entries["uniform"] = _uniform_scores
+    for i, c in enumerate(binned):
+        entries[("binned", i)] = lambda c=c: _binned_scores(c)
     # categorical: category counts per current bucket and of the baseline,
     # once per column; the driver scores frequency-PSI + linf from them
-    category_counts = {}
-    for col in sorted({c.column for c in cat}):
-        cur: dict = {}
-        for r in categorical_counts(base, col, bucket_col).collect():
-            cur.setdefault(int(r[bucket_col]), {})[r["cat"]] = r["cur_cat_n"]
-        base_cats = categorical_counts(baseline, col).collect()
-        category_counts[col] = (
-            cur, {r["cat"]: r["cur_cat_n"] for r in base_cats}
+    for col in cat_cols:
+        entries[("cats", col)] = lambda col=col: categorical_counts(
+            current, col, bucket_col
+        ).collect()
+        entries[("base_cats", col)] = lambda col=col: categorical_counts(
+            baseline, col
+        ).collect()
+    got = collect_concurrently(spark, entries)
+
+    violations, violation_counts = got["violations"]
+    hll = {
+        c.column: (
+            sum(r[f"_hll_{i}"] for r in brows)
+            if c.column == key_col
+            else got["hll"][f"_g_{i}"]
         )
+        for i, c in enumerate(suite.unique_checks)
+    }
+    category_counts = {}
+    for col in cat_cols:
+        cur: dict = {}
+        for r in got[("cats", col)]:
+            cur.setdefault(int(r[bucket_col]), {})[r["cat"]] = r["cur_cat_n"]
+        category_counts[col] = (
+            cur, {r["cat"]: r["cur_cat_n"] for r in got[("base_cats", col)]}
+        )
+    scored = list(got.get("uniform", []))  # (check, bucket, psi, ks)
+    for i in range(len(binned)):
+        scored += got[("binned", i)]
 
     verdict_rows = suite_verdict_rows(
-        suite, run_id, buckets, row_count, hll, violation_counts, base_rows,
-        moment_profile, sketch_rows, category_counts, scored,
+        suite, run_id, buckets, row_count, hll, violation_counts,
+        {r["bucket"]: r["count"] for r in got.get("base_rows", [])},
+        profile_from_partial_rows(got.get("profile", [])),
+        got.get("sketches", []),
+        category_counts,
+        scored,
     )
 
     result = SuiteResult(

@@ -97,6 +97,32 @@ def empty_frame(spark, schema):
     return local_rows_df(spark, [], schema).limit(0)
 
 
+def collect_concurrently(spark, fns: dict) -> dict:
+    """Call every callable of ``fns`` in its own thread and return
+    {name: result}: independent small collects run as concurrent Spark
+    jobs, so the wall is the slowest one, not the sum. Each callable runs
+    under ``inheritable_thread_target``, so its jobs carry the caller's
+    local properties (job group, description, scheduler pool) — jobs from
+    a plain pool thread run in no group, out of reach of the caller's
+    ``cancelJobGroup``. A failure is re-raised, the first in key order,
+    once every call has finished."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    if not fns:
+        return {}
+    with ThreadPoolExecutor(max_workers=len(fns)) as ex:
+        # one wrapper per callable: each thread gets its own copy of the
+        # caller's properties, so the SQL execution id one thread's query
+        # sets in them is never seen by another's
+        futs = {
+            k: ex.submit(inheritable_thread_target(spark)(f))
+            for k, f in fns.items()
+        }
+        return {k: f.result() for k, f in futs.items()}
+
+
 def safe_div(num: Column, den: Column, default: float = 0.0) -> Column:
     """num/den with 0-denominator → default (reference guards std>0,
     detector.py:202,306 — here the guard is an expression, not a filter)."""

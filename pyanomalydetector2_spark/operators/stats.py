@@ -104,12 +104,13 @@ def column_profile_partial(
     """The exactly-mergeable subset of ``column_profile``: per (group,
     column) — row_cnt, cnt, null_cnt, min, max, sum, sqr_sum — in the same
     long layout and with the same try_cast semantics. The streaming suite
-    persists this frame per micro-batch; ``profile_from_partial_rows``
-    then reproduces the one-shot profile's null_rate/mean/std/min/max/cnt
-    algebra over the merged scalars on the driver.
+    persists this frame per micro-batch and the batch runner collects it
+    once; ``profile_from_partial_rows`` then reproduces the one-shot
+    profile's null_rate/mean/std/min/max/cnt algebra over the merged
+    scalars on the driver, for both engines.
     (approx_distinct and quantiles are sketch-backed and NOT derivable
-    from these scalars — a streaming StatCheck on those stats must be
-    rejected, not silently wrong.)"""
+    from these scalars — a StatCheck on those stats is rejected
+    (``suite.ensure_known_stats``), not silently wrong.)"""
     total = F.count(F.lit(1))
     fields = ("row_cnt", "cnt", "null_cnt", "min", "max", "sum", "sqr_sum")
     aggs = []

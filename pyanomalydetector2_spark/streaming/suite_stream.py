@@ -69,8 +69,9 @@ Checks that are NOT mergeable are rejected up front
 driver funnel over merged counts), uniform drift checks that share a
 column (the hist state is keyed by column), StatChecks on the raw
 ``quantiles``/``approx_distinct`` profile outputs (use pXX percentile
-stats, which stream exactly) — a silently-wrong streaming verdict would
-be worse than an error.
+stats, which stream exactly; ``suite.ensure_known_stats``, which the
+batch runner applies too) — a silently-wrong streaming verdict would be
+worse than an error.
 
 State layout (streaming/state.py delta-dir pattern, shared with the
 audio-ingest index): each component writes ``<comp>/batch=N`` parquet
@@ -94,7 +95,6 @@ from __future__ import annotations
 import json
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -109,6 +109,7 @@ from pyanomalydetector2_spark.constraints.suite import (
     VERDICT_SCHEMA,
     SuiteResult,
     _row_check_violations,
+    ensure_known_stats,
     reconcile_violation_frame,
     row_check_base,
     suite_verdict_rows,
@@ -128,13 +129,12 @@ from pyanomalydetector2_spark.operators.stats import (
     column_profile_partial,
     profile_from_partial_rows,
 )
-from pyanomalydetector2_spark.functions import empty_frame, local_rows_df
+from pyanomalydetector2_spark.functions import (
+    collect_concurrently,
+    empty_frame,
+    local_rows_df,
+)
 from pyanomalydetector2_spark.streaming.state import batch_dirs, latest_gen
-
-_MERGEABLE_STATS = {
-    "row_cnt", "cnt", "null_cnt", "null_rate", "min", "max", "sum",
-    "sqr_sum", "mean", "std",
-}
 
 _BUCKETS_SCHEMA = "bucket int, n long"
 _PROFILE_SCHEMA = (
@@ -179,14 +179,7 @@ def ensure_streamable(suite: Suite) -> None:
             "equi-depth variant (keyed by check id) or categorical drift "
             "(its category counts do not depend on the check)"
         )
-    for c in suite.stat_checks:
-        if c.stat not in _MERGEABLE_STATS and parse_percentile_stat(c.stat) is None:
-            raise ValueError(
-                f"streaming suite: stat check {c.constraint_id!r} uses "
-                f"sketch-backed stat {c.stat!r} which is not mergeable "
-                "from per-batch scalars (percentiles ARE streamable as "
-                "'p<NN>' — per-batch KLL sketch partials merge exactly)"
-            )
+    ensure_known_stats(suite)
 
 
 def _committed(state_dir: str) -> list[int]:
@@ -722,12 +715,13 @@ def process_suite_batch(
             .collect()
         )
 
-    with ThreadPoolExecutor(max_workers=len(writes) + 1) as ex:
-        fut_counts = ex.submit(_bucket_counts)
-        futs = [ex.submit(_write, p, df) for p, df in writes]
-        brows = fut_counts.result()
-        for f in futs:
-            f.result()
+    brows = collect_concurrently(
+        spark,
+        {
+            "counts": _bucket_counts,
+            **{p: (lambda p=p, df=df: _write(p, df)) for p, df in writes},
+        },
+    )["counts"]
     rows = sum(r["n"] for r in brows)
     # Arrow-backed local frame: the classic list createDataFrame pickles
     # the rows, so this 8-row write paid a ~4 s Python-worker launch per
@@ -1082,9 +1076,7 @@ def streaming_suite_result(
         collects[("cats", c.column)] = lambda c=c: categorical_counts(
             baseline, c.column
         ).collect()
-    with ThreadPoolExecutor(max_workers=len(collects)) as ex:
-        futs = {k: ex.submit(f) for k, f in collects.items()}
-        got = {k: f.result() for k, f in futs.items()}
+    got = collect_concurrently(spark, collects)
     if merged_ids is not None:
         merged_ids.unpersist()
 

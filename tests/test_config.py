@@ -93,6 +93,22 @@ def test_unknown_suite_keys_rejected():
     assert s.drift_checks[0].psi_max == 0.01
 
 
+def test_empty_family_key_loads_as_empty_family():
+    """``row_checks:`` on a line of its own loads as None: an empty
+    family, not a TypeError from the key check."""
+    import yaml
+
+    s = suite_from_dict(
+        yaml.safe_load(
+            "row_checks:\nunique_checks:\n  - {id: u, column: clip_id}\n"
+        )
+    )
+    assert s.row_checks == ()
+    assert [c.constraint_id for c in s.unique_checks] == ["u"]
+    with pytest.raises(ValueError, match="uniqe_checks"):
+        suite_from_dict(yaml.safe_load("uniqe_checks:\n"))
+
+
 def test_yaml_suite_runs_end_to_end(spark, tmp_path):
     """The YAML-loaded suite produces identical verdicts to the built-in
     suite on the same planted clips table (reference pattern: config-driven

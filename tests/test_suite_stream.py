@@ -126,6 +126,47 @@ def test_verdict_collect_runs_no_job(spark, drained, tmp_path, engine):
     assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+def test_collects_keep_the_callers_job_group(spark, drained, engine):
+    """Both engines run their concurrent collects under the caller's job
+    group (so ``cancelJobGroup`` and the UI see them): a rerun inside a
+    group adds no job to the ungrouped set."""
+    src, state, base, dims, suite, _, _ = drained
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(f"{engine}-rerun", f"rerun the {engine} suite")
+    try:
+        if engine == "batch":
+            res = run_suite(
+                spark.read.parquet(src), base, dims, suite, "grouped"
+            )
+        else:
+            res = streaming_suite_result(spark, state, suite, base, "grouped")
+        res.unpersist()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(f"{engine}-rerun")
+    assert not set(tracker.getJobIdsForGroup(None)) - before
+
+
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+@pytest.mark.parametrize("stat", ["approx_distinct", "quantiles", "maen"])
+def test_stat_vocabulary_is_moment_or_percentile(spark, tmp_path, engine, stat):
+    """A StatCheck names a mergeable moment stat or a pXX percentile in
+    both engines: a sketch-backed profile output or a misspelled stat
+    raises ValueError naming the stat, before any verdict."""
+    suite = Suite(stat_checks=(StatCheck("s", "dur_ms", stat, "<=", 1.0),))
+    cur = clips_table(spark, 64, planted=False, n_buckets=2)
+    with pytest.raises(ValueError, match=f"stat check 's' uses stat '{stat}'"):
+        if engine == "batch":
+            run_suite(cur, cur, {}, suite, "vocab")
+        else:
+            streaming_suite_result(
+                spark, str(tmp_path / "state"), suite, cur, "vocab"
+            )
+
+
 def test_redelivered_batch_is_noop(spark, drained):
     src, state, base, dims, suite, stream_res, _ = drained
     before = _sorted_verdicts(stream_res)
