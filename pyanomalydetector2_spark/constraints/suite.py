@@ -11,19 +11,19 @@ Execution shape (the scale story):
   pruned parquet re-scan is ~10× cheaper than building + reading a
   deserialized in-memory cache of all columns, and at 100 TB the same holds
   more strongly — each family's scan reads only its own few columns.
-- Verdicts are finalized on the driver. After the one job that counts
-  the buckets, each family reduces to a small aggregate — violation
-  counts per (bucket, constraint), the per-bucket mergeable moment
-  partial, KLL sketch rows, category counts, per-bucket drift scores —
-  built and collected in its own thread as concurrent Spark jobs
+- Both engines share one per-batch state builder, ``suite_state_frames``:
+  row and referential violations, the moment partial, percentile KLL
+  sketches, drift bin counts per (check, bucket) and category counts per
+  (column, bucket). The streaming suite writes those frames per
+  micro-batch; after the one job that counts the buckets, this runner
+  collects them, the row-scale violation counts and the baseline side
+  (``baseline_collects``), each in its own thread as concurrent Spark jobs
   (``functions.collect_concurrently``, which keeps the caller's job
-  group), the same driver-side funnel the reference uses for survivor
-  sets (detect_anomalies.py:79-96). ``suite_verdict_rows`` turns them
-  into verdict rows; the streaming drain calls it over its merged state,
-  and moment stats finalize through ``stats.profile_from_partial_rows``
-  in both engines, so the verdict arithmetic has one definition. All
-  heavy lifting stays distributed; the verdicts come back as one
-  driver-local frame.
+  group) — the same driver-side funnel the reference uses for survivor
+  sets (detect_anomalies.py:79-96). ``suite_verdict_rows`` merges that
+  small state and scores it into verdict rows for both engines, so the
+  verdict and drift arithmetic has one definition. All heavy lifting
+  stays distributed; the verdicts come back as one driver-local frame.
 
 Violation rows mirror the reference's anomalies upsert contract
 (models/anomalies.py:9,59-79 → FIXTURES.md §B3).
@@ -36,7 +36,9 @@ import threading
 import time
 from collections import Counter
 from dataclasses import dataclass, field
+from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,10 +47,12 @@ from pyanomalydetector2_spark.constraints.dsl import Suite, parse_percentile_sta
 from pyanomalydetector2_spark.operators.audio import with_audio_invariants
 from pyanomalydetector2_spark.operators.drift import (
     HistSpec,
+    _validated_edges,
+    binned_counts_edges,
     categorical_counts,
     categorical_scores,
-    drift_scores_multi,
-    drift_scores_quantile,
+    histogram_counts_df,
+    psi_ks,
 )
 from pyanomalydetector2_spark.operators.integrity import (
     fd_det_repr,
@@ -65,6 +69,7 @@ from pyanomalydetector2_spark.operators.uniqueness import duplicate_rows
 from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
 from pyanomalydetector2_spark.functions import (
     collect_concurrently,
+    conform,
     empty_frame,
     local_rows_df,
 )
@@ -92,6 +97,24 @@ VERDICT_SCHEMA = T.StructType(
         T.StructField("violation_cnt", T.LongType()),
     ]
 )
+
+# the declared schema of each per-batch state component that
+# ``suite_state_frames`` builds for both engines (drift bins are keyed by
+# check id, category counts by column)
+STATE_SCHEMAS = {
+    "violations": VIOLATION_SCHEMA,
+    "profile": (
+        "bucket int, column string, row_cnt long, cnt long, null_cnt long, "
+        "min double, max double, sum double, sqr_sum double"
+    ),
+    "ksketch": (
+        "column string, bucket int, kll_k int, kll_n long, "
+        "kll_levels array<array<double>>, kll_compactions array<int>"
+    ),
+    "hist": "cid string, g int, b int, n long",
+    "ehist": "cid string, g int, b int, n long",
+    "cats": "column string, bucket int, cat string, cur_cat_n long",
+}
 
 
 @dataclass
@@ -124,9 +147,7 @@ class SuiteResult:
 
 def _row_check_violations(
     base: DataFrame, suite: Suite, run_id: str, key_col: str, bucket_col: str
-) -> DataFrame | None:
-    if not suite.row_checks:
-        return None
+) -> DataFrame:
     elems = []
     for c in suite.row_checks:
         fails = ~F.coalesce(F.expr(c.predicate), F.lit(False))  # NULL pred → fail
@@ -203,6 +224,212 @@ def row_check_base(current: DataFrame, suite: Suite) -> DataFrame:
         # under a row check whose own expression references it
         audio_base = audio_base.drop("bytes")
     return audio_base
+
+
+def suite_components(suite: Suite) -> dict[str, list]:
+    """The state components a suite needs, each with the state-shaping
+    definitions its rows are built from. ``suite_state_frames`` builds the
+    shared components, the streaming suite adds ``ids``, ``fdpairs`` and
+    ``recon``, pins this map in its manifest and reads exactly these
+    components. Thresholds are finalizer arithmetic, not state, so they
+    are not part of it. Distributed drift keeps no state: it is scored in
+    Spark by the batch runner."""
+    def columns(checks) -> list[str]:
+        return sorted({c.column for c in checks})
+
+    numeric = [
+        c for c in suite.drift_checks if not c.categorical and not c.distributed
+    ]
+    comps = {
+        "violations": sorted(
+            [["row", c.constraint_id, c.predicate, c.observed, c.expected]
+             for c in suite.row_checks]
+            + [["ref", c.constraint_id, c.column, c.dim_name]
+               for c in suite.ref_checks]
+        ),
+        "profile": columns(
+            c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None
+        ),
+        "ksketch": columns(
+            c for c in suite.stat_checks
+            if parse_percentile_stat(c.stat) is not None
+        ),
+        "hist": sorted(
+            [c.constraint_id, c.column, float(c.lo), float(c.hi), int(c.nbins)]
+            for c in numeric if not c.equi_depth
+        ),
+        "ehist": sorted([c.constraint_id, c.column] for c in numeric if c.equi_depth),
+        "cats": columns(c for c in suite.drift_checks if c.categorical),
+        "ids": columns(suite.unique_checks),
+        "fdpairs": sorted(
+            [c.constraint_id, list(c.determinant), c.dependent]
+            for c in suite.fd_checks
+        ),
+        "recon": sorted(
+            [c.constraint_id, list(c.compare_cols)] for c in suite.reconcile_checks
+        ),
+    }
+    return {k: v for k, v in comps.items() if v}
+
+
+def _hist_specs(comps: dict) -> dict[str, HistSpec]:
+    return {cid: HistSpec(col, lo, hi, nb) for cid, col, lo, hi, nb in comps["hist"]}
+
+
+def suite_state_frames(
+    df: DataFrame,
+    suite: Suite,
+    dims: dict[str, DataFrame],
+    run_id: str,
+    key_col: str,
+    bucket_col: str,
+    equi_edges,
+) -> dict:
+    """The suite's mergeable state over ``df`` as {component: build},
+    where ``build()`` returns the component's frame conformed to its
+    ``STATE_SCHEMAS`` entry: row and referential ``violations``, the
+    moment ``profile`` partial, percentile ``ksketch`` rows, bin counts
+    per (check id, bucket) — ``hist`` for every uniform check from one
+    explode pass, ``ehist`` over each equi-depth check's edges — and
+    ``cats`` category counts per (column, bucket). The streaming suite
+    writes these frames per micro-batch and the batch runner collects
+    them; both hand the rows to ``suite_verdict_rows``. Each engine calls
+    the builders inside its concurrent fan-out, because building a plan
+    is 0.1–0.2 s of driver-side analysis per component. ``equi_edges`` is
+    called for the check id → edges map when ``ehist`` is built (the
+    batch runner resolves its edges inside the fan-out); without it
+    ``ehist`` is left out."""
+    comps = suite_components(suite)
+    bucket = F.col(bucket_col).cast("int")
+
+    def violations() -> DataFrame:
+        parts = [
+            referential_violations(
+                df, c.column, dims[c.dim_name], keep_cols=[key_col, bucket_col]
+            ).select(
+                F.lit(run_id).alias("run_id"),
+                bucket.alias("bucket"),
+                F.col(key_col).alias("clip_id"),
+                F.lit(c.constraint_id).alias("constraint_id"),
+                F.col(c.column).cast("string").alias("observed"),
+                F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
+            )
+            for c in suite.ref_checks
+        ]
+        if suite.row_checks:
+            parts.insert(0, _row_check_violations(
+                row_check_base(df, suite), suite, run_id, key_col, bucket_col
+            ))
+        return reduce(DataFrame.unionByName, parts)
+
+    def profile() -> DataFrame:
+        return column_profile_partial(
+            df, comps["profile"], [bucket_col]
+        ).withColumn("bucket", bucket)
+
+    def ksketch() -> DataFrame:
+        return percentile_sketches(df, comps["ksketch"], bucket_col)
+
+    def hist() -> DataFrame:
+        return histogram_counts_df(
+            df, _hist_specs(comps), bucket_col
+        ).withColumnRenamed("c", "cid")
+
+    def ehist() -> DataFrame:
+        edges = equi_edges()
+        return reduce(DataFrame.unionByName, [
+            binned_counts_edges(df, col, edges[cid], bucket_col).select(
+                F.lit(cid).alias("cid"), F.col(bucket_col).alias("g"),
+                F.col("bin").alias("b"), "n",
+            )
+            for cid, col in comps["ehist"]
+        ])
+
+    def cats() -> DataFrame:
+        return reduce(DataFrame.unionByName, [
+            categorical_counts(df, col, bucket_col).select(
+                F.lit(col).alias("column"), F.col(bucket_col).alias("bucket"),
+                "cat", "cur_cat_n",
+            )
+            for col in comps["cats"]
+        ])
+
+    builders = {
+        "violations": violations, "profile": profile, "ksketch": ksketch,
+        "hist": hist, "ehist": ehist, "cats": cats,
+    }
+    return {
+        comp: lambda comp=comp, build=build: conform(build(), STATE_SCHEMAS[comp])
+        for comp, build in builders.items()
+        if comp in comps and (comp != "ehist" or equi_edges is not None)
+    }
+
+
+def baseline_collects(
+    baseline: DataFrame, suite: Suite, bucket_col: str, equi_edges
+) -> dict:
+    """The baseline side of a suite run as {key: callable}, for either
+    engine's concurrent fan-out; ``suite_verdict_rows`` reads the results.
+    Each callable returns its part of one of three maps: ``buckets``
+    (bucket → rows, the reconcile rate denominators), ``bins`` (check id →
+    global bin counts: every uniform check from one histogram pass, each
+    equi-depth check over its edges) and ``cats`` (column → {category:
+    count}). ``equi_edges`` is called for the check id → edges map, so the
+    batch runner resolves edges inside its fan-out."""
+    comps = suite_components(suite)
+    out: dict = {}
+    if "recon" in comps:
+        out[("buckets",)] = lambda: {
+            r["bucket"]: r["count"]
+            for r in baseline.groupBy(
+                F.col(bucket_col).cast("int").alias("bucket")
+            ).count().collect()
+        }
+    if "hist" in comps:
+        def _uniform() -> dict:
+            bins = {cid: np.zeros(nb + 2, np.int64)
+                    for cid, _, _, _, nb in comps["hist"]}
+            for r in histogram_counts_df(
+                baseline, _hist_specs(comps), None
+            ).collect():
+                bins[r["c"]][r["b"]] = r["n"]
+            return bins
+
+        out[("bins",)] = _uniform
+    for cid, col in comps.get("ehist", []):
+        def _equi(cid=cid, col=col) -> dict:
+            edges = equi_edges()[cid]
+            arr = np.zeros(len(edges) + 1, np.int64)
+            for r in binned_counts_edges(baseline, col, edges, None).collect():
+                arr[r["bin"]] = r["n"]
+            return {cid: arr}
+
+        out[("bins", cid)] = _equi
+    for col in comps.get("cats", []):
+        out[("cats", col)] = lambda col=col: {col: {
+            r["cat"]: r["cur_cat_n"]
+            for r in categorical_counts(baseline, col).collect()
+        }}
+    return out
+
+
+def sketch_store_edges(spark, sketch_store, checks) -> dict[str, list[float]]:
+    """Check id → equi-depth bin edges read off the persisted KLL store's
+    global sketch of the check's column (``[]`` when the store holds no
+    state for it)."""
+    from pyanomalydetector2_spark.operators.drift import (
+        quantile_edges_from_sketch,
+    )
+    from pyanomalydetector2_spark.operators.kll import SKETCH_FIELDS
+
+    state = sketch_store.read(spark)
+    return {
+        c.constraint_id: quantile_edges_from_sketch(
+            state.filter(F.col("column") == c.column).select(*SKETCH_FIELDS),
+            c.nbins,
+        )
+        for c in checks
+    }
 
 
 _CMP_OPS = {
@@ -416,27 +643,28 @@ def suite_verdict_rows(
     row_count: int,
     hll: dict,
     violation_counts,
-    base_rows: dict,
-    moment_profile: dict,
-    sketch_rows,
-    category_counts: dict,
-    scored_drift: list[tuple],
+    state: dict,
+    baseline: dict,
+    distributed_scores: list[tuple],
 ) -> list[tuple]:
     """Every verdict row of a suite run, finalized on the driver from
-    small collected state. Both engines call it, so the verdict arithmetic
-    has one definition:
+    small collected state. Both engines call it, so the verdict and drift
+    arithmetic has one definition:
 
     - ``hll``: column → HLL distinct estimate (one informational row per
       UniqueCheck, bucket -1);
     - ``violation_counts``: ``violation_counts_frame`` rows;
-    - ``base_rows``: bucket → baseline rows, the reconcile rate denominator;
-    - ``moment_profile``: {(bucket, column): {stat: value}};
-    - ``sketch_rows``: percentile KLL sketch rows (``percentile_sketches``
-      shape), merged per (bucket, column) in the order given;
-    - ``category_counts``: column → (bucket → {category: count}, baseline
-      {category: count}) for categorical drift;
-    - ``scored_drift``: (check, bucket, psi, ks) of the numeric drift
-      checks, scored by the caller."""
+    - ``state``: component → rows of the ``profile``, ``ksketch``,
+      ``hist``, ``ehist`` and ``cats`` components (``suite_state_frames``
+      shapes), any number of partial rows per key: they merge here, moment
+      partials and count rows by addition, sketch rows in the order given;
+    - ``baseline``: the results of ``baseline_collects``' callables;
+    - ``distributed_scores``: (check, bucket, psi, ks) of the
+      ``DriftCheck(distributed=True)`` checks, scored in Spark.
+
+    Uniform, equi-depth and categorical drift are scored here from the
+    current and baseline counts; an empty baseline or a check with no
+    current count raises instead of passing vacuously."""
     vcounts: dict[tuple, int] = {}
     kind_counts: dict[tuple, int] = {}
     for r in violation_counts:
@@ -444,6 +672,9 @@ def suite_verdict_rows(
         vcounts[key] = vcounts.get(key, 0) + r["count"]
         if r["kind"] is not None:
             kind_counts[(r["constraint_id"], r["bucket"], r["kind"])] = r["count"]
+    base: dict[str, dict] = {"buckets": {}, "bins": {}, "cats": {}}
+    for (comp, *_), part in baseline.items():
+        base[comp].update(part)
     rows: list[tuple] = [
         (run_id, -1, c.constraint_id, "hll_approx_distinct",
          float(hll.get(c.column, 0)), float(row_count), True, 0)
@@ -459,10 +690,10 @@ def suite_verdict_rows(
     ]
     rows += violation_count_verdict_rows(vcounts, buckets, counted_ids, run_id)
     rows += reconcile_rate_verdict_rows(
-        kind_counts, buckets, base_rows, suite.reconcile_checks, run_id
+        kind_counts, buckets, base["buckets"], suite.reconcile_checks, run_id
     )
     rows += stat_verdict_rows(
-        moment_profile,
+        profile_from_partial_rows(state.get("profile", ())),
         [c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None],
         run_id,
     )
@@ -471,49 +702,67 @@ def suite_verdict_rows(
     ]
     if pct_checks:
         rows += stat_verdict_rows(
-            _percentile_profile(sketch_rows, pct_checks, buckets),
+            _percentile_profile(state.get("ksketch", ()), pct_checks, buckets),
             pct_checks,
             run_id,
         )
-    scored = list(scored_drift)
+
+    scored = list(distributed_scores)
+    cur_bins: dict[str, list] = {}
+    for r in (*state.get("hist", ()), *state.get("ehist", ())):
+        cur_bins.setdefault(r["cid"], []).append(r)
+    cur_cats: dict[str, dict] = {}
+    for r in state.get("cats", ()):
+        counts = cur_cats.setdefault(r["column"], {}).setdefault(r["bucket"], {})
+        counts[r["cat"]] = counts.get(r["cat"], 0) + r["cur_cat_n"]
     for c in suite.drift_checks:
-        if not c.categorical:
+        if c.categorical:
+            scores = categorical_scores(
+                cur_cats.get(c.column, {}), base["cats"][c.column], c.column
+            )
+        elif c.distributed:
             continue
-        cur, base = category_counts[c.column]
-        scores = categorical_scores(cur, base, c.column)
+        else:
+            base_bins = base["bins"][c.constraint_id]
+            if not base_bins.sum():
+                raise ValueError(
+                    f"drift baseline for column {c.column!r} is empty or "
+                    "all-null — no histogram to compare against (fix the "
+                    "baseline snapshot)"
+                )
+            groups: dict = {}
+            for r in cur_bins.get(c.constraint_id, ()):
+                groups.setdefault(
+                    r["g"], np.zeros(len(base_bins), np.int64)
+                )[r["b"]] += r["n"]
+            scores = {g: psi_ks(arr, base_bins) for g, arr in groups.items()}
         if not scores:
             raise ValueError(
                 f"drift check {c.constraint_id!r} produced no score — "
                 f"column {c.column!r} is empty/all-null in every current "
                 "bucket (fix the snapshot or drop the check)"
             )
-        scored += [(c, g, *scores[g]) for g in sorted(scores)]
+        scored += [(c, int(g), *scores[g]) for g in sorted(scores)]
     for c, g, psi, ks in scored:
         rows += drift_verdict_rows(run_id, g, c, psi, ks)
     return rows
 
 
 def _violation_frame(
+    state_violations: DataFrame | None,
     current: DataFrame,
     baseline: DataFrame,
-    dims: dict[str, DataFrame],
     suite: Suite,
     run_id: str,
     key_col: str,
     bucket_col: str,
     salt_buckets: int | None,
 ) -> DataFrame:
-    """The union of every violation family's rows (VIOLATION_SCHEMA), as
-    one lazy plan; ``baseline`` is the reconcile side, bucket-filtered like
-    ``current`` on a resume."""
-    violation_frames: list[DataFrame] = []
-
-    # ---- row checks: one scan (with audio invariants), all predicates -----
-    rc_viol = _row_check_violations(
-        row_check_base(current, suite), suite, run_id, key_col, bucket_col
-    )
-    if rc_viol is not None:
-        violation_frames.append(rc_viol)
+    """Every violation row of a batch run (VIOLATION_SCHEMA) as one lazy
+    plan: the row and referential rows of the suite state plus the
+    row-scale families; ``baseline`` is the reconcile side,
+    bucket-filtered like ``current`` on a resume."""
+    violation_frames = [] if state_violations is None else [state_violations]
 
     # ---- uniqueness: HLL screen (recorded metric) + exact confirm ---------
     # The HLL estimate is recorded per run (the cheap observability signal,
@@ -538,21 +787,6 @@ def _violation_frame(
             F.lit(f"unique {c.column}").alias("expected"),
         )
         violation_frames.append(dup_rows)
-
-    # ---- referential integrity: broadcast anti-joins ----------------------
-    for c in suite.ref_checks:
-        dim = dims[c.dim_name]
-        viol = referential_violations(
-            current, c.column, dim, keep_cols=[key_col, bucket_col]
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.col(bucket_col).cast("int").alias("bucket"),
-            F.col(key_col).alias("clip_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            F.col(c.column).cast("string").alias("observed"),
-            F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
-        )
-        violation_frames.append(viol)
 
     # ---- functional dependencies: algebraic two-stage agg ------------------
     # Resume semantics match uniqueness: on a bucket-filtered resume the FD
@@ -675,10 +909,10 @@ def run_suite(
             [], skipped, 0, 0.0,
         )
 
-    # ---- every family reduces to a small aggregate — violation counts per
-    # (bucket, constraint), the per-bucket moment partials, KLL sketch
-    # rows, category counts, per-bucket drift scores — and each is built
-    # and collected in its own thread, as concurrent jobs: the wall is the
+    # ---- every family reduces to a small aggregate — the suite state
+    # (``suite_state_frames``), violation counts per (bucket, constraint),
+    # the baseline side (``baseline_collects``) — and each is built and
+    # collected in its own thread, as concurrent jobs: the wall is the
     # slowest collect, not the sum. Each collect returns O(buckets × bins)
     # rows. What blew the 8 GB driver heap at the 8M-row tier (GC overhead
     # limit) was a lazy union of every family's scan in ONE job; here every
@@ -687,27 +921,9 @@ def run_suite(
     baseline_rec = (
         baseline.filter(~F.col(bucket_col).isin(skipped)) if skipped else baseline
     )
-    moment_cols = sorted(
-        {
-            c.column
-            for c in suite.stat_checks
-            if parse_percentile_stat(c.stat) is None
-        }
-    )
-    pct_cols = sorted(
-        {
-            c.column
-            for c in suite.stat_checks
-            if parse_percentile_stat(c.stat) is not None
-        }
-    )
-    cat_cols = sorted({c.column for c in suite.drift_checks if c.categorical})
-    numeric = [c for c in suite.drift_checks if not c.categorical]
-    uniform = [c for c in numeric if not c.equi_depth and not c.distributed]
-    # equi-depth (edges from the baseline's quantile sketch), then
-    # distributed: scored per check
-    binned = [c for c in numeric if c.equi_depth and not c.distributed] + [
-        c for c in numeric if c.distributed
+    equi = [c for c in suite.drift_checks if c.equi_depth and not c.categorical]
+    distributed = [
+        c for c in suite.drift_checks if c.distributed and not c.categorical
     ]
     # Σ per-bucket distinct is exact ONLY for the bucket key itself
     # (bucket = hash(key_col) co-locates each key in one bucket); any other
@@ -717,107 +933,50 @@ def run_suite(
         i for i, c in enumerate(suite.unique_checks) if c.column != key_col
     ]
 
-    def _violations() -> tuple:
-        # the collect of the counts also materializes the violations cache
-        violations = _violation_frame(
-            current, baseline_rec, dims, suite, run_id, key_col, bucket_col,
-            salt_buckets,
-        ).cache()
-        return violations, violation_counts_frame(violations, suite).collect()
-
-    def _uniform_scores() -> list[tuple]:
-        # ONE histogram pass per side for ALL uniform-bin columns
-        specs = [HistSpec(c.column, c.lo, c.hi, c.nbins) for c in uniform]
-        by_col = {c.column: c for c in uniform}
-        scored = [
-            (by_col[s["column"]], int(s["group"]), s["psi"], s["ks"])
-            for s in drift_scores_multi(
-                current, baseline, specs, group_col=bucket_col
-            )
-        ]
-        # a check that produced NO score means the baseline histogram for
-        # that column was empty/all-null — the same condition the
-        # equi-depth and distributed paths raise on; silence here would
-        # let a misconfigured baseline pass the whole suite
-        seen_ids = {c.constraint_id for c, *_ in scored}
-        for c in uniform:
-            if c.constraint_id not in seen_ids:
-                raise ValueError(
-                    f"drift check {c.constraint_id!r} produced no score — "
-                    f"column {c.column!r} is empty/all-null in the baseline "
-                    "or in every current bucket (fix the snapshot or drop "
-                    "the check)"
-                )
-        return scored
-
-    def _equi_edges_map() -> dict[tuple[str, int], list[float] | None]:
-        """Equi-depth edges from the persisted KLL store when one is wired
-        (``sketch_store``): hit → KBs of sketch state replace the baseline
-        percentile_approx rescan; miss → bootstrap so every later run is a
-        hit. ALL missing columns bootstrap in ONE kll_build_multi pass —
-        the Arrow transfer dominates a sketch build (BASELINE.md §24), so E
-        equi-depth columns must not pay E baseline scans. No store → all
-        None (inline edge derivation, unchanged)."""
-        wanted = [(c.column, c.nbins) for c in binned if c.equi_depth]
-        edges_map: dict[tuple[str, int], list[float] | None] = {
-            w: None for w in wanted
-        }
-        if sketch_store is None or not wanted:
-            return edges_map
-        from pyanomalydetector2_spark.operators.drift import (
-            quantile_edges_from_sketch,
-        )
-        from pyanomalydetector2_spark.operators.kll import (
-            SKETCH_FIELDS,
-            kll_build_multi,
-        )
-
-        def _resolve() -> None:
-            state = sketch_store.read(spark)
-            for col, nbins in wanted:
-                if edges_map[(col, nbins)]:
-                    continue
-                e = quantile_edges_from_sketch(
-                    state.filter(F.col("column") == col).select(*SKETCH_FIELDS),
-                    nbins,
-                )
-                if e:
-                    edges_map[(col, nbins)] = e
-
-        if sketch_store.current_snapshot() is not None:
-            _resolve()
-        missing = sorted({col for (col, _), e in edges_map.items() if not e})
-        if missing:
-            sk = kll_build_multi(baseline, missing, (), k=4096)
-            sketch_store.merge_upsert(sk, keys=["column"])
-            _resolve()
-        return edges_map
-
-    # the edge map resolves once, for every equi-depth check, in whichever
-    # drift thread asks first
     edges_lock = threading.Lock()
-    equi_edges: dict[tuple[str, int], list[float] | None] = {}
+    equi_edges: dict[str, list[float]] = {}
 
-    def _binned_scores(c) -> list[tuple]:
-        """Scores of one equi-depth (edges from the baseline's quantile
-        sketch) or distributed drift check."""
-        edges = None
-        if c.equi_depth:
-            with edges_lock:
-                if not equi_edges:
-                    equi_edges.update(_equi_edges_map())
-            edges = equi_edges[(c.column, c.nbins)]
-        if not c.distributed:
-            return [
-                (c, int(s["group"]), s["psi"], s["ks"])
-                for s in drift_scores_quantile(
-                    current, baseline, c.column, c.nbins, group_col=bucket_col,
-                    edges=edges,
-                )
-            ]
-        # no-histogram-collect path (high-cardinality bucket columns): the
-        # histograms stay DataFrame-side, only the per-bucket scores
-        # (O(buckets) rows) come back
+    def _equi_edges() -> dict[str, list[float]]:
+        """Check id → equi-depth edges, resolved once per run by whichever
+        fan-out thread asks first. With a ``sketch_store``, KBs of sketch
+        state replace the baseline rescan, and a miss bootstraps every
+        missing column in ONE kll_build_multi pass (the Arrow transfer
+        dominates a sketch build, BASELINE.md §24), so every later run is
+        a hit; without one, one percentile_approx pass over the baseline
+        per check."""
+        with edges_lock:
+            if not equi_edges:
+                stored: dict[str, list[float]] = {}
+                if sketch_store is not None:
+                    if sketch_store.current_snapshot() is not None:
+                        stored = sketch_store_edges(spark, sketch_store, equi)
+                    todo = [c for c in equi if not stored.get(c.constraint_id)]
+                    if todo:
+                        from pyanomalydetector2_spark.operators.kll import (
+                            kll_build_multi,
+                        )
+
+                        sketch_store.merge_upsert(
+                            kll_build_multi(
+                                baseline, sorted({c.column for c in todo}), (),
+                                k=4096,
+                            ),
+                            keys=["column"],
+                        )
+                        stored.update(sketch_store_edges(spark, sketch_store, todo))
+                equi_edges.update({
+                    c.constraint_id: _validated_edges(
+                        baseline, c.column, c.nbins, 10000,
+                        stored.get(c.constraint_id) or None,
+                    )
+                    for c in equi
+                })
+        return equi_edges
+
+    def _distributed_scores(c) -> list[tuple]:
+        """Scores of one distributed drift check: for high-cardinality
+        bucket columns the histograms stay DataFrame-side, and only the
+        per-bucket scores (O(buckets) rows) come back."""
         from pyanomalydetector2_spark.operators.drift import (
             drift_scores_df,
             drift_scores_quantile_df,
@@ -826,7 +985,7 @@ def run_suite(
         frame = (
             drift_scores_quantile_df(
                 current, baseline, c.column, c.nbins, group_col=bucket_col,
-                edges=edges,
+                edges=_equi_edges()[c.constraint_id],
             )
             if c.equi_depth
             else drift_scores_df(
@@ -841,6 +1000,19 @@ def run_suite(
             ).collect()
         ]
 
+    builds = suite_state_frames(
+        current, suite, dims, run_id, key_col, bucket_col, _equi_edges
+    )
+
+    def _violations() -> tuple:
+        # the collect of the counts also materializes the violations cache
+        violations = _violation_frame(
+            builds["violations"]() if "violations" in builds else None,
+            current, baseline_rec, suite, run_id, key_col, bucket_col,
+            salt_buckets,
+        ).cache()
+        return violations, violation_counts_frame(violations, suite).collect()
+
     entries = {"violations": _violations}
     if non_key:
         entries["hll"] = lambda: current.agg(
@@ -851,38 +1023,13 @@ def run_suite(
                 for i in non_key
             ]
         ).first()
-    if suite.reconcile_checks:
-        # reconcile rates divide by the baseline's per-bucket rows
-        entries["base_rows"] = lambda: baseline_rec.groupBy(
-            F.col(bucket_col).cast("int").alias("bucket")
-        ).count().collect()
-    if moment_cols:
-        # the mergeable moment partial the streaming suite persists, so
-        # both engines finalize moment stats with one function
-        entries["profile"] = lambda: column_profile_partial(
-            current, moment_cols, [bucket_col]
-        ).withColumn("bucket", F.col(bucket_col).cast("int")).collect()
-    if pct_cols:
-        # percentile stats ride the mergeable KLL sketch — the SAME sketch
-        # the streaming suite merges per micro-batch, so exact-regime
-        # verdicts agree bit-for-bit between the two engines
-        entries["sketches"] = lambda: percentile_sketches(
-            current, pct_cols, bucket_col
-        ).collect()
-    if uniform:
-        entries["uniform"] = _uniform_scores
-    for i, c in enumerate(binned):
-        entries[("binned", i)] = lambda c=c: _binned_scores(c)
-    # categorical: category counts per current bucket and of the baseline,
-    # once per column; the driver scores frequency-PSI + linf from them
-    for col in cat_cols:
-        entries[("cats", col)] = lambda col=col: categorical_counts(
-            current, col, bucket_col
-        ).collect()
-        entries[("base_cats", col)] = lambda col=col: categorical_counts(
-            baseline, col
-        ).collect()
-    got = collect_concurrently(spark, entries)
+    for comp, build in builds.items():
+        if comp != "violations":
+            entries[comp] = lambda build=build: build().collect()
+    for i, c in enumerate(distributed):
+        entries[("distributed", i)] = lambda c=c: _distributed_scores(c)
+    base_entries = baseline_collects(baseline, suite, bucket_col, _equi_edges)
+    got = collect_concurrently(spark, {**entries, **base_entries})
 
     violations, violation_counts = got["violations"]
     hll = {
@@ -893,25 +1040,18 @@ def run_suite(
         )
         for i, c in enumerate(suite.unique_checks)
     }
-    category_counts = {}
-    for col in cat_cols:
-        cur: dict = {}
-        for r in got[("cats", col)]:
-            cur.setdefault(int(r[bucket_col]), {})[r["cat"]] = r["cur_cat_n"]
-        category_counts[col] = (
-            cur, {r["cat"]: r["cur_cat_n"] for r in got[("base_cats", col)]}
-        )
-    scored = list(got.get("uniform", []))  # (check, bucket, psi, ks)
-    for i in range(len(binned)):
-        scored += got[("binned", i)]
-
+    base_side = {k: got[k] for k in base_entries}
+    if skipped and ("buckets",) in base_side:
+        # a resume's reconcile rates cover the buckets its diff covers
+        base_side[("buckets",)] = {
+            b: n for b, n in base_side[("buckets",)].items()
+            if b is not None and b not in skipped
+        }
     verdict_rows = suite_verdict_rows(
         suite, run_id, buckets, row_count, hll, violation_counts,
-        {r["bucket"]: r["count"] for r in got.get("base_rows", [])},
-        profile_from_partial_rows(got.get("profile", [])),
-        got.get("sketches", []),
-        category_counts,
-        scored,
+        {c: got[c] for c in STATE_SCHEMAS if c in got and c != "violations"},
+        base_side,
+        [s for i in range(len(distributed)) for s in got[("distributed", i)]],
     )
 
     result = SuiteResult(

@@ -97,6 +97,18 @@ def empty_frame(spark, schema):
     return local_rows_df(spark, [], schema).limit(0)
 
 
+def conform(df, schema):
+    """``df`` reduced to the fields of ``schema`` (a StructType or DDL
+    string), each cast to its declared type: frames that are written and
+    read back with a pinned schema must carry exactly that schema (parquet's
+    vectorized reader refuses an INT64 file column under a pinned int)."""
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+
+
 def collect_concurrently(spark, fns: dict) -> dict:
     """Call every callable of ``fns`` in its own thread and return
     {name: result}: independent small collects run as concurrent Spark

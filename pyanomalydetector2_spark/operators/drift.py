@@ -24,7 +24,6 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyanomalydetector2_spark.functions import local_rows_df
 
 EPS = 1e-6
 # below this many deduped equi-depth edges the histogram can no longer
@@ -41,16 +40,18 @@ class HistSpec:
 
 
 def histogram_counts_df(
-    df: DataFrame, specs: list[HistSpec], group_col: str | None = None
+    df: DataFrame, specs: dict[str, HistSpec], group_col: str | None = None
 ) -> DataFrame:
-    """The distributed half of ``histogram_counts``: one pass for all drift
-    columns, returning the (g, c, b, n) count frame WITHOUT collecting.
-    Counts are integers and therefore exactly additive — the streaming
-    suite persists this frame per micro-batch and sums across batches,
-    which reproduces the one-shot histogram bit-for-bit."""
+    """The distributed half of ``histogram_counts``: one pass for every
+    spec, returning the (g, c, b, n) count frame WITHOUT collecting, ``c``
+    the spec's key (the suite keys its drift checks by id, so checks that
+    share a column keep their own bins). Counts are integers and therefore
+    exactly additive — the streaming suite persists this frame per
+    micro-batch and sums across batches, which reproduces the one-shot
+    histogram bit-for-bit."""
     entries = [
         F.struct(
-            F.lit(s.column).alias("c"),
+            F.lit(key).alias("c"),
             F.when(
                 F.col(s.column).isNotNull(),
                 F.width_bucket(
@@ -61,7 +62,7 @@ def histogram_counts_df(
                 ),
             ).alias("b"),
         )
-        for s in specs
+        for key, s in specs.items()
     ]
     gsel = [F.col(group_col).alias("g")] if group_col else [F.lit(None).cast("int").alias("g")]
     return (
@@ -78,7 +79,7 @@ def histogram_counts(
     """ONE pass for all drift columns: explode per-column bins, one groupBy.
     Returns {(group, column): counts[nbins+2]} (group is None when global).
     """
-    rows = histogram_counts_df(df, specs, group_col).collect()
+    rows = histogram_counts_df(df, {s.column: s for s in specs}, group_col).collect()
     return hist_rows_to_arrays(rows, specs)
 
 
@@ -199,7 +200,8 @@ def _validated_edges(
     accuracy: int,
     edges: list[float] | None,
 ) -> list[float]:
-    """Shared edge derivation + guards for both equi-depth drift paths:
+    """Shared edge derivation + guards for every equi-depth drift path
+    (the suite's binned checks and ``drift_scores_quantile_df``):
     precomputed ``edges`` (e.g. from a persisted KLL sketch) skip the
     baseline pass entirely; otherwise one percentile_approx pass."""
     if edges is None:
@@ -262,50 +264,6 @@ def binned_counts_edges(
     )
 
 
-def drift_scores_quantile(
-    current: DataFrame,
-    baseline: DataFrame,
-    column: str,
-    nbins: int = 20,
-    group_col: str | None = None,
-    edges: list[float] | None = None,
-) -> list[dict]:
-    """PSI/KS over EQUI-DEPTH bins derived from the baseline's quantile
-    sketch — robust to heavy tails/outliers where uniform bins waste
-    resolution. Three passes total (edges, baseline counts, current counts),
-    all map-side-combined aggregates; pass precomputed ``edges`` (e.g.
-    quantile_edges_from_sketch over persisted KLL state) to skip the
-    baseline edge pass."""
-    edges = _validated_edges(baseline, column, nbins, 10000, edges)
-    nb = len(edges) + 1
-
-    def counts(df: DataFrame, g: str | None) -> dict[tuple, np.ndarray]:
-        rows = binned_counts_edges(df, column, edges, g).collect()
-        out: dict[tuple, np.ndarray] = {}
-        for r in rows:
-            key = (r[g] if g else None,)
-            if key not in out:
-                out[key] = np.zeros(nb, dtype=np.int64)
-            out[key][int(r["bin"])] = r["n"]
-        return out
-
-    base_h = counts(baseline, None)[(None,)]
-    out = []
-    for (g,), cur in sorted(counts(current, group_col).items(), key=lambda kv: str(kv[0])):
-        psi, ks = psi_ks(cur, base_h)
-        out.append(
-            {
-                "group": g,
-                "column": column,
-                "psi": psi,
-                "ks": ks,
-                "cur_n": int(cur.sum()),
-                "base_n": int(base_h.sum()),
-            }
-        )
-    return out
-
-
 def uniform_bin(column: str, lo: float, hi: float, nbins: int):
     """Explicit uniform-bin expression (0 = underflow, nbins+1 = overflow).
     Written as plain floor arithmetic — not width_bucket — so an external
@@ -360,10 +318,11 @@ def drift_scores_quantile_df(
 ) -> DataFrame:
     """Distributed equi-depth drift: bin edges come from the baseline's
     percentile_approx sketch (one tiny driver round-trip — the edges
-    parametrize the plan, exactly like drift_scores_quantile), then PSI/KS
-    run with NO histogram collect — the scale path when the group column is
-    high-cardinality. Same empty-baseline / degenerate-edge guards as the
-    funnel variant; precomputed ``edges`` skip the baseline pass."""
+    parametrize the plan, as they do the suite's equi-depth bins), then
+    PSI/KS run with NO histogram collect — the scale path when the group
+    column is high-cardinality. Same empty-baseline / degenerate-edge
+    guards as the suite's binned checks; precomputed ``edges`` skip the
+    baseline pass."""
     edges = _validated_edges(baseline, column, nbins, accuracy, edges)
     return _drift_df_from_bins(
         current,
@@ -620,38 +579,3 @@ def categorical_scores(cur: dict, base: dict[str, int], column: str) -> dict:
             linf = max(linf, abs(p - q))
         out[g] = (psi, linf)
     return out
-
-
-def drift_scores(
-    current: DataFrame,
-    baseline: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    nbins: int = 20,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Single-column convenience wrapper returning a (local) DataFrame with
-    the same shape as before: (group?, psi, ks, cur_n, base_n).
-
-    Binned KS is exact for discrete columns (sr_hz) and resolution-limited
-    by nbins for continuous ones.
-    """
-    spark = current.sparkSession
-    scores = drift_scores_multi(current, baseline, [HistSpec(column, lo, hi, nbins)], group_col)
-    schema = (
-        (f"{group_col} int, " if group_col else "")
-        + "psi double, ks double, cur_n long, base_n long"
-    )
-    rows = [
-        tuple(
-            ([int(s["group"])] if group_col else [])
-            + [s["psi"], s["ks"], s["cur_n"], s["base_n"]]
-        )
-        for s in scores
-        # rows whose group value is NULL carry no bucket assignment — skip
-        # them rather than crash int(None) (this int-typed wrapper keeps the
-        # legacy shape; use drift_scores_multi/_df for arbitrary group types)
-        if not (group_col and s["group"] is None)
-    ]
-    return local_rows_df(spark, rows, schema)

@@ -6,7 +6,10 @@ over the full table. At 10^12 rows with continuous arrival, re-validating
 the corpus per delivery is not an option — but every family the default
 clips suite uses is **algebraically mergeable**, so the stream keeps
 per-batch partial state and the one-shot result is reproducible at any
-time without touching a single already-processed row:
+time without touching a single already-processed row. The row/ref
+violations, moment, sketch, drift-bin and category components come from
+the batch runner's own builder (``suite.suite_state_frames``); the stream
+adds the uniqueness, FD and reconcile counts:
 
 - row / referential checks are stateless per row → violation rows append;
 - column stats keep (row_cnt, cnt, null_cnt, min, max, sum, sqr_sum) per
@@ -18,11 +21,11 @@ time without touching a single already-processed row:
   is exact state algebra); sketches merge at drain/compaction and the
   nearest-rank quantile is finalized once with the same KLL kernels the
   batch runner's Spark merge runs, so pXX has ONE definition;
-- numeric drift keeps integer histogram-bin counts, categorical drift
-  keeps category counts — exactly additive, so merged counts score
-  identically to the one-shot pass (drift.histogram_counts_df /
-  categorical_counts write the state; psi_ks / categorical_scores score
-  it, as they score the batch runner's collected counts);
+- numeric drift keeps integer bin counts per (check, bucket) —
+  keyed by check id, so checks that share a column keep their own bins —
+  and categorical drift keeps category counts per (column, bucket):
+  exactly additive, so merged counts score identically to the one-shot
+  pass (``suite_verdict_rows`` scores both engines' counts);
 - uniqueness keeps per-(bucket, key) counts — additive; the HLL screen
   estimate recomputed over the stored (string-cast) key set equals the
   batch estimate bit-for-bit because the batch runner hashes the SAME
@@ -55,20 +58,25 @@ time without touching a single already-processed row:
   one meaning across restarts; from there it is the same exactly-additive
   integer-count state as uniform drift.
 
+The suite's state-shaping definitions (``suite.suite_components``: which
+components it needs and what each was built from, row-check text and
+drift bins included) are pinned in ``suite_manifest.json``; a suite that
+changes them mid-stream fails closed.
+
 The drain (``streaming_suite_result``) finalizes every verdict on the
 driver. Small state — per-bucket row counts, moments, bins, category
 counts, sketches: kilobytes, whatever the row count — is read with
-pyarrow, never through a Spark job, merged (stats.profile_from_partial_rows
-for the moments) and handed to ``suite.suite_verdict_rows``, the verdict
-finalizer the batch runner calls too. Only the row-scale state
-(violations, ids, FD pairs, reconcile counts) stays in Spark, and only
-counts cross from it. The verdicts come back as one local frame.
+pyarrow, never through a Spark job, and handed with the baseline side
+(``suite.baseline_collects``, the batch runner's) to
+``suite.suite_verdict_rows``, which merges it and scores every drift
+check for both engines. Only the row-scale state (violations, ids, FD
+pairs, reconcile counts) stays in Spark, and only counts cross from it.
+The verdicts come back as one local frame.
 
 Checks that are NOT mergeable are rejected up front
-(``ensure_streamable``): distributed-mode drift (drain scoring is the
-driver funnel over merged counts), uniform drift checks that share a
-column (the hist state is keyed by column), StatChecks on the raw
-``quantiles``/``approx_distinct`` profile outputs (use pXX percentile
+(``ensure_streamable``): distributed-mode drift (it scores in Spark with
+no histogram on the driver, and keeps no state), and StatChecks on the
+raw ``quantiles``/``approx_distinct`` profile outputs (use pXX percentile
 stats, which stream exactly; ``suite.ensure_known_stats``, which the
 batch runner applies too) — a silently-wrong streaming verdict would be
 worse than an error.
@@ -95,6 +103,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -103,54 +112,40 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from pyanomalydetector2_spark.constraints.dsl import Suite, parse_percentile_stat
+from pyanomalydetector2_spark.constraints.dsl import Suite
 from pyanomalydetector2_spark.constraints.suite import (
+    STATE_SCHEMAS,
     VIOLATION_SCHEMA,
     VERDICT_SCHEMA,
     SuiteResult,
-    _row_check_violations,
+    baseline_collects,
     ensure_known_stats,
     reconcile_violation_frame,
-    row_check_base,
+    sketch_store_edges,
+    suite_components,
+    suite_state_frames,
     suite_verdict_rows,
     violation_counts_frame,
 )
-from pyanomalydetector2_spark.operators.drift import (
-    HistSpec,
-    binned_counts_edges,
-    hist_rows_to_arrays,
-    histogram_counts,
-    histogram_counts_df,
-    categorical_counts,
-    psi_ks,
-)
-from pyanomalydetector2_spark.operators.integrity import referential_violations
-from pyanomalydetector2_spark.operators.stats import (
-    column_profile_partial,
-    profile_from_partial_rows,
-)
 from pyanomalydetector2_spark.functions import (
     collect_concurrently,
+    conform,
     empty_frame,
     local_rows_df,
 )
+from pyanomalydetector2_spark.operators.integrity import fd_det_repr, fd_observed
+from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
 from pyanomalydetector2_spark.streaming.state import batch_dirs, latest_gen
 
-_BUCKETS_SCHEMA = "bucket int, n long"
-_PROFILE_SCHEMA = (
-    "bucket int, column string, row_cnt long, cnt long, null_cnt long, "
-    "min double, max double, sum double, sqr_sum double"
-)
-_HIST_SCHEMA = "g int, c string, b int, n long"
-_EHIST_SCHEMA = "cid string, g int, b int, n long"
-_KSKETCH_SCHEMA = (
-    "column string, bucket int, kll_k int, kll_n long, "
-    "kll_levels array<array<double>>, kll_compactions array<int>"
-)
-_CATS_SCHEMA = "column string, bucket int, cat string, cur_cat_n long"
-_IDS_SCHEMA = "column string, bucket int, key string, cnt long"
-_FDPAIRS_SCHEMA = "cid string, det string, dep string, cnt long, k string, b int"
-_RECON_SCHEMA = "cid string, key string, vals array<string>, b int, cnt long"
+# every state component's declared schema: the shared ones of
+# ``suite_state_frames``, then the stream's own
+_SCHEMAS = {
+    **STATE_SCHEMAS,
+    "buckets": "bucket int, n long",
+    "ids": "column string, bucket int, key string, cnt long",
+    "fdpairs": "cid string, det string, dep string, cnt long, k string, b int",
+    "recon": "cid string, key string, vals array<string>, b int, cnt long",
+}
 
 
 def ensure_streamable(suite: Suite) -> None:
@@ -164,21 +159,6 @@ def ensure_streamable(suite: Suite) -> None:
                 "funnel over merged counts; use uniform/equi-depth/"
                 "categorical drift"
             )
-    uni_cols = [
-        c.column
-        for c in suite.drift_checks
-        if not c.categorical and not c.equi_depth
-    ]
-    dup_cols = sorted({c for c in uni_cols if uni_cols.count(c) > 1})
-    if dup_cols:
-        raise ValueError(
-            "streaming suite: multiple uniform drift checks share "
-            f"column(s) {dup_cols} — the hist state is keyed by column, so "
-            "their differently-binned counts would merge and one check "
-            "would silently lose its verdicts; use distinct columns, the "
-            "equi-depth variant (keyed by check id) or categorical drift "
-            "(its category counts do not depend on the check)"
-        )
     ensure_known_stats(suite)
 
 
@@ -246,71 +226,6 @@ def _require_component_coverage(state_dir: str, comp: str) -> None:
         )
 
 
-def _suite_state_signature(
-    suite: Suite, key_col: str, bucket_col: str
-) -> dict:
-    """The suite's STATE-AFFECTING shape, per component: which check ids /
-    columns / bin definitions each component's per-batch deltas were built
-    from. Thresholds (StatCheck.threshold, drift psi_max/ks_max, reconcile
-    rates) are drain-time arithmetic and deliberately NOT part of the
-    signature — they may change freely across a stream's life."""
-    sig: dict = {"key_col": key_col, "bucket_col": bucket_col}
-    vio = [
-        ["row", c.constraint_id, c.predicate] for c in suite.row_checks
-    ] + [
-        ["ref", c.constraint_id, c.column, c.dim_name]
-        for c in suite.ref_checks
-    ]
-    if vio:
-        sig["violations"] = sorted(vio)
-    mom = sorted(
-        {
-            c.column
-            for c in suite.stat_checks
-            if parse_percentile_stat(c.stat) is None
-        }
-    )
-    if mom:
-        sig["profile"] = mom
-    pct = sorted(
-        {
-            c.column
-            for c in suite.stat_checks
-            if parse_percentile_stat(c.stat) is not None
-        }
-    )
-    if pct:
-        sig["ksketch"] = pct
-    uni = sorted(
-        [s.column, float(s.lo), float(s.hi), int(s.nbins)]
-        for s in _uniform_specs(suite)
-    )
-    if uni:
-        sig["hist"] = uni
-    eq = sorted([c.constraint_id, c.column] for c in _equi_checks(suite))
-    if eq:
-        sig["ehist"] = eq
-    cats = sorted({c.column for c in suite.drift_checks if c.categorical})
-    if cats:
-        sig["cats"] = cats
-    ids = sorted({c.column for c in suite.unique_checks})
-    if ids:
-        sig["ids"] = ids
-    fd = sorted(
-        [c.constraint_id, list(c.determinant), c.dependent]
-        for c in suite.fd_checks
-    )
-    if fd:
-        sig["fdpairs"] = fd
-    rec = sorted(
-        [c.constraint_id, list(c.compare_cols)]
-        for c in suite.reconcile_checks
-    )
-    if rec:
-        sig["recon"] = rec
-    return sig
-
-
 def _pin_suite_manifest(
     state_dir: str, suite: Suite, key_col: str, bucket_col: str
 ) -> None:
@@ -322,8 +237,10 @@ def _pin_suite_manifest(
     component covered while its merged state silently excludes all earlier
     batches' rows. The manifest closes that hole: while any batch is
     committed, the suite's state-shaping definitions must be EXACTLY the
-    pinned ones (thresholds excluded — see _suite_state_signature)."""
-    sig = _suite_state_signature(suite, key_col, bucket_col)
+    pinned ones (thresholds excluded — see suite.suite_components)."""
+    sig = {
+        "key_col": key_col, "bucket_col": bucket_col, **suite_components(suite)
+    }
     path = f"{state_dir}/suite_manifest.json"
     if not _committed(state_dir):
         # nothing processed yet — (re)pin freely
@@ -356,30 +273,6 @@ def _pin_suite_manifest(
         )
 
 
-def _needed_components(suite: Suite) -> list[str]:
-    """Which state components this suite's drain will read."""
-    needed = ["buckets"]
-    if suite.row_checks or suite.ref_checks:
-        needed.append("violations")
-    if suite.unique_checks:
-        needed.append("ids")
-    if suite.fd_checks:
-        needed.append("fdpairs")
-    if suite.reconcile_checks:
-        needed.append("recon")
-    if any(parse_percentile_stat(c.stat) is None for c in suite.stat_checks):
-        needed.append("profile")
-    if any(parse_percentile_stat(c.stat) is not None for c in suite.stat_checks):
-        needed.append("ksketch")
-    if _uniform_specs(suite):
-        needed.append("hist")
-    if _equi_checks(suite):
-        needed.append("ehist")
-    if any(c.categorical for c in suite.drift_checks):
-        needed.append("cats")
-    return needed
-
-
 def _read_component(
     spark: SparkSession, state_dir: str, comp: str, schema: str
 ) -> DataFrame:
@@ -393,18 +286,6 @@ def _read_component(
     if paths:
         return spark.read.schema(schema).parquet(*paths)
     return empty_frame(spark, schema)
-
-
-def _uniform_specs(suite: Suite) -> list[HistSpec]:
-    return [
-        HistSpec(c.column, c.lo, c.hi, c.nbins)
-        for c in suite.drift_checks
-        if not c.categorical and not c.equi_depth
-    ]
-
-
-def _equi_checks(suite: Suite):
-    return [c for c in suite.drift_checks if c.equi_depth and not c.categorical]
 
 
 def resolve_equi_edges(
@@ -421,7 +302,9 @@ def resolve_equi_edges(
     store (operators/kll.py — bootstrap it with a batch run_suite(
     sketch_store=...) or an offline kll_build over the baseline); a stream
     has no baseline frame to rescan, which is exactly the point."""
-    eq = _equi_checks(suite)
+    eq = [
+        c for c in suite.drift_checks if c.equi_depth and not c.categorical
+    ]
     if not eq:
         return {}
     path = f"{state_dir}/equi_edges.json"
@@ -449,24 +332,15 @@ def resolve_equi_edges(
             "equi-depth drift: the sketch_store is empty — bootstrap it "
             "from the baseline snapshot first"
         )
-    from pyanomalydetector2_spark.operators.drift import (
-        quantile_edges_from_sketch,
-    )
-    from pyanomalydetector2_spark.operators.kll import SKETCH_FIELDS
-
-    state = sketch_store.read(spark)
+    edges = sketch_store_edges(spark, sketch_store, eq)
     out: dict[str, dict] = {}
     for c in eq:
-        edges = quantile_edges_from_sketch(
-            state.filter(F.col("column") == c.column).select(*SKETCH_FIELDS),
-            c.nbins,
-        )
-        if not edges:
+        if not edges[c.constraint_id]:
             raise ValueError(
                 f"equi-depth drift check {c.constraint_id!r}: the sketch "
                 f"store has no state for column {c.column!r}"
             )
-        out[c.constraint_id] = {"column": c.column, "edges": edges}
+        out[c.constraint_id] = {"column": c.column, "edges": edges[c.constraint_id]}
     os.makedirs(state_dir, exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -497,161 +371,46 @@ def process_suite_batch(
     t0 = time.time()
     spark = batch.sparkSession
 
-    # Build every component frame lazily, then run ALL the writes as
+    # Every component's frame is built and written in its own thread, as
     # CONCURRENT Spark jobs: each component reads its own column-pruned
     # slice of the batch, so the jobs don't contend on anything but
     # executor slots, and the per-batch wall is max(job) not sum(job) —
     # the knob that keeps small-micro-batch fixed cost flat. (The audio
-    # decode pass, when present, rides ONLY the violations job.)
-    writes: list[tuple[str, DataFrame]] = []
-
-    # row + referential violations (stateless per row → append)
-    vio_frames = []
-    rc = _row_check_violations(
-        row_check_base(batch, suite), suite, run_id, key_col, bucket_col
+    # decode pass, when present, rides ONLY the violations job.) The
+    # shared components come from the batch runner's own builder, with the
+    # stream's PINNED equi-depth edges (resolve_equi_edges).
+    pinned = {
+        cid: [float(e) for e in meta["edges"]]
+        for cid, meta in (equi_edges or {}).items()
+    }
+    builds = suite_state_frames(
+        batch, suite, dims or {}, run_id, key_col, bucket_col,
+        (lambda: pinned) if pinned else None,
     )
-    if rc is not None:
-        vio_frames.append(rc)
-    for c in suite.ref_checks:
-        dim = (dims or {})[c.dim_name]
-        vio_frames.append(
-            referential_violations(
-                batch, c.column, dim, keep_cols=[key_col, bucket_col]
-            ).select(
-                F.lit(run_id).alias("run_id"),
-                F.col(bucket_col).cast("int").alias("bucket"),
-                F.col(key_col).alias("clip_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                F.col(c.column).cast("string").alias("observed"),
-                F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
-            )
-        )
-    if vio_frames:
-        vio = vio_frames[0]
-        for vf in vio_frames[1:]:
-            vio = vio.unionByName(vf)
-        writes.append((f"{state_dir}/violations/batch={batch_id}", vio))
+    comps = suite_components(suite)
 
-    # mergeable stat partials
-    mom_stat_cols = sorted(
-        {
-            c.column
-            for c in suite.stat_checks
-            if parse_percentile_stat(c.stat) is None
-        }
-    )
-    if mom_stat_cols:
-        writes.append(
-            (
-                f"{state_dir}/profile/batch={batch_id}",
-                column_profile_partial(
-                    batch, mom_stat_cols, group_cols=[bucket_col]
-                )
-                .withColumn("bucket", F.col(bucket_col).cast("int"))
-                .select(
-                    "bucket", "column", "row_cnt", "cnt", "null_cnt",
-                    "min", "max", "sum", "sqr_sum",
-                ),
-            )
-        )
-
-    # percentile stat partials: per-(column, bucket) KLL sketch rows — the
-    # sketch merge is exact state algebra (operators/kll.py), the quantile
-    # itself is finalized once at drain time
-    pct_cols = sorted(
-        {
-            c.column
-            for c in suite.stat_checks
-            if parse_percentile_stat(c.stat) is not None
-        }
-    )
-    if pct_cols:
-        from pyanomalydetector2_spark.constraints.suite import (
-            percentile_sketches,
-        )
-
-        writes.append(
-            (
-                f"{state_dir}/ksketch/batch={batch_id}",
-                percentile_sketches(batch, pct_cols, bucket_col),
-            )
-        )
-
-    # drift histogram / category counts (integer → exactly additive)
-    specs = _uniform_specs(suite)
-    if specs:
-        writes.append(
-            (
-                f"{state_dir}/hist/batch={batch_id}",
-                histogram_counts_df(batch, specs, group_col=bucket_col),
-            )
-        )
-    # equi-depth drift: edge-binned counts with the stream's PINNED edges
-    # (resolve_equi_edges) — integer counts, exactly additive like the
-    # uniform histograms
-    if equi_edges:
-        frames = [
-            binned_counts_edges(
-                batch, meta["column"], [float(e) for e in meta["edges"]],
-                bucket_col,
-            ).select(
-                F.lit(cid).alias("cid"),
-                F.col(bucket_col).cast("int").alias("g"),
-                F.col("bin").cast("int").alias("b"),
-                F.col("n").cast("long").alias("n"),
-            )
-            for cid, meta in sorted(equi_edges.items())
-        ]
-        eh = frames[0]
-        for f2 in frames[1:]:
-            eh = eh.unionByName(f2)
-        writes.append((f"{state_dir}/ehist/batch={batch_id}", eh))
-
-    # category and key counts are keyed by column: one frame per distinct
-    # column, or two checks on one column would double its merged counts
-    cat_cols = sorted({c.column for c in suite.drift_checks if c.categorical})
-    if cat_cols:
-        frames = [
-            categorical_counts(batch, col, bucket_col).select(
-                F.lit(col).alias("column"),
-                F.col(bucket_col).cast("int").alias("bucket"),
-                "cat",
-                "cur_cat_n",
-            )
-            for col in cat_cols
-        ]
-        cats = frames[0]
-        for f2 in frames[1:]:
-            cats = cats.unionByName(f2)
-        writes.append((f"{state_dir}/cats/batch={batch_id}", cats))
-
-    # uniqueness key counts (cast to string at the shared-schema boundary;
-    # the HLL screen re-runs on these keys and the default clips key is
-    # already a string)
-    if suite.unique_checks:
-        frames = [
+    def ids() -> DataFrame:
+        # uniqueness key counts, once per column (cast to string at the
+        # shared-schema boundary; the HLL screen re-runs on these keys and
+        # the default clips key is already a string)
+        return reduce(DataFrame.unionByName, [
             batch.groupBy(
                 F.col(bucket_col).cast("int").alias("bucket"),
                 F.col(col).cast("string").alias("key"),
             )
             .agg(F.count(F.lit(1)).alias("cnt"))
             .select(F.lit(col).alias("column"), "bucket", "key", "cnt")
-            for col in sorted({c.column for c in suite.unique_checks})
-        ]
-        ids = frames[0]
-        for f2 in frames[1:]:
-            ids = ids.unionByName(f2)
-        writes.append((f"{state_dir}/ids/batch={batch_id}", ids))
+            for col in comps["ids"]
+        ])
 
-    # FD pair counts: (check, determinant repr, dependent) → additive cnt
-    # plus min key/bucket exemplars. Values are STRINGIFIED at the shared-
-    # schema boundary (same policy as the ids component): the n_values>1
-    # decision is exact for atomic types (Spark's numeric→string casts are
-    # injective); only the min/max conflict WITNESSES become lexicographic.
-    if suite.fd_checks:
-        from pyanomalydetector2_spark.operators.integrity import fd_det_repr
-
-        frames = [
+    def fdpairs() -> DataFrame:
+        # FD pair counts: (check, determinant repr, dependent) → additive
+        # cnt plus min key/bucket exemplars. Values are STRINGIFIED at the
+        # shared-schema boundary (same policy as the ids component): the
+        # n_values>1 decision is exact for atomic types (Spark's
+        # numeric→string casts are injective); only the min/max conflict
+        # WITNESSES become lexicographic.
+        return reduce(DataFrame.unionByName, [
             batch.groupBy(
                 fd_det_repr(list(c.determinant)).alias("det"),
                 F.col(c.dependent).cast("string").alias("dep"),
@@ -663,18 +422,14 @@ def process_suite_batch(
             )
             .select(F.lit(c.constraint_id).alias("cid"), "det", "dep", "cnt", "k", "b")
             for c in suite.fd_checks
-        ]
-        fd = frames[0]
-        for f2 in frames[1:]:
-            fd = fd.unionByName(f2)
-        writes.append((f"{state_dir}/fdpairs/batch={batch_id}", fd))
+        ])
 
-    # reconcile row counts: (check, key, STRINGIFIED compare tuple, bucket)
-    # → additive cnt — exactly what snapshot_diff's full-outer join needs,
-    # including duplicate-key multiplicity (replayed at drain time by
-    # exploding the merged count)
-    if suite.reconcile_checks:
-        frames = [
+    def recon() -> DataFrame:
+        # reconcile row counts: (check, key, STRINGIFIED compare tuple,
+        # bucket) → additive cnt — exactly what snapshot_diff's full-outer
+        # join needs, including duplicate-key multiplicity (replayed at
+        # drain time by exploding the merged count)
+        return reduce(DataFrame.unionByName, [
             batch.groupBy(
                 F.col(key_col).cast("string").alias("key"),
                 F.array(
@@ -687,26 +442,16 @@ def process_suite_batch(
                 F.lit(c.constraint_id).alias("cid"), "key", "vals", "b", "cnt"
             )
             for c in suite.reconcile_checks
-        ]
-        rec = frames[0]
-        for f2 in frames[1:]:
-            rec = rec.unionByName(f2)
-        writes.append((f"{state_dir}/recon/batch={batch_id}", rec))
+        ])
 
-    def _write(path: str, df: DataFrame) -> None:
-        # conform to the component's DECLARED schema before writing: the
-        # drain and compaction read with that schema pinned (empty deltas
-        # have no footer to infer from), and parquet's vectorized reader
-        # refuses width mismatches like an INT64 file column under an int
-        # pinned type — writes and reads must share one source of truth
-        comp = os.path.relpath(path, state_dir).split(os.sep)[0]
-        sch = _component_schema(comp)
-        if sch is not None:
-            target = spark.createDataFrame([], sch).schema
-            df = df.select(
-                *[F.col(f.name).cast(f.dataType) for f in target.fields]
+    # conform to the component's DECLARED schema before writing: the drain
+    # and compaction read with that schema pinned (empty deltas have no
+    # footer to infer from)
+    for comp, build in (("ids", ids), ("fdpairs", fdpairs), ("recon", recon)):
+        if comp in comps:
+            builds[comp] = lambda comp=comp, build=build: conform(
+                build(), _SCHEMAS[comp]
             )
-        df.write.mode("overwrite").parquet(path)
 
     def _bucket_counts() -> list:
         return (
@@ -719,7 +464,14 @@ def process_suite_batch(
         spark,
         {
             "counts": _bucket_counts,
-            **{p: (lambda p=p, df=df: _write(p, df)) for p, df in writes},
+            **{
+                comp: (
+                    lambda comp=comp, build=build: build().write.mode(
+                        "overwrite"
+                    ).parquet(f"{state_dir}/{comp}/batch={batch_id}")
+                )
+                for comp, build in builds.items()
+            },
         },
     )["counts"]
     rows = sum(r["n"] for r in brows)
@@ -728,7 +480,7 @@ def process_suite_batch(
     # BATCH (functions.local_rows_df docstring has the measurement)
     local_rows_df(
         spark, [(int(r[bucket_col]), int(r["n"])) for r in brows],
-        _BUCKETS_SCHEMA,
+        _SCHEMAS["buckets"],
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{state_dir}/buckets/batch={batch_id}"
     )
@@ -841,9 +593,9 @@ def streaming_suite_result(
     re-scan). Equality with the batch runner is pytest-pinned.
 
     Every verdict row is finalized on the driver. The small state
-    (buckets, profile, hist, ehist, cats, ksketch) is read with pyarrow
-    and merged; ``suite_verdict_rows``, the batch runner's own finalizer,
-    turns it into verdict rows. The row-scale state
+    (buckets, profile, hist, ehist, cats, ksketch) is read with pyarrow;
+    ``suite_verdict_rows``, the batch runner's own finalizer, merges and
+    scores it into verdict rows. The row-scale state
     (violations, ids, fdpairs, recon) stays in Spark as the cached
     ``violations`` frame; only counts cross to the driver: violations per
     (bucket, constraint, change kind), the HLL estimates, and the
@@ -859,8 +611,8 @@ def streaming_suite_result(
     # batch (catches a family that is entirely new, or legacy state dirs
     # without a manifest)
     _pin_suite_manifest(state_dir, suite, key_col, bucket_col)
-    needed = _needed_components(suite)
-    for comp in needed:
+    comps = suite_components(suite)
+    for comp in ["buckets", *comps]:
         _require_component_coverage(state_dir, comp)
     if baseline is None:
         for family, checks in (
@@ -875,14 +627,12 @@ def streaming_suite_result(
     t0 = time.time()
     committed = set(_committed(state_dir))
 
-    def small_state(comp: str, schema: str | None = None) -> pa.Table:
-        return _arrow_state(
-            state_dir, comp, schema or _component_schema(comp), committed
-        )
+    def small_state(comp: str) -> pa.Table:
+        return _arrow_state(state_dir, comp, _SCHEMAS[comp], committed)
 
     bucket_rows = {
         int(r["bucket"]): int(r["n"])
-        for r in _sum_by(small_state("buckets", _BUCKETS_SCHEMA), ["bucket"], "n")
+        for r in _sum_by(small_state("buckets"), ["bucket"], "n")
     }
     buckets = sorted(bucket_rows)
     row_count = sum(bucket_rows.values())
@@ -912,7 +662,7 @@ def streaming_suite_result(
     merged_ids = None
     if suite.unique_checks:
         merged_ids = (
-            _read_component(spark, state_dir, "ids", _IDS_SCHEMA)
+            _read_component(spark, state_dir, "ids", _SCHEMAS["ids"])
             .groupBy("column", "bucket", "key")
             .agg(F.sum("cnt").alias("cnt"))
             .cache()
@@ -951,10 +701,8 @@ def streaming_suite_result(
 
     # ---- FD violations from merged pair counts ----------------------------
     if suite.fd_checks:
-        from pyanomalydetector2_spark.operators.integrity import fd_observed
-
         merged_fd = (
-            _read_component(spark, state_dir, "fdpairs", _FDPAIRS_SCHEMA)
+            _read_component(spark, state_dir, "fdpairs", _SCHEMAS["fdpairs"])
             .groupBy("cid", "det", "dep")
             .agg(
                 F.sum("cnt").alias("cnt"),
@@ -1006,9 +754,7 @@ def streaming_suite_result(
     # against the string-cast baseline. String casts are injective for
     # atomic types, so the null-safe compares match the typed batch diff.
     if suite.reconcile_checks:
-        from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
-
-        recon = _read_component(spark, state_dir, "recon", _RECON_SCHEMA)
+        recon = _read_component(spark, state_dir, "recon", _SCHEMAS["recon"])
         for c in suite.reconcile_checks:
             cols = list(c.compare_cols)
             merged_rec = (
@@ -1038,15 +784,13 @@ def streaming_suite_result(
     # ---- the Spark half: only counts cross to the driver. The collects
     # are independent, so they run as CONCURRENT jobs (wall = the slowest,
     # the violations materialization, not the sum of the small ones).
-    specs = _uniform_specs(suite)
-    eq_checks = _equi_checks(suite)
-    cat_checks = [c for c in suite.drift_checks if c.categorical]
+    # One job materializes the violations cache and counts it per (bucket,
+    # constraint), reconcile rows also per change kind; the baseline side
+    # is the batch runner's, binned with the stream's PINNED edges.
     edges = {
         cid: [float(e) for e in meta["edges"]]
         for cid, meta in resolve_equi_edges(spark, state_dir, suite, None).items()
     }
-    # one job materializes the violations cache and counts it per (bucket,
-    # constraint), reconcile rows also per change kind
     collects = {
         "violations": lambda: violation_counts_frame(violations, suite).collect()
     }
@@ -1062,127 +806,25 @@ def streaming_suite_result(
             "column",
             F.when(F.col("column") == key_col, F.col("bucket")).alias("g"),
         ).agg(F.approx_count_distinct("key", 0.02).alias("est")).collect()
-    if suite.reconcile_checks:
-        collects["base_rows"] = lambda: baseline.groupBy(
-            F.col(bucket_col).cast("int").alias("bucket")
-        ).count().collect()
-    if specs:
-        collects["base_hist"] = lambda: histogram_counts(baseline, specs, None)
-    for c in eq_checks:
-        collects[("ehist", c.constraint_id)] = lambda c=c: binned_counts_edges(
-            baseline, c.column, edges[c.constraint_id], None
-        ).collect()
-    for c in cat_checks:
-        collects[("cats", c.column)] = lambda c=c: categorical_counts(
-            baseline, c.column
-        ).collect()
-    got = collect_concurrently(spark, collects)
+    base_collects = baseline_collects(baseline, suite, bucket_col, lambda: edges)
+    got = collect_concurrently(spark, {**collects, **base_collects})
     if merged_ids is not None:
         merged_ids.unpersist()
 
-    # ---- the driver half: drift scores from merged bins, then every -----
-    # verdict row through the batch runner's own finalizer
+    # ---- the driver half: every verdict row, drift scores included,
+    # through the batch runner's own finalizer over the merged small state
     hll: dict[str, int] = {}
     for r in got.get("hll", []):
         hll[r["column"]] = hll.get(r["column"], 0) + r["est"]
-    scored: list[tuple] = []  # (check, bucket, psi, ks)
-
-    # ---- uniform drift: merged integer bins → identical psi/ks -----------
-    if specs:
-        cur_h = hist_rows_to_arrays(
-            _sum_by(small_state("hist"), ["g", "c", "b"], "n"), specs
-        )
-        base_h = got["base_hist"]
-        checks = {
-            c.column: c
-            for c in suite.drift_checks
-            if not c.categorical and not c.equi_depth
-        }
-        for s in specs:
-            if (None, s.column) not in base_h:
-                raise ValueError(
-                    f"drift baseline for column {s.column!r} is empty or "
-                    "all-null — no histogram to compare against (fix the "
-                    "baseline snapshot)"
-                )
-        for (g, col), counts in sorted(
-            cur_h.items(), key=lambda kv: (str(kv[0][0]), kv[0][1])
-        ):
-            psi, ks = psi_ks(counts, base_h[(None, col)])
-            scored.append((checks[col], int(g), psi, ks))
-        seen = {c.constraint_id for c, *_ in scored}
-        for c in checks.values():
-            if c.constraint_id not in seen:
-                raise ValueError(
-                    f"drift check {c.constraint_id!r} produced no score — "
-                    f"column {c.column!r} is empty/all-null in the baseline "
-                    "or in every current bucket (fix the snapshot or drop "
-                    "the check)"
-                )
-
-    # ---- equi-depth drift: merged edge-binned counts vs the baseline ------
-    # binned with the SAME pinned edges — integer counts, so scores are
-    # bit-identical to a one-shot pass using those edges
-    if eq_checks:
-        import numpy as np
-
-        by_cid: dict[str, dict[int, dict[int, int]]] = {}
-        for r in _sum_by(small_state("ehist"), ["cid", "g", "b"], "n"):
-            by_cid.setdefault(r["cid"], {}).setdefault(int(r["g"]), {})[
-                int(r["b"])
-            ] = int(r["n"])
-        for c in eq_checks:
-            nb = len(edges[c.constraint_id]) + 1
-            base_arr = np.zeros(nb)
-            for r in got[("ehist", c.constraint_id)]:
-                base_arr[int(r["bin"])] = int(r["n"])
-            if base_arr.sum() == 0:
-                raise ValueError(
-                    f"drift baseline for column {c.column!r} is empty or "
-                    "all-null — no histogram to compare against (fix the "
-                    "baseline snapshot)"
-                )
-            groups = by_cid.get(c.constraint_id, {})
-            if not groups:
-                raise ValueError(
-                    f"drift check {c.constraint_id!r} produced no score — "
-                    f"column {c.column!r} is empty/all-null in every "
-                    "processed batch (fix the stream or drop the check)"
-                )
-            for g in sorted(groups):
-                arr = np.zeros(nb)
-                for b, n in groups[g].items():
-                    arr[b] = n
-                scored.append((c, int(g), *psi_ks(arr, base_arr)))
-
-    # ---- categorical drift: merged category counts vs the baseline's -----
-    cur_cats: dict[str, dict] = {}
-    if cat_checks:
-        for r in _sum_by(
-            small_state("cats"), ["column", "bucket", "cat"], "cur_cat_n"
-        ):
-            cur_cats.setdefault(r["column"], {}).setdefault(r["bucket"], {})[
-                r["cat"]
-            ] = r["cur_cat_n"]
-    category_counts = {
-        c.column: (
-            cur_cats.get(c.column, {}),
-            {r["cat"]: r["cur_cat_n"] for r in got[("cats", c.column)]},
-        )
-        for c in cat_checks
-    }
-
     rows = suite_verdict_rows(
         suite, run_id, buckets, row_count, hll, got["violations"],
-        {r["bucket"]: r["count"] for r in got.get("base_rows", [])},
-        (
-            profile_from_partial_rows(small_state("profile").to_pylist())
-            if "profile" in needed
-            else {}
-        ),
-        small_state("ksketch").to_pylist() if "ksketch" in needed else [],
-        category_counts,
-        scored,
+        {
+            comp: small_state(comp).to_pylist()
+            for comp in comps
+            if comp in STATE_SCHEMAS and comp != "violations"
+        },
+        {k: got[k] for k in base_collects},
+        [],
     )
 
     return SuiteResult(
@@ -1202,44 +844,23 @@ def streaming_suite_result(
 # state maintenance
 
 
-_ADDITIVE: dict[str, tuple[str, list[str], dict[str, str]]] = {
-    # comp -> (schema, group keys, {col: agg})
-    "buckets": (_BUCKETS_SCHEMA, ["bucket"], {"n": "sum"}),
+# comp -> (group keys, {col: agg}) of the additive count state
+_ADDITIVE: dict[str, tuple[list[str], dict[str, str]]] = {
+    "buckets": (["bucket"], {"n": "sum"}),
     "profile": (
-        _PROFILE_SCHEMA,
         ["bucket", "column"],
         {
             "row_cnt": "sum", "cnt": "sum", "null_cnt": "sum",
             "min": "min", "max": "max", "sum": "sum", "sqr_sum": "sum",
         },
     ),
-    "hist": (_HIST_SCHEMA, ["g", "c", "b"], {"n": "sum"}),
-    "ehist": (_EHIST_SCHEMA, ["cid", "g", "b"], {"n": "sum"}),
-    "cats": (_CATS_SCHEMA, ["column", "bucket", "cat"], {"cur_cat_n": "sum"}),
-    "ids": (_IDS_SCHEMA, ["column", "bucket", "key"], {"cnt": "sum"}),
-    "fdpairs": (
-        _FDPAIRS_SCHEMA,
-        ["cid", "det", "dep"],
-        {"cnt": "sum", "k": "min", "b": "min"},
-    ),
-    "recon": (
-        _RECON_SCHEMA,
-        ["cid", "key", "vals", "b"],
-        {"cnt": "sum"},
-    ),
+    "hist": (["cid", "g", "b"], {"n": "sum"}),
+    "ehist": (["cid", "g", "b"], {"n": "sum"}),
+    "cats": (["column", "bucket", "cat"], {"cur_cat_n": "sum"}),
+    "ids": (["column", "bucket", "key"], {"cnt": "sum"}),
+    "fdpairs": (["cid", "det", "dep"], {"cnt": "sum", "k": "min", "b": "min"}),
+    "recon": (["cid", "key", "vals", "b"], {"cnt": "sum"}),
 }
-
-
-def _component_schema(comp: str):
-    """The declared (pinned) schema for a state component, or None for
-    components with their own explicit write schema (buckets)."""
-    if comp == "violations":
-        return VIOLATION_SCHEMA
-    if comp == "ksketch":
-        return _KSKETCH_SCHEMA
-    if comp in _ADDITIVE:
-        return _ADDITIVE[comp][0]
-    return None
 
 
 def compact_suite_state(spark: SparkSession, state_dir: str) -> int:
@@ -1253,8 +874,7 @@ def compact_suite_state(spark: SparkSession, state_dir: str) -> int:
     if not committed:
         return -1
     gen_id = committed[-1]
-    comps = list(_ADDITIVE) + ["violations", "ksketch"]
-    for comp in comps:
+    for comp in _SCHEMAS:
         folded_thru, paths, missing = _component_state(
             state_dir, comp, set(committed)
         )
@@ -1269,9 +889,9 @@ def compact_suite_state(spark: SparkSession, state_dir: str) -> int:
             continue
         # schema pinned for the same reason as _read_component: an all-
         # empty delta dir has no part files to infer from
-        df = spark.read.schema(_component_schema(comp)).parquet(*paths)
+        df = spark.read.schema(_SCHEMAS[comp]).parquet(*paths)
         if comp in _ADDITIVE:
-            _, keys, aggs = _ADDITIVE[comp]
+            keys, aggs = _ADDITIVE[comp]
             df = df.groupBy(*keys).agg(
                 *[getattr(F, fn)(c).alias(c) for c, fn in aggs.items()]
             )
@@ -1294,7 +914,7 @@ def vacuum_suite_state(state_dir: str) -> list[str]:
     import shutil
 
     removed = []
-    for comp in list(_ADDITIVE) + ["violations", "ksketch"]:
+    for comp in _SCHEMAS:
         base = latest_gen(f"{state_dir}/{comp}_base")
         if base is None:
             continue

@@ -7,8 +7,32 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pyanomalydetector2_spark.operators.drift import EPS, drift_scores
+from pyanomalydetector2_spark.operators.drift import (
+    EPS,
+    HistSpec,
+    drift_scores_multi,
+)
 from pyanomalydetector2_spark.sources.catalog import SnapshotTable
+
+
+def _equi_depth_scores(spark, cur, base, nbins: int, group_col: str = "g"):
+    """{group: {"psi": …, "ks": …}} of one equi-depth DriftCheck run by
+    the suite runner, grouped by ``group_col`` (a constant group when the
+    frame has none)."""
+    from pyspark.sql import functions as F
+
+    from pyanomalydetector2_spark.constraints import run_suite
+    from pyanomalydetector2_spark.constraints.dsl import DriftCheck, Suite
+
+    if group_col not in cur.columns:
+        cur = cur.withColumn(group_col, F.lit(0))
+    suite = Suite(
+        drift_checks=(DriftCheck("q", "x", 0, 0, nbins=nbins, equi_depth=True),)
+    )
+    out: dict = {}
+    for r in run_suite(cur, base, {}, suite, "eq", bucket_col=group_col).verdicts.collect():
+        out.setdefault(r["bucket"], {})[r["metric"]] = r["observed"]
+    return out
 
 
 def numpy_psi_ks(cur: np.ndarray, base: np.ndarray, lo, hi, nbins):
@@ -29,7 +53,7 @@ def test_drift_matches_numpy_oracle(spark):
     cur_v = rng.normal(115, 15, 3000)  # shifted
     cur = spark.createDataFrame(pd.DataFrame({"x": cur_v}))
     base = spark.createDataFrame(pd.DataFrame({"x": base_v}))
-    row = drift_scores(cur, base, "x", 50.0, 150.0, nbins=20).first()
+    row = drift_scores_multi(cur, base, [HistSpec("x", 50.0, 150.0, 20)])[0]
     psi, ks = numpy_psi_ks(cur_v, base_v, 50.0, 150.0, 20)
     assert row["psi"] == pytest.approx(psi, rel=1e-9)
     assert row["ks"] == pytest.approx(ks, rel=1e-9)
@@ -40,14 +64,14 @@ def test_drift_identical_distributions_near_zero(spark):
     rng = np.random.default_rng(12)
     v = rng.normal(0, 1, 5000)
     df = spark.createDataFrame(pd.DataFrame({"x": v}))
-    row = drift_scores(df, df, "x", -4.0, 4.0, nbins=20).first()
+    row = drift_scores_multi(df, df, [HistSpec("x", -4.0, 4.0, 20)])[0]
     assert row["psi"] == pytest.approx(0.0, abs=1e-12)
     assert row["ks"] == pytest.approx(0.0, abs=1e-12)
 
 
 def test_drift_distributed_matches_funnel(spark):
     """drift_scores_df (fully distributed, no collect) must agree with the
-    driver-funnel drift_scores AND the numpy oracle on the same inputs —
+    driver-funnel drift_scores_multi AND the numpy oracle on the same inputs —
     global and per-group."""
     from pyanomalydetector2_spark.operators.drift import drift_scores_df
 
@@ -70,7 +94,8 @@ def test_drift_distributed_matches_funnel(spark):
         )
     )
     funnel = {
-        r["g"]: r for r in drift_scores(g, base, "x", 50.0, 150.0, 20, "g").collect()
+        s["group"]: s
+        for s in drift_scores_multi(g, base, [HistSpec("x", 50.0, 150.0, 20)], "g")
     }
     dist = {
         r["g"]: r
@@ -85,12 +110,9 @@ def test_drift_distributed_matches_funnel(spark):
 
 def test_quantile_drift_distributed_matches_funnel(spark):
     """drift_scores_quantile_df (no histogram collect) must agree with the
-    funnel drift_scores_quantile row for row — same sketch edges, same
-    PSI/KS — globally and per group."""
-    from pyanomalydetector2_spark.operators.drift import (
-        drift_scores_quantile,
-        drift_scores_quantile_df,
-    )
+    suite runner's equi-depth verdicts row for row — same sketch edges,
+    same PSI/KS — per group."""
+    from pyanomalydetector2_spark.operators.drift import drift_scores_quantile_df
 
     rng = np.random.default_rng(31)
     base_v = rng.lognormal(3, 1, 5000)  # heavy tail: equi-depth territory
@@ -100,10 +122,7 @@ def test_quantile_drift_distributed_matches_funnel(spark):
         pd.DataFrame({"g": np.repeat([0, 1], 1500), "x": cur_v})
     )
 
-    funnel = {
-        r["group"]: r
-        for r in drift_scores_quantile(cur, base, "x", nbins=20, group_col="g")
-    }
+    funnel = _equi_depth_scores(spark, cur, base, 20)
     dist = {
         r["g"]: r
         for r in drift_scores_quantile_df(
@@ -114,8 +133,8 @@ def test_quantile_drift_distributed_matches_funnel(spark):
     for k in funnel:
         assert dist[k]["psi"] == pytest.approx(funnel[k]["psi"], rel=1e-9)
         assert dist[k]["ks"] == pytest.approx(funnel[k]["ks"], rel=1e-9)
-        assert dist[k]["cur_n"] == funnel[k]["cur_n"]
-        assert dist[k]["base_n"] == funnel[k]["base_n"]
+        assert dist[k]["cur_n"] == 1500
+        assert dist[k]["base_n"] == 5000
 
     # guards preserved: empty baseline raises the explicit error
     from pyanomalydetector2_spark.operators.drift import drift_scores_quantile_df as dqdf
@@ -142,7 +161,8 @@ def test_drift_per_group(spark):
     )
     base = spark.createDataFrame(pd.DataFrame({"x": base_v}))
     rows = {
-        r["g"]: r for r in drift_scores(cur, base, "x", -5.0, 5.0, 20, "g").collect()
+        s["group"]: s
+        for s in drift_scores_multi(cur, base, [HistSpec("x", -5.0, 5.0, 20)], "g")
     }
     assert rows[0]["psi"] < 0.05 and rows[1]["psi"] > 0.5
     p0, k0 = numpy_psi_ks(g0, base_v, -5.0, 5.0, 20)
@@ -251,7 +271,6 @@ def test_quantile_edge_drift(spark):
 
     from pyanomalydetector2_spark.operators.drift import (
         binned_counts_edges,
-        drift_scores_quantile,
         quantile_edges,
     )
 
@@ -275,35 +294,34 @@ def test_quantile_edge_drift(spark):
     for b in range(len(edges) + 1):
         assert got.get(b, 0) == int((dig == b).sum())
 
-    s_same = drift_scores_quantile(same, base, "x", nbins=10)[0]
-    s_shift = drift_scores_quantile(shift, base, "x", nbins=10)[0]
+    s_same = _equi_depth_scores(spark, same, base, 10)[0]
+    s_shift = _equi_depth_scores(spark, shift, base, 10)[0]
     assert s_same["psi"] < 0.02 and s_same["ks"] < 0.03
     assert s_shift["psi"] > 0.3 and s_shift["ks"] > 0.2
 
 
 def test_quantile_drift_guards(spark):
-    """ADVICE r01: empty/all-null baseline raises an explicit error; a
-    near-constant baseline degrades the bins and warns."""
+    """ADVICE r01: in the suite runner's equi-depth check, an
+    empty/all-null baseline raises an explicit error; a near-constant
+    baseline degrades the bins and warns."""
     import warnings
 
     import pandas as pd
     import pytest
-
-    from pyanomalydetector2_spark.operators.drift import drift_scores_quantile
 
     cur = spark.createDataFrame(pd.DataFrame({"x": [1.0, 2.0, 3.0]}))
     empty = spark.createDataFrame(
         pd.DataFrame({"x": pd.array([None, None], dtype="Float64")})
     )
     with pytest.raises(ValueError, match="empty or all-null"):
-        drift_scores_quantile(cur, empty, "x", nbins=10)
+        _equi_depth_scores(spark, cur, empty, 10)
 
     const = spark.createDataFrame(pd.DataFrame({"x": [5.0] * 100}))
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        scores = drift_scores_quantile(cur, const, "x", nbins=10)
+        scores = _equi_depth_scores(spark, cur, const, 10)
     assert any("near-constant" in str(x.message) for x in w)
-    assert scores  # still produces a (degraded) score rather than crashing
+    assert scores[0]  # still produces a (degraded) score rather than crashing
 
 
 def test_categorical_drift_semantics(spark):

@@ -197,9 +197,11 @@ def test_drift_edges_from_persisted_sketch_incremental(spark, tmp_path):
     global KLL sketch in the catalog, derive equi-depth edges from sketch
     state (no baseline rescan), fold a new snapshot in with kll_merge, and
     verify (exact regime) the updated edges equal a from-scratch rebuild —
-    and that both equi-depth drift paths agree on those edges."""
+    and that the suite runner's equi-depth check, reading its edges from
+    that sketch state, agrees with the distributed path on those edges."""
+    from pyanomalydetector2_spark.constraints import run_suite
+    from pyanomalydetector2_spark.constraints.dsl import DriftCheck, Suite
     from pyanomalydetector2_spark.operators.drift import (
-        drift_scores_quantile,
         drift_scores_quantile_df,
         quantile_edges_from_sketch,
     )
@@ -228,14 +230,23 @@ def test_drift_edges_from_persisted_sketch_incremental(spark, tmp_path):
     expect2 = sorted({_disc_quantile(full, i / nbins) for i in range(1, nbins)})
     assert edges2 == expect2
 
-    # both equi-depth drift paths accept the precomputed edges and agree
+    # the suite reads the same edges off the merged sketch state (as its
+    # sketch_store), and the distributed path takes them precomputed: they
+    # agree
+    store = SnapshotTable(str(tmp_path / "store"))
+    store.write_snapshot(tbl.read(spark).withColumn("column", F.lit("v")))
     cur = spark.createDataFrame(pd.DataFrame({"v": rng.normal(55.0, 12.0, 2000)}))
     allb = base.unionByName(delta)
-    funnel = drift_scores_quantile(cur, allb, "v", nbins, edges=edges2)
+    res = run_suite(
+        cur.withColumn("g", F.lit(0)), allb, {},
+        Suite(drift_checks=(DriftCheck("q", "v", 0, 0, nbins=nbins, equi_depth=True),)),
+        "kll", bucket_col="g", sketch_store=store,
+    )
+    funnel = {r["metric"]: r["observed"] for r in res.verdicts.collect()}
     dist = drift_scores_quantile_df(cur, allb, "v", nbins, edges=edges2).collect()
-    assert len(funnel) == len(dist) == 1
-    assert funnel[0]["psi"] == pytest.approx(dist[0]["psi"], abs=1e-9)
-    assert funnel[0]["ks"] == pytest.approx(dist[0]["ks"], abs=1e-9)
+    assert len(funnel) == 2 and len(dist) == 1
+    assert funnel["psi"] == pytest.approx(dist[0]["psi"], abs=1e-9)
+    assert funnel["ks"] == pytest.approx(dist[0]["ks"], abs=1e-9)
 
 
 def test_edges_from_grouped_sketch_rejected(spark):

@@ -76,7 +76,6 @@ UNREACHED_DEFS = {
     "operators.dedup:near_dup_jaccard_incremental",
     "operators.dedup:pairs_from_banded",
     "operators.dedup:shingle_frame",
-    "operators.drift:drift_scores",
     "operators.image_codec:_jpeg_header_impl",
     "operators.image_codec:_paeth",
     "operators.image_codec:_png_chunk",

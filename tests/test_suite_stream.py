@@ -302,12 +302,18 @@ def test_equi_depth_stream_equals_batch(spark, tmp_path):
 def test_equi_depth_resume_keeps_pinned_edges(spark, tmp_path):
     """A resumed stream must keep the edges PINNED at first drain even if
     the sketch store moved on meanwhile — otherwise bins from different
-    edge sets would merge. The final scores must equal a one-shot funnel
-    run using the pinned edges."""
+    edge sets would merge. The final scores must equal a one-shot batch
+    run whose sketch store yields the pinned edges."""
     import json as _json
 
-    from pyanomalydetector2_spark.operators.drift import drift_scores_quantile
-    from pyanomalydetector2_spark.operators.kll import kll_build, kll_merge
+    from pyanomalydetector2_spark.operators.drift import (
+        quantile_edges_from_sketch,
+    )
+    from pyanomalydetector2_spark.operators.kll import (
+        SKETCH_FIELDS,
+        kll_build,
+        kll_merge,
+    )
     from pyanomalydetector2_spark.sources.catalog import SnapshotTable
 
     src, state = str(tmp_path / "src"), str(tmp_path / "state")
@@ -352,16 +358,26 @@ def test_equi_depth_resume_keeps_pinned_edges(spark, tmp_path):
         assert _json.load(f) == pinned  # edges survived the store change
 
     res = streaming_suite_result(spark, state, suite, base, "rs")
+    # a store still holding the first drain's sketch yields the pinned edges
+    first = SnapshotTable(str(tmp_path / "kll_first"))
+    first.write_snapshot(
+        kll_build(base, "dur_ms", (), k=8192).withColumn(
+            "column", F.lit("dur_ms")
+        )
+    )
+    assert quantile_edges_from_sketch(
+        first.read(spark).select(*SKETCH_FIELDS), 10
+    ) == pinned["dur_eq"]["edges"]
+    batch_res = run_suite(cur, base, {}, suite, "rs", sketch_store=first)
     got = {
         (r["bucket"], r["metric"]): r["observed"] for r in res.verdicts.collect()
     }
-    expect = drift_scores_quantile(
-        cur, base, "dur_ms", 10, group_col="bucket",
-        edges=[float(e) for e in pinned["dur_eq"]["edges"]],
-    )
-    for s in expect:
-        assert got[(int(s["group"]), "psi")] == pytest.approx(s["psi"], rel=1e-9)
-        assert got[(int(s["group"]), "ks")] == pytest.approx(s["ks"], rel=1e-9)
+    expect = batch_res.verdicts.collect()
+    assert len(expect) == 2 * 4  # psi and ks of every bucket
+    for r in expect:
+        assert got[(r["bucket"], r["metric"])] == pytest.approx(
+            r["observed"], rel=1e-9
+        )
     base.unpersist()
 
 
@@ -555,19 +571,25 @@ def test_compaction_refuses_uncovered_component(spark, tmp_path):
 
 
 def test_checks_sharing_a_column_stream_equals_batch(spark, tmp_path):
-    """Two UniqueChecks on one key column and two categorical drift checks
-    on one column: the key and category counts are kept once per column,
-    so the stream equals the batch run instead of doubling them (20
-    distinct ids would read as 80 duplicate-row violations)."""
+    """Two UniqueChecks on one key column, two categorical drift checks on
+    one column and two differently-binned uniform drift checks on one
+    column: key and category counts are kept once per column and drift
+    bins per check, so the stream equals the batch run instead of doubling
+    counts (20 distinct ids would read as 80 duplicate-row violations) or
+    mixing one check's bins into the other's."""
     from pyanomalydetector2_spark.constraints.dsl import UniqueCheck
 
-    schema = "clip_id string, bucket int, codec string"
+    schema = "clip_id string, bucket int, codec string, dur_ms double"
     codecs = ("wav", "flac", "mp3")
     cur = local_rows_df(
-        spark, [(f"c{i}", i % 4, codecs[i % 3]) for i in range(20)], schema
+        spark,
+        [(f"c{i}", i % 4, codecs[i % 3], 900.0 * i) for i in range(20)],
+        schema,
     )
     base = local_rows_df(
-        spark, [(f"c{i}", i % 4, codecs[i % 2]) for i in range(20)], schema
+        spark,
+        [(f"c{i}", i % 4, codecs[i % 2], 700.0 * i) for i in range(20)],
+        schema,
     )
     suite = Suite(
         unique_checks=(UniqueCheck("u1", "clip_id"), UniqueCheck("u2", "clip_id")),
@@ -575,6 +597,8 @@ def test_checks_sharing_a_column_stream_equals_batch(spark, tmp_path):
             DriftCheck("d1", "codec", 0, 0, categorical=True),
             DriftCheck("d2", "codec", 0, 0, psi_max=5.0, ks_max=1.0,
                        categorical=True),
+            DriftCheck("d25", "dur_ms", 0, 20000, nbins=25),
+            DriftCheck("d10", "dur_ms", 1000, 15000, nbins=10, psi_max=5.0),
         ),
     )
     state = str(tmp_path / "state")
@@ -583,30 +607,138 @@ def test_checks_sharing_a_column_stream_equals_batch(spark, tmp_path):
     batch_res = run_suite(cur, base, {}, suite, "dup")
     assert not batch_res.violations.collect()
     _assert_results_equal(stream_res, batch_res)
+    # each uniform check scores every bucket with its own bins
+    psi = {
+        (r["constraint_id"], r["bucket"]): r["observed"]
+        for r in batch_res.verdicts.filter("metric = 'psi'").collect()
+    }
+    assert {cid for cid, _ in psi} == {"d1", "d2", "d25", "d10"}
+    assert any(psi[("d25", b)] != psi[("d10", b)] for b in range(4))
 
 
-def test_duplicate_uniform_drift_columns_rejected():
-    """Two uniform DriftChecks on one column would merge their
-    differently-binned counts in the column-keyed hist state and silently
-    drop one check's verdicts — ensure_streamable must refuse."""
-    with pytest.raises(ValueError, match="share column"):
-        ensure_streamable(
-            Suite(
-                drift_checks=(
-                    DriftCheck("d1", "dur_ms", 0, 10000, nbins=10),
-                    DriftCheck("d2", "dur_ms", 0, 5000, nbins=20),
-                )
-            )
-        )
-    # same column is fine across MODES (state keyed by check id / category)
+def test_uniform_drift_checks_sharing_a_column_are_streamable(spark, tmp_path):
+    """Uniform drift bins are keyed by check id, so two uniform checks on
+    one column are streamable. A state dir pinned under the column-keyed
+    ``hist`` signature fails closed instead of merging its bins under the
+    new keys."""
+    import json as _json
+
     ensure_streamable(
         Suite(
             drift_checks=(
                 DriftCheck("d1", "dur_ms", 0, 10000, nbins=10),
+                DriftCheck("d2", "dur_ms", 0, 5000, nbins=20),
                 DriftCheck("d3", "dur_ms", 0, 0, nbins=15, equi_depth=True),
             )
         )
     )
+    suite = Suite(drift_checks=(DriftCheck("d1", "dur_ms", 0, 10000, nbins=10),))
+    cur = local_rows_df(
+        spark, [(f"c{i}", i % 2, 300.0 * i) for i in range(20)],
+        "clip_id string, bucket int, dur_ms double",
+    )
+    state = str(tmp_path / "state")
+    process_suite_batch(cur, 0, state, suite, None, "hist")
+    manifest = f"{state}/suite_manifest.json"
+    with open(manifest) as f:
+        pinned = _json.load(f)
+    assert pinned["hist"] == [["d1", "dur_ms", 0.0, 10000.0, 10]]
+    pinned["hist"] = [["dur_ms", 0.0, 10000.0, 10]]  # the column-keyed form
+    with open(manifest, "w") as f:
+        _json.dump(pinned, f)
+    with pytest.raises(ValueError, match=r"signature changed.*\['hist'\]"):
+        streaming_suite_result(spark, state, suite, cur, "hist")
+
+
+def test_row_check_text_change_fails_closed(spark, tmp_path):
+    """The violations state stores each row check's observed and expected
+    text, so the manifest pins them: a drain with a changed ``observed``
+    or ``expected`` raises instead of reporting the old text."""
+    from pyanomalydetector2_spark.constraints.dsl import RowCheck
+
+    cur = local_rows_df(
+        spark, [(f"c{i}", i % 2, float(i - 1)) for i in range(10)],
+        "clip_id string, bucket int, dur_ms double",
+    )
+    pinned = RowCheck("pos", "dur_ms > 0", "cast(dur_ms as string)", "dur_ms > 0")
+    state = str(tmp_path / "state")
+    process_suite_batch(cur, 0, state, Suite(row_checks=(pinned,)), None, "rt")
+    for changed in (
+        RowCheck("pos", "dur_ms > 0", "concat('dur=', cast(dur_ms as string))",
+                 "dur_ms > 0"),
+        RowCheck("pos", "dur_ms > 0", "cast(dur_ms as string)",
+                 "positive duration"),
+    ):
+        with pytest.raises(ValueError, match="signature changed.*violations"):
+            streaming_suite_result(
+                spark, state, Suite(row_checks=(changed,)), None, "rt"
+            )
+    res = streaming_suite_result(spark, state, Suite(row_checks=(pinned,)), None, "rt")
+    assert sorted(r["observed"] for r in res.violations.collect()) == ["-1.0", "0.0"]
+
+
+def _copy_checks(suite: Suite) -> Suite:
+    """``suite`` plus a copy of every check under the id ``<id>__copy``."""
+    import dataclasses
+
+    return dataclasses.replace(
+        suite,
+        **{
+            f.name: getattr(suite, f.name) + tuple(
+                dataclasses.replace(c, constraint_id=f"{c.constraint_id}__copy")
+                for c in getattr(suite, f.name)
+            )
+            for f in dataclasses.fields(suite)
+        },
+    )
+
+
+def _result_rows(res) -> list[tuple]:
+    """Violation and verdict rows as comparable tuples (NaN observed → None)."""
+    import math
+
+    vio = [
+        ("violation", r["bucket"], r["constraint_id"], r["clip_id"],
+         r["observed"], r["expected"])
+        for r in res.violations.collect()
+    ]
+    ver = [
+        ("verdict", r["bucket"], r["constraint_id"], r["metric"],
+         None if math.isnan(r["observed"]) else r["observed"],
+         r["threshold"], r["passed"], r["violation_cnt"])
+        for r in res.verdicts.collect()
+    ]
+    return sorted(vio + ver, key=repr)
+
+
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+def test_check_duplication_leaves_verdicts_unchanged(spark, tmp_path, engine):
+    """Metamorphic gate: copying every check of the default suite under a
+    new id leaves every original's verdict and violation rows unchanged,
+    and each copy's rows equal its original's under the new id — in the
+    batch runner and in the stream over two micro-batches."""
+    cur = clips_table(spark, 240, planted=True, n_buckets=4).cache()
+    base = clips_table(spark, 240, planted=False, n_buckets=4).cache()
+    dims = {"dim_codec": dim_codec(spark), "dim_sr": dim_sr(spark)}
+    suite = default_clips_suite()
+
+    def run(s: Suite, tag: str):
+        if engine == "batch":
+            return run_suite(cur, base, dims, s, "dupgate")
+        state = str(tmp_path / tag)
+        for i, half in enumerate(
+            (cur.filter("crc32(clip_id) % 2 = 0"),
+             cur.filter("crc32(clip_id) % 2 = 1"))
+        ):
+            process_suite_batch(half, i, state, s, dims, "dupgate")
+        return streaming_suite_result(spark, state, s, base, "dupgate")
+
+    orig = _result_rows(run(suite, "orig"))
+    dup = _result_rows(run(_copy_checks(suite), "dup"))
+    copies = [r[:2] + (f"{r[2]}__copy",) + r[3:] for r in orig]
+    assert orig and dup == sorted(orig + copies, key=repr)
+    cur.unpersist()
+    base.unpersist()
 
 
 def test_all_null_percentile_column_drains_to_failed_verdict(
@@ -665,14 +797,16 @@ def test_result_unpersist_releases_every_cache(spark, tmp_path, engine):
 
 
 @pytest.mark.parametrize("engine", ["batch", "stream"])
-@pytest.mark.parametrize("kind", ["uniform", "categorical"])
+@pytest.mark.parametrize("kind", ["uniform", "categorical", "equi_depth"])
 def test_all_null_current_drift_column_produces_no_score(
     spark, tmp_path, engine, kind
 ):
     """A drift column that is all-null in the current rows has nothing to
-    score: both engines raise instead of passing vacuously, for uniform
-    and categorical drift alike (the stream reads empty hist/cats
-    deltas)."""
+    score: both engines raise instead of passing vacuously, for uniform,
+    categorical and equi-depth drift alike (the stream reads empty
+    hist/cats/ehist deltas)."""
+    import json as _json
+
     schema = "clip_id string, bucket int, codec string, dur_ms double"
     cur = local_rows_df(
         spark, [(f"c{i}", i % 2, None, None) for i in range(40)], schema
@@ -682,17 +816,22 @@ def test_all_null_current_drift_column_produces_no_score(
         [(f"c{i}", i % 2, ("wav", "flac")[i % 2], 500.0 * i) for i in range(40)],
         schema,
     )
-    check = (
-        DriftCheck("d", "codec", 0.0, 0.0, categorical=True)
-        if kind == "categorical"
-        else DriftCheck("d", "dur_ms", 0.0, 20000.0, nbins=10)
-    )
+    check = {
+        "categorical": DriftCheck("d", "codec", 0.0, 0.0, categorical=True),
+        "uniform": DriftCheck("d", "dur_ms", 0.0, 20000.0, nbins=10),
+        "equi_depth": DriftCheck("d", "dur_ms", 0, 0, nbins=4, equi_depth=True),
+    }[kind]
     suite = Suite(drift_checks=(check,))
     if engine == "batch":
         with pytest.raises(ValueError, match="produced no score"):
             run_suite(cur, base, {}, suite, "nul")
     else:
         state = str(tmp_path / "state")
-        process_suite_batch(cur, 0, state, suite, None, "nul")
+        # equi-depth edges as a stream pins them
+        edges = {"d": {"column": "dur_ms", "edges": [5000.0, 10000.0, 15000.0]}}
+        os.makedirs(state)
+        with open(f"{state}/equi_edges.json", "w") as f:
+            _json.dump(edges, f)
+        process_suite_batch(cur, 0, state, suite, None, "nul", equi_edges=edges)
         with pytest.raises(ValueError, match="produced no score"):
             streaming_suite_result(spark, state, suite, base, "nul")
