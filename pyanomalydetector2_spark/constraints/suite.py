@@ -2,28 +2,35 @@
 violation rows out, checkpoint/resume at partition-bucket granularity.
 
 Execution shape (the scale story):
-- ALL row checks ride ONE scan: each predicate compiles to a struct-in-array
-  element, failures explode into violation rows. The decoded-PCM invariant
-  columns are attached by a single Arrow-batched UDF pass; ``bytes`` is never
-  read by any other family (column pruning).
-- Stat/drift/uniqueness/referential checks run directly against the source
+- ALL row checks and referential checks ride ONE scan: each predicate
+  compiles to a struct-in-array element, failures explode into violation
+  rows. A referential check is a membership predicate over its dim column,
+  collected once per call (dims are tiny by contract). The decoded-PCM
+  invariant columns are attached by a single Arrow-batched UDF pass;
+  ``bytes`` is never read by any other family (column pruning).
+- Every per-bucket summary — row counts, the moment partial, drift bin
+  counts per (check, bucket), category counts per (column, bucket) and
+  the bucket-key HLL screen — comes from ONE plan that the driver
+  collects once (``suite_summary``; ``split_summary`` shapes its rows).
+  The baseline's bins and categories come from the same builder, without
+  grouping, in one more job.
+- Uniqueness, FD and reconcile checks run directly against the source
   table with COLUMN-PRUNED scans (no cache): measured on this hardware, a
   pruned parquet re-scan is ~10× cheaper than building + reading a
-  deserialized in-memory cache of all columns, and at 100 TB the same holds
-  more strongly — each family's scan reads only its own few columns.
-- Both engines share one per-batch state builder, ``suite_state_frames``:
-  row and referential violations, the moment partial, percentile KLL
-  sketches, drift bin counts per (check, bucket) and category counts per
-  (column, bucket). The streaming suite writes those frames per
-  micro-batch; after the one job that counts the buckets, this runner
-  collects them, the row-scale violation counts and the baseline side
-  (``baseline_collects``), each in its own thread as concurrent Spark jobs
-  (``functions.collect_concurrently``, which keeps the caller's job
-  group) — the same driver-side funnel the reference uses for survivor
-  sets (detect_anomalies.py:79-96). ``suite_verdict_rows`` merges that
-  small state and scores it into verdict rows for both engines, so the
-  verdict and drift arithmetic has one definition. All heavy lifting
-  stays distributed; the verdicts come back as one driver-local frame.
+  deserialized in-memory cache of all columns, and at 100 TB the same
+  holds more strongly — each family's scan reads only its own few columns.
+- Both engines share the builders: ``suite_summary`` and
+  ``suite_state_frames`` (violations and percentile KLL sketches). The
+  streaming suite writes that state per micro-batch; this runner collects
+  the summary, the row-scale violation counts, the sketches and the
+  baseline side (``baseline_collects``), each in its own thread as
+  concurrent Spark jobs (``functions.collect_concurrently``, which keeps
+  the caller's job group), with no job ahead of them on a fresh run — the
+  same driver-side funnel the reference uses for survivor sets
+  (detect_anomalies.py:79-96). ``suite_verdict_rows`` merges that small
+  state and scores it into verdict rows for both engines, so the verdict
+  and drift arithmetic has one definition. All heavy lifting stays
+  distributed; the verdicts come back as one driver-local frame.
 
 Violation rows mirror the reference's anomalies upsert contract
 (models/anomalies.py:9,59-79 → FIXTURES.md §B3).
@@ -47,23 +54,24 @@ from pyanomalydetector2_spark.constraints.dsl import Suite, parse_percentile_sta
 from pyanomalydetector2_spark.operators.audio import with_audio_invariants
 from pyanomalydetector2_spark.operators.drift import (
     HistSpec,
+    _finite,
     _validated_edges,
-    binned_counts_edges,
-    categorical_counts,
     categorical_scores,
-    histogram_counts_df,
+    edges_bin_expr,
     psi_ks,
+    width_bin,
 )
 from pyanomalydetector2_spark.operators.integrity import (
     fd_det_repr,
     fd_observed,
     fd_violations,
-    referential_violations,
+    referential_predicate,
 )
 from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
 from pyanomalydetector2_spark.operators.stats import (
-    column_profile_partial,
+    PARTIAL_FIELDS,
     profile_from_partial_rows,
+    profile_partial_aggs,
 )
 from pyanomalydetector2_spark.operators.uniqueness import duplicate_rows
 from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
@@ -98,9 +106,10 @@ VERDICT_SCHEMA = T.StructType(
     ]
 )
 
-# the declared schema of each per-batch state component that
-# ``suite_state_frames`` builds for both engines (drift bins are keyed by
-# check id, category counts by column)
+# the declared schema of each per-batch state component of both engines:
+# ``suite_state_frames`` builds the violations and sketches,
+# ``split_summary`` shapes the rest (drift bins are keyed by check id,
+# category counts by column)
 STATE_SCHEMAS = {
     "violations": VIOLATION_SCHEMA,
     "profile": (
@@ -146,20 +155,24 @@ class SuiteResult:
 
 
 def _row_check_violations(
-    base: DataFrame, suite: Suite, run_id: str, key_col: str, bucket_col: str
+    base: DataFrame, checks: list[tuple], run_id: str, key_col: str,
+    bucket_col: str,
 ) -> DataFrame:
+    """Violation rows of ``checks``, (constraint id, predicate, observed,
+    expected text) each, from one scan of ``base``: every predicate is one
+    element of a struct array, and the failures explode into rows."""
     elems = []
-    for c in suite.row_checks:
-        fails = ~F.coalesce(F.expr(c.predicate), F.lit(False))  # NULL pred → fail
+    for cid, predicate, observed, expected in checks:
+        fails = ~F.coalesce(predicate, F.lit(False))  # NULL pred → fail
         elems.append(
             F.when(
                 fails,
                 F.struct(
-                    F.lit(c.constraint_id).alias("constraint_id"),
-                    F.coalesce(F.expr(c.observed).cast("string"), F.lit("NULL")).alias(
+                    F.lit(cid).alias("constraint_id"),
+                    F.coalesce(observed.cast("string"), F.lit("NULL")).alias(
                         "observed"
                     ),
-                    F.lit(c.expected).alias("expected"),
+                    F.lit(expected).alias("expected"),
                 ),
             )
         )
@@ -228,12 +241,12 @@ def row_check_base(current: DataFrame, suite: Suite) -> DataFrame:
 
 def suite_components(suite: Suite) -> dict[str, list]:
     """The state components a suite needs, each with the state-shaping
-    definitions its rows are built from. ``suite_state_frames`` builds the
-    shared components, the streaming suite adds ``ids``, ``fdpairs`` and
-    ``recon``, pins this map in its manifest and reads exactly these
-    components. Thresholds are finalizer arithmetic, not state, so they
-    are not part of it. Distributed drift keeps no state: it is scored in
-    Spark by the batch runner."""
+    definitions its rows are built from. ``suite_summary`` and
+    ``suite_state_frames`` build the shared components, the streaming
+    suite adds ``ids``, ``fdpairs`` and ``recon``, pins this map in its
+    manifest and reads exactly these components. Thresholds are finalizer
+    arithmetic, not state, so they are not part of it. Distributed drift
+    keeps no state: it is scored in Spark by the batch runner."""
     def columns(checks) -> list[str]:
         return sorted({c.column for c in checks})
 
@@ -272,10 +285,6 @@ def suite_components(suite: Suite) -> dict[str, list]:
     return {k: v for k, v in comps.items() if v}
 
 
-def _hist_specs(comps: dict) -> dict[str, HistSpec]:
-    return {cid: HistSpec(col, lo, hi, nb) for cid, col, lo, hi, nb in comps["hist"]}
-
-
 def suite_state_frames(
     df: DataFrame,
     suite: Suite,
@@ -283,86 +292,148 @@ def suite_state_frames(
     run_id: str,
     key_col: str,
     bucket_col: str,
-    equi_edges,
 ) -> dict:
-    """The suite's mergeable state over ``df`` as {component: build},
-    where ``build()`` returns the component's frame conformed to its
-    ``STATE_SCHEMAS`` entry: row and referential ``violations``, the
-    moment ``profile`` partial, percentile ``ksketch`` rows, bin counts
-    per (check id, bucket) — ``hist`` for every uniform check from one
-    explode pass, ``ehist`` over each equi-depth check's edges — and
-    ``cats`` category counts per (column, bucket). The streaming suite
-    writes these frames per micro-batch and the batch runner collects
-    them; both hand the rows to ``suite_verdict_rows``. Each engine calls
-    the builders inside its concurrent fan-out, because building a plan
-    is 0.1–0.2 s of driver-side analysis per component. ``equi_edges`` is
-    called for the check id → edges map when ``ehist`` is built (the
-    batch runner resolves its edges inside the fan-out); without it
-    ``ehist`` is left out."""
+    """The suite's row-scale and sketch state over ``df`` as {component:
+    build}, where ``build()`` returns the component's frame conformed to
+    its ``STATE_SCHEMAS`` entry: ``violations`` of the row and referential
+    checks from one scan (a referential check is a membership predicate
+    over its dim column, collected once per call) and percentile
+    ``ksketch`` rows. The per-bucket counts, moments, bins and categories
+    come from ``suite_summary``. The streaming suite writes these frames
+    per micro-batch and the batch runner collects them; each engine calls
+    the builders inside its concurrent fan-out, because building a plan is
+    0.1–0.2 s of driver-side analysis per component."""
     comps = suite_components(suite)
-    bucket = F.col(bucket_col).cast("int")
 
     def violations() -> DataFrame:
-        parts = [
-            referential_violations(
-                df, c.column, dims[c.dim_name], keep_cols=[key_col, bucket_col]
-            ).select(
-                F.lit(run_id).alias("run_id"),
-                bucket.alias("bucket"),
-                F.col(key_col).alias("clip_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                F.col(c.column).cast("string").alias("observed"),
-                F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
-            )
-            for c in suite.ref_checks
+        checks = [
+            (c.constraint_id, F.expr(c.predicate), F.expr(c.observed), c.expected)
+            for c in suite.row_checks
         ]
-        if suite.row_checks:
-            parts.insert(0, _row_check_violations(
-                row_check_base(df, suite), suite, run_id, key_col, bucket_col
+        members: dict[tuple, object] = {}
+        for c in suite.ref_checks:
+            key = (c.dim_name, c.column)
+            if key not in members:
+                members[key] = referential_predicate(c.column, dims[c.dim_name])
+            checks.append((
+                c.constraint_id, members[key], F.col(c.column),
+                f"{c.column} in {c.dim_name}",
             ))
-        return reduce(DataFrame.unionByName, parts)
-
-    def profile() -> DataFrame:
-        return column_profile_partial(
-            df, comps["profile"], [bucket_col]
-        ).withColumn("bucket", bucket)
+        return _row_check_violations(
+            row_check_base(df, suite), checks, run_id, key_col, bucket_col
+        )
 
     def ksketch() -> DataFrame:
         return percentile_sketches(df, comps["ksketch"], bucket_col)
 
-    def hist() -> DataFrame:
-        return histogram_counts_df(
-            df, _hist_specs(comps), bucket_col
-        ).withColumnRenamed("c", "cid")
-
-    def ehist() -> DataFrame:
-        edges = equi_edges()
-        return reduce(DataFrame.unionByName, [
-            binned_counts_edges(df, col, edges[cid], bucket_col).select(
-                F.lit(cid).alias("cid"), F.col(bucket_col).alias("g"),
-                F.col("bin").alias("b"), "n",
-            )
-            for cid, col in comps["ehist"]
-        ])
-
-    def cats() -> DataFrame:
-        return reduce(DataFrame.unionByName, [
-            categorical_counts(df, col, bucket_col).select(
-                F.lit(col).alias("column"), F.col(bucket_col).alias("bucket"),
-                "cat", "cur_cat_n",
-            )
-            for col in comps["cats"]
-        ])
-
-    builders = {
-        "violations": violations, "profile": profile, "ksketch": ksketch,
-        "hist": hist, "ehist": ehist, "cats": cats,
-    }
+    builders = {"violations": violations, "ksketch": ksketch}
     return {
         comp: lambda comp=comp, build=build: conform(build(), STATE_SCHEMAS[comp])
         for comp, build in builders.items()
-        if comp in comps and (comp != "ehist" or equi_edges is not None)
+        if comp in comps
     }
+
+
+def _summary_element(cond, comp: str, key: str, b=None, cat=None):
+    """One element of the summary's bin and category explode, where
+    ``cond`` holds: a drift bin of a check (``hist``/``ehist``, keyed by
+    check id) or a category of a column (``cats``)."""
+    return F.when(cond, F.struct(
+        F.lit(comp).alias("comp"),
+        F.lit(key).alias("key"),
+        (F.lit(None) if b is None else b).cast("int").alias("b"),
+        (F.lit(None) if cat is None else cat).cast("string").alias("cat"),
+    ))
+
+
+def suite_summary(
+    df: DataFrame,
+    suite: Suite,
+    group_col: str | None,
+    equi_edges,
+    hll_columns: list[str] = (),
+) -> DataFrame:
+    """Every per-group summary of ``df`` that the suite's verdicts read, as
+    ONE plan for the driver to collect once (``split_summary`` shapes the
+    rows). With a ``group_col``, one grouped aggregate yields each group's
+    row count, the moment partial of every ``profile`` column and the HLL
+    estimate over the string cast of each ``hll_columns`` column. In the
+    same plan, one explode + aggregate yields the drift bin counts per
+    (check id, group) — ``hist`` for the uniform checks, ``ehist`` over
+    each equi-depth check's edges (``equi_edges()``; without it ``ehist``
+    is left out) — and the category counts per (column, group). Without a
+    group column (the baseline side) only bins and categories are counted.
+    Counts are integers, so partial summaries add up exactly."""
+    comps = suite_components(suite)
+    g = (F.col(group_col) if group_col else F.lit(None)).cast("int").alias("g")
+    elems = []
+    for cid, col, lo, hi, nb in comps.get("hist", []):
+        b = width_bin(HistSpec(col, lo, hi, nb))
+        elems.append(_summary_element(b.isNotNull(), "hist", cid, b=b))
+    if "ehist" in comps and equi_edges is not None:
+        edges = equi_edges()
+        elems += [
+            _summary_element(
+                _finite(col), "ehist", cid, b=edges_bin_expr(col, edges[cid])
+            )
+            for cid, col in comps["ehist"]
+        ]
+    elems += [
+        _summary_element(F.col(col).isNotNull(), "cats", col, cat=F.col(col))
+        for col in comps.get("cats", [])
+    ]
+    parts = []
+    if group_col:
+        parts.append(df.groupBy(g).agg(
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.approx_count_distinct(F.col(c).cast("string"), 0.02).alias(
+                    f"{c}__hll"
+                )
+                for c in hll_columns
+            ],
+            *profile_partial_aggs(comps.get("profile", [])),
+        ))
+    if elems:
+        parts.append(
+            df.select(g, F.explode(F.array_compact(F.array(*elems))).alias("e"))
+            .groupBy("g", "e")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    )
+
+
+def split_summary(rows, suite: Suite, hll_columns: list[str] = ()) -> dict:
+    """Collected ``suite_summary`` rows as {component: rows}: ``profile``,
+    ``hist``, ``ehist`` and ``cats`` in their ``STATE_SCHEMAS`` row shapes,
+    ``buckets`` rows (bucket, n), and ``hll`` as column → the sum of its
+    per-group estimates."""
+    profile_cols = suite_components(suite).get("profile", [])
+    out: dict = {
+        "buckets": [], "hll": {}, "profile": [], "hist": [], "ehist": [],
+        "cats": [],
+    }
+    for r in rows:
+        r = r.asDict()
+        e, g, n = r.get("e"), r["g"], r["n"]
+        if e is None:
+            out["buckets"].append({"bucket": g, "n": n})
+            for c in hll_columns:
+                out["hll"][c] = out["hll"].get(c, 0) + r[f"{c}__hll"]
+            out["profile"] += [
+                {"bucket": g, "column": c,
+                 **{f: r[f"{c}__{f}"] for f in PARTIAL_FIELDS}}
+                for c in profile_cols
+            ]
+        elif e["comp"] == "cats":
+            out["cats"].append(
+                {"column": e["key"], "bucket": g, "cat": e["cat"], "cur_cat_n": n}
+            )
+        else:
+            out[e["comp"]].append({"cid": e["key"], "g": g, "b": e["b"], "n": n})
+    return out
 
 
 def baseline_collects(
@@ -370,46 +441,41 @@ def baseline_collects(
 ) -> dict:
     """The baseline side of a suite run as {key: callable}, for either
     engine's concurrent fan-out; ``suite_verdict_rows`` reads the results.
-    Each callable returns its part of one of three maps: ``buckets``
-    (bucket → rows, the reconcile rate denominators), ``bins`` (check id →
-    global bin counts: every uniform check from one histogram pass, each
-    equi-depth check over its edges) and ``cats`` (column → {category:
+    Each callable returns part of the baseline map: ``buckets`` (bucket →
+    rows, the reconcile rate denominators) from one job, and from one
+    ungrouped ``suite_summary`` job ``bins`` (check id → global bin
+    counts, uniform and equi-depth) and ``cats`` (column → {category:
     count}). ``equi_edges`` is called for the check id → edges map, so the
     batch runner resolves edges inside its fan-out."""
     comps = suite_components(suite)
     out: dict = {}
     if "recon" in comps:
-        out[("buckets",)] = lambda: {
+        out[("baseline", "buckets")] = lambda: {"buckets": {
             r["bucket"]: r["count"]
             for r in baseline.groupBy(
                 F.col(bucket_col).cast("int").alias("bucket")
             ).count().collect()
-        }
-    if "hist" in comps:
-        def _uniform() -> dict:
-            bins = {cid: np.zeros(nb + 2, np.int64)
-                    for cid, _, _, _, nb in comps["hist"]}
-            for r in histogram_counts_df(
-                baseline, _hist_specs(comps), None
-            ).collect():
-                bins[r["c"]][r["b"]] = r["n"]
-            return bins
-
-        out[("bins",)] = _uniform
-    for cid, col in comps.get("ehist", []):
-        def _equi(cid=cid, col=col) -> dict:
-            edges = equi_edges()[cid]
-            arr = np.zeros(len(edges) + 1, np.int64)
-            for r in binned_counts_edges(baseline, col, edges, None).collect():
-                arr[r["bin"]] = r["n"]
-            return {cid: arr}
-
-        out[("bins", cid)] = _equi
-    for col in comps.get("cats", []):
-        out[("cats", col)] = lambda col=col: {col: {
-            r["cat"]: r["cur_cat_n"]
-            for r in categorical_counts(baseline, col).collect()
         }}
+    if {"hist", "ehist", "cats"} & set(comps):
+        def _summary() -> dict:
+            edges = equi_edges() if "ehist" in comps else {}
+            bins = {
+                **{cid: np.zeros(nb + 2, np.int64)
+                   for cid, _, _, _, nb in comps.get("hist", [])},
+                **{cid: np.zeros(len(edges[cid]) + 1, np.int64)
+                   for cid, _ in comps.get("ehist", [])},
+            }
+            cats: dict = {col: {} for col in comps.get("cats", [])}
+            part = split_summary(
+                suite_summary(baseline, suite, None, equi_edges).collect(), suite
+            )
+            for r in part["hist"] + part["ehist"]:
+                bins[r["cid"]][r["b"]] = r["n"]
+            for r in part["cats"]:
+                cats[r["column"]][r["cat"]] = r["cur_cat_n"]
+            return {"bins": bins, "cats": cats}
+
+        out[("baseline", "summary")] = _summary
     return out
 
 
@@ -655,7 +721,7 @@ def suite_verdict_rows(
       UniqueCheck, bucket -1);
     - ``violation_counts``: ``violation_counts_frame`` rows;
     - ``state``: component → rows of the ``profile``, ``ksketch``,
-      ``hist``, ``ehist`` and ``cats`` components (``suite_state_frames``
+      ``hist``, ``ehist`` and ``cats`` components (``STATE_SCHEMAS``
       shapes), any number of partial rows per key: they merge here, moment
       partials and count rows by addition, sketch rows in the order given;
     - ``baseline``: the results of ``baseline_collects``' callables;
@@ -673,8 +739,8 @@ def suite_verdict_rows(
         if r["kind"] is not None:
             kind_counts[(r["constraint_id"], r["bucket"], r["kind"])] = r["count"]
     base: dict[str, dict] = {"buckets": {}, "bins": {}, "cats": {}}
-    for (comp, *_), part in baseline.items():
-        base[comp].update(part)
+    for part in baseline.values():
+        base.update(part)
     rows: list[tuple] = [
         (run_id, -1, c.constraint_id, "hll_approx_distinct",
          float(hll.get(c.column, 0)), float(row_count), True, 0)
@@ -876,32 +942,8 @@ def run_suite(
     skipped: list[int] = []
     if checkpoint is not None:
         skipped = checkpoint.committed_buckets(run_id)
-        if skipped:
-            current = current.filter(~F.col(bucket_col).isin(skipped))
 
-    # ONE aggregation job yields the bucket list, the row count, AND the
-    # per-bucket HLL distinct estimates for bucket-key checks (bucket =
-    # hash(key) % B ⇒ key duplicates co-locate ⇒ global distinct = Σ
-    # per-bucket distinct for key_col ONLY — other columns get a global
-    # sketch below).
-    # HLL over the STRING-CAST key (injective for atomic types, so the
-    # distinct count is unchanged) — the streaming suite stores keys
-    # string-cast in its ids state and recomputes this screen from them,
-    # and feeding HLL++ the same hash inputs keeps the two engines'
-    # estimates bit-identical at EVERY cardinality, not just inside the
-    # sparse-exact regime.
-    hll_aggs = [
-        F.approx_count_distinct(F.col(c.column).cast("string"), 0.02).alias(
-            f"_hll_{i}"
-        )
-        for i, c in enumerate(suite.unique_checks)
-    ]
-    brows = current.groupBy(bucket_col).agg(
-        F.count(F.lit(1)).alias("_n"), *hll_aggs
-    ).collect()
-    buckets = sorted(int(r[bucket_col]) for r in brows)
-    row_count = sum(r["_n"] for r in brows)
-    if not buckets:  # everything committed already — idempotent no-op
+    def empty_result() -> SuiteResult:
         return SuiteResult(
             run_id,
             empty_frame(spark, VERDICT_SCHEMA),
@@ -909,7 +951,18 @@ def run_suite(
             [], skipped, 0, 0.0,
         )
 
-    # ---- every family reduces to a small aggregate — the suite state
+    if skipped:
+        current = current.filter(~F.col(bucket_col).isin(skipped))
+        # a resume counts its remaining buckets first, in one job, so a
+        # no-op resume (everything committed already) returns before any
+        # family plan is built; a fresh run reads its buckets off the
+        # summary instead, with no job ahead of the fan-out
+        if not current.groupBy(bucket_col).count().collect():
+            return empty_result()
+
+    # ---- every family reduces to a small aggregate — the per-bucket
+    # summary (``suite_summary``: bucket rows, moments, bins, categories
+    # and the bucket-key HLL in one plan), the violation and sketch state
     # (``suite_state_frames``), violation counts per (bucket, constraint),
     # the baseline side (``baseline_collects``) — and each is built and
     # collected in its own thread, as concurrent jobs: the wall is the
@@ -925,10 +978,18 @@ def run_suite(
     distributed = [
         c for c in suite.drift_checks if c.distributed and not c.categorical
     ]
-    # Σ per-bucket distinct is exact ONLY for the bucket key itself
-    # (bucket = hash(key_col) co-locates each key in one bucket); any other
-    # column appears in every bucket and the sum would overcount by up to
-    # ×n_buckets — those checks get a global sketch in one extra tiny agg
+    # The summary's per-bucket HLL estimates screen the bucket key: bucket
+    # = hash(key) % B ⇒ key duplicates co-locate ⇒ global distinct = Σ
+    # per-bucket distinct, for key_col ONLY. Any other column appears in
+    # every bucket and the sum would overcount by up to ×n_buckets — those
+    # checks get a global sketch in one extra tiny agg.
+    # HLL runs over the STRING-CAST key (injective for atomic types, so the
+    # distinct count is unchanged) — the streaming suite stores keys
+    # string-cast in its ids state and recomputes this screen from them,
+    # and feeding HLL++ the same hash inputs keeps the two engines'
+    # estimates bit-identical at EVERY cardinality, not just inside the
+    # sparse-exact regime.
+    key_hll = sorted({c.column for c in suite.unique_checks} & {key_col})
     non_key = [
         i for i, c in enumerate(suite.unique_checks) if c.column != key_col
     ]
@@ -1000,9 +1061,7 @@ def run_suite(
             ).collect()
         ]
 
-    builds = suite_state_frames(
-        current, suite, dims, run_id, key_col, bucket_col, _equi_edges
-    )
+    builds = suite_state_frames(current, suite, dims, run_id, key_col, bucket_col)
 
     def _violations() -> tuple:
         # the collect of the counts also materializes the violations cache
@@ -1013,7 +1072,12 @@ def run_suite(
         ).cache()
         return violations, violation_counts_frame(violations, suite).collect()
 
-    entries = {"violations": _violations}
+    entries = {
+        "summary": lambda: suite_summary(
+            current, suite, bucket_col, _equi_edges, key_hll
+        ).collect(),
+        "violations": _violations,
+    }
     if non_key:
         entries["hll"] = lambda: current.agg(
             *[
@@ -1023,33 +1087,39 @@ def run_suite(
                 for i in non_key
             ]
         ).first()
-    for comp, build in builds.items():
-        if comp != "violations":
-            entries[comp] = lambda build=build: build().collect()
+    if "ksketch" in builds:
+        entries["ksketch"] = lambda: builds["ksketch"]().collect()
     for i, c in enumerate(distributed):
         entries[("distributed", i)] = lambda c=c: _distributed_scores(c)
     base_entries = baseline_collects(baseline, suite, bucket_col, _equi_edges)
     got = collect_concurrently(spark, {**entries, **base_entries})
 
     violations, violation_counts = got["violations"]
+    summary = split_summary(got["summary"], suite, key_hll)
+    bucket_rows = {int(r["bucket"]): int(r["n"]) for r in summary["buckets"]}
+    buckets = sorted(bucket_rows)
+    row_count = sum(bucket_rows.values())
+    if not buckets:  # a fresh run over an empty current
+        violations.unpersist()
+        return empty_result()
     hll = {
         c.column: (
-            sum(r[f"_hll_{i}"] for r in brows)
+            summary["hll"][c.column]
             if c.column == key_col
             else got["hll"][f"_g_{i}"]
         )
         for i, c in enumerate(suite.unique_checks)
     }
     base_side = {k: got[k] for k in base_entries}
-    if skipped and ("buckets",) in base_side:
+    if skipped and ("baseline", "buckets") in base_side:
         # a resume's reconcile rates cover the buckets its diff covers
-        base_side[("buckets",)] = {
-            b: n for b, n in base_side[("buckets",)].items()
+        base_side[("baseline", "buckets")] = {"buckets": {
+            b: n for b, n in base_side[("baseline", "buckets")]["buckets"].items()
             if b is not None and b not in skipped
-        }
+        }}
     verdict_rows = suite_verdict_rows(
         suite, run_id, buckets, row_count, hll, violation_counts,
-        {c: got[c] for c in STATE_SCHEMAS if c in got and c != "violations"},
+        {**summary, "ksketch": got.get("ksketch", ())},
         base_side,
         [s for i in range(len(distributed)) for s in got[("distributed", i)]],
     )
@@ -1064,7 +1134,7 @@ def run_suite(
         row_count,
         time.time() - t0,
         cached=(violations,),
-        bucket_rows={int(r[bucket_col]): int(r["_n"]) for r in brows},
+        bucket_rows=bucket_rows,
     )
     if checkpoint is not None and commit:
         commit_checkpoint(result, checkpoint)

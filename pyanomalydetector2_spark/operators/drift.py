@@ -39,6 +39,19 @@ class HistSpec:
     nbins: int
 
 
+def width_bin(s: HistSpec):
+    """The uniform bin of ``s.column``: ``width_bucket`` over [lo, hi) in
+    ``nbins`` bins, 0 below and nbins+1 above; NULL for a NULL or NaN
+    value, which no histogram counts."""
+    return F.when(
+        F.col(s.column).isNotNull(),
+        F.width_bucket(
+            F.col(s.column).cast("double"), F.lit(s.lo), F.lit(s.hi),
+            F.lit(s.nbins),
+        ),
+    )
+
+
 def histogram_counts_df(
     df: DataFrame, specs: dict[str, HistSpec], group_col: str | None = None
 ) -> DataFrame:
@@ -50,18 +63,7 @@ def histogram_counts_df(
     micro-batch and sums across batches, which reproduces the one-shot
     histogram bit-for-bit."""
     entries = [
-        F.struct(
-            F.lit(key).alias("c"),
-            F.when(
-                F.col(s.column).isNotNull(),
-                F.width_bucket(
-                    F.col(s.column).cast("double"),
-                    F.lit(s.lo),
-                    F.lit(s.hi),
-                    F.lit(s.nbins),
-                ),
-            ).alias("b"),
-        )
+        F.struct(F.lit(key).alias("c"), width_bin(s).alias("b"))
         for key, s in specs.items()
     ]
     gsel = [F.col(group_col).alias("g")] if group_col else [F.lit(None).cast("int").alias("g")]
@@ -245,23 +247,6 @@ def edges_bin_expr(column: str, edges: list[float]):
     for i in range(len(edges) - 1, -1, -1):
         binc = F.when(v <= F.lit(edges[i]), F.lit(i)).otherwise(binc)
     return binc
-
-
-def binned_counts_edges(
-    df: DataFrame,
-    column: str,
-    edges: list[float],
-    group_col: str | None = None,
-) -> DataFrame:
-    """Histogram counts over ARBITRARY ascending edges (see edges_bin_expr)."""
-    binc = edges_bin_expr(column, edges)
-    keys = ([group_col] if group_col else []) + ["bin"]
-    return (
-        df.filter(_finite(column))
-        .select(*(([group_col] if group_col else []) + [binc.alias("bin")]))
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 def uniform_bin(column: str, lo: float, hi: float, nbins: int):

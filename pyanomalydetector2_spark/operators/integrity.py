@@ -1,14 +1,18 @@
-"""Referential-integrity validation (north_rule): broadcast anti-join of fact
-columns against dimension tables — the Spark re-expression of the reference's
-existing/nonexisting id split (models/model.py:44-59, J9 in SURVEY §2.3).
+"""Referential-integrity and functional-dependency validation (north_rule)
+— the Spark re-expression of the reference's existing/nonexisting id split
+(models/model.py:44-59, J9 in SURVEY §2.3).
 
-Dims are tiny (codec/sr_hz domains) → always broadcast; at 10^12 rows the
-anti-join is a map-side hash probe, zero shuffle of the fact table.
+Dims are tiny by contract (codec/sr_hz domains). The suite collects each
+referenced dim column once per run or micro-batch and checks membership as
+a row predicate (``referential_predicate``) inside its one row-check scan:
+no dim shuffle, no broadcast, no extra scan of the fact table.
+``referential_violations`` is the same check as a standalone broadcast
+anti-join, a map-side hash probe with zero shuffle of the fact table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -23,6 +27,23 @@ def referential_violations(
         .filter(F.col(column).isNotNull())
         .join(F.broadcast(dim.select(column).distinct()), column, "left_anti")
     )
+
+
+def referential_predicate(column: str, dim: DataFrame) -> Column:
+    """``column IS NULL OR column IN (<dim values>)``: the row-level form of
+    ``referential_violations``, true on a row that check keeps out. The dim
+    column is collected on the driver (no Spark job for a local dim); its
+    NULLs are dropped, as the anti-join never matches them, and each value
+    is cast to the dim column's type, so the comparison coerces the two
+    types as the join does (an int fact column against a bigint dim)."""
+    dtype = dim.schema[column].dataType
+    values = list(dict.fromkeys(
+        r[0] for r in dim.select(column).collect() if r[0] is not None
+    ))
+    null = F.col(column).isNull()
+    if not values:
+        return null
+    return null | F.col(column).isin(*[F.lit(v).cast(dtype) for v in values])
 
 
 def fd_violations(

@@ -98,21 +98,22 @@ def subtract_moments(cur: DataFrame, old: DataFrame, keys: Sequence[str]) -> Dat
     return merge_moments(cur, neg, keys).filter(F.col("cnt") > 0)
 
 
-def column_profile_partial(
-    df: DataFrame, columns: Sequence[str], group_cols: Sequence[str] = ()
-) -> DataFrame:
-    """The exactly-mergeable subset of ``column_profile``: per (group,
-    column) — row_cnt, cnt, null_cnt, min, max, sum, sqr_sum — in the same
-    long layout and with the same try_cast semantics. The streaming suite
-    persists this frame per micro-batch and the batch runner collects it
-    once; ``profile_from_partial_rows`` then reproduces the one-shot
-    profile's null_rate/mean/std/min/max/cnt algebra over the merged
-    scalars on the driver, for both engines.
+# the exactly-mergeable per-(group, column) profile fields
+PARTIAL_FIELDS = ("row_cnt", "cnt", "null_cnt", "min", "max", "sum", "sqr_sum")
+
+
+def profile_partial_aggs(columns: Sequence[str]) -> list[Column]:
+    """The exactly-mergeable subset of ``column_profile`` as aggregate
+    expressions, ``<column>__<field>`` for each of ``PARTIAL_FIELDS``, with
+    the same try_cast semantics. The suite's per-bucket summary
+    (``suite.suite_summary``) adds them to its one grouped aggregate;
+    ``profile_from_partial_rows`` then reproduces the one-shot profile's
+    null_rate/mean/std/min/max/cnt algebra over the merged scalars on the
+    driver, for both engines.
     (approx_distinct and quantiles are sketch-backed and NOT derivable
     from these scalars — a StatCheck on those stats is rejected
     (``suite.ensure_known_stats``), not silently wrong.)"""
     total = F.count(F.lit(1))
-    fields = ("row_cnt", "cnt", "null_cnt", "min", "max", "sum", "sqr_sum")
     aggs = []
     for c in columns:
         v = F.col(c)
@@ -126,21 +127,7 @@ def column_profile_partial(
             F.sum(num).alias(f"{c}__sum"),
             F.sum(num * num).alias(f"{c}__sqr_sum"),
         ]
-    g = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    wide = g.agg(*aggs)
-    stack_args = ", ".join(
-        "'{c}', {flds}".format(
-            c=c, flds=", ".join(f"`{c}__{f}`" for f in fields)
-        )
-        for c in columns
-    )
-    return wide.select(
-        *group_cols,
-        F.expr(
-            f"stack({len(columns)}, {stack_args}) AS "
-            f"(column, {', '.join(fields)})"
-        ),
-    )
+    return aggs
 
 
 def _finite_or_zero(x: float | None) -> float:
@@ -162,10 +149,11 @@ def _spark_max(xs: list[float]) -> float | None:
 
 
 def profile_from_partial_rows(rows) -> dict[tuple, dict]:
-    """Merge ``column_profile_partial`` rows on the driver and finalize
-    them: {(bucket, column): {row_cnt, cnt, null_cnt, min, max, sum,
-    sqr_sum, mean, std, null_rate}}. Counts and sums add, min/max combine
-    with Spark's NULL/NaN ordering, then the closed form of
+    """Merge partial profile rows (bucket, column and ``PARTIAL_FIELDS``)
+    on the driver and finalize them: {(bucket, column): {row_cnt, cnt,
+    null_cnt, min, max, sum, sqr_sum, mean, std, null_rate}}. Counts and
+    sums add, min/max combine with Spark's NULL/NaN ordering, then the
+    closed form of
     ``finalize_moments`` (Bessel, try_divide, inf/NaN→0) and the
     try_divide null_rate of ``column_profile`` apply — one definition of
     each stat. Rows are (bucket × column) per batch, so this is kilobytes

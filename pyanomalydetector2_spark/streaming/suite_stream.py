@@ -6,15 +6,16 @@ over the full table. At 10^12 rows with continuous arrival, re-validating
 the corpus per delivery is not an option — but every family the default
 clips suite uses is **algebraically mergeable**, so the stream keeps
 per-batch partial state and the one-shot result is reproducible at any
-time without touching a single already-processed row. The row/ref
-violations, moment, sketch, drift-bin and category components come from
-the batch runner's own builder (``suite.suite_state_frames``); the stream
-adds the uniqueness, FD and reconcile counts:
+time without touching a single already-processed row. The batch
+runner's own builders give the per-bucket summary (row counts, moments,
+drift bins, categories: ``suite.suite_summary``) and the row/ref
+violation and sketch components (``suite.suite_state_frames``); the
+stream adds the uniqueness, FD and reconcile counts:
 
 - row / referential checks are stateless per row → violation rows append;
 - column stats keep (row_cnt, cnt, null_cnt, min, max, sum, sqr_sum) per
   (bucket, column) — counts/sums add, min/max combine
-  (stats.column_profile_partial; same closed-form mean/std finalize as
+  (stats.profile_partial_aggs; same closed-form mean/std finalize as
   the one-shot profile);
 - percentile StatChecks ("p95" etc.) keep one KLL sketch row per
   (column, bucket) per batch (operators/kll.py — weight-conserving merge
@@ -83,14 +84,19 @@ worse than an error.
 
 State layout (streaming/state.py delta-dir pattern, shared with the
 audio-ingest index): each component writes ``<comp>/batch=N`` parquet
-deltas; a ``commit/batch=N.json`` marker (with per-batch lineage metrics:
-rows, buckets, wall) lands LAST, so a torn batch is invisible to readers
-and Structured Streaming's redelivery overwrites it idempotently —
-exactly-once state without a transactional store. ``compact_suite_state``
-folds committed deltas into a ``gen=N`` base (additive merge for counts,
-plain concat for violations) so read cost stays flat over thousands of
-micro-batches; the fold reads only COMMITTED batch ids, which closes the
-torn-batch-orphan-delta hazard (ADVICE r04) by construction.
+deltas. The summary components (``buckets``, ``profile``, ``hist``,
+``ehist``, ``cats``) come from one collect of the batch's summary and the
+driver writes them with pyarrow, one file each, under a temp name that
+``state.batch_dirs`` does not list, renamed into place; the row-scale and
+sketch components are Spark writes. A ``commit/batch=N.json`` marker
+(with per-batch lineage metrics: rows, buckets, wall) lands LAST, so a
+torn batch is invisible to readers and Structured Streaming's redelivery
+overwrites it idempotently — exactly-once state without a transactional
+store. ``compact_suite_state`` folds committed deltas into a ``gen=N``
+base (additive merge for counts, plain concat for violations) so read
+cost stays flat over thousands of micro-batches; the fold reads only
+COMMITTED batch ids, which closes the torn-batch-orphan-delta hazard
+(ADVICE r04) by construction.
 
 Reference analog: the incremental trends_stats maintenance
 (trends_stats.py:24-60 — per-epoch moment upsert) generalized to every
@@ -102,11 +108,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from functools import reduce
 
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -122,8 +130,10 @@ from pyanomalydetector2_spark.constraints.suite import (
     ensure_known_stats,
     reconcile_violation_frame,
     sketch_store_edges,
+    split_summary,
     suite_components,
     suite_state_frames,
+    suite_summary,
     suite_verdict_rows,
     violation_counts_frame,
 )
@@ -137,8 +147,8 @@ from pyanomalydetector2_spark.operators.integrity import fd_det_repr, fd_observe
 from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
 from pyanomalydetector2_spark.streaming.state import batch_dirs, latest_gen
 
-# every state component's declared schema: the shared ones of
-# ``suite_state_frames``, then the stream's own
+# every state component's declared schema: the shared ones
+# (``suite.STATE_SCHEMAS``), then the stream's own
 _SCHEMAS = {
     **STATE_SCHEMAS,
     "buckets": "bucket int, n long",
@@ -273,6 +283,30 @@ def _pin_suite_manifest(
         )
 
 
+def _arrow_schema(schema: str) -> pa.Schema:
+    return to_arrow_schema(StructType.fromDDL(schema))
+
+
+def _write_delta(state_dir: str, comp: str, batch_id: int, rows: list) -> None:
+    """Write one small component's delta from the driver: ``rows`` as one
+    parquet file of the component's declared schema, written under a temp
+    name that ``batch_dirs`` does not list (its leading ``_`` also hides
+    it from Spark's and pyarrow's readers), then renamed to
+    ``<comp>/batch=N``. A crash leaves at most that temp dir or a delta
+    with no commit marker: both are invisible to readers, and the
+    redelivered batch replaces them."""
+    final = f"{state_dir}/{comp}/batch={batch_id}"
+    tmp = f"{state_dir}/{comp}/_tmp_batch={batch_id}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=_arrow_schema(_SCHEMAS[comp])),
+        f"{tmp}/part-0.parquet",
+    )
+    shutil.rmtree(final, ignore_errors=True)
+    os.rename(tmp, final)
+
+
 def _read_component(
     spark: SparkSession, state_dir: str, comp: str, schema: str
 ) -> DataFrame:
@@ -371,21 +405,24 @@ def process_suite_batch(
     t0 = time.time()
     spark = batch.sparkSession
 
-    # Every component's frame is built and written in its own thread, as
-    # CONCURRENT Spark jobs: each component reads its own column-pruned
-    # slice of the batch, so the jobs don't contend on anything but
-    # executor slots, and the per-batch wall is max(job) not sum(job) —
-    # the knob that keeps small-micro-batch fixed cost flat. (The audio
-    # decode pass, when present, rides ONLY the violations job.) The
-    # shared components come from the batch runner's own builder, with the
-    # stream's PINNED equi-depth edges (resolve_equi_edges).
+    # The batch's per-bucket summary (row counts, moments, drift bins and
+    # category counts: the batch runner's own ``suite_summary``, with the
+    # stream's PINNED equi-depth edges from resolve_equi_edges) is one
+    # collect; its rows are kilobytes whatever the batch size, so the
+    # driver writes those components itself. Every row-scale or sketch
+    # component is built and written in its own thread, as CONCURRENT
+    # Spark jobs beside that collect: each reads its own column-pruned
+    # slice of the batch, so the jobs contend only for executor slots, and
+    # the per-batch wall is max(job), not sum(job) — which keeps
+    # small-micro-batch fixed cost flat. (The audio decode pass, when
+    # present, rides ONLY the violations job.)
     pinned = {
         cid: [float(e) for e in meta["edges"]]
         for cid, meta in (equi_edges or {}).items()
     }
+    edges = (lambda: pinned) if pinned else None
     builds = suite_state_frames(
-        batch, suite, dims or {}, run_id, key_col, bucket_col,
-        (lambda: pinned) if pinned else None,
+        batch, suite, dims or {}, run_id, key_col, bucket_col
     )
     comps = suite_components(suite)
 
@@ -453,17 +490,12 @@ def process_suite_batch(
                 build(), _SCHEMAS[comp]
             )
 
-    def _bucket_counts() -> list:
-        return (
-            batch.groupBy(bucket_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-
-    brows = collect_concurrently(
+    got = collect_concurrently(
         spark,
         {
-            "counts": _bucket_counts,
+            "summary": lambda: suite_summary(
+                batch, suite, bucket_col, edges
+            ).collect(),
             **{
                 comp: (
                     lambda comp=comp, build=build: build().write.mode(
@@ -473,17 +505,13 @@ def process_suite_batch(
                 for comp, build in builds.items()
             },
         },
-    )["counts"]
-    rows = sum(r["n"] for r in brows)
-    # Arrow-backed local frame: the classic list createDataFrame pickles
-    # the rows, so this 8-row write paid a ~4 s Python-worker launch per
-    # BATCH (functions.local_rows_df docstring has the measurement)
-    local_rows_df(
-        spark, [(int(r[bucket_col]), int(r["n"])) for r in brows],
-        _SCHEMAS["buckets"],
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{state_dir}/buckets/batch={batch_id}"
     )
+    state = split_summary(got["summary"], suite)
+    for comp in ("buckets", "profile", "hist", "ehist", "cats"):
+        if comp == "buckets" or (
+            comp in comps and (comp != "ehist" or edges is not None)
+        ):
+            _write_delta(state_dir, comp, batch_id, state[comp])
 
     # commit marker LAST — with the batch's lineage metrics
     os.makedirs(f"{state_dir}/commit", exist_ok=True)
@@ -492,8 +520,8 @@ def process_suite_batch(
         json.dump(
             {
                 "batch": int(batch_id),
-                "rows": int(rows),
-                "buckets": len(brows),
+                "rows": sum(r["n"] for r in state["buckets"]),
+                "buckets": len(state["buckets"]),
                 "wall_sec": round(time.time() - t0, 3),
                 "finished_at": time.time(),
             },
@@ -558,7 +586,7 @@ def _arrow_state(
     reader's; tables concatenate in batch order (base first). The declared
     schema is pinned, so a delta dir holding only ``_SUCCESS`` (an empty
     frame under AQE) reads as typed-empty."""
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    arrow_schema = _arrow_schema(schema)
     _, paths, _ = _component_state(state_dir, comp, committed)
     return pa.concat_tables(
         [arrow_schema.empty_table()]

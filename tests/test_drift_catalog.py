@@ -268,9 +268,11 @@ def test_quantile_edge_drift(spark):
     fires; bins match a numpy equi-depth oracle."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql import functions as F
 
     from pyanomalydetector2_spark.operators.drift import (
-        binned_counts_edges,
+        _finite,
+        edges_bin_expr,
         quantile_edges,
     )
 
@@ -288,7 +290,10 @@ def test_quantile_edge_drift(spark):
     # bin counts vs numpy digitize on the same edges
     got = {
         int(r["bin"]): r["n"]
-        for r in binned_counts_edges(base, "x", edges).collect()
+        for r in base.filter(_finite("x"))
+        .groupBy(edges_bin_expr("x", edges).alias("bin"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
     }
     dig = np.digitize(base_v, np.array(edges), right=True)
     for b in range(len(edges) + 1):

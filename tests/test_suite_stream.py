@@ -835,3 +835,175 @@ def test_all_null_current_drift_column_produces_no_score(
         process_suite_batch(cur, 0, state, suite, None, "nul", equi_edges=edges)
         with pytest.raises(ValueError, match="produced no score"):
             streaming_suite_result(spark, state, suite, base, "nul")
+
+
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+def test_fresh_run_over_empty_current_is_empty(spark, tmp_path, engine):
+    """A fresh run over an empty current (no ledger record for the run)
+    returns an empty result, not a "produced no score" error from the
+    drift checks of the default suite."""
+    from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
+
+    cur = clips_table(spark, 64, planted=True, n_buckets=4).filter("false")
+    base = clips_table(spark, 64, planted=False, n_buckets=4)
+    dims = {"dim_codec": dim_codec(spark), "dim_sr": dim_sr(spark)}
+    suite = default_clips_suite()
+    if engine == "batch":
+        res = run_suite(
+            cur, base, dims, suite, "empty",
+            checkpoint=CheckpointLedger(str(tmp_path / "ledger")),
+        )
+    else:
+        state = str(tmp_path / "state")
+        process_suite_batch(cur, 0, state, suite, dims, "empty")
+        res = streaming_suite_result(spark, state, suite, base, "empty")
+    assert res.processed_buckets == [] and res.row_count == 0
+    assert not res.verdicts.collect() and not res.violations.collect()
+
+
+@pytest.mark.parametrize("engine", ["batch", "stream"])
+def test_ref_check_rows_equal_referential_violations(spark, tmp_path, engine):
+    """A RefCheck is a row predicate in both engines, and its violation
+    rows equal the broadcast anti-join's: NULL fact values pass, values
+    absent from the dim fail, a NULL or duplicated dim value changes
+    nothing, and an int fact column matches a bigint dim."""
+    from pyanomalydetector2_spark.constraints.dsl import RefCheck
+    from pyanomalydetector2_spark.operators.integrity import (
+        referential_violations,
+    )
+
+    codecs = ("wav", "flac", "mp3", None)
+    rates = (16000, 44100, 8000, None)
+    cur = local_rows_df(
+        spark,
+        [(f"c{i}", i % 3, codecs[i % 4], rates[(i // 4) % 4]) for i in range(32)],
+        "clip_id string, bucket int, codec string, sr_hz int",
+    )
+    dims = {
+        "dim_codec": local_rows_df(
+            spark, [("wav",), ("wav",), (None,), ("flac",)], "codec string"
+        ),
+        "dim_sr": local_rows_df(
+            spark, [(16000,), (44100,), (16000,), (None,)], "sr_hz bigint"
+        ),
+    }
+    suite = Suite(ref_checks=(
+        RefCheck("codec_ref", "codec", "dim_codec"),
+        RefCheck("sr_ref", "sr_hz", "dim_sr"),
+    ))
+    if engine == "batch":
+        res = run_suite(cur, cur, dims, suite, "ref")
+    else:
+        state = str(tmp_path / "state")
+        for i, half in enumerate(
+            (cur.filter("crc32(clip_id) % 2 = 0"),
+             cur.filter("crc32(clip_id) % 2 = 1"))
+        ):
+            process_suite_batch(half, i, state, suite, dims, "ref")
+        res = streaming_suite_result(spark, state, suite, None, "ref")
+    expected = sorted(
+        (r["bucket"], r["clip_id"], c.constraint_id, str(r[c.column]),
+         f"{c.column} in {c.dim_name}")
+        for c in suite.ref_checks
+        for r in referential_violations(
+            cur, c.column, dims[c.dim_name], keep_cols=["clip_id", "bucket"]
+        ).collect()
+    )
+    assert len(expected) == 16  # mp3 rows and 8000 Hz rows
+    assert _sorted_violations(res) == expected
+    counts = {
+        (r["bucket"], r["constraint_id"]): r["violation_cnt"]
+        for r in res.verdicts.collect()
+    }
+    assert sum(counts.values()) == len(expected)
+
+
+def _small_state_suite():
+    """The default suite without its audio row checks (no decode), for
+    stream state tests over a few hundred rows."""
+    import dataclasses
+
+    full = default_clips_suite()
+    return dataclasses.replace(
+        full,
+        row_checks=tuple(c for c in full.row_checks if not c.requires_audio),
+    )
+
+
+def test_empty_micro_batch_commits_and_changes_no_verdict(spark, tmp_path):
+    """An empty micro-batch adds its commit marker and changes no verdict.
+    Its driver-written deltas are typed-empty parquet: pyarrow and Spark
+    both read the declared schema with zero rows, and compaction folds
+    them without changing the result."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from pyanomalydetector2_spark.streaming.suite_stream import (
+        _SCHEMAS,
+        _arrow_schema,
+    )
+
+    cur = clips_table(spark, 240, planted=True, n_buckets=4).cache()
+    base = clips_table(spark, 240, planted=False, n_buckets=4).cache()
+    dims = {"dim_codec": dim_codec(spark), "dim_sr": dim_sr(spark)}
+    suite = _small_state_suite()
+    state = str(tmp_path / "state")
+    process_suite_batch(cur, 0, state, suite, dims, "emp")
+    before = streaming_suite_result(spark, state, suite, base, "emp")
+    process_suite_batch(cur.filter("false"), 1, state, suite, dims, "emp")
+    assert [m["rows"] for m in batch_metrics(state)] == [240, 0]
+    after = streaming_suite_result(spark, state, suite, base, "emp")
+    assert _sorted_verdicts(after) == _sorted_verdicts(before)
+    assert _sorted_violations(after) == _sorted_violations(before)
+    for comp in ("buckets", "profile", "hist", "cats"):
+        delta = f"{state}/{comp}/batch=1"
+        table = pq.read_table(delta)
+        assert table.num_rows == 0
+        assert table.schema.equals(_arrow_schema(_SCHEMAS[comp]))
+        read = spark.read.parquet(delta)
+        assert read.count() == 0
+        assert read.schema.simpleString() == (
+            StructType.fromDDL(_SCHEMAS[comp]).simpleString()
+        )
+    assert compact_suite_state(spark, state) == 1
+    folded = streaming_suite_result(spark, state, suite, base, "emp")
+    assert _sorted_verdicts(folded) == _sorted_verdicts(before)
+    cur.unpersist()
+    base.unpersist()
+
+
+def test_torn_driver_write_is_invisible_and_replaced(spark, tmp_path):
+    """A crash inside a micro-batch's driver writes leaves a temp dir and a
+    half-written delta with no commit marker. Listing the deltas, the
+    drain and compaction all ignore both; the redelivered batch replaces
+    them, and the result equals the batch run."""
+    from pyanomalydetector2_spark.streaming.state import batch_dirs
+
+    cur = clips_table(spark, 240, planted=True, n_buckets=4).cache()
+    base = clips_table(spark, 240, planted=False, n_buckets=4).cache()
+    dims = {"dim_codec": dim_codec(spark), "dim_sr": dim_sr(spark)}
+    suite = _small_state_suite()
+    halves = (cur.filter("crc32(clip_id) % 2 = 0"),
+              cur.filter("crc32(clip_id) % 2 = 1"))
+    state = str(tmp_path / "state")
+    process_suite_batch(halves[0], 0, state, suite, dims, "torn")
+    first = streaming_suite_result(spark, state, suite, base, "torn")
+    # batch 1 crashed: one delta torn mid-file, another still under its
+    # temp name, and no commit marker
+    for path in (f"{state}/profile/batch=1", f"{state}/hist/_tmp_batch=1"):
+        os.makedirs(path)
+        with open(f"{path}/part-0.parquet", "wb") as f:
+            f.write(b"PAR1 torn")
+    assert [n for n, _ in batch_dirs(f"{state}/hist")] == [0]
+    torn = streaming_suite_result(spark, state, suite, base, "torn")
+    assert _sorted_verdicts(torn) == _sorted_verdicts(first)
+    assert compact_suite_state(spark, state) == 0
+
+    process_suite_batch(halves[1], 1, state, suite, dims, "torn")
+    assert not os.path.exists(f"{state}/hist/_tmp_batch=1")
+    _assert_results_equal(
+        streaming_suite_result(spark, state, suite, base, "torn"),
+        run_suite(cur, base, dims, suite, "torn"),
+    )
+    cur.unpersist()
+    base.unpersist()
